@@ -20,7 +20,6 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -60,62 +59,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
             F.count(F.lit(1)).alias("n_dups"),
         )
     )
-
-
-def shingles(text_col, n: int = 3):
-    """Word n-gram shingle array (distinct), pure Catalyst."""
-    toks = F.split(normalize_text(text_col), " ")
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-        )
-    )
-
-
-def shingle_arrays(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-) -> DataFrame:
-    """→ (id, sh: array<string>) — the same distinct word-n-gram set as
-    :func:`shingles`, but built by a vectorized Arrow UDF over
-    JVM-normalized text.
-
-    Why not pure Catalyst: the shingle expression is a
-    transform/slice/array_distinct chain of higher-order functions —
-    all CodegenFallback, evaluated interpreted, and (worse) re-inlined
-    wherever projection collapse duplicates the column (guide §4.1/4.2).
-    Measured at sf0.1 the interpreted array build costs 3-5 s per
-    evaluation vs ~0.6 s through Arrow.  Normalization stays JVM-side
-    (regexp/trim/lower Java semantics are the oracle contract); the
-    Python side only splits on the single spaces the normalizer
-    guarantees and joins with single spaces, so the produced shingle
-    sets are byte-identical to the Catalyst expression (pinned by
-    tests/test_dedup_similarity.py)."""
-    from pyspark.sql.functions import pandas_udf
-
-    n = shingle_n
-
-    @pandas_udf("array<string>")
-    def _grams(nt: pd.Series) -> pd.Series:
-        def g(s):
-            toks = s.split(" ")
-            m = max(len(toks) - n, 0) + 1
-            return list(dict.fromkeys(" ".join(toks[i : i + n]) for i in range(m)))
-
-        return nt.map(g, na_action="ignore")
-
-    # pure function, but mark non-deterministic so the optimizer never
-    # duplicates the ArrowEvalPython node around pushed filters (§4.4)
-    _grams = _grams.asNondeterministic()
-    base = spread(
-        df.select(
-            F.col(id_col).alias("id"), normalize_text(F.col(text_col)).alias("nt")
-        )
-    )
-    return base.select("id", _grams(F.col("nt")).alias("sh"))
 
 
 # Mersenne prime 2^31-1: keeps every product a_j*h below 2^62, so the
@@ -197,72 +140,6 @@ def minhash_perm_coeffs(num_hashes: int, salt: str = "minhash") -> list:
     return out
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    shingle_n: int = 3,
-    hash_family: str = "xxhash64",
-    shingle_frame: DataFrame | None = None,
-) -> DataFrame:
-    """→ (id, sig: array<bigint>) — sig[j] = min over shingles of
-    hash_j(shingle).
-
-    Two families, SAME plan shape and SAME Broder construction — each
-    shingle is hashed into two base values (h1, h2) reduced mod
-    p = 2³¹−1, and the k per-seed hashes are the arithmetic
-    permutations g_j = (a_j·h1 + b_j·h2) mod p, ~k× less hashing on
-    the dominant stage than k independent seeded hashes:
-      * 'xxhash64' — two seeded JVM xxhash64 calls per shingle
-        (fastest when only one engine needs to replay);
-      * 'md5'      — one md5 split into two 60-bit halves; DuckDB
-        replays the identical integer arithmetic for the driver
-        oracle.
-
-    Shape: explode shingles → k hash columns → groupBy(id).agg(k mins).
-    The k mins run with map-side partial aggregation, so the shuffle
-    carries one k-wide row per (id, partition) — NOT one row per
-    shingle.  (A single wide projection of k array_min(transform(...))
-    expressions looks cheaper but Catalyst's projection collapse
-    re-inlines the shingle computation k times — measured 40× slower.)
-
-    ``shingle_frame``: an (id, sh) frame from :func:`shingle_arrays` to
-    explode instead of recomputing the shingle sets — minhash_dedup
-    passes its checkpointed copy so signatures and verification share
-    ONE shingling pass."""
-    if shingle_frame is not None:
-        ex = shingle_frame.select("id", F.explode("sh").alias("s"))
-    else:
-        ex = (
-            spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t")))
-            .select("id", F.explode(shingles(F.col("t"), shingle_n)).alias("s"))
-        )
-    p = F.lit(MINHASH_PRIME)
-    if hash_family == "md5":
-        ex = ex.select("id", F.md5("s").alias("m")).select(
-            "id",
-            (F.conv(F.substring("m", 1, 15), 16, 10).cast("long") % p).alias("h1"),
-            (F.conv(F.substring("m", 17, 15), 16, 10).cast("long") % p).alias("h2"),
-        )
-    else:
-        # same Broder construction over two seeded xxhash64 calls —
-        # 2 hashes per shingle instead of k (pmod keeps both halves
-        # non-negative before the permutation arithmetic)
-        ex = ex.select(
-            "id",
-            F.pmod(F.xxhash64(F.col("s"), F.lit(1)), p).alias("h1"),
-            F.pmod(F.xxhash64(F.col("s"), F.lit(2)), p).alias("h2"),
-        )
-    coeffs = minhash_perm_coeffs(num_hashes)
-    mins = [
-        F.min((F.lit(a) * F.col("h1") + F.lit(b) * F.col("h2")) % p).alias(f"h{j}")
-        for j, (a, b) in enumerate(coeffs)
-    ]
-    agg = ex.groupBy("id").agg(*mins)
-    return agg.select("id", F.array(*[F.col(f"h{j}") for j in range(num_hashes)]).alias("sig"))
-
-
 def minhash_prep(
     df: DataFrame,
     text_col: str = "text",
@@ -284,8 +161,9 @@ def minhash_prep(
     (k × n_shingles) matmul-mod, and the hash families are bit-exact
     twins of the JVM/oracle functions: hashlib.md5 ≡ F.md5 ≡ DuckDB
     md5, and :func:`xxh64` ≡ F.xxhash64 (pinned by tests).  buckets[b]
-    is the band-b bucket (md5 hex string / xxhash64 long), identical to
-    minhash_lsh_candidates' banding values."""
+    is F.md5 (md5 family, hex string) or F.xxhash64 (long) of the
+    band's signature values joined with commas — the banding
+    ``sql_minhash_dedup`` replays in DuckDB."""
     import numpy as np
 
     rows_per_band = num_hashes // bands
@@ -362,63 +240,6 @@ def minhash_prep(
     return base.mapInPandas(gen, schema)
 
 
-def minhash_lsh_candidates(
-    sigs: DataFrame,
-    bands: int = 16,
-    rows_per_band: int = 4,
-    hash_family: str = "xxhash64",
-    materialize: bool = True,
-) -> DataFrame:
-    """LSH banding: docs sharing any band bucket become a candidate pair.
-    → (id_a, id_b) distinct, id_a < id_b."""
-    assert bands * rows_per_band <= 1024
-    bucket_fn = F.md5 if hash_family == "md5" else F.xxhash64
-    banded = sigs.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        bucket_fn(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.col("sig")[b * rows_per_band + r].cast("string")
-                                    for r in range(rows_per_band)
-                                ],
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
-    # The self-join's two sides are one shuffle exchange and one
-    # broadcast exchange over the SAME subplan — exchange reuse cannot
-    # unify the two kinds, so without materialization the entire
-    # signature pipeline (shingle → hash → k-min aggregate) runs TWICE,
-    # in parallel racing jobs (event-log-measured as the two dominant
-    # jobs of the bench query).  An eager localCheckpoint computes the
-    # banded frame once ((id, band, bucket) rows only — b rows/doc,
-    # narrow) and both join sides read the stored blocks.
-    if materialize:
-        banded = banded.localCheckpoint(eager=True)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-
-
 def minhash_dedup(
     df: DataFrame,
     text_col: str = "text",
@@ -471,29 +292,6 @@ def minhash_dedup(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-
-
-def simhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """64-bit SimHash over word tokens: bit i of the signature is the
-    majority vote of bit i across token hashes.  Pure Catalyst:
-    per-bit sum of ±1 via aggregate over the token-hash array."""
-    df = spread(df)
-    toks = F.array_distinct(F.split(normalize_text(F.col(text_col)), " "))
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    bit_sum = lambda i: F.aggregate(
-        hashes,
-        F.lit(0),
-        lambda acc, h: acc
-        + F.when(h.bitwiseAND(F.lit(1 << i) if i < 63 else F.lit(-(2**63))) != 0, 1).otherwise(-1),
-    )
-    sig = F.aggregate(
-        F.array(*[F.when(bit_sum(i) > 0, F.lit(1 << i if i < 63 else -(2**63))).otherwise(F.lit(0)) for i in range(64)]),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc.bitwiseOR(x),
-    )
-    return df.select(F.col(id_col).alias("id"), sig.alias("simhash"))
 
 
 def simhash_signatures_md5(

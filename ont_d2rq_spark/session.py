@@ -59,15 +59,23 @@ def ship_package(spark: SparkSession) -> None:
     spark._ont_d2rq_shipped = True
 
 
+def _driver_memory() -> str:
+    """Half of the machine's physical memory, in megabytes: local mode
+    runs driver and executors in this one JVM, and the rest of the box
+    stays free for the Python workers and the page cache."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{total // 2 // (1 << 20)}m"
+
+
 def get_spark(
     app: str = "ont_d2rq_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
+        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else str(cpus)
         shuffle_partitions = cpus * 2 if n == "*" else max(int(n) * 2, 8)
     b = (
         SparkSession.builder.master(master)
@@ -78,7 +86,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", _driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # straggler mitigation for CLUSTER deployments: one externally

@@ -1,4 +1,4 @@
-"""Round-3 advisory fixes, pinned.
+"""SPARQL rewrite, OPTIONAL, typed-literal and as-of join edge cases, pinned.
 
 1. _rewrite_builtins must not rewrite inside quoted string constants.
 2. A query with only OPTIONAL groups (no basic patterns) returns the

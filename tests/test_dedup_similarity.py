@@ -41,21 +41,30 @@ def test_minhash_dedup_finds_near_dup(docs):
 
 
 def test_minhash_signature_properties(docs):
-    sigs = D.minhash_signatures(docs, num_hashes=32)
-    rows = {r["id"]: r["sig"] for r in sigs.collect()}
-    assert rows[1] == rows[2]  # identical text → identical signature
-    agree = sum(1 for a, b in zip(rows[1], rows[3]) if a == b) / 32
-    assert agree > 0.4  # near dup agrees on many minhashes
-    agree4 = sum(1 for a, b in zip(rows[1], rows[4]) if a == b) / 32
-    assert agree4 < agree
+    """Identical (after normalization) texts get identical band
+    buckets; a near dup shares many bands, unrelated text fewer."""
+    rows = {
+        r["id"]: r["buckets"]
+        for r in D.minhash_prep(docs, num_hashes=32, bands=16).collect()
+    }
+    assert rows[1] == rows[2] == rows[5]
+    shared = lambda a, b: sum(x == y for x, y in zip(rows[a], rows[b])) / 16
+    assert shared(1, 3) > 0.4
+    assert shared(1, 4) < shared(1, 3)
 
 
-def test_simhash(docs):
-    sigs = D.simhash_signatures(docs)
+def test_simhash(docs, spark):
+    """md5-family SimHash at its default width: identical texts sign
+    identically, a near dup lies closer than unrelated text, null text
+    gets no signature, and the default 64-bit quarter blocking finds
+    the identical pair."""
+    null_doc = spark.createDataFrame([(6, None)], "doc_id bigint, text string")
+    sigs = D.simhash_signatures_md5(docs.unionByName(null_doc))
     rows = {r["id"]: r["simhash"] for r in sigs.collect()}
+    assert 6 not in rows
     assert rows[1] == rows[2]
-    ham13 = bin((rows[1] ^ rows[3]) & (2**64 - 1)).count("1")
-    ham14 = bin((rows[1] ^ rows[4]) & (2**64 - 1)).count("1")
+    ham13 = bin(rows[1] ^ rows[3]).count("1")
+    ham14 = bin(rows[1] ^ rows[4]).count("1")
     assert ham13 < ham14
     cands = {(r["id_a"], r["id_b"]) for r in D.simhash_candidates(sigs, max_hamming=8).collect()}
     assert (1, 2) in cands
@@ -285,40 +294,41 @@ def test_xxh64_python_matches_spark(spark):
 
 
 @pytest.mark.parametrize("fam", ["xxhash64", "md5"])
-def test_minhash_prep_matches_jvm_banding(docs, fam):
-    """r7: minhash_prep's per-row Arrow signature+banding must produce
-    the exact (id, band, bucket) set the JVM explode → k-min-agg →
-    banding pipeline produces, for both hash families, and the shingle
-    sets must equal the Catalyst shingles() expression."""
-    sigs = D.minhash_signatures(docs, hash_family=fam)
-    bucket_fn = F.md5 if fam == "md5" else F.xxhash64
-    jvm = sigs.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        bucket_fn(
-                            F.concat_ws(
-                                ",",
-                                *[F.col("sig")[b * 4 + r].cast("string") for r in range(4)],
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(16)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
-    prep = D.minhash_prep(docs, hash_family=fam)
-    py = prep.select("id", F.posexplode("buckets").alias("band", "bucket"))
-    assert jvm.exceptAll(py).count() == 0 and py.exceptAll(jvm).count() == 0
-    sh_jvm = docs.select(
-        F.col("doc_id").alias("id"), D.shingles(F.col("text"), 3).alias("sh")
+def test_minhash_prep_matches_jvm_banding(spark, fam):
+    """minhash_prep's Python hash kernels, Broder permutations and band
+    keys must equal the JVM functions, for both hash families.  On a
+    one-shingle document every signature entry is that shingle's
+    permutation value, so the JVM side needs no k-min aggregate (the
+    multi-shingle min is replayed end to end by the minhash_dedup
+    oracle).  Shingle sets are the distinct word trigrams of the
+    normalized text, in order of first appearance."""
+    docs = spark.createDataFrame(
+        [(10, "Alpha  beta GAMMA "), (11, "x"), (12, "üñï çödé"), (13, "a b c a b c")],
+        "doc_id bigint, text string",
     )
-    joined = prep.select("id", "sh").alias("a").join(sh_jvm.alias("b"), "id")
-    assert joined.filter(F.col("a.sh") != F.col("b.sh")).count() == 0
+    prep = {r["id"]: r for r in D.minhash_prep(docs, hash_family=fam).collect()}
+    assert prep[10]["sh"] == ["alpha beta gamma"] and prep[11]["sh"] == ["x"]
+    assert prep[13]["sh"] == ["a b c", "b c a", "c a b"]
+
+    s, p = D.normalize_text(F.col("text")), F.lit(D.MINHASH_PRIME)
+    if fam == "md5":
+        m = F.md5(s)
+        h1 = F.conv(F.substring(m, 1, 15), 16, 10).cast("long") % p
+        h2 = F.conv(F.substring(m, 17, 15), 16, 10).cast("long") % p
+        bucket_fn = F.md5
+    else:
+        h1 = F.pmod(F.xxhash64(s, F.lit(1)), p)
+        h2 = F.pmod(F.xxhash64(s, F.lit(2)), p)
+        bucket_fn = F.xxhash64
+    sig = [(F.lit(a) * h1 + F.lit(b) * h2) % p for a, b in D.minhash_perm_coeffs(64)]
+    buckets = F.array(
+        *[bucket_fn(F.concat_ws(",", *[x.cast("string") for x in sig[4 * b : 4 * b + 4]]))
+          for b in range(16)]
+    )
+    jvm = docs.filter(F.col("doc_id") < 13).select("doc_id", buckets.alias("b")).collect()
+    assert len(jvm) == 3
+    for r in jvm:
+        assert prep[r["doc_id"]]["buckets"] == r["b"]
 
 
 def test_simhash_md5_prep_parity(docs, spark):

@@ -1,5 +1,4 @@
-"""Round-7 correctness fixes (from the r6 ADVICE audit): zoned
-date-accessor semantics and the seeded-closure broadcast guard."""
+"""Zoned date-accessor semantics and the seeded-closure broadcast guard."""
 
 import pytest
 from pyspark.sql import functions as F

@@ -1,4 +1,4 @@
-"""Round-3 SPARQL surface: p* / p? path modifiers, UNDEF in VALUES,
+"""SPARQL surface: p* / p? path modifiers, UNDEF in VALUES,
 GRAPH over named graphs, full-CBD DESCRIBE."""
 
 import pytest

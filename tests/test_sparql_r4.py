@@ -1,4 +1,4 @@
-"""Round-4 SPARQL semantics: solution compatibility over unbound
+"""SPARQL semantics: solution compatibility over unbound
 (NULL) variables in chained OPTIONAL / EXISTS / MINUS — SPARQL treats
 an unbound shared variable as compatible with any binding; a
 null-rejecting equality join silently drops those solutions."""

@@ -1,4 +1,4 @@
-"""Round-5 SPARQL semantics: string-literal safety in the LeftJoin
+"""SPARQL semantics: string-literal safety in the LeftJoin
 filter rewrite, maybe-unbound propagation through doubly-nested
 subqueries, Turtle PN_LOCAL edge cases, and (below) nested group graph
 patterns — OPTIONAL/UNION/BIND/VALUES evaluated recursively inside

@@ -1,4 +1,4 @@
-"""Round-6 SPARQL semantics: query-level (trailing) VALUES bottom-up
+"""SPARQL semantics: query-level (trailing) VALUES bottom-up
 scoping, CONSTRUCT WHERE template blank nodes, and the metamorphic
 fuzz harness for the recursive group evaluator (the reference inherits
 all three behaviors from ARQ — engine/QueryEngineD2RQ.java delegation,
@@ -254,9 +254,9 @@ def _group_t(depth: int, top: bool = False):
     return st.builds(
         _G,
         patterns=st.lists(_pat_t, min_size=1, max_size=3 if top else 2),
-        union=(st.none() | st.tuples(sub, sub)) if sub else st.none(),
-        optionals=st.lists(sub, max_size=2 if top else 1) if sub else st.just([]),
-        minus=st.lists(sub, max_size=1) if sub else st.just([]),
+        union=(st.none() | st.tuples(sub, sub)) if sub is not None else st.none(),
+        optionals=st.lists(sub, max_size=2 if top else 1) if sub is not None else st.just([]),
+        minus=st.lists(sub, max_size=1) if sub is not None else st.just([]),
         binds=st.lists(_bindexpr_t, max_size=1),
         filters=st.lists(_filter_t, max_size=2),
     )

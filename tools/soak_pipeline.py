@@ -8,7 +8,7 @@ OPTIONALs over a ×64 fact inflation) — each stage writing parquet, and
 records the evidence the per-operator scale arguments only assert:
 
   * per-job wall + output rows,
-  * peak per-stage shuffle read/write bytes (REST API, localhost UI),
+  * peak per-stage shuffle read/write bytes (Spark status store),
   * task-skew per stage: max/median task runtime on every stage with
     ≥ 8 tasks — the acceptance bar is **no task > 4× median** on
     stages whose median task ≥ 250 ms (sub-250 ms tasks are dominated
@@ -39,18 +39,19 @@ import json
 import statistics
 import sys
 import time
-import urllib.request
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
-sys.path.insert(0, str(REPO))
+if __name__ == "__main__":
+    # as a script, this directory would shadow the stdlib ``profile``
+    # module that cProfile (imported by pyspark) loads
+    sys.path[0] = str(REPO)
 
 SRC = "/root/testdata/sf0.1"
 SOAK_DIR = "/dev/shm/soak_input"
 SOAK_TPCH = "/dev/shm/soak_tpch"
 OUT_DIR = "/dev/shm/soak_out"
 K = 64
-UI_PORT = 4049
 
 
 def build_input(spark):
@@ -155,47 +156,46 @@ SELECT ?o ?c ?n ?r ?rn WHERE {
 """
 
 
-def rest(path: str):
-    url = f"http://localhost:{UI_PORT}/api/v1{path}"
-    with urllib.request.urlopen(url, timeout=30) as r:
-        return json.load(r)
-
-
-def stage_metrics(app_id: str, since_stage: int):
-    """Stage-level shuffle bytes + task-skew for stages after a marker."""
-    stages = rest(f"/applications/{app_id}/stages?status=complete")
+def stage_metrics(spark, group: str):
+    """Stage-level shuffle bytes + task skew of every stage the jobs of
+    ``group`` ran, from the Spark status store."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    quantiles = sc._gateway.new_array(sc._jvm.double, 3)
+    quantiles[0], quantiles[1], quantiles[2] = 0.0, 0.5, 1.0
+    stage_ids = set()
+    for jid in sc.statusTracker().getJobIdsForGroup(group):
+        ids = store.job(jid).stageIds()
+        stage_ids.update(ids.apply(i) for i in range(ids.size()))
     out = []
     peak_write = peak_read = 0
     worst = {"ratio": 0.0}
-    for s in stages:
-        sid = s["stageId"]
-        if sid < since_stage or s["numCompleteTasks"] < 8:
+    for sid in sorted(stage_ids):
+        s = store.lastStageAttempt(sid)
+        if str(s.status()) != "COMPLETE" or s.numCompleteTasks() < 8:
             continue
-        peak_write = max(peak_write, s.get("shuffleWriteBytes", 0))
-        peak_read = max(peak_read, s.get("shuffleReadBytes", 0))
-        try:
-            q = rest(
-                f"/applications/{app_id}/stages/{sid}/{s['attemptId']}/taskSummary"
-                "?quantiles=0.0,0.5,1.0"
-            )
-            lo, med, mx = q["executorRunTime"]
-            ratio = (mx / med) if med > 0 else 1.0
-            gated = med >= 250  # sub-250ms medians are scheduler noise
-            row = {
-                "stage": sid,
-                "tasks": s["numCompleteTasks"],
-                "task_ms_median": round(med),
-                "task_ms_max": round(mx),
-                "max_over_median": round(ratio, 2),
-                "in_skew_gate": gated,
-                "shuffle_write_bytes": s.get("shuffleWriteBytes", 0),
-                "shuffle_read_bytes": s.get("shuffleReadBytes", 0),
-            }
-            out.append(row)
-            if gated and ratio > worst["ratio"]:
-                worst = {"ratio": round(ratio, 2), "stage": sid}
-        except Exception:
+        peak_write = max(peak_write, s.shuffleWriteBytes())
+        peak_read = max(peak_read, s.shuffleReadBytes())
+        summary = store.taskSummary(sid, s.attemptId(), quantiles)
+        if not summary.isDefined():
             continue
+        run_ms = summary.get().executorRunTime()
+        med, mx = run_ms.apply(1), run_ms.apply(2)
+        ratio = (mx / med) if med > 0 else 1.0
+        gated = med >= 250  # sub-250ms medians are scheduler noise
+        row = {
+            "stage": sid,
+            "tasks": s.numCompleteTasks(),
+            "task_ms_median": round(med),
+            "task_ms_max": round(mx),
+            "max_over_median": round(ratio, 2),
+            "in_skew_gate": gated,
+            "shuffle_write_bytes": s.shuffleWriteBytes(),
+            "shuffle_read_bytes": s.shuffleReadBytes(),
+        }
+        out.append(row)
+        if gated and ratio > worst["ratio"]:
+            worst = {"ratio": round(ratio, 2), "stage": sid}
     out.sort(key=lambda r: -r["shuffle_write_bytes"])
     top = out[:8]
     # always include the worst-skew stage row for diagnosability
@@ -210,36 +210,9 @@ def stage_metrics(app_id: str, since_stage: int):
 
 
 def main():
-    from pyspark.sql import SparkSession
+    from ont_d2rq_spark.session import get_spark, ship_package
 
-    from ont_d2rq_spark.session import ship_package
-
-    # UI enabled (localhost only) — the REST API is the task-metrics source
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("soak_pipeline")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "56g")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", str(UI_PORT))
-        # straggler mitigation as a 100 TB cluster would run it.  NOTE:
-        # inert under local[*] (TaskSchedulerImpl gates the speculation
-        # thread on !isLocal), so on this box it documents deployment
-        # intent only; the local-run defenses against the observed
-        # one-off straggler (one 14.5 s task vs a 291 ms median) are
-        # the un-timed warm-up and the per-job cache hygiene below.
-        .config("spark.speculation", "true")
-        .config("spark.speculation.quantile", "0.75")
-        .config("spark.speculation.multiplier", "2")
-        .config("spark.ui.retainedStages", "2000")
-        .config("spark.local.dir", "/dev/shm/spark-soak-local")
-        .getOrCreate()
-    )
+    spark = get_spark(app="soak_pipeline")
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
     if not Path(f"{SOAK_DIR}/embeddings.parquet").exists():
@@ -249,26 +222,23 @@ def main():
         build_tpch_input(spark)
         print("tpch input built", flush=True)
     ship_package(spark)
-    app_id = sc.applicationId
 
     from ont_d2rq_spark.operators.dedup import minhash_dedup
     from ont_d2rq_spark.operators.similarity import lsh_near_dup_pairs
     from ont_d2rq_spark.pipeline.docs import build_kg
 
-    results = {"k_inflate": K, "cpus": 32, "jobs": {}}
+    results = {"k_inflate": K, "cpus": sc.defaultParallelism, "jobs": {}}
 
     def run(name, make_df, path):
         # drop the previous job's persisted blocks (build_kg persists its
         # stage outputs) so each job is measured without dead cache
         spark.catalog.clearCache()
-        marker = max(
-            (s["stageId"] for s in rest(f"/applications/{app_id}/stages")), default=-1
-        ) + 1
+        sc.setJobGroup(f"soak-{name}", name)
         t0 = time.perf_counter()
         make_df().write.mode("overwrite").parquet(path)
         wall = time.perf_counter() - t0
+        m = stage_metrics(spark, f"soak-{name}")
         rows = spark.read.parquet(path).count()
-        m = stage_metrics(app_id, marker)
         results["jobs"][name] = {"wall_sec": round(wall, 1), "rows": rows, **m}
         print(f"{name}: {wall:.1f}s {rows} rows "
               f"skew={m['worst_task_skew']}", flush=True)
