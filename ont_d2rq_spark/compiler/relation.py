@@ -147,11 +147,12 @@ def _qualify(col: str, default_alias: str) -> str:
 class MappingCompiler:
     """Compiles a Mapping into CompiledBridges and evaluates them.
 
-    ``use_broadcast_hints``: a directed d2rq:join (``a => b``) marks b as
-    the referenced (PK / dimension) side; when enabled the compiler wraps
-    that side in ``F.broadcast`` — on a 1000-executor cluster this turns
-    every FK-to-dimension join into a broadcast hash join with no shuffle
-    of the fact side.  Undirected joins are left to Catalyst/AQE.
+    A directed d2rq:join (``a => b``) marks b as the referenced (PK /
+    dimension) side; the compiler wraps that side in ``F.broadcast``
+    while it is under ``FK_BROADCAST_CAP_BYTES`` — on a 1000-executor
+    cluster this turns every FK-to-dimension join into a broadcast hash
+    join with no shuffle of the fact side.  Undirected joins are left
+    to Catalyst/AQE.
     """
 
     def __init__(
@@ -159,12 +160,10 @@ class MappingCompiler:
         mapping: Mapping,
         spark: SparkSession,
         extra_tables: Optional[dict[str, DataFrame]] = None,
-        use_broadcast_hints: bool = True,
     ):
         self.mapping = mapping
         self.spark = spark
         self.extra_tables = extra_tables or {}
-        self.use_broadcast_hints = use_broadcast_hints
         self._table_cache: dict[str, DataFrame] = {}
         # LRU-bounded: dataclasses.replace()'d bridge variants (e.g.
         # per-call limitInverse swaps) have fresh id(cb) keys that never
@@ -450,10 +449,8 @@ class MappingCompiler:
                 j.left.split(".")[0] if j.direction == "<=" else None
             )
             other = self.table(cb.aliases.get(new_alias, new_alias)).alias(new_alias)
-            if (
-                self.use_broadcast_hints
-                and referenced_side == new_alias
-                and self._broadcastable(cb.aliases.get(new_alias, new_alias))
+            if referenced_side == new_alias and self._broadcastable(
+                cb.aliases.get(new_alias, new_alias)
             ):
                 other = F.broadcast(other)
             df = df.join(other, F.col(j.left) == F.col(j.right), "inner")
@@ -475,8 +472,10 @@ class MappingCompiler:
     def _broadcastable(self, table_name: str) -> bool:
         if table_name in self.extra_tables:
             return False  # injected frames carry no size info
+        from ont_d2rq_spark.sources.tables import source_meta
+
         path = self.mapping.database.path_for(table_name)
-        total = self._source_bytes(path)
+        total, _stamp = source_meta(self.spark, path)
         if total is None:
             import logging
 
@@ -488,37 +487,6 @@ class MappingCompiler:
             )
             return False
         return total <= self.FK_BROADCAST_CAP_BYTES
-
-    def _source_bytes(self, path: str) -> Optional[int]:
-        """On-disk bytes of a source path, or None when unknown.  Local
-        paths use os.stat; URI paths (s3://, hdfs://, …) go through the
-        JVM's Hadoop FileSystem.getContentSummary — driver-side metadata
-        calls only, no data read either way."""
-        import os
-        import re as _re
-
-        if _re.match(r"^[a-zA-Z][a-zA-Z0-9+.-]*://", path) and not path.startswith(
-            "file://"
-        ):
-            try:
-                jvm = self.spark._jvm
-                jpath = jvm.org.apache.hadoop.fs.Path(path)
-                conf = self.spark._jsc.hadoopConfiguration()
-                fs = jpath.getFileSystem(conf)
-                return int(fs.getContentSummary(jpath).getLength())
-            except Exception:
-                return None
-        local = path[len("file://"):] if path.startswith("file://") else path
-        try:
-            if os.path.isdir(local):
-                return sum(
-                    os.path.getsize(os.path.join(local, f))
-                    for f in os.listdir(local)
-                    if not f.startswith((".", "_"))
-                )
-            return os.path.getsize(local)
-        except OSError:
-            return None
 
     # Above this many entries a translation table joins as a broadcast
     # dict-DataFrame instead of a plan-embedded map literal (a 10M-entry
@@ -835,9 +803,7 @@ class MappingCompiler:
             df = self.table(base_table).alias(base_alias)
             for tgt, (left, right) in join_env.items():
                 other = self.table(alias_map.get(tgt, tgt)).alias(tgt)
-                if self.use_broadcast_hints and self._broadcastable(
-                    alias_map.get(tgt, tgt)
-                ):
+                if self._broadcastable(alias_map.get(tgt, tgt)):
                     other = F.broadcast(other)
                 df = df.join(other, F.col(left) == F.col(right), "left")
             # conditions every fused bridge shares (e.g. the ClassMap-level

@@ -42,13 +42,13 @@ def datatype_for(dt: T.DataType) -> Optional[str]:
 def lexical_expr(col: Column, dt: T.DataType) -> Tuple[Column, Optional[str]]:
     """(canonical lexical-form string column, XSD datatype URI or None).
 
-    Canonical forms (pinned by tests/test_lexical.py):
+    Canonical forms (pinned by tests/test_features.py::test_lexical_forms):
       integer   → decimal digits, no '+' (SQLExactNumeric)
       decimal   → plain notation as rendered by Spark's decimal→string
       double    → Java Double.toString-style (Spark double→string cast)
       boolean   → 'true' / 'false'
       date      → yyyy-MM-dd
-      dateTime  → yyyy-MM-ddTHH:mm:ss[.fff] (trailing .000 trimmed)
+      dateTime  → yyyy-MM-ddTHH:mm:ss[.fff] (trailing fraction zeros trimmed)
       hexBinary → uppercase hex (SQLBinary hex-encodes)
       CHAR      → caller applies rtrim via mapping column override
     """

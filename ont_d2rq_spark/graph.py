@@ -874,18 +874,10 @@ def optional_join(
 
 
 class VirtualGraph:
-    def __init__(
-        self,
-        mapping: Mapping,
-        spark: SparkSession,
-        extra_tables=None,
-        use_broadcast_hints: bool = True,
-    ):
+    def __init__(self, mapping: Mapping, spark: SparkSession, extra_tables=None):
         self.mapping = mapping
         self.spark = spark
-        self.compiler = MappingCompiler(
-            mapping, spark, extra_tables, use_broadcast_hints=use_broadcast_hints
-        )
+        self.compiler = MappingCompiler(mapping, spark, extra_tables)
         self.bridges: list[CompiledBridge] = self.compiler.compile()
         self._cached: list[DataFrame] = []
         # named graphs (SPARQL GRAPH clause): the reference serves the

@@ -3,11 +3,11 @@
 The interleaved-document model carries media as `media_ref` pointers
 (or inline `binary` columns via Spark's `binaryFile` source — the
 DownloadMap/BLOB analogue, SURVEY §2.1 S7).  The image/audio codec
-libraries are NOT in this container; the default decode kernel is a
-STUB (deterministic fake clearly marked below) the driver oracle
-replays, but the REAL kernel chain (decode_media(use_pil=True)) is
-live even here: PIL when installed, else a pure-stdlib PNG decoder
-(zlib inflate + numpy scanline unfiltering, r5).  Everything
+libraries are NOT in this container; decode_media runs ONE kernel that
+chooses per row from the bytes: rows PIL (when installed) or a
+pure-stdlib PNG decoder (zlib inflate + numpy scanline unfiltering)
+can read get real metadata, every other row the deterministic STUB
+(clearly marked below) the driver oracle replays.  Everything
 Spark-side — schema, Arrow batch shape, mapInPandas partitioning,
 metadata typing — is real and tested.
 
@@ -27,9 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# capability flag: when the container gains codec libs, the real-kernel
-# path lights up with zero plumbing change (decode_media(use_pil=True)
-# or the HAVE_PIL default probe)
+# capability flag: when the container gains codec libs, decode_media
+# reads every format PIL knows with zero plumbing change
 HAVE_PIL = importlib.util.find_spec("PIL") is not None
 
 MEDIA_META_SCHEMA = T.StructType(
@@ -75,15 +74,40 @@ def _fake_feature(content: bytes, dim: int = 8) -> list[float]:
     return [b / s for b in buckets]
 
 
+def _real_decode(content: bytes):
+    """(width, height, 8-bucket grayscale histogram px // 32) of an
+    image PIL (when installed) or :func:`_png_decode` can read, else
+    None."""
+    import numpy as np
+
+    if HAVE_PIL:
+        import io
+
+        from PIL import Image
+
+        try:
+            img = Image.open(io.BytesIO(content))
+            px = np.asarray(img.convert("L"), dtype=np.int64).ravel()
+            return (*img.size, np.bincount(px // 32, minlength=8)[:8])
+        except Exception:
+            pass
+    png = _png_decode(content)
+    if png is None:
+        return None
+    w, h, gray = png
+    return w, h, np.bincount(gray // 32, minlength=8)[:8]
+
+
 def decode_media_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas kernel: (media_ref, kind, content: bytes) batches →
-    MEDIA_META_SCHEMA batches.  One Python crossing per Arrow batch,
-    and the (stub) kernels run VECTORIZED per batch — all rows' bytes
+    MEDIA_META_SCHEMA batches.  One Python crossing per Arrow batch.
+    The stub values run VECTORIZED per batch — all rows' bytes
     concatenate into one numpy buffer and the per-row histograms fall
-    out of a single bincount — the same batch-at-once shape a real
-    PIL/ONNX kernel would use.  _fake_decode/_fake_hist/_fake_feature
-    above stay as the scalar reference semantics (pinned equal by
-    pytest)."""
+    out of a single bincount (_fake_decode/_fake_hist/_fake_feature
+    above stay as the scalar reference semantics, pinned equal by
+    pytest).  Rows a real decoder can read (:func:`_real_decode`) then
+    take the actual width, height and pixel histogram, so mixed
+    corpora (real images + fake fixtures) produce full metadata."""
     import numpy as np
 
     for pdf in it:
@@ -100,6 +124,10 @@ def decode_media_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
         width = np.where(lens > 0, 16 + first % 64, 0).astype(np.int32)
         height = np.where(lens > 0, 16 + lens % 64, 0).astype(np.int32)
+        for i, c in enumerate(contents):
+            real = _real_decode(c)
+            if real is not None:
+                width[i], height[i], hist[i] = real
         sums = hist.sum(axis=1, keepdims=True).astype(np.float64)
         feature = hist / np.where(sums == 0, 1.0, sums)
         yield pd.DataFrame(
@@ -216,67 +244,11 @@ def _png_decode(content: bytes):
         return None
 
 
-def decode_media_batch_real(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """REAL decode kernel behind the capability flag: PIL when
-    installed, else the pure-stdlib PNG decoder (_png_decode) — either
-    way width/height come from the actual image and the 8-bucket
-    grayscale histogram (px // 32) from the actual pixels.  Rows no
-    kernel can decode fall back to the stub semantics, so mixed
-    corpora (real images + fake fixtures) still produce full metadata.
-    Same mapInPandas/Arrow shape as the stub kernel — only the
-    per-batch kernel body differs."""
-    import io
-
-    import numpy as np
-
-    if HAVE_PIL:
-        from PIL import Image  # once per batch-iterator, not per row
-
-    for pdf in it:
-        rows = {k: [] for k in ("media_ref", "kind", "n_bytes", "width", "height", "hist", "feature")}
-        for ref, kind, content in zip(pdf["media_ref"], pdf["kind"], pdf["content"]):
-            c = bytes(content) if content is not None else b""
-            w = h = hist = None
-            if HAVE_PIL:
-                try:
-                    img = Image.open(io.BytesIO(c))
-                    w, h = img.size
-                    px = np.asarray(img.convert("L"), dtype=np.int64).ravel()
-                    hist = np.bincount(px // 32, minlength=8)[:8]
-                except Exception:
-                    w = None
-            if w is None:
-                png = _png_decode(c)
-                if png is not None:
-                    w, h, gray = png
-                    hist = np.bincount(gray // 32, minlength=8)[:8]
-            if w is None:
-                w, h = _fake_decode(c)
-                hist = np.array(_fake_hist(c), dtype=np.int64)
-            s = float(hist.sum()) or 1.0
-            rows["media_ref"].append(ref)
-            rows["kind"].append(kind)
-            rows["n_bytes"].append(len(c))
-            rows["width"].append(w)
-            rows["height"].append(h)
-            rows["hist"].append(hist)
-            rows["feature"].append((hist / s).astype(np.float32))
-        yield pd.DataFrame(rows)
-
-
-# back-compat alias (pre-r5 name for the real-kernel batch fn)
-decode_media_batch_pil = decode_media_batch_real
-
-
-def decode_media(df: DataFrame, use_pil: bool = False) -> DataFrame:
+def decode_media(df: DataFrame) -> DataFrame:
     """df(media_ref, kind, content binary) → typed media metadata +
-    feature vector.  Repartition by kind first so decoder state stays
-    warm per task at scale.  ``use_pil=True`` selects the REAL kernel
-    chain — PIL when installed (HAVE_PIL), else the pure-stdlib PNG
-    decoder, stub fallback per row; the default stays the
-    deterministic stub the driver oracle replays."""
-    kernel = decode_media_batch_real if use_pil else decode_media_batch
-    return df.repartition("kind").mapInPandas(kernel, MEDIA_META_SCHEMA)
+    feature vector (:func:`decode_media_batch`).  Repartition by kind
+    first so decoder state stays warm per task at scale."""
+    return df.repartition("kind").mapInPandas(decode_media_batch, MEDIA_META_SCHEMA)
 
 
 def resize_plan(meta: DataFrame, max_side: int = 224) -> DataFrame:

@@ -31,25 +31,15 @@ def _as_double(vec_col):
     return F.transform(vec_col, lambda x: x.cast("double"))
 
 
-def cosine(a, b):
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
-    n = lambda c: F.sqrt(F.aggregate(c, F.lit(0.0), lambda s, x: s + x * x))
-    return dot / (n(a) * n(b))
-
-
 def cosine_arrow(a, b):
-    """Arrow twin of :func:`cosine` — bit-identical doubles, ~10-30×
-    cheaper per pair.
+    """Cosine similarity of two array<double> columns, one Arrow batch
+    at a time.
 
-    The Catalyst version is an aggregate/zip_with fold: every
-    higher-order function is CodegenFallback (interpreted), and the
-    norms are re-folded once per PAIR instead of once per vector.  The
-    UDF accumulates dimension-by-dimension in the SAME left-fold order
-    (acc = acc + x·y, IEEE doubles), so dot, norms, sqrt and the final
-    division produce the exact bits the interpreted fold produces —
-    callers keep applying F.round JVM-side, so oracle-rounded scores
-    are unchanged (pinned by tests/test_dedup_similarity.py parity
-    test)."""
+    Accumulates dimension by dimension in a left fold (acc = acc + x·y,
+    IEEE doubles); callers round the score with F.round JVM-side.  The
+    oracle rows pin the values: DuckDB recomputes the rounded scores
+    of similarity_topk, ann_lsh_topk, ann_ivf_topk and
+    embedding_near_dup_lsh."""
     @F.pandas_udf("double")
     def _cos(va: pd.Series, vb: pd.Series) -> pd.Series:
         if len(va) == 0:
@@ -129,64 +119,30 @@ def quantized(vec_col):
     )
 
 
-def _bucket_expr(qcol, table_planes):
-    """Σ_p (⟨q, plane_p⟩ > 0) << p — the per-table bucket id, all
-    integer arithmetic inside whole-stage codegen."""
-    b = F.lit(0).cast("long")
-    for p, signs in enumerate(table_planes):
-        plane = F.array(*[F.lit(s).cast("long") for s in signs])
-        dot = F.aggregate(
-            F.zip_with(qcol, plane, lambda a, s: a * s),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        b = b + F.when(dot > 0, F.lit(1 << p).cast("long")).otherwise(F.lit(0).cast("long"))
-    return b
-
-
 def lsh_banded(
     df: DataFrame,
     idn: str,
     mats: list,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    arrow: bool = True,
 ) -> DataFrame:
     """→ (idn, t, bucket): one row per (vector, table) with the
     signature bucket for that table.
 
-    Default path: one Arrow-batched pandas UDF doing the whole
-    (batch×dim) @ (dim×tables·planes) projection as a single numpy
-    int64 matmul.  The Catalyst alternative (``arrow=False``) builds
-    tables×planes `aggregate(zip_with(...))` dot products — those
-    higher-order functions are CodegenFallback (interpreted
-    per-element), which at planes=8/tables=32 made the projection the
-    whole query's bottleneck (~5× the rest of the join combined).
-    Both paths quantize with round-half-away-from-zero to exact int64
-    and produce identical buckets (the DuckDB oracle replays the same
-    integer arithmetic).  Caveat: numpy's floor(x·1e6 + 0.5) and the
-    engines' decimal HALF_UP agree except when x·1e6 lands within half
-    an ulp of k+0.5 for integer k — possible in principle for arbitrary
-    doubles, never observed on the float32-derived fixtures; the
-    oracle-checked query pins the agreement on real data each round."""
+    One Arrow-batched pandas UDF does the whole (batch×dim) @
+    (dim×tables·planes) projection as a single numpy int64 matmul
+    (a Catalyst formulation needs tables×planes `aggregate(zip_with)`
+    dot products, which are CodegenFallback — interpreted per element —
+    and made the projection ~5× the rest of the join combined at
+    planes=8/tables=32).  Vectors are quantized with
+    round-half-away-from-zero to exact int64, the same integer
+    arithmetic the DuckDB oracle replays.  Caveat: numpy's
+    floor(x·1e6 + 0.5) and the engines' decimal HALF_UP agree except
+    when x·1e6 lands within half an ulp of k+0.5 for integer k —
+    possible in principle for arbitrary doubles, never observed on the
+    float32-derived fixtures; the oracle-checked query pins the
+    agreement on real data each round."""
     tables, planes = len(mats), len(mats[0])
-    if not arrow:
-        base = df.select(F.col(id_col).alias(idn), quantized(F.col(vec_col)).alias("_q"))
-        return base.select(
-            idn,
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("t"),
-                            _bucket_expr(F.col("_q"), mats[t]).alias("bucket"),
-                        )
-                        for t in range(tables)
-                    ]
-                )
-            ).alias("tb"),
-        ).select(idn, "tb.t", "tb.bucket")
-
     P = np.array(mats, dtype=np.int64).reshape(tables * planes, -1)  # (t·p, dim)
     weights = 1 << np.arange(planes, dtype=np.int64)
 
@@ -207,6 +163,34 @@ def lsh_banded(
         .select(idn, F.posexplode("_b").alias("t", "bucket"))
         .select(idn, F.col("t").cast("int").alias("t"), "bucket")
     )
+
+
+def _rerank(
+    cand: DataFrame,
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Exact cosine top-k over (q_id, id) candidate pairs: re-join the
+    full vectors (the wide arrays never ride the candidate shuffle),
+    score, and rank per query with a deterministic tiebreak."""
+    cv = corpus.select(F.col(id_col).alias("id"), _as_double(vec_col).alias("id_v"))
+    qv = F.broadcast(
+        queries.select(F.col(id_col).alias("q_id"), _as_double(vec_col).alias("q_v"))
+    )
+    scored = (
+        cand.join(cv, "id")
+        .join(qv, "q_id")
+        .select(
+            "q_id",
+            "id",
+            F.round(cosine_arrow(F.col("id_v"), F.col("q_v")), 6).alias("cosine"),
+        )
+    )
+    w = W.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("id").asc())
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def lsh_topk(
@@ -240,21 +224,7 @@ def lsh_topk(
         .select("q_id", "id")
         .distinct()
     )
-    cv = corpus.select(F.col(id_col).alias("id"), _as_double(vec_col).alias("id_v"))
-    qv = F.broadcast(
-        queries.select(F.col(id_col).alias("q_id"), _as_double(vec_col).alias("q_v"))
-    )
-    scored = (
-        cand.join(cv, "id")
-        .join(qv, "q_id")
-        .select(
-            "q_id",
-            "id",
-            F.round(cosine_arrow(F.col("id_v"), F.col("q_v")), 6).alias("cosine"),
-        )
-    )
-    w = W.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rerank(cand, corpus, queries, k, id_col, vec_col)
 
 
 def ivf_centroids(
@@ -332,21 +302,7 @@ def ivf_topk(
         .select("q_id", "id")
         .distinct()
     )
-    cv = corpus.select(F.col(id_col).alias("id"), _as_double(vec_col).alias("id_v"))
-    qv = F.broadcast(
-        queries.select(F.col(id_col).alias("q_id"), _as_double(vec_col).alias("q_v"))
-    )
-    scored = (
-        cand.join(cv, "id")
-        .join(qv, "q_id")
-        .select(
-            "q_id",
-            "id",
-            F.round(cosine_arrow(F.col("id_v"), F.col("q_v")), 6).alias("cosine"),
-        )
-    )
-    w = W.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rerank(cand, corpus, queries, k, id_col, vec_col)
 
 
 # Verification-join broadcast guard (lsh_near_dup_pairs): estimated

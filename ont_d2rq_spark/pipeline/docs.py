@@ -28,7 +28,6 @@ to exercise skew handling.
 
 from __future__ import annotations
 
-import os
 from typing import Optional
 
 import pandas as pd
@@ -56,24 +55,6 @@ HUB_EXTRA = 120  # extra mention spans per hub
 # ⓪ deterministic synthesis of the interleaved table (FIXTURES.md §2)
 # ---------------------------------------------------------------------------
 
-def _parquet_rows(path: str, spark: SparkSession) -> int:
-    """Exact row count from parquet footer metadata — driver-side file
-    reads only, no Spark job (the count() it replaces was
-    metadata-only too, but still cost a job + plan per call).  Falls
-    back to a Spark count for non-local paths."""
-    try:
-        import pyarrow.parquet as pq
-
-        if os.path.isdir(path):
-            return sum(
-                pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            )
-        return pq.ParquetFile(path).metadata.num_rows
-    except Exception:
-        return spark.read.parquet(path).count()
-
 def synthesize_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents(doc_id,text) → docs_interleaved(doc_id, spans).
 
@@ -81,14 +62,14 @@ def synthesize_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
     and at every parallelism level.  Entity mentions reference REAL
     customer keys (`Customer#%09d` for key = f(doc_id, span)) so
     entity linking has an exact oracle."""
-    from ont_d2rq_spark.sources.tables import balanced_read
+    from ont_d2rq_spark.sources.tables import balanced_read, parquet_rows
 
     # rename the numeric key up front: the output column is also called
     # doc_id (a string) and lambda closures resolve by name lazily
     docs = balanced_read(
         spark, f"{sf_dir}/documents.parquet", min_split_bytes=64 << 10
     ).select(F.col("doc_id").alias("_did"), "text")
-    n_cust = _parquet_rows(f"{sf_dir}/customer.parquet", spark)
+    n_cust = parquet_rows(spark, f"{sf_dir}/customer.parquet")
 
     toks = F.split(F.col("text"), " ")
     n_chunks = F.greatest(F.ceil(F.size(toks) / CHUNK).cast("int"), F.lit(1))
@@ -418,16 +399,7 @@ def build_kg(
         sameas = raw.filter(F.col("pred") == OWL_SAMEAS).select(
             F.col("subj").alias("src"), F.col("obj").alias("dst")
         )
-        # check_every=1: the alias graph is star-shaped and converges
-        # after ONE star round, so checking every round stops
-        # immediately; skipping checks (check_every=2) makes the loop
-        # run 3 extra already-converged star rounds before it can
-        # notice — measured 2.25 s vs 2.9–4.7 s at sf0.1.  Raise
-        # check_every only for graphs with real alias CHAINS (deep
-        # components), where rounds outnumber convergence checks.
-        return canonicalize_sameas(
-            sameas, alias_prefix=EX + "entity/", check_every=1
-        )
+        return canonicalize_sameas(sameas, alias_prefix=EX + "entity/")
 
     # canon: consumed by TWO broadcast builds (subj + obj rewrite) that
     # run in parallel threads — materialize once before they race

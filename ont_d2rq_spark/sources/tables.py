@@ -13,22 +13,80 @@ columns below the exchange, so only the needed columns are shuffled.
 ``balanced_read`` applies that repair only when needed: source splits
 < cores AND the file is big enough that the shuffle pays for itself.
 Small dimension tables stay unsplit (they broadcast anyway).
+
+``source_meta`` is the one place that decides which files make up a
+source path; the split estimate, the handle-cache key, the compiler's
+FK-broadcast size guard and ``parquet_rows`` all follow its rule.
 """
 
 from __future__ import annotations
 
 import os
+import re
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+_URI = re.compile(r"^[a-zA-Z][a-zA-Z0-9+.-]*://")
 
-def _path_bytes(path: str) -> int:
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    total = 0
-    for dirpath, _dirs, files in os.walk(path):
-        total += sum(os.path.getsize(os.path.join(dirpath, f)) for f in files)
-    return total
+
+def _local(path: str) -> Optional[str]:
+    """Filesystem path of a local source (plain path or ``file://``
+    URI), None for any other URI scheme."""
+    if path.startswith("file://"):
+        return path[len("file://"):]
+    return None if _URI.match(path) else path
+
+
+def source_meta(spark: SparkSession, path: str) -> tuple[Optional[int], Optional[tuple]]:
+    """What is on disk at a source path: ``(bytes, stamp)``.
+
+    The one place that decides which files make up a table.  A local
+    path (or ``file://`` URI) is a file or a directory walked
+    recursively, skipping names that start with ``_`` or ``.`` at any
+    depth (Spark's hidden-file rule: ``_SUCCESS``, ``.crc``, staging
+    dirs); the stamp is (file count, total bytes, max mtime_ns) over
+    the same files, so any edit inside a partition changes it.  Other
+    schemes take bytes from Hadoop's ``getContentSummary`` (driver-side
+    metadata, no data read) and have no stamp.  ``(None, None)`` when
+    the path is missing or its size cannot be read."""
+    local = _local(path)
+    if local is None:
+        try:
+            jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+            fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+            return int(fs.getContentSummary(jpath).getLength()), None
+        except Exception:
+            return None, None
+    try:
+        if not os.path.isdir(local):
+            stats = [os.stat(local)]
+        else:
+            stats = []
+            for dirpath, dirs, files in os.walk(local):
+                dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+                stats += [
+                    os.stat(os.path.join(dirpath, f))
+                    for f in files
+                    if not f.startswith(("_", "."))
+                ]
+    except OSError:
+        return None, None
+    total = sum(st.st_size for st in stats)
+    return total, (len(stats), total, max((st.st_mtime_ns for st in stats), default=0))
+
+
+def parquet_rows(spark: SparkSession, path: str) -> int:
+    """Exact row count of a parquet source from footer metadata —
+    driver-side file reads only, no Spark job.  The dataset discovery
+    recurses and skips ``_``/``.`` names like :func:`source_meta`.
+    Non-local paths fall back to a Spark count."""
+    local = _local(path)
+    if local is not None:
+        import pyarrow.dataset as ds
+
+        return ds.dataset(local, format="parquet").count_rows()
+    return spark.read.parquet(path).count()
 
 
 _BYTE_SUFFIX = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
@@ -59,7 +117,6 @@ def balanced_read(
     spark: SparkSession,
     path: str,
     min_split_bytes: int = 1 << 20,
-    target_partitions: int | None = None,
     fmt: str | None = None,
     schema: str | None = None,
     options: dict | None = None,
@@ -80,25 +137,15 @@ def balanced_read(
     # re-opened its tables, and each first load() runs a schema/footer
     # job plus driver planning.  A DataFrame is an immutable lazy plan,
     # so the handle is safely shared; the key carries the source's
-    # (mtime, size) so a rewritten path is re-opened (a cached scan
-    # pins its file listing).  This caches PLANS, never results.
-    try:
-        st = os.stat(path)
-        stamp = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        stamp = None
+    # stamp so a rewritten path — or a file added or edited anywhere
+    # inside a partitioned directory — is re-opened (a cached scan pins
+    # its file listing).  Paths without a stamp are never cached.
+    # This caches PLANS, never results.
+    total, stamp = source_meta(spark, path)
     cache = getattr(spark, "_balanced_read_cache", None)
     if cache is None:
         cache = spark._balanced_read_cache = {}
-    key = (
-        path,
-        fmt,
-        schema,
-        tuple(sorted(opts.items())),
-        min_split_bytes,
-        target_partitions,
-        stamp,
-    )
+    key = (path, fmt, schema, tuple(sorted(opts.items())), min_split_bytes, stamp)
     if stamp is not None and key in cache:
         return cache[key]
     if fmt == "csv":
@@ -111,8 +158,6 @@ def balanced_read(
     if schema is not None:
         reader = reader.schema(schema)
     df = reader.load(path)
-    if target_partitions is None:
-        target_partitions = spark.sparkContext.defaultParallelism
     # Estimate the scan's split count from on-disk bytes instead of
     # materializing df.rdd (each .rdd call converts the whole logical
     # plan to a physical RDD DAG — several hundred ms of driver/py4j
@@ -121,18 +166,13 @@ def balanced_read(
     # maxPartitionBytes (+ openCostInBytes per file), so splits ≈
     # ceil(bytes / maxPartitionBytes) — exact for the single-file
     # tables this engine maps, conservative for directories.
-    def done(out):
-        if stamp is not None:
-            cache[key] = out
-        return out
-
-    total = _path_bytes(path)
-    if total < min_split_bytes:
-        return done(df)
-    max_split = _parse_bytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    )
-    est_splits = max(1, -(-total // max_split))
-    if est_splits >= target_partitions:
-        return done(df)
-    return done(df.repartition(target_partitions))
+    target = spark.sparkContext.defaultParallelism
+    if total is not None and total >= min_split_bytes:
+        max_split = _parse_bytes(
+            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
+        )
+        if max(1, -(-total // max_split)) < target:
+            df = df.repartition(target)
+    if stamp is not None:
+        cache[key] = df
+    return df

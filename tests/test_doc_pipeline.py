@@ -68,6 +68,25 @@ def test_mentions_deterministic_and_linked(spark, interleaved):
     assert links.filter(F.col("score") < 0.9).count() == 0
 
 
+def test_synthesis_counts_partitioned_customer_dir(spark, tmp_path, interleaved):
+    """A Hive-partitioned, nested customer/ directory yields the exact
+    customer count, so synthesis over it reproduces the single-file
+    rows (a top-level *.parquet listing counted 0 and broke the mention
+    modulus)."""
+    import shutil
+
+    shutil.copy(f"{SF}/documents.parquet", tmp_path / "documents.parquet")
+    cust = str(tmp_path / "customer.parquet")
+    spark.read.parquet(f"{SF}/customer.parquet").write.partitionBy(
+        "c_mktsegment", "c_nationkey"
+    ).parquet(cust)
+    got = P.synthesize_interleaved(spark, str(tmp_path))
+    assert sorted(got.collect()) == sorted(interleaved.collect())
+    from ont_d2rq_spark.sources.tables import parquet_rows
+
+    assert parquet_rows(spark, cust) == parquet_rows(spark, f"{SF}/customer.parquet") == 150
+
+
 def test_build_kg_checkpointed_and_resumable(spark, tmp_path):
     root = str(tmp_path / "kg")
     kg1 = P.build_kg(spark, SF, root=root)

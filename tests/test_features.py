@@ -486,3 +486,33 @@ def test_download_map(spark, emp):
     content, media = download_content(g, EX + "file/2")
     assert content == "b" and media == "text/plain"
     assert download_content(g, EX + "file/99") == (None, "text/plain")
+
+
+def test_lexical_forms(spark):
+    """Canonical lexical form and XSD datatype per Spark type
+    (functions/lexical.py)."""
+    from ont_d2rq_spark.functions.lexical import XSD, lexical_expr
+
+    df = spark.sql(
+        "SELECT CAST(-42 AS BIGINT) i, CAST(3.50 AS DECIMAL(10,2)) d,"
+        " CAST(1.0E-7 AS DOUBLE) f, CAST(2.5 AS DOUBLE) f2, true b,"
+        " DATE'2024-02-29' dt, TIMESTAMP'2024-02-29 13:05:10' ts,"
+        " TIMESTAMP'2024-02-29 13:05:09.120' ts2, X'0AFF' bin"
+    )
+    forms = [lexical_expr(df[c], df.schema[c].dataType) for c in df.columns]
+    got = df.select(*[col.alias(c) for (col, _), c in zip(forms, df.columns)]).first()
+    assert got.asDict() == {
+        "i": "-42",
+        "d": "3.50",
+        "f": "1.0E-7",
+        "f2": "2.5",
+        "b": "true",
+        "dt": "2024-02-29",
+        "ts": "2024-02-29T13:05:10",
+        "ts2": "2024-02-29T13:05:09.12",
+        "bin": "0AFF",
+    }
+    assert [dt[len(XSD):] for _, dt in forms] == [
+        "integer", "decimal", "double", "double", "boolean",
+        "date", "dateTime", "dateTime", "hexBinary",
+    ]

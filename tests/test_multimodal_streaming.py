@@ -59,8 +59,8 @@ def test_decode_batch_vectorized_matches_scalar_reference():
 
 @pytest.mark.skipif(not MM.HAVE_PIL, reason="PIL not installed (stub-only container)")
 def test_decode_media_pil_branch(spark):
-    """Capability-flag path: with PIL present, decode_media(use_pil=True)
-    reads real image headers; undecodable bytes fall back to the stub."""
+    """Capability-flag path: with PIL present, decode_media reads real
+    image headers; undecodable bytes fall back to the stub."""
     import io
 
     from PIL import Image
@@ -72,7 +72,7 @@ def test_decode_media_pil_branch(spark):
         [("img1", "image", png), ("fake1", "image", b"not-an-image")],
         "media_ref string, kind string, content binary",
     )
-    rows = {r["media_ref"]: r for r in MM.decode_media(df, use_pil=True).collect()}
+    rows = {r["media_ref"]: r for r in MM.decode_media(df).collect()}
     assert (rows["img1"]["width"], rows["img1"]["height"]) == (40, 30)
     assert sum(rows["img1"]["hist"]) == 40 * 30  # one bucket per pixel
     w, h = MM._fake_decode(b"not-an-image")
@@ -298,16 +298,15 @@ def test_png_decode_rgb_luma():
 
 
 def test_decode_media_real_kernel_without_pil(spark):
-    """decode_media(use_pil=True) decodes a real PNG in THIS container
-    (stdlib zlib path; formerly the PIL-only skipped branch) while
-    non-PNG bytes keep the stub semantics."""
+    """decode_media decodes a real PNG without PIL (stdlib zlib path)
+    while non-PNG bytes in the same batch keep the stub semantics."""
     rows_png = [(0, [128] * 40)] * 30
     png = _mk_png(40, 30, rows_png)
     df = spark.createDataFrame(
         [("img1", "image", png), ("fake1", "image", b"not-an-image")],
         "media_ref string, kind string, content binary",
     )
-    rows = {r["media_ref"]: r for r in MM.decode_media(df, use_pil=True).collect()}
+    rows = {r["media_ref"]: r for r in MM.decode_media(df).collect()}
     assert (rows["img1"]["width"], rows["img1"]["height"]) == (40, 30)
     assert sum(rows["img1"]["hist"]) == 40 * 30
     assert rows["img1"]["hist"][128 // 32] == 40 * 30  # all pixels one bucket

@@ -194,7 +194,7 @@ def test_fk_hint_size_guarded(spark):
     old = MappingCompiler.FK_BROADCAST_CAP_BYTES
     MappingCompiler.FK_BROADCAST_CAP_BYTES = 0  # everything "too big"
     try:
-        g = VirtualGraph(tpch_mapping(SF), spark, use_broadcast_hints=True)
+        g = VirtualGraph(tpch_mapping(SF), spark)
         cb = next(b for b in g.bridges if b.name == "customer.nation")
         lp = (
             g.compiler.bridge_df(cb)
@@ -207,29 +207,50 @@ def test_fk_hint_size_guarded(spark):
         MappingCompiler.FK_BROADCAST_CAP_BYTES = old
     # under the real cap the sf0.001 dimension still hints (see
     # test_fk_hint_broadcasts_dimension for the physical-plan shape)
-    g2 = VirtualGraph(tpch_mapping(SF), spark, use_broadcast_hints=True)
+    g2 = VirtualGraph(tpch_mapping(SF), spark)
     cb2 = next(b for b in g2.bridges if b.name == "customer.nation")
     assert "BroadcastHashJoin" in plan(g2.compiler.bridge_df(cb2))
 
 
-def test_source_bytes_uri_paths(spark):
+def test_source_meta_uri_paths(spark):
     """r6 (ADVICE): _broadcastable must not OSError on non-local URIs —
     file:// URIs size via the local branch, unreachable remote schemes
     return None (hint suppressed, logged) instead of raising."""
-    from ont_d2rq_spark.compiler.relation import MappingCompiler
-    from ont_d2rq_spark.examples import tpch_mapping
-    from ont_d2rq_spark.graph import VirtualGraph
+    from ont_d2rq_spark.sources.tables import balanced_read, source_meta
 
     g = VirtualGraph(tpch_mapping(SF), spark)
     c = g.compiler
     local = c.mapping.database.path_for("region")
-    n = c._source_bytes(local)
+    n, _stamp = source_meta(spark, local)
     assert n is not None and n > 0
     # file:// URI resolves through the same local branch
-    assert c._source_bytes("file://" + local) == n
+    assert source_meta(spark, "file://" + local)[0] == n
     # unreachable remote scheme: None, no exception
-    assert c._source_bytes("hdfs://nohost-r6:9000/dim/region") is None
+    assert source_meta(spark, "hdfs://nohost-r6:9000/dim/region") == (None, None)
     assert c._broadcastable("region") is True
+    # a file:// table reads the same rows and gets a cached handle
+    df = balanced_read(spark, "file://" + local)
+    assert df.count() == balanced_read(spark, local).count() == 5
+    assert balanced_read(spark, "file://" + local) is df
+
+
+def test_fk_hint_guard_counts_partitioned_directory(spark, tmp_path, monkeypatch):
+    """A partitioned, nested table is sized over ALL its data files: a
+    top-level listing sums a few partition-directory inodes, which
+    passed the FK-broadcast size guard."""
+    from ont_d2rq_spark.compiler.relation import MappingCompiler
+
+    out = tmp_path / "orders"
+    spark.read.parquet(f"{SF}/orders.parquet").write.partitionBy(
+        "o_orderstatus"
+    ).parquet(str(out))
+    data_bytes = sum(f.stat().st_size for f in out.rglob("part-*.parquet"))
+    g = VirtualGraph(tpch_mapping(SF), spark)
+    g.mapping.database.tables["orders"] = str(out)
+    with monkeypatch.context() as m:
+        m.setattr(MappingCompiler, "FK_BROADCAST_CAP_BYTES", data_bytes - 1)
+        assert g.compiler._broadcastable("orders") is False
+    assert g.compiler._broadcastable("orders") is True  # under the real cap
 
 
 def test_compat_join_streams_left_once(spark):

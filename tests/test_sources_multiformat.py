@@ -110,3 +110,24 @@ def test_find_pushdown_over_csv(spark, src_dir):
     g = VirtualGraph(_mapping(src_dir), spark)
     hits = g.find(s=EX + "person/2", p=EX + "name").collect()
     assert [h["obj"] for h in hits] == ["Bob"]
+
+
+def test_balanced_read_sees_file_added_inside_partition(spark, tmp_path):
+    """The handle cache keys on every data file under the path: a file
+    added inside an existing partition directory (top-level mtime
+    unchanged) re-opens the table instead of serving the stale
+    listing."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ont_d2rq_spark.sources.tables import balanced_read
+
+    root = tmp_path / "facts"
+    for k in (1, 2):
+        (root / f"k={k}").mkdir(parents=True)
+        pq.write_table(pa.table({"v": [k, k + 10]}), root / f"k={k}" / "part-0.parquet")
+    (root / "_SUCCESS").write_bytes(b"")
+    assert balanced_read(spark, str(root)).count() == 4
+    assert balanced_read(spark, str(root)) is balanced_read(spark, str(root))
+    pq.write_table(pa.table({"v": [7, 8, 9]}), root / "k=1" / "part-1.parquet")
+    assert balanced_read(spark, str(root)).count() == 7
