@@ -11,7 +11,9 @@ and lets Spark pick the physical strategy.
 Public surface:
   mapping.model      — Mapping / ClassMap / PropertyBridge / TranslationTable
                        (reference: de/fuberlin/wiwiss/d2rq/map/*, parser/MapParser.java)
-  mapping.parser     — YAML mapping loader (reference: parser/MapParser.java)
+  mapping.ttl        — d2rq Turtle mapping loader and the d2rq vocabulary table
+                       (reference: parser/MapParser.java, vocab/D2RQ.java)
+  mapping.serialize  — Mapping → d2rq Turtle writer (reference: mapgen/MappingGenerator.java)
   functions.pattern  — invertible URI patterns + encoders
                        (reference: values/Pattern.java, mapgen/IRIEncoder.java)
   functions.lexical  — canonical RDF literal lexical forms (reference: sql/types/*.java)

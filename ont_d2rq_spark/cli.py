@@ -14,7 +14,7 @@
 Usage:
   python -m ont_d2rq_spark.cli dump-rdf -m mapping.ttl -d /data/sf0.1 -o /out/nt
   python -m ont_d2rq_spark.cli generate-mapping -d /data/sf0.1 -t customer,nation -o map.ttl
-  python -m ont_d2rq_spark.cli validate -m mapping.yaml -d /data/sf0.1
+  python -m ont_d2rq_spark.cli validate -m mapping.ttl -d /data/sf0.1
   python -m ont_d2rq_spark.cli sparql -m mapping.ttl -d /data/sf0.1 \\
       -q 'SELECT ?s ?o WHERE { ?s <http://example.org/name> ?o } LIMIT 5'
 """
@@ -25,17 +25,11 @@ import argparse
 import sys
 
 
-def _load_mapping(path: str, base_dir: str):
-    if path.endswith((".ttl", ".n3")):
-        from ont_d2rq_spark.mapping.ttl import load_mapping_ttl
+def _read_mapping(args):
+    from ont_d2rq_spark.mapping.ttl import load_mapping_ttl
 
-        return load_mapping_ttl(path, base_dir=base_dir)
-    from ont_d2rq_spark.mapping.parser import load_mapping
-
-    m = load_mapping(path)
-    if base_dir:
-        m.database.base_dir = base_dir
-    return m
+    with open(args.mapping) as f:  # -m is a d2rq Turtle file, whatever its extension
+        return load_mapping_ttl(f.read(), base_dir=args.base_dir)
 
 
 def main(argv=None) -> int:
@@ -89,7 +83,7 @@ def main(argv=None) -> int:
     args = ap.parse_args(argv)
 
     if args.cmd == "validate":
-        m = _load_mapping(args.mapping, args.base_dir)
+        m = _read_mapping(args)
         m.validate()
         print(
             f"OK: {len(m.class_maps)} class maps, {len(m.bridges)} property "
@@ -101,7 +95,7 @@ def main(argv=None) -> int:
     if args.cmd == "owl":
         from ont_d2rq_spark.owl import to_functional_syntax
 
-        m = _load_mapping(args.mapping, args.base_dir)
+        m = _read_mapping(args)
         doc = to_functional_syntax(m, ontology_iri=args.ontology_iri)
         if args.out:
             with open(args.out, "w") as f:
@@ -119,7 +113,7 @@ def main(argv=None) -> int:
     if args.cmd == "dump-rdf":
         from ont_d2rq_spark.graph import VirtualGraph
 
-        g = VirtualGraph(_load_mapping(args.mapping, args.base_dir), spark)
+        g = VirtualGraph(_read_mapping(args), spark)
         triples = g.triples(fuse=True, distinct=not args.no_distinct)
         if args.format == "ntriples":
             g.dump_nt(args.out, triples)
@@ -139,7 +133,7 @@ def main(argv=None) -> int:
         if not args.query and not args.query_file:
             ap.error("sparql needs -q or -f")
         qtext = args.query or open(args.query_file).read()
-        g = VirtualGraph(_load_mapping(args.mapping, args.base_dir), spark)
+        g = VirtualGraph(_read_mapping(args), spark)
         df = execute(g, qtext)
         if args.out:
             w = df.write.mode("overwrite")

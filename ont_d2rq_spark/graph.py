@@ -24,6 +24,7 @@ Spark-first re-expression:
 
 from __future__ import annotations
 
+import dataclasses
 import re
 from functools import reduce
 from typing import Optional, Sequence, Union
@@ -1015,6 +1016,63 @@ class VirtualGraph:
         post.append(F.col(out_col) == F.lit(value))
         return constraints, post
 
+    def _bind_bridge(self, cb: CompiledBridge, s, p, o):
+        """Bind one bridge to a triple pattern whose terms are constants
+        or None (free) — TripleRelation.selectTriple.  → (cb,
+        constraints, post_filters); raises _Prune when a bound term can
+        never match.  d2rq:limitInverse (SURVEY §2.6 O2): a pattern that
+        reads the bridge inverse (object bound, subject free) gets the
+        inverse limit in place of d2rq:limit."""
+        constraints: dict = {}
+        post: list = []
+        for spec, val, col in (
+            (cb.subject, s, "subj"),
+            (cb.predicate, p, "pred"),
+            (cb.object, o, "obj"),
+        ):
+            if val is not None:
+                c, f = self._bind(cb, spec, val, col)
+                constraints.update(c)
+                post.extend(f)
+        inverse_limit = cb.bridge.limit_inverse if cb.bridge is not None else None
+        if inverse_limit is not None and o is not None and s is None:
+            cb = dataclasses.replace(cb, limit=inverse_limit)
+        return cb, constraints, post
+
+    def _candidates(self, s, p, o) -> list[dict]:
+        """Every bridge that can match pattern (s, p, o), bound to it
+        by _bind_bridge; a tuple predicate is a SPARQL path alternation
+        (p1|p2), matched by a bridge that can produce ANY alternative.
+        Each candidate: {cb, constraints, post, popt, varspecs}, with
+        ``varspecs`` = {var name: the NodeSpec that binds it}."""
+
+        def const(term):
+            return None if term is None or _is_var(term) else term
+
+        cands = []
+        for popt in p if isinstance(p, tuple) else (p,):
+            for cb in self.bridges:
+                try:
+                    bound, constraints, post = self._bind_bridge(
+                        cb, const(s), const(popt), const(o)
+                    )
+                except _Prune:
+                    continue
+                varspecs = {}
+                for spec, term in ((cb.subject, s), (cb.predicate, popt), (cb.object, o)):
+                    if term is not None and _is_var(term):
+                        varspecs.setdefault(_var_name(term), spec)
+                cands.append(
+                    {
+                        "cb": bound,
+                        "constraints": constraints,
+                        "post": post,
+                        "popt": popt,
+                        "varspecs": varspecs,
+                    }
+                )
+        return cands
+
     # ------------------------------------------------------------------
     def find(
         self,
@@ -1032,32 +1090,10 @@ class VirtualGraph:
             o = Lit(o, datatype=o_datatype, lang=o_lang)
         frames = []
         for cb in self.bridges:
-            constraints: dict = {}
-            post: list = []
             try:
-                for spec, val, col in (
-                    (cb.subject, s, "subj"),
-                    (cb.predicate, p, "pred"),
-                    (cb.object, o, "obj"),
-                ):
-                    if val is not None:
-                        c, f = self._bind(cb, spec, val, col)
-                        constraints.update(c)
-                        post.extend(f)
+                cb, constraints, post = self._bind_bridge(cb, s, p, o)
             except _Prune:
                 continue
-            # d2rq:limitInverse (SURVEY §2.6 O2): when the pattern is
-            # queried in the inverse direction (object bound, subject
-            # free) the inverse limit replaces d2rq:limit
-            if (
-                cb.bridge is not None
-                and cb.bridge.limit_inverse is not None
-                and o is not None
-                and s is None
-            ):
-                import dataclasses
-
-                cb = dataclasses.replace(cb, limit=cb.bridge.limit_inverse)
             frames.append(self.compiler.bridge_df(cb, constraints, post))
         # d2rq:serveVocabulary: the schema graph answers find() too
         # (ont-d2rq unions the OWL vocabulary with the data graph)
@@ -1172,33 +1208,10 @@ class VirtualGraph:
                         else:
                             unknown.add(v)
                 continue
-            p_options = p if isinstance(p, tuple) else (p,)
             if isinstance(p, NegatedSet):
                 unknown |= {_var_name(t) for t in (s, o) if t is not None and _is_var(t)}
                 continue
-            cands = []
-            for popt in p_options:
-                for cb in self.bridges:
-                    try:
-                        for spec, term, col in (
-                            (cb.subject, s, "subj"),
-                            (cb.predicate, popt, "pred"),
-                            (cb.object, o, "obj"),
-                        ):
-                            if term is not None and not _is_var(term):
-                                self._bind(cb, spec, term, col)
-                    except _Prune:
-                        continue
-                    varspecs = {}
-                    for spec, term in (
-                        (cb.subject, s),
-                        (cb.predicate, popt),
-                        (cb.object, o),
-                    ):
-                        if term is not None and _is_var(term):
-                            varspecs.setdefault(_var_name(term), spec)
-                    cands.append({"cb": cb, "varspecs": varspecs})
-            meta[idx] = cands
+            meta[idx] = self._candidates(s, p, o)
         self._prune_join_incompatible(meta)
         for cands in meta.values():
             per_var: dict[str, list] = {}
@@ -1331,29 +1344,14 @@ class VirtualGraph:
     def bgp(
         self,
         patterns: Sequence[tuple],
-        filters: Optional[Sequence[str]] = None,
-        optional: Optional[Sequence[Sequence[tuple]]] = None,
         outer_specs: Optional[dict] = None,
     ) -> DataFrame:
         """Basic graph pattern → joined DataFrame of variable bindings.
 
         Each pattern is (s, p, o); terms are constants or '?var'/Var.
         Shared variables join (reference: NodeRelationJoiner); result has
-        one string column per variable (node lexical value).
-
-        ``filters``: Spark-SQL boolean expressions over variable names —
-        the pushable subset of SPARQL FILTER (Catalyst pushes them into
-        the joins/scans where possible; the reference translates the
-        same subset to SQL via TransformExprToSQLApplyer).
-        ``optional``: a list of OPTIONAL groups — each a pattern list,
-        or a (patterns, filters) tuple whose filters are scoped to the
-        group (evaluated inside the LeftJoin condition, SPARQL
-        leftjoin semantics) — left-joined on the shared variables.
-        NOTE: this parameter serves the direct-API/find surface only;
-        the SPARQL front-end applies OPTIONALs itself via the
-        recursive sparql._eval_where (which also handles nullable
-        RIGHT sides via right_maybe — impossible here, where every
-        group is a plain always-binding pattern list)."""
+        one string column per variable (node lexical value).  FILTER and
+        OPTIONAL are the SPARQL evaluator's (sparql._eval_where)."""
         # negated property sets → internal predicate variable + NOT IN
         # post-filter (inverse-only sets swap subject/object); the
         # internal column is dropped before returning, so the rewrite
@@ -1386,44 +1384,7 @@ class VirtualGraph:
             if isinstance(p, PathPlus):
                 closure_frames[idx] = self._closure_frame(s, p, o)
                 continue
-            # tuple predicate = SPARQL path alternation (p1|p2): a bridge
-            # matches if it can produce ANY of the alternatives
-            p_options = p if isinstance(p, tuple) else (p,)
-            cands = []
-            for popt in p_options:
-                for cb in self.bridges:
-                    constraints: dict = {}
-                    post: list = []
-                    try:
-                        for spec, term, col in (
-                            (cb.subject, s, "subj"),
-                            (cb.predicate, popt, "pred"),
-                            (cb.object, o, "obj"),
-                        ):
-                            if term is not None and not _is_var(term):
-                                c, f = self._bind(cb, spec, term, col)
-                                constraints.update(c)
-                                post.extend(f)
-                    except _Prune:
-                        continue
-                    varspecs = {}
-                    for spec, term in (
-                        (cb.subject, s),
-                        (cb.predicate, popt),
-                        (cb.object, o),
-                    ):
-                        if term is not None and _is_var(term):
-                            varspecs.setdefault(_var_name(term), spec)
-                    cands.append(
-                        {
-                            "cb": cb,
-                            "constraints": constraints,
-                            "post": post,
-                            "popt": popt,
-                            "varspecs": varspecs,
-                        }
-                    )
-            meta[idx] = cands
+            meta[idx] = self._candidates(s, p, o)
         if outer_specs:
             # cross-group URIMakerRule (var_spec_domains): a candidate
             # whose spec for a shared var can never mint a node the
@@ -1502,25 +1463,6 @@ class VirtualGraph:
             out = out.filter(~F.col(name).isin(*excl)).drop(
                 name, *[name + sfx for sfx in _COMPANION_SUFFIXES]
             )
-        maybe_unbound: set = set()
-        for group in optional or []:
-            # entry: plain pattern list, or (patterns, group-scoped
-            # filters) — filters evaluate inside the LeftJoin condition
-            pats, filts = group if isinstance(group, tuple) else (group, [])
-            rdf = self.bgp(pats)
-            # shared vars that were definitely bound on the left stay
-            # bound after the left join; everything else the optional
-            # group binds can be NULL in later groups and needs
-            # compatibility (not equality) semantics there
-            shared_bound = {
-                c for c in out.columns if c in rdf.columns and not _is_companion(c)
-            } - maybe_unbound
-            out = optional_join(out, rdf, filts, maybe_unbound=maybe_unbound)
-            maybe_unbound |= {
-                c for c in rdf.columns if not _is_companion(c)
-            } - shared_bound
-        for f in filters or []:
-            out = out.filter(F.expr(f))
         return out
 
     # ------------------------------------------------------------------

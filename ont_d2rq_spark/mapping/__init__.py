@@ -8,7 +8,6 @@ from ont_d2rq_spark.mapping.model import (
     Configuration,
     DownloadMap,
 )
-from ont_d2rq_spark.mapping.parser import load_mapping, load_mapping_dict
 
 __all__ = [
     "Mapping",
@@ -19,6 +18,4 @@ __all__ = [
     "Join",
     "Configuration",
     "DownloadMap",
-    "load_mapping",
-    "load_mapping_dict",
 ]

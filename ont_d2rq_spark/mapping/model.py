@@ -13,6 +13,7 @@ D2RQException from parser/MapParser.java validation).
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
@@ -97,7 +98,6 @@ class Database:
     ``result_size_limit`` mirrors d2rq:resultSizeLimit (global row cap).
     """
 
-    name: str = "db"
     base_dir: Optional[str] = None
     tables: dict[str, str] = field(default_factory=dict)  # table -> path
     # per-table source format ("csv"/"json"/"orc"/"parquet"; default
@@ -110,7 +110,6 @@ class Database:
     column_types: dict[str, str] = field(default_factory=dict)  # "t.c" -> xsd local name
     startup_sql: list[str] = field(default_factory=list)
     result_size_limit: Optional[int] = None
-    fetch_size: Optional[int] = None  # accepted, moot on Spark
 
     def path_for(self, table: str) -> str:
         if table in self.tables:
@@ -126,7 +125,6 @@ class Configuration:
 
     serve_vocabulary: bool = True
     use_all_optimizations: bool = True
-    control_owl: bool = False  # ont-d2rq: OWL-ish schema generation
 
 
 @dataclass
@@ -152,7 +150,6 @@ class ClassMap:
     contains_duplicates: bool = False  # d2rq:containsDuplicates
     translate_with: Optional[str] = None
     class_definition_label: Optional[str] = None  # feeds the schema graph
-    comment: Optional[str] = None
 
     def __post_init__(self):
         makers = [
@@ -183,6 +180,10 @@ class ClassMap:
             return [self.uri_column]
         if self.bnode_id_columns:
             return list(self.bnode_id_columns)
+        if self.uri_sql_expression:
+            # qualified "t.c" references outside '…' string literals
+            unquoted = re.sub(r"'(?:[^']|'')*'", "", self.uri_sql_expression)
+            return re.findall(r"\b[A-Za-z_]\w*\.[A-Za-z_]\w*", unquoted)
         return []
 
 

@@ -3,152 +3,136 @@
 The reference's MappingGenerator writes a .ttl mapping file (mapgen/
 MappingGenerator.java); this is the matching writer so
 generate_mapping() output can be saved, diffed against golden files,
-hand-edited, and re-loaded with mapping/ttl.py (round-trip tested)."""
+hand-edited, and re-loaded with mapping/ttl.py.  It walks the same
+vocabulary table (``ttl.VOCAB``) as the reader, and raises
+MappingError for any value the reader would not give back."""
 
 from __future__ import annotations
 
-from ont_d2rq_spark.mapping.model import Mapping
+import dataclasses
 
-D2RQ_PREFIX = "http://www.wiwiss.fu-berlin.de/suhl/bizer/D2RQ/0.1#"
+from ont_d2rq_spark.mapping.model import ClassMap, Mapping, MappingError
+from ont_d2rq_spark.mapping.ttl import (
+    BOOL,
+    CLASS_MAP,
+    COLS,
+    COLUMN_TYPE,
+    COLUMN_TYPES,
+    CONSTANT,
+    D2RQ,
+    INT,
+    IRI,
+    IRIS,
+    JOIN,
+    LIT,
+    LITS,
+    ORDER_ASC,
+    ORDER_DESC,
+    TABLE,
+    TRANSLATION,
+    TRANSLATION_PAIR,
+    VOCAB,
+    load_mapping_ttl,
+)
+
+_ESCAPES = {"\\": "\\\\", '"': '\\"', "\n": "\\n", "\r": "\\r", "\t": "\\t"}
 
 
-def _lit(v: str) -> str:
-    return '"' + str(v).replace("\\", "\\\\").replace('"', '\\"') + '"'
+def _lit(v) -> str:
+    return '"' + "".join(_ESCAPES.get(c, c) for c in str(v)) + '"'
 
 
 def _iri(v: str) -> str:
     return f"<{v}>"
 
 
-def to_ttl(m: Mapping) -> str:
-    out = [
-        f"@prefix d2rq: <{D2RQ_PREFIX}> .",
-        "@prefix map: <#> .",
-        "",
+def _objects(kind: str, prop: str, v, obj) -> list[str]:
+    """A field value → the Turtle objects of its d2rq property."""
+    if kind == LIT:
+        return [_lit(v)]
+    if kind == IRI:
+        return [_iri(v)]
+    if kind == INT:
+        return [str(v)]
+    if kind == BOOL:
+        return ["true" if v else "false"]
+    if kind == LITS:
+        return [_lit(x) for x in v]
+    if kind == IRIS:
+        return [_iri(x) for x in v]
+    if kind == COLS:
+        return [_lit(",".join(v))]
+    if kind == JOIN:
+        return [_lit(f"{j.left} {j.direction or '='} {j.right}") for j in v]
+    if kind in (CLASS_MAP, TABLE):
+        return [f"map:{v}"]
+    if kind == CONSTANT:
+        return [_lit(v) if getattr(obj, "constant_is_literal", False) else _iri(v)]
+    if kind in (ORDER_ASC, ORDER_DESC):
+        return [_lit(v)] if obj.order_desc == (kind == ORDER_DESC) else []
+    if kind == COLUMN_TYPE:
+        return [_lit(c) for c, t in v.items() if t == COLUMN_TYPES[prop]]
+    if kind == TRANSLATION:
+        db, rdf = TRANSLATION_PAIR
+        return [f"[ d2rq:{db} {_lit(a)} ; d2rq:{rdf} {_lit(b)} ]" for a, b in v.items()]
+    raise AssertionError(kind)
+
+
+def _default(cls, field: str):
+    f = cls.__dataclass_fields__[field]
+    if f.default_factory is not dataclasses.MISSING:
+        return f.default_factory()
+    return f.default
+
+
+def _resources(m: Mapping) -> list[tuple[str, object]]:
+    return [
+        ("database", m.database),
+        ("configuration", m.configuration),
+        *((t.name, t) for t in m.translation_tables.values()),
+        *((c.name, c) for c in m.class_maps.values()),
+        *((b.name, b) for b in m.bridges),
+        *((d.name, d) for d in m.download_maps.values()),
     ]
 
-    db = m.database
-    lines = ["map:database a d2rq:Database"]
-    if db.result_size_limit is not None:
-        lines.append(f"    d2rq:resultSizeLimit {_lit(db.result_size_limit)}")
-    for sql in db.startup_sql:
-        lines.append(f"    d2rq:startupSQLScript {_lit(sql)}")
-    type_prop = {
-        "string": "textColumn",
-        "long": "numericColumn",
-        "integer": "numericColumn",
-        "boolean": "booleanColumn",
-        "date": "dateColumn",
-        "timestamp": "timestampColumn",
-        "binary": "binaryColumn",
-    }
-    for col, xsd in db.column_types.items():
-        if xsd in type_prop:
-            lines.append(f"    d2rq:{type_prop[xsd]} {_lit(col)}")
-    out.append(" ;\n".join(lines) + " .\n")
 
-    for tt in {id(t): t for t in m.translation_tables.values()}.values():
-        lines = [f"map:{tt.name} a d2rq:TranslationTable"]
-        if tt.href:
-            lines.append(f"    d2rq:href {_lit(tt.href)}")
+def to_ttl(m: Mapping) -> str:
+    """Emit every vocabulary row whose field differs from the dataclass
+    default.  ``base_iri`` and ``database.base_dir`` are not part of a
+    d2rq mapping; ``load_mapping_ttl(base_dir=)`` supplies the latter."""
+    out = [f"@prefix d2rq: <{D2RQ}> .", "@prefix map: <#> .", ""]
+    for name, obj in _resources(m):
+        cls = type(obj)
+        lines = [f"map:{name} a d2rq:{cls.__name__}"]
+        if cls is ClassMap:
+            lines.append("    d2rq:dataStorage map:database")
+        for prop, field, kind in VOCAB[cls]:
+            v = getattr(obj, field)
+            if v != _default(cls, field):
+                lines += [f"    d2rq:{prop} {o}" for o in _objects(kind, prop, v, obj)]
         out.append(" ;\n".join(lines) + " .\n")
-        if tt.translations:
-            out.append(
-                f"# NOTE map:{tt.name}: inline translations omitted from ttl "
-                "(bnode syntax); reload via the YAML dialect or d2rq:href.\n"
-            )
+    text = "\n".join(out)
+    _check_reloads(m, text)
+    return text
 
-    for cm in m.class_maps.values():
-        lines = [f"map:{cm.name} a d2rq:ClassMap", "    d2rq:dataStorage map:database"]
-        if cm.uri_pattern:
-            lines.append(f"    d2rq:uriPattern {_lit(cm.uri_pattern)}")
-        if cm.uri_column:
-            lines.append(f"    d2rq:uriColumn {_lit(cm.uri_column)}")
-        if cm.uri_sql_expression:
-            lines.append(f"    d2rq:uriSqlExpression {_lit(cm.uri_sql_expression)}")
-        if cm.bnode_id_columns:
-            lines.append(f"    d2rq:bNodeIdColumns {_lit(','.join(cm.bnode_id_columns))}")
-        if cm.constant_value:
-            lines.append(f"    d2rq:constantValue {_iri(cm.constant_value)}")
-        for cls in cm.classes:
-            lines.append(f"    d2rq:class {_iri(cls)}")
-        if cm.condition:
-            lines.append(f"    d2rq:condition {_lit(cm.condition)}")
-        for a in cm.alias:
-            lines.append(f"    d2rq:alias {_lit(a)}")
-        for j in cm.join:
-            op = j.direction or "="
-            lines.append(f"    d2rq:join {_lit(f'{j.left} {op} {j.right}')}")
-        if cm.contains_duplicates:
-            lines.append('    d2rq:containsDuplicates "true"')
-        if cm.translate_with:
-            lines.append(f"    d2rq:translateWith map:{cm.translate_with}")
-        if cm.class_definition_label:
-            lines.append(f"    d2rq:classDefinitionLabel {_lit(cm.class_definition_label)}")
-        out.append(" ;\n".join(lines) + " .\n")
 
-    for pb in m.bridges:
-        safe = pb.name.replace(".", "_")
-        lines = [
-            f"map:{safe} a d2rq:PropertyBridge",
-            f"    d2rq:belongsToClassMap map:{pb.belongs_to_class_map}",
-        ]
-        for p in pb.properties:
-            lines.append(f"    d2rq:property {_iri(p)}")
-        if pb.dynamic_property:
-            lines.append(f"    d2rq:dynamicProperty {_lit(pb.dynamic_property)}")
-        for attr, prop, kind in [
-            ("column", "column", "lit"),
-            ("pattern", "pattern", "lit"),
-            ("sql_expression", "sqlExpression", "lit"),
-            ("uri_column", "uriColumn", "lit"),
-            ("uri_pattern", "uriPattern", "lit"),
-            ("uri_sql_expression", "uriSqlExpression", "lit"),
-            ("datatype", "datatype", "iri"),
-            ("lang", "lang", "lit"),
-            ("condition", "condition", "lit"),
-            ("value_regex", "valueRegex", "lit"),
-            ("value_contains", "valueContains", "lit"),
-        ]:
-            v = getattr(pb, attr)
-            if v:
-                lines.append(
-                    f"    d2rq:{prop} " + (_iri(v) if kind == "iri" else _lit(v))
-                )
-        if pb.bnode_id_columns:
-            lines.append(f"    d2rq:bNodeIdColumns {_lit(','.join(pb.bnode_id_columns))}")
-        if pb.refers_to_class_map:
-            lines.append(f"    d2rq:refersToClassMap map:{pb.refers_to_class_map}")
-        if pb.constant_value:
-            lines.append(f"    d2rq:constantValue {_iri(pb.constant_value)}")
-        if pb.translate_with:
-            lines.append(f"    d2rq:translateWith map:{pb.translate_with}")
-        for j in pb.join:
-            op = j.direction or "="
-            lines.append(f"    d2rq:join {_lit(f'{j.left} {op} {j.right}')}")
-        for a in pb.alias:
-            lines.append(f"    d2rq:alias {_lit(a)}")
-        if pb.limit is not None:
-            lines.append(f"    d2rq:limit {pb.limit}")
-        if pb.limit_inverse is not None:
-            lines.append(f"    d2rq:limitInverse {pb.limit_inverse}")
-        if pb.order_column:
-            prop = "orderDesc" if pb.order_desc else "orderAsc"
-            lines.append(f"    d2rq:{prop} {_lit(pb.order_column)}")
-        if pb.value_max_length is not None:
-            lines.append(f"    d2rq:valueMaxLength {pb.value_max_length}")
-        out.append(" ;\n".join(lines) + " .\n")
-
-    for dm in m.download_maps.values():
-        lines = [
-            f"map:{dm.name} a d2rq:DownloadMap",
-            f"    d2rq:uriPattern {_lit(dm.uri_pattern)}",
-            f"    d2rq:contentDownloadColumn {_lit(dm.content_column)}",
-        ]
-        if dm.media_type:
-            lines.append(f"    d2rq:mediaType {_lit(dm.media_type)}")
-        if dm.condition:
-            lines.append(f"    d2rq:condition {_lit(dm.condition)}")
-        out.append(" ;\n".join(lines) + " .\n")
-
-    return "\n".join(out)
+def _check_reloads(m: Mapping, text: str) -> None:
+    """Raise MappingError naming the first value ``text`` loses: a field
+    with no d2rq property (a Python translator, a per-table source
+    setting), a column type with no *Column property, a name that is
+    not a Turtle local name."""
+    back = load_mapping_ttl(text, base_dir=m.database.base_dir)
+    ours, theirs = _resources(m), _resources(back)
+    for (name, a), (_, b) in zip(ours, theirs):
+        if a != b:
+            for f in dataclasses.fields(a):
+                if getattr(a, f.name) != getattr(b, f.name):
+                    raise MappingError(
+                        f"to_ttl: {type(a).__name__} {name!r}: {f.name}="
+                        f"{getattr(a, f.name)!r} has no d2rq Turtle form"
+                    )
+    if len(ours) != len(theirs) or any(
+        getattr(back, k) != getattr(m, k)
+        for k in ("translation_tables", "class_maps", "download_maps")
+    ):
+        raise MappingError("to_ttl: resource names are not unique d2rq local names")

@@ -1,19 +1,21 @@
-"""Turtle loader for real d2rq:* mapping files.
+"""Turtle loader for d2rq:* mapping files.
 
-The analogue of parser/MapParser.java over the actual D2RQ mapping
-language: a user of the reference can point this at their existing
-mapping-*.ttl and get the same Mapping object the YAML dialect builds.
+The analogue of parser/MapParser.java over the D2RQ mapping language:
+a user of the reference can point this at their existing mapping-*.ttl
+and get the typed model of mapping/model.py.
 
 Scope: the Turtle subset the d2rq: vocabulary uses — @prefix, triple
 statements with `;` predicate lists and `,` object lists, IRIs,
 prefixed names, `a`, string literals (quoted/long-quoted, with
-@lang / ^^datatype), numbers, booleans.  No collections/blank-node
-property lists (the d2rq vocabulary doesn't use them).
+@lang / ^^datatype), numbers, booleans, and blank-node property lists
+as objects (the inline ``d2rq:translation [ … ]`` form).
 
-Vocabulary handled (vocab/D2RQ.java constants):
-  d2rq:Database, ClassMap, PropertyBridge, TranslationTable,
-  DownloadMap, Configuration and their properties; jdbc* properties are
-  accepted and ignored (parquet catalogs replace JDBC).
+Vocabulary (vocab/D2RQ.java): ``VOCAB`` below is the one table of
+d2rq properties, per resource type, that both this reader and the
+writer in mapping/serialize.py walk.  A d2rq property not in its
+type's rows raises MappingError; the JDBC connection properties in
+``CONNECTION_ONLY`` are accepted and ignored (parquet catalogs replace
+JDBC, see ``load_mapping_ttl(base_dir=)``).
 """
 
 from __future__ import annotations
@@ -40,7 +42,7 @@ _TOKEN = re.compile(
   | (?P<str>"(?:[^"\\\n]|\\.)*")
   | (?P<iri><[^>]*>)
   | (?P<punct>\^\^|[;,.\[\]()])
-  | (?P<pname>[A-Za-z_][\w.-]*)?:(?P<local>[\w.-]*)
+  | (?P<pname>[A-Za-z_][\w.-]*)?:(?P<local>(?:[\w-]|\.(?=[\w.-]*[\w-]))*)
   | (?P<lang>@[A-Za-z][\w-]*)
   | (?P<num>[+-]?\d+(?:\.\d+)?)
   | (?P<kw>@prefix|@base|a|true|false)
@@ -48,6 +50,8 @@ _TOKEN = re.compile(
 """,
     re.VERBOSE,
 )
+
+_ESCAPES = {"n": "\n", "t": "\t", "r": "\r"}
 
 
 def _tokens(text: str):
@@ -64,13 +68,7 @@ def _tokens(text: str):
 
 
 def _unescape(s: str) -> str:
-    return (
-        s.replace("\\n", "\n")
-        .replace("\\t", "\t")
-        .replace("\\r", "\r")
-        .replace('\\"', '"')
-        .replace("\\\\", "\\")
-    )
+    return re.sub(r"\\(.)", lambda e: _ESCAPES.get(e.group(1), e.group(1)), s, flags=re.S)
 
 
 class _Parser:
@@ -78,7 +76,8 @@ class _Parser:
         self.toks = list(_tokens(text))
         self.i = 0
         self.prefixes: dict[str, str] = {}
-        # statements: subject -> predicate(qname or iri) -> [objects]
+        # statements: subject -> predicate IRI -> [objects]; an object is
+        # ("iri", v), ("lit", v, lang, datatype) or ("bnode", {pred: [objects]})
         self.st: dict[str, dict[str, list]] = {}
 
     def peek(self):
@@ -104,7 +103,10 @@ class _Parser:
                 if dot.group(0) != ".":
                     raise MappingError("ttl: expected '.' after @prefix")
             else:
-                self.statement()
+                subj = self.term()
+                if subj[0] != "iri":
+                    raise MappingError("ttl: subject must be an IRI in d2rq mappings")
+                self.predicate_objects(self.st.setdefault(subj[1], {}), end=".")
         return self.st
 
     def term(self):
@@ -130,7 +132,11 @@ class _Parser:
         if g in ("true", "false"):
             return ("lit", g, None, "boolean")
         if g == "a":
-            return ("iri", "http://www.w3.org/1999/02/22-rdf-syntax-ns#type")
+            return ("iri", RDF_TYPE)
+        if g == "[":
+            props: dict[str, list] = {}
+            self.predicate_objects(props, end="]")
+            return ("bnode", props)
         if t.group("local") is not None:
             pfx = t.group("pname") or ""
             if pfx not in self.prefixes:
@@ -138,183 +144,217 @@ class _Parser:
             return ("iri", self.prefixes[pfx] + t.group("local"))
         raise MappingError(f"ttl: unexpected token {g!r}")
 
-    def statement(self):
-        subj = self.term()
-        if subj[0] != "iri":
-            raise MappingError("ttl: subject must be an IRI in d2rq mappings")
-        props = self.st.setdefault(subj[1], {})
+    def predicate_objects(self, props: dict, end: str):
+        """`p o, o ; p o` up to ``end`` ('.' or ']'); a trailing ';' is
+        allowed."""
         while True:
+            if self.peek() is not None and self.peek().group(0) == end:
+                self.next()
+                return
             pred = self.term()
             if pred[0] != "iri":
                 raise MappingError("ttl: predicate must be an IRI")
             while True:
-                obj = self.term()
-                props.setdefault(pred[1], []).append(obj)
-                nxt = self.next()
-                if nxt.group(0) == ",":
-                    continue
-                break
-            if nxt.group(0) == ";":
-                # allow trailing ';' before '.'
-                if self.peek() is not None and self.peek().group(0) == ".":
-                    self.next()
-                    return
-                continue
-            if nxt.group(0) == ".":
+                props.setdefault(pred[1], []).append(self.term())
+                sep = self.next().group(0)
+                if sep != ",":
+                    break
+            if sep == end:
                 return
-            raise MappingError(f"ttl: expected ';' ',' or '.', got {nxt.group(0)!r}")
+            if sep != ";":
+                raise MappingError(f"ttl: expected ';' ',' or {end!r}, got {sep!r}")
 
 
 D2RQ = "http://www.wiwiss.fu-berlin.de/suhl/bizer/D2RQ/0.1#"
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
+# value kinds: how a property's Turtle objects map to its model field
+LIT, IRI, INT, BOOL = "lit", "iri", "int", "bool"  # one value
+LITS, IRIS = "lits", "iris"  # repeated values, a list
+COLS = "cols"  # one comma-joined column list, a list
+JOIN = "join"  # repeated d2rq:join, a list of Join
+CLASS_MAP, TABLE = "class_map", "table"  # reference to a ClassMap / TranslationTable, by name
+CONSTANT = "constant"  # literal or IRI; a literal sets constant_is_literal
+ORDER_ASC, ORDER_DESC = "order_asc", "order_desc"  # set order_column and order_desc
+COLUMN_TYPE = "column_type"  # *Column: one column_types entry per value
+TRANSLATION = "translation"  # [ databaseValue ; rdfValue ] pairs
 
-def _local(props: dict, name: str):
-    vals = props.get(D2RQ + name, [])
-    return vals[0][1] if vals else None
+# *Column property → the xsd local name it sets in Database.column_types
+COLUMN_TYPES = {
+    "textColumn": "string",
+    "numericColumn": "long",
+    "booleanColumn": "boolean",
+    "dateColumn": "date",
+    "timestampColumn": "timestamp",
+    "binaryColumn": "binary",
+}
+# the two properties of one inline d2rq:translation pair
+TRANSLATION_PAIR = ("databaseValue", "rdfValue")
+# JDBC connection properties: accepted and ignored
+CONNECTION_ONLY = frozenset(
+    {"jdbcDSN", "jdbcDriver", "username", "password", "fetchSize", "dataStorage"}
+)
+
+_CM, _PB, _DM = ClassMap, PropertyBridge, DownloadMap
+# (d2rq local name, model field, value kind, resource types it applies to)
+_PROPERTIES = [
+    ("resultSizeLimit", "result_size_limit", INT, (Database,)),
+    ("startupSQLScript", "startup_sql", LITS, (Database,)),
+    *((p, "column_types", COLUMN_TYPE, (Database,)) for p in COLUMN_TYPES),
+    ("serveVocabulary", "serve_vocabulary", BOOL, (Configuration,)),
+    ("useAllOptimizations", "use_all_optimizations", BOOL, (Configuration,)),
+    ("href", "href", LIT, (TranslationTable,)),
+    ("translation", "translations", TRANSLATION, (TranslationTable,)),
+    ("belongsToClassMap", "belongs_to_class_map", CLASS_MAP, (_PB,)),
+    ("property", "properties", IRIS, (_PB,)),
+    ("dynamicProperty", "dynamic_property", LIT, (_PB,)),
+    ("column", "column", LIT, (_PB,)),
+    ("pattern", "pattern", LIT, (_PB,)),
+    ("sqlExpression", "sql_expression", LIT, (_PB,)),
+    ("uriColumn", "uri_column", LIT, (_CM, _PB)),
+    ("uriPattern", "uri_pattern", LIT, (_CM, _PB, _DM)),
+    ("uriSqlExpression", "uri_sql_expression", LIT, (_CM, _PB)),
+    ("bNodeIdColumns", "bnode_id_columns", COLS, (_CM, _PB)),
+    ("refersToClassMap", "refers_to_class_map", CLASS_MAP, (_PB,)),
+    ("constantValue", "constant_value", CONSTANT, (_CM, _PB)),
+    ("class", "classes", IRIS, (_CM,)),
+    ("datatype", "datatype", IRI, (_PB,)),
+    ("lang", "lang", LIT, (_PB,)),
+    ("translateWith", "translate_with", TABLE, (_CM, _PB)),
+    ("join", "join", JOIN, (_CM, _PB)),
+    ("condition", "condition", LIT, (_CM, _PB, _DM)),
+    ("alias", "alias", LITS, (_CM, _PB)),
+    ("containsDuplicates", "contains_duplicates", BOOL, (_CM,)),
+    ("classDefinitionLabel", "class_definition_label", LIT, (_CM,)),
+    ("limit", "limit", INT, (_PB,)),
+    ("limitInverse", "limit_inverse", INT, (_PB,)),
+    ("orderAsc", "order_column", ORDER_ASC, (_PB,)),
+    ("orderDesc", "order_column", ORDER_DESC, (_PB,)),
+    ("valueRegex", "value_regex", LIT, (_PB,)),
+    ("valueContains", "value_contains", LIT, (_PB,)),
+    ("valueMaxLength", "value_max_length", INT, (_PB,)),
+    ("contentDownloadColumn", "content_column", LIT, (_DM,)),
+    ("mediaType", "media_type", LIT, (_DM,)),
+]
+TYPES = (Database, Configuration, TranslationTable, ClassMap, PropertyBridge, DownloadMap)
+# resource type → its rows [(d2rq local name, model field, value kind)];
+# the model class names are the d2rq class local names
+VOCAB = {t: [(n, f, k) for n, f, k, ts in _PROPERTIES if t in ts] for t in TYPES}
 
 
-def _locals(props: dict, name: str) -> list[str]:
-    return [v[1] for v in props.get(D2RQ + name, [])]
+def _local_name(iri: str) -> str:
+    return iri.rsplit("#", 1)[-1].rsplit("/", 1)[-1]
+
+
+def _text(obj: tuple, where: str) -> str:
+    if obj[0] == "bnode":
+        raise MappingError(f"ttl: {where}: unexpected blank node")
+    return obj[1]
+
+
+def _pair(obj: tuple, where: str) -> tuple[str, str]:
+    keys = [D2RQ + p for p in TRANSLATION_PAIR]
+    if obj[0] != "bnode" or set(obj[1]) != set(keys) or any(len(obj[1][k]) != 1 for k in keys):
+        raise MappingError(
+            f"ttl: {where}: expected [ d2rq:{TRANSLATION_PAIR[0]} … ; d2rq:{TRANSLATION_PAIR[1]} … ]"
+        )
+    return _text(obj[1][keys[0]][0], where), _text(obj[1][keys[1]][0], where)
+
+
+_REPEATED = {LITS, IRIS, JOIN, COLUMN_TYPE}
+
+
+def _read(cls, subject: str, props: dict):
+    """One d2rq-typed subject → its model object."""
+    name = _local_name(subject)
+    kw: dict = {"name": name} if cls not in (Database, Configuration) else {}
+    rows = {n: (f, k) for n, f, k in VOCAB[cls]}
+    for pred, objs in props.items():
+        if pred == RDF_TYPE or not pred.startswith(D2RQ):
+            continue
+        prop = pred[len(D2RQ):]
+        if prop in CONNECTION_ONLY:
+            continue
+        where = f"d2rq:{prop} on {cls.__name__} {name!r}"
+        if prop not in rows:
+            raise MappingError(f"ttl: unknown property {where}")
+        field, kind = rows[prop]
+        if kind == TRANSLATION:
+            kw[field] = dict(_pair(o, where) for o in objs)
+            continue
+        texts = [_text(o, where) for o in objs]
+        if kind not in _REPEATED and len(texts) != 1:
+            raise MappingError(f"ttl: {where} takes one value, got {len(texts)}")
+        v = texts[0]
+        if kind in (LIT, IRI):
+            kw[field] = v
+        elif kind == INT:
+            if not re.fullmatch(r"[+-]?\d+", v):
+                raise MappingError(f"ttl: {where}: expected an integer, got {v!r}")
+            kw[field] = int(v)
+        elif kind == BOOL:
+            if v not in ("true", "false"):
+                raise MappingError(f"ttl: {where}: expected true or false, got {v!r}")
+            kw[field] = v == "true"
+        elif kind in (LITS, IRIS):
+            kw[field] = texts
+        elif kind == COLS:
+            kw[field] = [c.strip() for c in v.split(",")]
+        elif kind == JOIN:
+            kw[field] = [Join.parse(t) for t in texts]
+        elif kind in (CLASS_MAP, TABLE):
+            kw[field] = _local_name(v)
+        elif kind == CONSTANT:
+            kw[field] = v
+            if objs[0][0] == "lit":
+                if cls is not PropertyBridge:
+                    raise MappingError(f"ttl: {where} must be an IRI")
+                kw["constant_is_literal"] = True
+        elif kind in (ORDER_ASC, ORDER_DESC):
+            if field in kw:
+                raise MappingError(f"ttl: {where}: d2rq:orderAsc and orderDesc both given")
+            kw[field] = v
+            kw["order_desc"] = kind == ORDER_DESC
+        elif kind == COLUMN_TYPE:
+            kw.setdefault(field, {}).update((t, COLUMN_TYPES[prop]) for t in texts)
+    if cls is DownloadMap and "content_column" in kw:
+        kw["table"] = kw["content_column"].split(".")[0]
+    try:
+        return cls(**kw)
+    except TypeError as e:  # a required property is missing
+        raise MappingError(f"ttl: {cls.__name__} {name!r}: {e}") from None
 
 
 def load_mapping_ttl(path_or_text: str, base_dir: Optional[str] = None) -> Mapping:
-    """Parse a d2rq Turtle mapping.  `base_dir` overrides the JDBC
-    connection with a parquet table directory (the jdbcDSN etc. in the
-    file are accepted and ignored)."""
+    """Parse a d2rq Turtle mapping.  ``base_dir`` is the parquet table
+    directory that stands in for the file's JDBC connection."""
     text = path_or_text
     if "\n" not in path_or_text and path_or_text.endswith((".ttl", ".n3")):
         with open(path_or_text) as f:
             text = f.read()
-    st = _Parser(text).parse()
-
-    def typed(t: str) -> list[tuple[str, dict]]:
-        return [
-            (s, props)
-            for s, props in st.items()
-            if any(o[1] == D2RQ + t for o in props.get(RDF_TYPE, []))
-        ]
-
+    by_name = {t.__name__: t for t in TYPES}
     m = Mapping()
-    for _s, props in typed("Database"):
-        m.database = Database(
-            base_dir=base_dir,
-            startup_sql=_locals(props, "startupSQLScript"),
-            result_size_limit=int(_local(props, "resultSizeLimit"))
-            if _local(props, "resultSizeLimit")
-            else None,
-        )
-        for prop_name, xsd in [
-            ("textColumn", "string"),
-            ("numericColumn", "long"),
-            ("booleanColumn", "boolean"),
-            ("dateColumn", "date"),
-            ("timestampColumn", "timestamp"),
-            ("binaryColumn", "binary"),
-        ]:
-            for col in _locals(props, prop_name):
-                m.database.column_types[col] = xsd
-    if base_dir and not m.database.base_dir:
-        m.database.base_dir = base_dir
-
-    for s, props in typed("Configuration"):
-        m.configuration = Configuration(
-            serve_vocabulary=_local(props, "serveVocabulary") != "false",
-            use_all_optimizations=_local(props, "useAllOptimizations") != "false",
-        )
-
-    for s, props in typed("TranslationTable"):
-        name = s.rsplit("#", 1)[-1].rsplit("/", 1)[-1]
-        tt = TranslationTable(name=name, href=_local(props, "href"))
-        for tr in props.get(D2RQ + "translation", []):
-            # inline translations are bnodes in real files — unsupported
-            # here; use href CSV or the YAML dialect for inline pairs.
-            raise MappingError(
-                "ttl: inline d2rq:translation bnodes unsupported — use d2rq:href CSV"
-            )
-        m.translation_tables[name] = tt
-        m.translation_tables[s] = tt  # allow IRI reference
-
-    cm_by_iri: dict[str, str] = {}
-    for s, props in typed("ClassMap"):
-        name = s.rsplit("#", 1)[-1].rsplit("/", 1)[-1]
-        cm_by_iri[s] = name
-        bnode_cols = _local(props, "bNodeIdColumns")
-        cm = ClassMap(
-            name=name,
-            uri_pattern=_local(props, "uriPattern"),
-            uri_column=_local(props, "uriColumn"),
-            uri_sql_expression=_local(props, "uriSqlExpression"),
-            bnode_id_columns=[c.strip() for c in bnode_cols.split(",")] if bnode_cols else None,
-            constant_value=_local(props, "constantValue"),
-            classes=_locals(props, "class"),
-            condition=_local(props, "condition"),
-            alias=_locals(props, "alias"),
-            join=[Join.parse(j) for j in _locals(props, "join")],
-            contains_duplicates=_local(props, "containsDuplicates") == "true",
-            translate_with=_resolve_tt(m, _local(props, "translateWith")),
-            class_definition_label=_local(props, "classDefinitionLabel"),
-        )
-        m.add_class_map(cm)
-
-    for s, props in typed("PropertyBridge"):
-        name = s.rsplit("#", 1)[-1].rsplit("/", 1)[-1]
-        belongs = _local(props, "belongsToClassMap")
-        if belongs not in cm_by_iri:
-            raise MappingError(f"ttl: bridge {name}: unknown belongsToClassMap")
-        refers = _local(props, "refersToClassMap")
-        bnode_cols = _local(props, "bNodeIdColumns")
-        pb = PropertyBridge(
-            name=name,
-            belongs_to_class_map=cm_by_iri[belongs],
-            properties=_locals(props, "property"),
-            dynamic_property=_local(props, "dynamicProperty"),
-            column=_local(props, "column"),
-            pattern=_local(props, "pattern"),
-            sql_expression=_local(props, "sqlExpression"),
-            uri_column=_local(props, "uriColumn"),
-            uri_pattern=_local(props, "uriPattern"),
-            uri_sql_expression=_local(props, "uriSqlExpression"),
-            bnode_id_columns=[c.strip() for c in bnode_cols.split(",")] if bnode_cols else None,
-            refers_to_class_map=cm_by_iri.get(refers) if refers else None,
-            constant_value=_local(props, "constantValue"),
-            datatype=_local(props, "datatype"),
-            lang=_local(props, "lang"),
-            translate_with=_resolve_tt(m, _local(props, "translateWith")),
-            join=[Join.parse(j) for j in _locals(props, "join")],
-            condition=_local(props, "condition"),
-            alias=_locals(props, "alias"),
-            limit=int(_local(props, "limit")) if _local(props, "limit") else None,
-            limit_inverse=int(_local(props, "limitInverse")) if _local(props, "limitInverse") else None,
-            order_column=_local(props, "orderAsc") or _local(props, "orderDesc"),
-            order_desc=_local(props, "orderDesc") is not None,
-            value_regex=_local(props, "valueRegex"),
-            value_contains=_local(props, "valueContains"),
-            value_max_length=int(_local(props, "valueMaxLength"))
-            if _local(props, "valueMaxLength")
-            else None,
-        )
-        m.add_bridge(pb)
-
-    for s, props in typed("DownloadMap"):
-        name = s.rsplit("#", 1)[-1].rsplit("/", 1)[-1]
-        content = _local(props, "contentDownloadColumn")
-        m.download_maps[name] = DownloadMap(
-            name=name,
-            table=content.split(".")[0],
-            uri_pattern=_local(props, "uriPattern"),
-            content_column=content,
-            media_type=_local(props, "mediaType"),
-            condition=_local(props, "condition"),
-        )
-
+    for s, props in _Parser(text).parse().items():
+        for t in props.get(RDF_TYPE, []):
+            if t[0] != "iri" or not t[1].startswith(D2RQ):
+                continue
+            cls = by_name.get(t[1][len(D2RQ):])
+            if cls is None:
+                raise MappingError(f"ttl: unsupported resource type {t[1]} on {s}")
+            obj = _read(cls, s, props)
+            if cls is Database:
+                m.database = obj
+            elif cls is Configuration:
+                m.configuration = obj
+            elif cls is TranslationTable:
+                m.translation_tables[obj.name] = obj
+            elif cls is ClassMap:
+                m.add_class_map(obj)
+            elif cls is PropertyBridge:
+                m.add_bridge(obj)
+            else:
+                m.download_maps[obj.name] = obj
+    m.database.base_dir = base_dir
     m.validate()
     return m
 
-
-def _resolve_tt(m: Mapping, ref: Optional[str]) -> Optional[str]:
-    if ref is None:
-        return None
-    if ref in m.translation_tables:
-        return m.translation_tables[ref].name
-    return ref.rsplit("#", 1)[-1].rsplit("/", 1)[-1]

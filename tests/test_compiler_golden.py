@@ -312,8 +312,9 @@ def test_golden_ntriples_fixture_exact(graph):
 
 def test_limit_inverse(spark, iswc_tables):
     """d2rq:limitInverse: applies when the object is bound (inverse
-    direction), while d2rq:limit governs the forward direction."""
-    import dataclasses
+    direction), while d2rq:limit governs the forward direction — for
+    find(), bgp() and SPARQL alike."""
+    from ont_d2rq_spark.sparql import execute
 
     m = iswc_mapping()
     for pb in m.bridges:
@@ -325,14 +326,23 @@ def test_limit_inverse(spark, iswc_tables):
     assert fwd.count() == 2  # forward limit 10 → all rows
     inv = g.find(p=EX + "authorOf", o=EX + "paper1")
     assert inv.count() == 1  # inverse limit 1
+    assert g.bgp([("?s", EX + "authorOf", EX + "paper1")]).count() == 1
+    assert g.bgp([("?s", EX + "authorOf", "?o")]).count() == 2
+    q = f"SELECT ?s WHERE {{ ?s <{EX}authorOf> <{EX}paper1> }}"
+    assert execute(g, q).count() == 1
 
 
 def test_bgp_filter_and_optional(graph):
-    """SPARQL FILTER + OPTIONAL analogues over the BGP result."""
-    rows = graph.bgp(
-        [("?p", EX + "authorOf", "?paper")],
-        filters=["paper like '%paper1'"],
-        optional=[[("?paper", EX + "title", "?title")]],
+    """SPARQL FILTER + OPTIONAL over a BGP."""
+    from ont_d2rq_spark.sparql import execute
+
+    rows = execute(
+        graph,
+        f"""SELECT ?p ?paper ?title WHERE {{
+            ?p <{EX}authorOf> ?paper .
+            OPTIONAL {{ ?paper <{EX}title> ?title }}
+            FILTER(STRENDS(STR(?paper), "paper1"))
+        }}""",
     )
     got = {(r["p"], r["paper"], r["title"]) for r in rows.collect()}
     assert got == {
@@ -340,9 +350,12 @@ def test_bgp_filter_and_optional(graph):
         (EX + "person2", EX + "paper1", "Trusting Trust"),
     }
     # optional with no match → NULL binding, row kept
-    rows2 = graph.bgp(
-        [("?paper", EX + "conference", EX + "conf11")],
-        optional=[[("?paper", EX + "title", "?title")]],
+    rows2 = execute(
+        graph,
+        f"""SELECT ?paper ?title WHERE {{
+            ?paper <{EX}conference> <{EX}conf11> .
+            OPTIONAL {{ ?paper <{EX}title> ?title }}
+        }}""",
     )
     got2 = {(r["paper"], r["title"]) for r in rows2.collect()}
     assert got2 == {

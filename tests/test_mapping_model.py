@@ -1,4 +1,4 @@
-"""Mapping model + parser validation (reference: MapParser/MappingTest-style)."""
+"""Mapping model + Turtle loader validation (reference: MapParser/MappingTest-style)."""
 
 import pytest
 
@@ -10,7 +10,7 @@ from ont_d2rq_spark.mapping.model import (
     PropertyBridge,
     TranslationTable,
 )
-from ont_d2rq_spark.mapping.parser import load_mapping_dict
+from ont_d2rq_spark.mapping.ttl import load_mapping_ttl
 
 
 def test_classmap_requires_exactly_one_maker():
@@ -69,39 +69,48 @@ def test_translation_table_csv(tmp_path):
     assert tt.to_db_value("nope") is None
 
 
-def test_yaml_dialect_loader():
-    doc = {
-        "base_iri": "http://ex/",
-        "database": {"base_dir": "/tmp"},
-        "class_maps": {
-            "c": {
-                "table": "t",
-                "uriPattern": "http://ex/@@t.k@@",
-                "class": "http://ex/C",
-                "bridges": {
-                    "name": {"property": "http://ex/name", "column": "t.n", "lang": "en"},
-                    "ref": {
-                        "property": "http://ex/r",
-                        "refersToClassMap": "d",
-                        "join": "t.fk => u.pk",
-                    },
-                },
-            },
-            "d": {"table": "u", "uriPattern": "http://ex/d/@@u.pk@@"},
-        },
-    }
-    m = load_mapping_dict(doc)
+PREFIXES = """
+@prefix d2rq: <http://www.wiwiss.fu-berlin.de/suhl/bizer/D2RQ/0.1#> .
+@prefix map: <#> .
+"""
+
+
+def test_turtle_mapping_loader():
+    ttl = PREFIXES + """
+map:c a d2rq:ClassMap ;
+    d2rq:uriPattern "http://ex/@@t.k@@" ;
+    d2rq:class <http://ex/C> .
+map:c.name a d2rq:PropertyBridge ;
+    d2rq:belongsToClassMap map:c ;
+    d2rq:property <http://ex/name> ;
+    d2rq:column "t.n" ;
+    d2rq:lang "en" .
+map:c.ref a d2rq:PropertyBridge ;
+    d2rq:belongsToClassMap map:c ;
+    d2rq:property <http://ex/r> ;
+    d2rq:refersToClassMap map:d ;
+    d2rq:join "t.fk => u.pk" .
+map:d a d2rq:ClassMap ;
+    d2rq:uriPattern "http://ex/d/@@u.pk@@" .
+"""
+    m = load_mapping_ttl(ttl, base_dir="/tmp")
     assert set(m.class_maps) == {"c", "d"}
-    assert len(m.bridges) == 2
+    assert m.class_maps["c"].table == "t" and m.class_maps["d"].table == "u"
+    assert [b.name for b in m.bridges] == ["c.name", "c.ref"]
     ref = [b for b in m.bridges if b.refers_to_class_map][0]
     assert ref.join[0].direction == "=>"
 
 
-def test_yaml_unknown_key_rejected():
-    doc = {
-        "class_maps": {
-            "c": {"table": "t", "uriPattern": "u@@t.k@@", "bogusKey": 1}
-        }
-    }
-    with pytest.raises(MappingError):
-        load_mapping_dict(doc)
+def test_misspelled_d2rq_property_rejected():
+    """A typo'd property must not silently drop its filter."""
+    ttl = PREFIXES + """
+map:c a d2rq:ClassMap ;
+    d2rq:uriPattern "u@@t.k@@" .
+map:b a d2rq:PropertyBridge ;
+    d2rq:belongsToClassMap map:c ;
+    d2rq:property <http://ex/p> ;
+    d2rq:column "t.n" ;
+    d2rq:conditon "t.n IS NOT NULL" .
+"""
+    with pytest.raises(MappingError, match=r"d2rq:conditon on PropertyBridge 'b'"):
+        load_mapping_ttl(ttl, base_dir="/tmp")

@@ -19,3 +19,17 @@ def duck():
 @pytest.mark.parametrize("name", list(__spark_entry__.queries()))
 def test_oracle_parity(spark, duck, name):
     assert mismatch(spark, duck, name, SF_DIR) is None
+
+
+def test_dedup_exact_representative_is_min_doc_id(spark, tmp_path):
+    """The sf0.01 documents have no exact-duplicate group, so parity
+    alone cannot tell min from max: plant one."""
+    import pandas as pd
+
+    from ont_d2rq_spark.queries import QUERIES
+
+    pd.DataFrame(
+        {"doc_id": [7, 3, 9, 5], "text": ["Hello World", " hello world  ", "HELLO WORLD", "other"]}
+    ).to_parquet(tmp_path / "documents.parquet")
+    rows = QUERIES["dedup_exact"](spark, str(tmp_path)).collect()
+    assert sorted((r["representative"], r["n_dups"]) for r in rows) == [(3, 3), (5, 1)]

@@ -1,5 +1,5 @@
-"""Turtle mapping loader — real d2rq: mapping files parse to the same
-model the YAML dialect builds (MapParser parity)."""
+"""Turtle mapping loader — real d2rq: mapping files parse to the typed
+mapping model (MapParser parity)."""
 
 import pytest
 
@@ -86,6 +86,60 @@ map:p a d2rq:PropertyBridge ;
     m = load_mapping_ttl(ttl, base_dir="/tmp")
     assert m.class_maps["X"].classes == ["http://x/A", "http://x/B"]
     assert m.bridges[0].properties == ["http://x/p1", "http://x/p2"]
+
+
+PREFIXES = """
+@prefix d2rq: <http://www.wiwiss.fu-berlin.de/suhl/bizer/D2RQ/0.1#> .
+@prefix map: <#> .
+"""
+
+CLASS_MAP = """
+map:X a d2rq:ClassMap ;
+    d2rq:uriPattern "http://x/@@t.id@@" .
+"""
+
+
+def test_constant_value_keeps_term_kind():
+    ttl = PREFIXES + CLASS_MAP + """
+map:lit a d2rq:PropertyBridge ;
+    d2rq:belongsToClassMap map:X ;
+    d2rq:property <http://x/p> ;
+    d2rq:constantValue "hello" .
+map:iri a d2rq:PropertyBridge ;
+    d2rq:belongsToClassMap map:X ;
+    d2rq:property <http://x/q> ;
+    d2rq:constantValue <http://x/hello> .
+"""
+    lit, iri = load_mapping_ttl(ttl, base_dir="/tmp").bridges
+    assert lit.constant_value == "hello" and lit.object_is_literal
+    assert iri.constant_value == "http://x/hello" and not iri.object_is_literal
+
+
+def test_inline_translation_table():
+    """The D2RQ manual's blank-node form, trailing ';' included; the
+    table is registered once, under its local name."""
+    ttl = PREFIXES + CLASS_MAP + """
+map:colors a d2rq:TranslationTable ;
+    d2rq:translation [ d2rq:databaseValue "R" ; d2rq:rdfValue <http://x/red> ; ] ;
+    d2rq:translation [ d2rq:databaseValue "G" ; d2rq:rdfValue "green" ] .
+map:color a d2rq:PropertyBridge ;
+    d2rq:belongsToClassMap map:X ;
+    d2rq:property <http://x/color> ;
+    d2rq:uriColumn "t.color" ;
+    d2rq:translateWith map:colors .
+"""
+    m = load_mapping_ttl(ttl, base_dir="/tmp")
+    assert list(m.translation_tables) == ["colors"]
+    assert m.translation_tables["colors"].translations == {"R": "http://x/red", "G": "green"}
+    assert m.bridges[0].translate_with == "colors"
+
+
+def test_unknown_d2rq_type_and_repeated_single_value_raise():
+    with pytest.raises(MappingError, match="AdditionalProperty"):
+        load_mapping_ttl(PREFIXES + "map:a a d2rq:AdditionalProperty .", base_dir="/tmp")
+    twice = CLASS_MAP.replace(" .\n", ' ;\n    d2rq:condition "a" , "b" .\n')
+    with pytest.raises(MappingError, match="takes one value"):
+        load_mapping_ttl(PREFIXES + twice, base_dir="/tmp")
 
 
 def test_unknown_prefix_raises():
