@@ -56,6 +56,14 @@ TRIPLE_SCHEMA = T.StructType(
     ]
 )
 
+
+def distinct_triples(df):
+    """RDF-set identity: drop duplicate triples of a TRIPLE_SCHEMA frame.
+    A triple is its subject, predicate, object and the object's datatype
+    and language tag; ``is_literal`` follows from those."""
+    return df.dropDuplicates(["subj", "pred", "obj", "obj_datatype", "obj_lang"])
+
+
 _XSD_CAST = {
     "date": "date",
     "timestamp": "timestamp",
@@ -712,7 +720,7 @@ class MappingCompiler:
         if cb.limit is not None:
             out = out.limit(cb.limit)
         if cb.distinct:
-            out = out.dropDuplicates(["subj", "pred", "obj", "obj_datatype", "obj_lang"])
+            out = distinct_triples(out)
         cap = self.mapping.database.result_size_limit
         if cap is not None:
             out = out.limit(cap)

@@ -38,6 +38,7 @@ from ont_d2rq_spark.compiler.relation import (
     NodeSpec,
     TRIPLE_SCHEMA,
     coerce_constant,
+    distinct_triples,
     _qualify,
 )
 from ont_d2rq_spark.mapping.model import Mapping
@@ -437,58 +438,27 @@ def bgp_join_order(patterns, pat_vars, closure_idxs=frozenset()) -> list:
     return order
 
 
-_COMP_TOKEN = re.compile(r"\b\w+?__(?:dt|lang|islit)\b")
-
-_STR_CONST = re.compile(r"'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\"")
-
-
-def _mask_strings(text: str) -> tuple[str, list[str]]:
-    """Replace quoted SQL string constants with \\x00N\\x00 placeholders
-    so textual token rewrites can never corrupt a literal's content
-    (same discipline as sparql._rewrite_builtins: a variable named
-    `label` must not be rewritten inside `'see label'`)."""
-    parts: list[str] = []
-
-    def repl(m):
-        parts.append(m.group(0))
-        return f"\x00{len(parts) - 1}\x00"
-
-    return _STR_CONST.sub(repl, text), parts
+def _unbound(part: str):
+    """What an absent binding or companion column stands for: an unbound
+    value, or the companion of an untyped binding (no datatype, no
+    language tag, not a literal)."""
+    return F.lit(False) if part == "__islit" else F.lit(None).cast("string")
 
 
-def _unmask_strings(text: str, parts: list[str]) -> str:
-    return re.sub(r"\x00(\d+)\x00", lambda m: parts[int(m.group(1))], text)
+def resolver(cols, rename=None):
+    """Expression-variable lookup over a frame's columns, for
+    ``sparql.to_column``: ``resolve(var, part)`` is the Column of the
+    variable's value (part "") or of its __dt / __lang / __islit
+    companion, read from column ``rename(var) + part``.  A column the
+    frame does not carry is unbound (``_unbound``): a variable out of
+    the group's scope, or a companion the pattern never projected."""
+    cols = set(cols)
 
+    def resolve(v: str, part: str = ""):
+        name = (rename(v) if rename else v) + part
+        return F.col(name) if name in cols else _unbound(part)
 
-def _comp_default(tok: str) -> str:
-    """SQL literal an absent companion column stands for: an untyped,
-    non-literal binding (false islit, NULL datatype/lang)."""
-    return "false" if tok.endswith("__islit") else "CAST(NULL AS STRING)"
-
-
-def _rewrite_slice_filter(f: str, compat, m, left_cols, right_cols) -> str:
-    """Rewrite a merged-solution filter for a slice where the LEFT side
-    is known NULL on exactly the compat vars in ``m``: a bare var token
-    resolves to the adopting side's column (``__lj_<c>`` when the left
-    binding is NULL, else the left column), companion tokens to that
-    side's copy — or the untyped-binding default when the column is
-    absent (subject-position vars carry no companions).  String
-    constants are masked first so a variable name inside a quoted
-    literal is never rewritten."""
-    f, _strs = _mask_strings(f)
-    for c in compat:
-        f = re.sub(rf"\b{re.escape(c)}\b", "\x01M\x01", f)
-        for suf in _COMPANION_SUFFIXES:
-            tok = f"{c}{suf}"
-            if c in m:
-                repl = (
-                    f"__lj_{tok}" if f"__lj_{tok}" in right_cols else _comp_default(tok)
-                )
-                f = re.sub(rf"\b{tok}\b", repl, f)
-            elif tok not in left_cols:
-                f = re.sub(rf"\b{tok}\b", _comp_default(tok), f)
-        f = f.replace("\x01M\x01", f"__lj_{c}" if c in m else c)
-    return _unmask_strings(f, _strs)
+    return resolve
 
 
 def _adopt_slice(out: DataFrame, compat, m) -> DataFrame:
@@ -508,12 +478,7 @@ def _adopt_slice(out: DataFrame, compat, m) -> DataFrame:
             if adopted:
                 out = out.withColumn(lc, F.col(rc))
             elif lc not in out.columns:
-                out = out.withColumn(
-                    lc,
-                    F.lit(False).cast("boolean")
-                    if suf == "__islit"
-                    else F.lit(None).cast("string"),
-                )
+                out = out.withColumn(lc, _unbound(suf))
     return out.drop(*[c for c in out.columns if c.startswith("__lj_")])
 
 
@@ -559,8 +524,7 @@ def _masked_compat_join(
     already renamed to __lj_*."""
     from itertools import combinations
 
-    right_cols = set(right.columns)
-    left_cols = set(left.columns)
+    cols = set(left.columns) | set(right.columns)
     sent = "\x00\x00__sparql_adopt__\x00"
     # expand via explode of a LITERAL mask array, not a crossJoin with
     # a local mask frame: a LogicalRDD has no stats, and an
@@ -604,18 +568,18 @@ def _masked_compat_join(
             cond = cond & (F.col(c) == F.col("__lj_" + c))
     if filters:
         # the merged binding is KNOWN per right copy: dispatch the
-        # per-m rewritten filter on the copy tag (Catalyst still
-        # extracts the equi-keys; the dispatch is a post-join residual)
+        # per-m filter on the copy tag (Catalyst still extracts the
+        # equi-keys; the dispatch is a post-join residual)
         disp = F.lit(False)
         for k in range(len(compat) + 1):
             for null_vars in combinations(compat, k):
                 m = set(null_vars)
                 tag = ",".join(sorted(m)) or "-"
+                # a compat var the left leaves NULL reads the right copy
+                res = resolver(cols, lambda v, m=m: "__lj_" + v if v in m else v)
                 fm = F.lit(True)
                 for f in filters:
-                    fm = fm & F.expr(
-                        _rewrite_slice_filter(f, compat, m, left_cols, right_cols)
-                    )
+                    fm = fm & f(res)
                 disp = disp | ((F.col("__cj_tag") == tag) & fm)
         cond = cond & disp
     out = left.join(rx, cond, how)
@@ -626,15 +590,7 @@ def _masked_compat_join(
             rc, lc = f"__lj_{c}{suf}", f"{c}{suf}"
             if rc not in out.columns:
                 continue
-            left_ref = (
-                F.col(lc)
-                if lc in out.columns
-                else (
-                    F.lit(False).cast("boolean")
-                    if suf == "__islit"
-                    else F.lit(None).cast("string")
-                )
-            )
+            left_ref = F.col(lc) if lc in out.columns else _unbound(suf)
             out = out.withColumn(
                 lc, F.when(F.col(c).isNull(), F.col(rc)).otherwise(left_ref)
             )
@@ -674,8 +630,7 @@ def _masked_compat_join_sym(
     already renamed to ``__lj_*``."""
     from itertools import combinations
 
-    right_cols = set(right.columns)
-    left_cols = set(left.columns)
+    cols = set(left.columns) | set(right.columns)
     preserve = how == "left"
     n_pairs = (2 ** len(left_nullable)) * (2 ** len(right_nullable))
     # each subtree re-executes once per slice pair (Spark does not share
@@ -705,15 +660,14 @@ def _masked_compat_join_sym(
                     for c in shared:
                         if c not in m and c not in t:
                             cond = cond & (F.col(c) == F.col("__lj_" + c))
+                    res = resolver(cols, lambda v, m=m: "__lj_" + v if v in m else v)
                     for f in filters:
                         # the merged binding is KNOWN per pair: left's
                         # value unless left-NULL, then right's (which is
                         # itself NULL in the c-in-t slices — an unbound
                         # var in a FILTER evaluates to NULL → false,
                         # matching the coalesce() of the fallback path)
-                        cond = cond & F.expr(
-                            _rewrite_slice_filter(f, compat, m, left_cols, right_cols)
-                        )
+                        cond = cond & f(res)
                     outs.append(_adopt_slice(sl.join(sr, cond, "inner"), compat, m))
     matched = reduce(lambda a, b: a.unionByName(b), outs)
     if not preserve:
@@ -745,7 +699,10 @@ def optional_join(
     scoped evaluation of a FILTER written inside an OPTIONAL group —
     the filter may reference variables from either side, and a failing
     filter un-binds the optional part instead of dropping the row
-    (the classic leftjoin-vs-filter distinction).
+    (the classic leftjoin-vs-filter distinction).  Each filter is a
+    callable from a ``resolver`` to a Column (``functools.partial(
+    sparql.to_column, tree)``): the join builds the resolver that reads
+    each variable from the side that binds it in the merged row.
 
     ``maybe_unbound`` names LEFT-side variables that can be NULL
     (introduced by an earlier OPTIONAL / UNION branch / VALUES UNDEF);
@@ -779,16 +736,6 @@ def optional_join(
             if _is_companion(c) and c in left.columns and c[: c.rfind("__")] not in compat
         ]
     )
-    # companions referenced by a filter but produced by neither side
-    # default to NULL / false (untyped binding); scan with string
-    # constants masked so a literal like 'x__dt' is never mistaken
-    # for a companion reference
-    for tok in {t for f in filters for t in _COMP_TOKEN.findall(_mask_strings(f)[0])}:
-        if tok not in left.columns and tok not in right.columns:
-            right = right.withColumn(
-                tok,
-                F.lit(False) if tok.endswith("__islit") else F.lit(None).cast("string"),
-            )
     if not filters and not compat:
         if shared:
             return left.join(right, on=shared, how=how)
@@ -823,40 +770,18 @@ def optional_join(
         else:
             cond = cond & (F.col(c) == F.col(rc))
     # group filters evaluate over the MERGED solution (SPARQL LeftJoin
-    # expr): a compat var reference inside the condition means the
-    # adopted value when the left side is unbound — rewrite bare var
-    # tokens to coalesce(left, right) and companion tokens to the
-    # adopting side's copy.  Sentinels keep the three rewrites from
-    # corrupting each other's emitted text.
-    right_cols = set(right.columns)
-    left_cols = set(left.columns)
+    # expr): a compat var means the adopted value when the left binding
+    # is unbound — its right copy, companions included
+    base = resolver(set(left.columns) | set(right.columns))
+
+    def merged(v: str, part: str = ""):
+        if v not in compat:
+            return base(v, part)
+        lv, rv = base(v, part), base("__lj_" + v, part)
+        return F.when(F.col(v).isNull(), rv).otherwise(lv) if part else F.coalesce(lv, rv)
+
     for f in filters:
-        # string constants are masked first: the \b-token rewrites must
-        # never touch a variable name occurring INSIDE a quoted literal
-        # (FILTER(?note = "see label") with compat var `label`)
-        f, _strs = _mask_strings(f)
-        for c in compat:
-            f = re.sub(rf"\b{re.escape(c)}\b", "\x01M\x01", f)  # bare var only
-            for suf in _COMPANION_SUFFIXES:
-                tok = f"{c}{suf}"
-                if f"__lj_{tok}" in right_cols:
-                    # the merged companion: adopted side's copy when the
-                    # left binding is NULL.  Either side may LACK the
-                    # column (subject-position vars carry no companions
-                    # since r5) — dangling references become the
-                    # untyped-binding default instead of an unresolvable
-                    # column
-                    lref = tok if tok in left_cols else _comp_default(tok)
-                    f = re.sub(
-                        rf"\b{tok}\b",
-                        f"(CASE WHEN \x01L\x01 IS NULL THEN __lj_{tok} ELSE {lref} END)",
-                        f,
-                    )
-                elif tok not in left_cols:
-                    f = re.sub(rf"\b{tok}\b", _comp_default(tok), f)
-            f = f.replace("\x01M\x01", f"coalesce({c}, __lj_{c})")
-            f = f.replace("\x01L\x01", c)
-        cond = cond & F.expr(_unmask_strings(f, _strs))
+        cond = cond & f(merged)
     out = left.join(right, cond, how)
     # merge compat vars: an unbound left binding adopts the right value
     # (and its typed-literal companions)
@@ -880,7 +805,6 @@ class VirtualGraph:
         self.spark = spark
         self.compiler = MappingCompiler(mapping, spark, extra_tables)
         self.bridges: list[CompiledBridge] = self.compiler.compile()
-        self._cached: list[DataFrame] = []
         # named graphs (SPARQL GRAPH clause): the reference serves the
         # data and the derived OWL vocabulary as separable graphs
         # (map/impl/schema/*, SURVEY §2.1 S8)
@@ -1496,17 +1420,8 @@ class VirtualGraph:
 
             df = df.unionByName(schema_triples(self.mapping, self.spark))
         if distinct is True:
-            df = df.dropDuplicates(["subj", "pred", "obj", "obj_datatype", "obj_lang"])
+            df = distinct_triples(df)
         return df
-
-    def cache(self) -> "VirtualGraph":
-        """Persist the fused triples DAG (whole-graph caching)."""
-        from pyspark import StorageLevel
-
-        t = self.triples().persist(StorageLevel.MEMORY_AND_DISK)
-        self._cached.append(t)
-        return self
-
 
     # ------------------------------------------------------------------
     # N-Triples serialization (dump-rdf sink, SURVEY §2.1 S6)

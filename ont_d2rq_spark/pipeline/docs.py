@@ -36,6 +36,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from ont_d2rq_spark.compiler.relation import distinct_triples
+
 EX = "http://example.org/"
 OWL_SAMEAS = "http://www.w3.org/2002/07/owl#sameAs"
 
@@ -330,7 +332,7 @@ def materialize_triples(
     `salt_buckets` tasks instead of one straggler — the salted
     repartitioning the north rule names."""
     out = (
-        triples.dropDuplicates(["subj", "pred", "obj", "obj_datatype", "obj_lang"])
+        distinct_triples(triples)
         .withColumn("salt", F.pmod(F.xxhash64("subj"), F.lit(salt_buckets)))
         .repartition(F.col("pred"), F.col("salt"))
         .drop("salt")
@@ -404,9 +406,9 @@ def build_kg(
     # canon: consumed by TWO broadcast builds (subj + obj rewrite) that
     # run in parallel threads — materialize once before they race
     canon = stage("canonical_map", compute_canon, materialize=True)
-    final = rewrite_triples_canonical(
-        raw.filter(F.col("pred") != OWL_SAMEAS), canon
-    ).dropDuplicates(["subj", "pred", "obj", "obj_datatype", "obj_lang"])
+    final = distinct_triples(
+        rewrite_triples_canonical(raw.filter(F.col("pred") != OWL_SAMEAS), canon)
+    )
     if root is not None:
         final = run_stage(
             spark,

@@ -785,7 +785,7 @@ def q_sparql_select(spark, sf_dir):
             ?n ex:inRegion ?r .
             ?r ex:name ?rname .
             ?c ex:name ?name .
-            FILTER (rname in ('ASIA', 'EUROPE'))
+            FILTER (?rname IN ("ASIA", "EUROPE"))
         }
         """,
     )
@@ -969,7 +969,7 @@ def q_sparql_graph(spark, sf_dir):
             GRAPH <urn:x-d2rq:graph:vocabulary> { ?cls a owl:Class }
             GRAPH <urn:x-d2rq:graph:data> {
                 ?x a ?cls . ?x ex:name ?name .
-                FILTER (name like 'NATION%')
+                FILTER (STRSTARTS(?name, "NATION"))
             }
         }
         """,

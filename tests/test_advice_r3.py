@@ -1,6 +1,7 @@
 """SPARQL rewrite, OPTIONAL, typed-literal and as-of join edge cases, pinned.
 
-1. _rewrite_builtins must not rewrite inside quoted string constants.
+1. Operators and builtin names inside quoted string constants stay
+   literal text.
 2. A query with only OPTIONAL groups (no basic patterns) returns the
    optional bindings, not one empty row.
 3. OPTIONAL with disjoint variable domains preserves left solutions
@@ -13,7 +14,7 @@ import pytest
 
 from ont_d2rq_spark.examples import tpch_mapping
 from ont_d2rq_spark.graph import VirtualGraph
-from ont_d2rq_spark.sparql import _rewrite_builtins, execute
+from ont_d2rq_spark.sparql import execute
 
 SF = "/root/testdata/sf0.001"
 XSD = "http://www.w3.org/2001/XMLSchema#"
@@ -24,24 +25,28 @@ def graph(spark):
     return VirtualGraph(tpch_mapping(SF), spark)
 
 
-# ---- 1: string constants survive the builtin/operator rewrites ----------
+# ---- 1: string constants are opaque to the expression parser -----------
+
+_NAMES = 'VALUES ?name { "Tom&&Jerry" "Hello!World" "lang(y)" "A&&B" "Customer#1" }'
 
 
-def test_rewrite_keeps_operators_inside_strings():
-    out = _rewrite_builtins("name = 'Tom&&Jerry'")
-    assert "'Tom&&Jerry'" in out and "AND" not in out
-    out = _rewrite_builtins('name != "Hello!World" && flag')
-    assert '"Hello!World"' in out and " AND " in out and "NOT" not in out.split('"')[2 - 1]
+def _names(graph, flt: str) -> set:
+    df = execute(graph, f"SELECT ?name WHERE {{ {_NAMES} FILTER ({flt}) }}")
+    return {r["name"] for r in df.collect()}
+
+
+def test_rewrite_keeps_operators_inside_strings(graph):
+    assert _names(graph, "?name = 'Tom&&Jerry'") == {"Tom&&Jerry"}
+    assert _names(graph, '?name != "Hello!World" && bound(?name)') == {
+        "Tom&&Jerry", "lang(y)", "A&&B", "Customer#1"
+    }
     # builtin-shaped text inside a literal is untouched
-    out = _rewrite_builtins("x = 'lang(y)' || bound(z)")
-    assert "'lang(y)'" in out and "(z IS NOT NULL)" in out and " OR " in out
+    assert _names(graph, "?name = 'lang(y)' || bound(?z)") == {"lang(y)"}
 
 
-def test_rewrite_regex_flags_and_masked_pattern():
-    out = _rewrite_builtins("regex(name, 'a&&b', 'i')")
-    assert out == "regexp_like(name, '(?i)a&&b')"
-    out = _rewrite_builtins("regex(name, \"^Cust\")")
-    assert out == 'regexp_like(name, "^Cust")'
+def test_rewrite_regex_flags_and_masked_pattern(graph):
+    assert _names(graph, "regex(?name, 'a&&b', 'i')") == {"A&&B"}
+    assert _names(graph, 'regex(?name, "^Cust")') == {"Customer#1"}
 
 
 def test_filter_with_operator_chars_in_literal(graph):

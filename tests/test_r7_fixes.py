@@ -7,7 +7,11 @@ from pyspark.sql import functions as F
 def test_date_accessors_zoned_literals(spark):
     """SPARQL 17.4.5 / XPath accessors return the component of the
     value's OWN timezone; the session-tz cast must not shift it."""
-    from ont_d2rq_spark.sparql import _rewrite_builtins
+    from ont_d2rq_spark.graph import resolver
+    from ont_d2rq_spark.sparql import _P, to_column
+
+    def col(text):
+        return to_column(_P(text)._expression(), resolver(()))
 
     cases = [
         ("HOURS('2011-01-10T14:45:13.815-05:00')", 14),
@@ -18,16 +22,15 @@ def test_date_accessors_zoned_literals(spark):
         ("HOURS('2011-01-10T14:45:13')", 14),  # zone-less unchanged
         ("MONTH('1995-07-16')", 7),  # xsd:date unchanged
     ]
-    exprs = ", ".join(
-        f"{_rewrite_builtins(e)} AS c{i}" for i, (e, _) in enumerate(cases)
-    )
-    row = spark.sql(f"SELECT {exprs}").first()
+    row = spark.range(1).select(
+        *[col(e).alias(f"c{i}") for i, (e, _) in enumerate(cases)]
+    ).first()
     for i, (e, want) in enumerate(cases):
         assert row[f"c{i}"] == want, e
-    sec = _rewrite_builtins("SECONDS('2011-01-10T00:00:13.500-05:00')")
+    sec = col("SECONDS('2011-01-10T00:00:13.500-05:00')")
     from decimal import Decimal
 
-    assert spark.sql(f"SELECT {sec} AS s").first()["s"] == Decimal("13.500")
+    assert spark.range(1).select(sec.alias("s")).first()["s"] == Decimal("13.500")
 
 
 def _chain_edges(spark, n=6):

@@ -21,7 +21,7 @@ def test_parse_forms():
         SELECT DISTINCT ?c ?name WHERE {
             ?c a ex:Customer .
             ?c ex:name ?name .
-            FILTER (name like 'Customer%')
+            FILTER (STRSTARTS(?name, "Customer"))
         } ORDER BY DESC(?name) LIMIT 5
         """
     )
@@ -29,7 +29,7 @@ def test_parse_forms():
     assert q.variables == ["c", "name"]
     assert len(q.patterns) == 2
     assert q.patterns[0][1].endswith("#type")
-    assert q.order_by == [("name", True)] and q.limit == 5
+    assert q.order_by == [(("var", "name"), True)] and q.limit == 5
 
 
 def test_select_with_join_and_filter(graph):
@@ -41,7 +41,7 @@ def test_select_with_join_and_filter(graph):
             ?c ex:inNation ?n .
             ?n ex:name "NATION_2" .
             ?c ex:name ?name .
-            FILTER (name like 'Customer%')
+            FILTER (STRSTARTS(?name, "Customer"))
         } ORDER BY ?name LIMIT 3
         """,
     )
@@ -132,7 +132,7 @@ def test_group_by_aggregates(graph):
         SELECT ?n (COUNT(*) AS ?cnt) (COUNT(DISTINCT ?c) AS ?nc) WHERE {
             ?c a ex:Customer .
             ?c ex:inNation ?n .
-        } GROUP BY ?n HAVING (cnt >= 2) ORDER BY ?n
+        } GROUP BY ?n HAVING (?cnt >= 2) ORDER BY ?n
         """,
     )
     rows = df.collect()
@@ -164,8 +164,8 @@ def test_bind_and_values(graph):
         SELECT ?name ?upper WHERE {
             ?n a ex:Nation .
             ?n ex:name ?name .
-            BIND (lower(?name) AS ?lower)
-            BIND (upper(?lower) AS ?upper)
+            BIND (LCASE(?name) AS ?lower)
+            BIND (UCASE(?lower) AS ?upper)
             VALUES ?name { "NATION_2" "NATION_5" "NO_SUCH" }
             FILTER (bound(?upper))
         } ORDER BY ?name
@@ -300,12 +300,12 @@ def test_property_path_sequence_and_inverse(graph):
     inv = execute(
         graph,
         """PREFIX ex: <http://example.org/>
-        SELECT ?n WHERE { ?r ex:name "ASIA" . ?r ^ex:inRegion/^ex:inNation ?n . FILTER(?n like '%customer%') }""",
+        SELECT ?n WHERE { ?r ex:name "ASIA" . ?r ^ex:inRegion/^ex:inNation ?n . FILTER(CONTAINS(?n, "customer")) }""",
     )
     direct = execute(
         graph,
         """PREFIX ex: <http://example.org/>
-        SELECT ?n WHERE { ?n ex:inNation/ex:inRegion ?r . ?r ex:name "ASIA" . FILTER(?n like '%customer%') }""",
+        SELECT ?n WHERE { ?n ex:inNation/ex:inRegion ?r . ?r ex:name "ASIA" . FILTER(CONTAINS(?n, "customer")) }""",
     )
     assert {r["n"] for r in inv.collect()} == {r["n"] for r in direct.collect()} != set()
 

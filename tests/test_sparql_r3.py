@@ -85,13 +85,13 @@ def test_path_group_splice_equals_sequence(graph):
         graph,
         f"""PREFIX ex: <{EX}>
         SELECT ?c ?r WHERE {{ ?c (ex:inNation/ex:inRegion) ?r .
-                              FILTER(?c like '%customer%') }}""",
+                              FILTER(CONTAINS(?c, "customer")) }}""",
     )
     plain = execute(
         graph,
         f"""PREFIX ex: <{EX}>
         SELECT ?c ?r WHERE {{ ?c ex:inNation/ex:inRegion ?r .
-                              FILTER(?c like '%customer%') }}""",
+                              FILTER(CONTAINS(?c, "customer")) }}""",
     )
     assert sorted(map(tuple, grouped.collect())) == sorted(
         map(tuple, plain.collect())
@@ -107,7 +107,7 @@ def test_path_group_closure(graph):
         graph,
         f"""PREFIX ex: <{EX}>
         SELECT ?c ?r WHERE {{ ?c (ex:inNation/ex:inRegion)+ ?r .
-                              FILTER(?c like '%customer%') }}""",
+                              FILTER(CONTAINS(?c, "customer")) }}""",
     )
     rows = df.collect()
     assert len(rows) == 150
@@ -119,13 +119,13 @@ def test_path_group_inverse(graph):
         graph,
         f"""PREFIX ex: <{EX}>
         SELECT ?c WHERE {{ ?c (ex:inNation/ex:inRegion) <{EX}region/1> .
-                           FILTER(?c like '%customer%') }}""",
+                           FILTER(CONTAINS(?c, "customer")) }}""",
     )
     inv = execute(
         graph,
         f"""PREFIX ex: <{EX}>
         SELECT ?c WHERE {{ <{EX}region/1> ^(ex:inNation/ex:inRegion) ?c .
-                           FILTER(?c like '%customer%') }}""",
+                           FILTER(CONTAINS(?c, "customer")) }}""",
     )
     assert {r["c"] for r in fwd.collect()} == {r["c"] for r in inv.collect()}
     assert fwd.count() > 0
@@ -223,7 +223,7 @@ def test_graph_cross_graph_join(graph):
             GRAPH <urn:x-d2rq:graph:vocabulary> {{ ?cls a owl:Class }}
             GRAPH <urn:x-d2rq:graph:data> {{
                 ?x a ?cls . ?x ex:name ?name .
-                FILTER (name like 'NATION%')
+                FILTER (STRSTARTS(?name, "NATION"))
             }}
         }}""",
     )

@@ -5,12 +5,14 @@ patterns — OPTIONAL/UNION/BIND/VALUES evaluated recursively inside
 other groups (the reference inherits this from ARQ's recursive
 OpExecutor, engine/QueryEngineD2RQ.java)."""
 
+from functools import partial
+
 import pytest
 from pyspark.sql import functions as F
 
 from ont_d2rq_spark.examples import tpch_mapping
 from ont_d2rq_spark.graph import VirtualGraph, optional_join
-from ont_d2rq_spark.sparql import execute
+from ont_d2rq_spark.sparql import _P, execute, to_column
 
 SF = "/root/testdata/sf0.001"
 EX = "http://example.org/"
@@ -19,6 +21,11 @@ EX = "http://example.org/"
 @pytest.fixture(scope="module")
 def graph(spark):
     return VirtualGraph(tpch_mapping(SF), spark)
+
+
+def _filter(text: str):
+    """A group-scoped FILTER as optional_join takes it."""
+    return partial(to_column, _P(text)._expression())
 
 
 # ---------------------------------------------------------------------------
@@ -39,7 +46,7 @@ def test_optional_join_filter_string_constant_untouched(spark):
         [("n1", "see label"), ("n2", "see label")], "n string, note string"
     )
     out = optional_join(
-        left, right, filters=["note = 'see label'"], maybe_unbound={"label"}
+        left, right, filters=[_filter("?note = 'see label'")], maybe_unbound={"label"}
     ).collect()
     assert len(out) == 2
     # both rows keep their right-side match: the literal compared equal
@@ -58,7 +65,7 @@ def test_optional_join_filter_compat_var_still_rewritten(spark):
         "n string, tag string, v string",
     )
     out = optional_join(
-        left, right, filters=["tag = 'keep'"], maybe_unbound={"tag"}
+        left, right, filters=[_filter("?tag = 'keep'")], maybe_unbound={"tag"}
     ).collect()
     got = {(r["n"], r["tag"], r["v"]) for r in out}
     # n1 matches its bound tag; n2 adopts only the 'keep' row
@@ -214,7 +221,7 @@ def test_compat_join_decomposed_group_filter(spark):
         [("a", "r1", "x1"), ("b", "r3", "x3")], "n string, r string, x string"
     )
     out = optional_join(
-        left, right, filters=["x != 'x3'"], maybe_unbound={"r"}
+        left, right, filters=[_filter("?x != 'x3'")], maybe_unbound={"r"}
     ).collect()
     got = {(r["n"], r["r"], r["x"]) for r in out}
     # b's only candidate fails the filter → optional part unbound

@@ -229,6 +229,18 @@ _obj_t = st.sampled_from(_VARS * 2 + _LIT_TERMS + _IRI_TERMS)
 _pat_t = st.tuples(_subj_t, st.sampled_from(_PRED_TERMS), _obj_t)
 
 _fvar_t = st.sampled_from(["v0", "v1", "v2", "v3", "b0"])
+# nested builtin calls (depth 2): text template and the algebra's answer
+# for a BOUND term.  A string function over an IRI is a type error
+# (false); STR() turns any bound term into a simple literal.
+_NESTED = {
+    "strlen_ucase": ("STRLEN(UCASE(?{v})) = 1",
+                     lambda t: t[0] == "lit" and len(t[1].upper()) == 1),
+    "ucase_lcase": ('UCASE(LCASE(?{v})) = "A"',
+                    lambda t: t[0] == "lit" and t[1].lower().upper() == "A"),
+    "isiri_str": ("isIRI(STR(?{v}))", lambda t: False),
+    "not_isiri_str": ("!isIRI(STR(?{v}))", lambda t: True),
+    "isliteral_str": ("isLiteral(STR(?{v}))", lambda t: True),
+}
 _filter_t = st.one_of(
     st.tuples(
         st.just("cmp"),
@@ -238,6 +250,10 @@ _filter_t = st.one_of(
     ),
     st.tuples(st.just("bound"), _fvar_t),
     st.tuples(st.just("notbound"), _fvar_t),
+    st.tuples(st.just("nest"), _fvar_t, st.sampled_from(sorted(_NESTED))),
+    # mixed-type comparisons: every term here is an IRI or a simple literal
+    st.tuples(st.just("gt1"), _fvar_t),
+    st.tuples(st.just("gt1_or_a"), _fvar_t),
 )
 _bindexpr_t = st.one_of(
     st.tuples(st.just("const"), st.sampled_from(["a", "x"])),
@@ -300,11 +316,15 @@ def _term_txt(t) -> str:
 
 
 def _filter_txt(f) -> str:
-    if f[0] == "cmp":
-        return f'FILTER (?{f[1]} {f[2]} "{f[3]}")'
-    if f[0] == "bound":
-        return f"FILTER (BOUND(?{f[1]}))"
-    return f"FILTER (!BOUND(?{f[1]}))"
+    body = {
+        "cmp": lambda: f'?{f[1]} {f[2]} "{f[3]}"',
+        "bound": lambda: f"BOUND(?{f[1]})",
+        "notbound": lambda: f"!BOUND(?{f[1]})",
+        "nest": lambda: _NESTED[f[2]][0].format(v=f[1]),
+        "gt1": lambda: f"?{f[1]} > 1",
+        "gt1_or_a": lambda: f'?{f[1]} > 1 || ?{f[1]} = "a"',
+    }[f[0]]()
+    return f"FILTER ({body})"
 
 
 def _ser(g: _G) -> str:
@@ -360,6 +380,12 @@ def _nv_filter(f, sol: dict) -> bool:
     t = sol.get(f[1])
     if t is None:
         return False
+    if f[0] == "nest":
+        return _NESTED[f[2]][1](t)
+    if f[0] == "gt1":  # an IRI or simple literal against a number: error
+        return False
+    if f[0] == "gt1_or_a":  # error || true is true; error || false an error
+        return t == ("lit", "a")
     return (t[1] == f[3]) if f[2] == "=" else (t[1] != f[3])
 
 
@@ -438,6 +464,47 @@ def test_fuzz_recursive_evaluator_matches_algebra(fuzz_graph, g):
         tuple(s[v][1] if v in s else None for v in pvars) for s in _nv_eval(g)
     )
     assert got == want, query
+
+
+@pytest.mark.parametrize(
+    "flt, want",
+    [
+        ("isIRI(str(?o))", []),
+        ('regex(lcase(?o), "A", "i")', ["a", "a"]),
+        ("?o > 1", []),
+        ('?o > 1 || ?o = "a"', ["a", "a"]),
+    ],
+)
+def test_expression_probes_match_algebra(fuzz_graph, flt, want):
+    """Nested builtin calls compile at any depth, and comparing a
+    literal with a number is SPARQL's error value — the row drops (and
+    `error || true` holds) instead of the query aborting."""
+    rows = execute(fuzz_graph, f"SELECT ?o WHERE {{ ?s <{EX}p> ?o FILTER({flt}) }}").collect()
+    assert sorted(r["o"] for r in rows) == want
+
+
+def test_numeric_filter_over_lexical_bindings(graph):
+    """FILTER(?bal > 1000) reads the xsd:double binding's numeric value
+    (formerly an ANSI CAST_INVALID_INPUT abort on '2095.23')."""
+    import duckdb
+
+    want = duckdb.sql(
+        f"SELECT count(*) FROM read_parquet('{SF}/customer.parquet') WHERE c_acctbal > 1000"
+    ).fetchone()[0]
+    got = execute(
+        graph,
+        f"""PREFIX ex: <{EX}>
+        SELECT ?c WHERE {{ ?c ex:acctbal ?bal FILTER(?bal > 1000) }}""",
+    ).count()
+    assert got == want > 0
+
+
+@pytest.mark.parametrize("flt, name", [("?n like 'x'", "like"), ("foo(?n)", "foo")])
+def test_non_sparql_expression_raises_naming_it(flt, name):
+    from ont_d2rq_spark.sparql import parse
+
+    with pytest.raises(SparqlError, match=name):
+        parse(f"SELECT ?n WHERE {{ ?s <{EX}p> ?n FILTER({flt}) }}")
 
 
 # ---------------------------------------------------------------------------
@@ -723,13 +790,19 @@ def test_builtin_hashes_and_uuid(graph):
     assert rows[0]["u"] != rows[1]["u"]  # fresh per solution
 
 
-def test_builtin_tz_and_seconds():
-    from ont_d2rq_spark.sparql import _rewrite_builtins
+def test_builtin_tz_and_seconds(spark):
+    from ont_d2rq_spark.graph import resolver
+    from ont_d2rq_spark.sparql import _P, to_column
 
-    e = _rewrite_builtins("TZ(?d) = 'Z' && SECONDS(?d) > 10")
-    assert "regexp_extract" in e and "date_format" in e
-    e2 = _rewrite_builtins("NOW() > ?d")
-    assert "current_timestamp()" in e2
+    d = spark.createDataFrame(
+        [("2011-01-10T00:00:13.500Z",), ("2011-01-10T00:00:09-05:00",)], "d string"
+    )
+    res = resolver(d.columns)
+    e = to_column(_P("TZ(?d) = 'Z' && SECONDS(?d) > 10")._expression(), res)
+    e2 = to_column(_P("NOW() > ?d")._expression(), res)
+    got = d.select(e.alias("e"), e2.alias("e2")).collect()
+    assert [r["e"] for r in got] == [True, False]
+    assert all(r["e2"] for r in got)
 
 
 def test_builtin_datatype_lang_literal_is_langstring(graph):
