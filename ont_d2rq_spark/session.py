@@ -10,6 +10,7 @@ import hashlib
 import os
 import tempfile
 import zipfile
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -24,6 +25,24 @@ def _pkg_sources(pkg_dir: str) -> list[tuple[str, str]]:
                 out.append((full, rel))
     out.sort(key=lambda t: t[1])
     return out
+
+
+def _temp_file(name: str, write) -> str:
+    """``tempfile.gettempdir()/name``, created once by ``write(path)``
+    through a per-process temporary name, so concurrent sessions never
+    read a half-written file.  Callers name the file by a content hash."""
+    path = os.path.join(tempfile.gettempdir(), name)
+    if not os.path.exists(path):
+        tmp = path + f".tmp{os.getpid()}"
+        write(tmp)
+        os.replace(tmp, path)
+    return path
+
+
+def _zip(path: str, sources: list[tuple[str, str]]) -> None:
+    with zipfile.ZipFile(path, "w") as z:
+        for full, rel in sources:
+            z.write(full, rel)
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -46,17 +65,73 @@ def ship_package(spark: SparkSession) -> None:
         h.update(rel.encode())
         with open(full, "rb") as f:
             h.update(f.read())
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"ont_d2rq_spark_pkg_{h.hexdigest()[:16]}.zip"
+    zpath = _temp_file(
+        f"ont_d2rq_spark_pkg_{h.hexdigest()[:16]}.zip", lambda tmp: _zip(tmp, sources)
     )
-    if not os.path.exists(zpath):
-        tmp = zpath + f".tmp{os.getpid()}"
-        with zipfile.ZipFile(tmp, "w") as z:
-            for full, rel in sources:
-                z.write(full, rel)
-        os.replace(tmp, zpath)
     spark.sparkContext.addPyFile(zpath)
     spark._ont_d2rq_shipped = True
+
+
+# HotSpot C2 compile exclusions for code that only plans queries and
+# ships tasks.  A one-shot process (a dump, a build_kg run, a test
+# session) pays C2 to compile this code while it warms up and then
+# barely runs it: in a cold sf0.1 dump on 4 cores the JVM spent 23.6 s
+# compiling against 9.2 s of executor CPU.  An excluded method is still
+# compiled, by C1 (HotSpot falls back to tier 1 once tier 4 is
+# refused), so it never stays interpreted.  Everything not listed keeps
+# C1 -> C2 tiering, above all the data path: Spark's generated classes,
+# unsafe rows, sql/execution, Parquet, Arrow, shuffle, util/collection.
+#
+# The entries are the packages at the top of C2's time in a
+# LogCompilation of one cold perfbench kg_build run on a 4-core VM
+# (39.5 s of C2 over 3,227 compiles; Janino 6.4 s, java.io 5.1 s,
+# Catalyst expressions with the generated classes 1.4 s): Janino, which
+# compiles the generated code; the shaded ASM ClassReader behind the
+# ClosureCleaner; Java serialization of tasks and closures; Catalyst's
+# analyzer, optimizer, parser and tree rewriting; ANTLR; Scala
+# reflection; class loading and jar reading; and the Python bridges
+# (Pyrolite, py4j).  To re-derive it, run a workload once with
+#   JDK_JAVA_OPTIONS="-XX:+UnlockDiagnosticVMOptions -XX:+LogCompilation
+#                     -XX:LogFile=jit.xml"
+# sum the seconds of the C2 tasks (the <task> elements without a level
+# attribute, up to their <task_done> stamp) per package, and compare
+# the leaders with this list.  The measurements behind the choice, and
+# the policies that lost (C1 only, raised Tier4 thresholds, no
+# tiering), are in CHANGES.md.
+#
+# The directives file is a driver-local path, so only the driver JVM
+# gets it: in local mode the executors live in that JVM, and on a
+# cluster the executors keep plain tiering.
+C2_EXCLUDE = (
+    "org/codehaus/*",
+    "org/apache/xbean/*",
+    "org/antlr/*",
+    "scala/reflect/*",
+    "org/apache/spark/sql/catalyst/analysis/*",
+    "org/apache/spark/sql/catalyst/optimizer/*",
+    "org/apache/spark/sql/catalyst/parser/*",
+    "org/apache/spark/sql/catalyst/rules/*",
+    "org/apache/spark/sql/catalyst/trees/*",
+    "org/apache/spark/sql/catalyst/plans/*",
+    "java/io/ObjectInputStream*",
+    "java/io/ObjectOutputStream*",
+    "java/io/ObjectStreamClass*",
+    "jdk/internal/loader/*",
+    "java/util/jar/*",
+    "net/razorvine/*",
+    "py4j/*",
+)
+
+
+def compiler_directives() -> str:
+    """Path of a HotSpot compiler-directives file that excludes the
+    C2_EXCLUDE classes from C2.  Named by a content hash, like
+    ``ship_package``'s zip, so every session with the same table shares
+    one file and an edited table never reuses a stale one."""
+    match = ", ".join(f'"{p}.*"' for p in C2_EXCLUDE)
+    text = f"[{{ match: [{match}], c2: {{ Exclude: true }} }}]\n"
+    digest = hashlib.md5(text.encode()).hexdigest()[:16]
+    return _temp_file(f"ont_d2rq_spark_jit_{digest}.json", lambda tmp: Path(tmp).write_text(text))
 
 
 def _driver_memory() -> str:
@@ -106,8 +181,17 @@ def get_spark(
         # A/B at sf0.1 (5 alternating fresh-session rounds): distinct
         # dump median 15.0 s -> 8.9 s, and the slow tail collapses.
         # Same flag on the executor side for cluster deployments
-        # (local-mode executors live in the driver JVM).
-        .config("spark.driver.extraJavaOptions", "-XX:-DontCompileHugeMethods")
+        # (local-mode executors live in the driver JVM).  The driver
+        # alone also gets the C2 exclusions of C2_EXCLUDE (above);
+        # HotSpot announces the loaded directives on its own output,
+        # which goes to stderr so that stdout carries only what the
+        # program prints (the CLI writes Turtle and query rows there).
+        .config(
+            "spark.driver.extraJavaOptions",
+            "-XX:-DontCompileHugeMethods -XX:+DisplayVMOutputToStderr"
+            " -XX:+UnlockDiagnosticVMOptions"
+            f" -XX:CompilerDirectivesFile={compiler_directives()}",
+        )
         .config("spark.executor.extraJavaOptions", "-XX:-DontCompileHugeMethods")
     )
     spark = b.getOrCreate()

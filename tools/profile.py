@@ -4,8 +4,10 @@ Each leaf runs once in one ``get_spark`` session under its own job
 group, into a noop sink.  For each leaf it reports the wall time, the
 statistics of the leaf's jobs from the Spark status store (jobs, tasks,
 executor CPU, GC, shuffle and spill bytes, Python-UDF time, job time
-per module) and the self time of every public package function that
-``perfbench.trace`` wraps.
+per module), the JVM's JIT compile and GC seconds over the leaf
+(``jit_compile_s``, ``jvm_gc_s``: the JVM-wide MXBean totals, driver
+threads included) and the self time of every public package function
+that ``perfbench.trace`` wraps.
 
 Usage: python tools/profile.py <leaf|dump|dump_distinct|all> [--plans]
   leaf   a key of __spark_entry__.queries(), or minhash_xxhash64
@@ -65,6 +67,16 @@ def leaf_frame(spark, leaf: str, sf_dir: str):
     return __spark_entry__.queries()[leaf](spark, sf_dir)
 
 
+def jvm_seconds(spark) -> tuple[float, float]:
+    """(JIT compile s, GC s) the driver JVM has spent since it started.
+    The MXBeans count work of compiler threads HotSpot has already
+    stopped, which a per-thread CPU sum would miss."""
+    mf = spark._jvm.java.lang.management.ManagementFactory
+    jit_ms = mf.getCompilationMXBean().getTotalCompilationTime()
+    gc_ms = sum(max(b.getCollectionTime(), 0) for b in mf.getGarbageCollectorMXBeans())
+    return jit_ms / 1e3, gc_ms / 1e3
+
+
 def profile(spark, leaves: list[str], sf_dir: str, plans_dir: Path | None = None) -> dict:
     """{leaf: {wall_s, <job statistics>, self_s: {module.function: s}}}."""
     from perfbench.trace import Tracer, job_stats, self_times
@@ -78,15 +90,19 @@ def profile(spark, leaves: list[str], sf_dir: str, plans_dir: Path | None = None
             tracer.op = op
             group = f"profile-{leaf}"
             sc.setJobGroup(group, leaf)
+            jit0, gc0 = jvm_seconds(spark)
             t0_wall_ms = time.time() * 1e3
             t0 = time.perf_counter()
             df = leaf_frame(spark, leaf, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             wall = time.perf_counter() - t0
+            jit1, gc1 = jvm_seconds(spark)
             spans = tracer.op_spans(op)
             stats = job_stats(spark, group, t0_wall_ms, spans, tracer.epoch, "profile")
             self_s = sorted(self_times(spans).items(), key=lambda kv: -kv[1])
             out[leaf] = {"wall_s": round(wall, 3), **stats,
+                         "jit_compile_s": round(jit1 - jit0, 3),
+                         "jvm_gc_s": round(gc1 - gc0, 3),
                          "self_s": {k: round(v, 3) for k, v in self_s}}
             if plans_dir is not None:
                 mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
@@ -123,7 +139,8 @@ def main(argv=None) -> int:
     out.write_text(json.dumps(result, indent=1) + "\n")
     for leaf, r in layers.items():
         print(f"{leaf}: wall {r['wall_s']:.2f} s, {r['jobs']} jobs, {r['tasks']} tasks, "
-              f"job time {r['job_s']:.2f} s, Python UDF {r['python_udf_s']:.2f} s")
+              f"job time {r['job_s']:.2f} s, Python UDF {r['python_udf_s']:.2f} s, "
+              f"JIT {r['jit_compile_s']:.2f} s, JVM GC {r['jvm_gc_s']:.2f} s")
         for name, s in list(r["self_s"].items())[:8]:
             print(f"    {s:8.3f} s  {name}")
     print(f"wrote {out}")
