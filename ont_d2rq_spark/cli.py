@@ -43,7 +43,11 @@ def main(argv=None) -> int:
     p_dump.add_argument(
         "--format", choices=["ntriples", "turtle", "parquet"], default="ntriples"
     )
-    p_dump.add_argument("--no-distinct", action="store_true")
+    p_dump.add_argument(
+        "--no-distinct",
+        action="store_true",
+        help="skip the global dedup; d2rq:containsDuplicates relations stay DISTINCT",
+    )
     p_dump.add_argument("--master", default=None)
 
     p_gen = sub.add_parser("generate-mapping", help="mapping from table schemas")

@@ -19,7 +19,8 @@ Spark-first re-expression:
     generation — the DataFrame DAG *is* the pushed-down query.
   * triples(): full materialization (dump-rdf): fused one-scan-per-table
     evaluation + global distinct.
-  * cache(): persist hot bridge frames (CachingGraph analogue).
+  * CachingGraph: memoized find() results (jena/CachingGraph analogue),
+    the package's one caller-owned persisted cache.
 """
 
 from __future__ import annotations
@@ -1407,7 +1408,9 @@ class VirtualGraph:
           True — strict RDF-set semantics: global dropDuplicates on the
             triple identity (one full shuffle).  Use when the mapping
             may emit overlapping triples from different bridges.
-          False — raw union, even per-relation duplicates kept."""
+          False — the same as 'auto': no global dedup, and the
+            per-relation DISTINCT of d2rq:containsDuplicates still applies
+            (the reference's relation semantics, kept in both modes)."""
         if fuse:
             df = self.compiler.fused_df(self.bridges)
         else:
@@ -1573,7 +1576,11 @@ class CachingGraph:
     always survives (evicting what the caller just asked for would
     thrash).  Typed lookups (o_datatype / o_lang) key separately:
     find(o='42') and find(o='42', o_datatype=xsd:integer) are different
-    patterns."""
+    patterns.
+
+    This is the package's one persisted cache that outlives a call: every
+    operator reuses frames by localCheckpoint, freed with its result.  The
+    owner sizes it and calls ``clear()`` when done with it."""
 
     def __init__(
         self,

@@ -359,42 +359,25 @@ def build_kg(
         rewrite_triples_canonical,
     )
 
-    def stage(name, compute, materialize=False, persist=True, **kw):
-        if root is None:
-            # uncheckpointed mode: persist only MULTI-consumer stages
-            # (docs: integrity + mentions; raw: sameAs edges + rewrite
-            # source; canon: both rewrite broadcasts).  Since the r7
-            # one-pass rewrites, mentions and links are single-consumer
-            # links in a linear chain — persisting them would store
-            # blocks nobody re-reads and add a materialization job each.
-            from pyspark import StorageLevel
+    # Uncheckpointed, only stages with two consumers keep their rows, by
+    # localCheckpoint: the blocks belong to the RDD, so the ContextCleaner
+    # frees them once the caller drops the result.  docs (integrity count,
+    # mentions) fills at that count; raw (sameAs edges, rewrite) at CC's
+    # first fingerprint scan; canon at once, because its two rewrite
+    # broadcasts build in parallel threads and would race to fill it.
+    # `reused` maps each such stage to whether it fills at once.
+    reused = {"docs_interleaved": False, "raw_triples": False, "canonical_map": True}
 
-            if not persist:
-                return compute()
-            out = compute().persist(StorageLevel.MEMORY_AND_DISK)
-            if materialize:
-                # Materialize the cache NOW, in ONE single-consumer job.
-                # Consumers that run concurrently (AQE materializes
-                # independent union branches / the two rewrite broadcast
-                # builds in parallel threads) otherwise RACE to fill the
-                # same pending cache blocks and serialize on the
-                # BlockManager's per-block write locks — measured on the
-                # sf0.1 event log as task run-time ≈ 4× task CPU-time in
-                # every stage above an unmaterialized persist.
-                out.count()
-            return out
-        return run_stage(spark, root, name, compute, force=force, **kw)
+    def stage(name, compute):
+        if root is not None:
+            return run_stage(spark, root, name, compute, force=force)
+        out = compute()
+        return out.localCheckpoint(eager=reused[name]) if name in reused else out
 
     docs = stage("docs_interleaved", lambda: synthesize_interleaved(spark, sf_dir))
-    assert_span_integrity(docs)  # materializes the docs cache
-    # mentions/links: single-consumer links of a linear chain since the
-    # one-pass rewrites — no persist; the whole docs→mentions→links→raw
-    # chain materializes ONCE (non-racing: it is one linear query) when
-    # the CC convergence fingerprint below first scans raw.
-    mentions = stage("mentions", lambda: detect_mentions(docs), persist=False)
-    links = stage(
-        "entity_links", lambda: link_entities(mentions, spark, sf_dir), persist=False
-    )
+    assert_span_integrity(docs)
+    mentions = stage("mentions", lambda: detect_mentions(docs))
+    links = stage("entity_links", lambda: link_entities(mentions, spark, sf_dir))
     raw = stage("raw_triples", lambda: mention_triples(links))
 
     def compute_canon():
@@ -403,9 +386,7 @@ def build_kg(
         )
         return canonicalize_sameas(sameas, alias_prefix=EX + "entity/")
 
-    # canon: consumed by TWO broadcast builds (subj + obj rewrite) that
-    # run in parallel threads — materialize once before they race
-    canon = stage("canonical_map", compute_canon, materialize=True)
+    canon = stage("canonical_map", compute_canon)
     final = distinct_triples(
         rewrite_triples_canonical(raw.filter(F.col("pred") != OWL_SAMEAS), canon)
     )

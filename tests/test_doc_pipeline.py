@@ -10,7 +10,9 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def interleaved(spark):
-    return P.synthesize_interleaved(spark, SF).cache()
+    df = P.synthesize_interleaved(spark, SF).cache()
+    yield df
+    df.unpersist()
 
 
 def test_shape_matches_input_hint(interleaved):

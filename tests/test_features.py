@@ -364,6 +364,9 @@ def test_contains_duplicates_distinct(spark):
     )
     g = mk(spark, {"dup": dup}, m)
     assert g.find(p=EX + "n").count() == 2  # deduped
+    for distinct in ("auto", False):  # False keeps the per-relation DISTINCT
+        t = g.triples(distinct=distinct)
+        assert t.filter(t.pred == EX + "n").count() == 2
     m2 = base_mapping()
     m2.add_class_map(
         ClassMap(name="d", table="dup", uri_pattern=EX + "d@@dup.id@@")

@@ -21,7 +21,9 @@ def graph(spark):
 
 @pytest.fixture(scope="module")
 def dump(graph):
-    return graph.triples(fuse=True, distinct=False).cache()
+    df = graph.triples(fuse=True, distinct=False).cache()
+    yield df
+    df.unpersist()
 
 
 def rows(df):

@@ -18,7 +18,12 @@ def duck():
 
 @pytest.mark.parametrize("name", list(__spark_entry__.queries()))
 def test_oracle_parity(spark, duck, name):
+    spark.catalog.clearCache()  # what earlier test modules persisted
     assert mismatch(spark, duck, name, SF_DIR) is None
+    # no operator leaves a persisted frame in the session for its caller
+    # to clear: reuse inside an operator is a localCheckpoint, freed with
+    # the result
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_dedup_exact_representative_is_min_doc_id(spark, tmp_path):

@@ -204,7 +204,9 @@ class _TriplesGraph:
 
 @pytest.fixture(scope="module")
 def fuzz_graph(spark):
-    return _TriplesGraph(spark)
+    g = _TriplesGraph(spark)
+    yield g
+    g._tdf.unpersist()
 
 
 @dataclass

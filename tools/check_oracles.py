@@ -76,12 +76,7 @@ def mismatch(spark, con, name: str, sf_dir: str) -> str | None:
     propagate."""
     import __spark_entry__ as entry_mod
 
-    try:
-        sdf = entry_mod.queries()[name](spark, sf_dir).toPandas()
-    finally:
-        # pipeline queries persist stage outputs; later queries must not
-        # run under those dead cache blocks
-        spark.catalog.clearCache()
+    sdf = entry_mod.queries()[name](spark, sf_dir).toPandas()
     ddf = con.sql(entry_mod.oracle_sql()[name]).df()
     srows, scols = rowset(sdf)
     drows, dcols = rowset(ddf)

@@ -108,7 +108,6 @@ def profile(spark, leaves: list[str], sf_dir: str, plans_dir: Path | None = None
                 mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
                 plan = df._jdf.queryExecution().explainString(mode)
                 (plans_dir / f"{leaf}.txt").write_text(plan)
-            spark.catalog.clearCache()
     finally:
         tracer.uninstall()
         sc.setLocalProperty("spark.jobGroup.id", None)

