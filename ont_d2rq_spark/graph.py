@@ -97,17 +97,20 @@ class PathPlus:
     def __repr__(self):
         return f"PathPlus({self.pred!r}, {self.mod!r})"
 
+    def base(self) -> list:
+        """The BGP whose ?__cs → ?__co bindings are the path's edges."""
+        if isinstance(self.pred, PathGroup):
+            return self.pred.patterns
+        return [("?__cs", self.pred, "?__co")]
+
 
 class NegatedSet:
     """SPARQL negated property set `!p` / `!(p1|p2|^q)` in predicate
     position: matches any edge whose predicate is NOT one of the listed
     IRIs.  ``fwd``/``inv`` are tuples of absolute predicate IRIs.
-    bgp() evaluates a single-direction set by rewriting the pattern to
-    an internal predicate variable (inverse members swap
-    subject/object first) and post-filtering that column with NOT IN —
-    the exclusion list is tiny, so Catalyst keeps the filter adjacent
-    to the pattern's union frame.  A mixed set is the union of its two
-    single-direction evaluations (each matches a different edge)."""
+    _evaluate_bgp rewrites it to an internal predicate variable plus a
+    NOT IN filter; a mixed set is the union of its two one-direction
+    evaluations."""
 
     def __init__(self, fwd=(), inv=()):
         self.fwd = tuple(fwd)
@@ -121,9 +124,8 @@ class PathGroup:
     """A parenthesized path group `(p1/p2/…)` used as the base of a
     repetition modifier — `(p1/p2)+` — carrying the group's expansion
     as triple patterns between the fixed endpoints ?__cs → ?__co.  The
-    closure evaluator compiles the group with one bgp() call (inner
-    PathPlus atoms recurse), then iterates over the resulting composite
-    edge set."""
+    path frame evaluates the group as one BGP (inner PathPlus atoms
+    recurse), then iterates over the resulting composite edge set."""
 
     def __init__(self, patterns: list):
         self.patterns = patterns
@@ -145,53 +147,34 @@ def _norm_dt(dt: Optional[str]) -> Optional[str]:
 _COMPANION_SUFFIXES = ("__dt", "__lang", "__islit")
 
 
-def _triple_frame_single(tdf: DataFrame, s, p, o, swap: bool = False, pred_filter=None):
-    """One (s, p, o) pattern over a triple frame → variable-column frame.
-    ``swap`` evaluates the inverse direction (subject term against obj
-    column and vice versa — used for inverse negated-set members);
-    ``pred_filter`` adds a predicate-column condition (negated sets)."""
-    f = tdf
-    sel: list = []
-    seen: dict = {}
-    s_col, o_col = ("obj", "subj") if swap else ("subj", "obj")
-    if pred_filter is not None:
-        f = f.filter(pred_filter)
-    for term, col in ((s, s_col), (p, "pred"), (o, o_col)):
-        if term is None:
+def _bindings(df: DataFrame, terms) -> DataFrame:
+    """Project a matched frame onto its variables.  ``terms`` pairs each
+    pattern term with the column it was matched against; constants are
+    the source's to apply.  A variable repeated within the pattern keeps
+    only rows whose columns agree; an OBJECT-position variable ("obj")
+    also carries its typed-literal companions (v__dt / v__lang /
+    v__islit), which FILTER builtins (lang(), datatype()) evaluate
+    against.  Subject, predicate and path-endpoint variables emit none:
+    consumers default the missing columns to NULL/false, and joins stay
+    lexical there, which is term equality for URIs.  A pattern with no
+    variable yields the ``_m`` marker: one row if it matched."""
+    sel, seen = [], {}
+    for term, col in terms:
+        if term is None or not _is_var(term):
             continue
-        if _is_var(term):
-            v = _var_name(term)
-            if v in seen:
-                f = f.filter(F.col(col) == F.col(seen[v]))
-                continue
-            seen[v] = col
-            sel.append(F.col(col).alias(v))
-            if col == "obj":
-                sel += [
-                    F.col("obj_datatype").alias(f"{v}__dt"),
-                    F.col("obj_lang").alias(f"{v}__lang"),
-                    F.col("is_literal").alias(f"{v}__islit"),
-                ]
-            # subjects/predicates are never literals: emit NO companion
-            # columns (consumers default missing ones to NULL/false;
-            # joins stay lexical there — term equality ≡ lexical for
-            # URIs — keeping join keys free of dead constant columns)
+        v = _var_name(term)
+        if v in seen:
+            df = df.filter(F.col(col) == F.col(seen[v]))
             continue
-        f = f.filter(F.col(col) == F.lit(str(term)))
-        if col == "obj" and isinstance(term, Lit):
-            f = f.filter(F.col("is_literal"))
-            if term.lang is not None:
-                f = f.filter(
-                    F.lower(F.coalesce(F.col("obj_lang"), F.lit("")))
-                    == term.lang.lower()
-                )
-            if term.datatype is not None:
-                f = f.filter(
-                    F.nullif(
-                        F.col("obj_datatype"), F.lit(_XSD_STRING)
-                    ).eqNullSafe(F.lit(_norm_dt(term.datatype)))
-                )
-    return f.select(*sel) if sel else f.limit(1).select(F.lit(1).alias("_m"))
+        seen[v] = col
+        sel.append(F.col(col).alias(v))
+        if col == "obj":
+            sel += [
+                F.col("obj_datatype").alias(f"{v}__dt"),
+                F.col("obj_lang").alias(f"{v}__lang"),
+                F.col("is_literal").alias(f"{v}__islit"),
+            ]
+    return df.select(*sel) if sel else df.limit(1).select(F.lit(1).alias("_m"))
 
 
 def _closure_of(base: DataFrame, s, o, mod: str) -> DataFrame:
@@ -217,113 +200,159 @@ def _closure_of(base: DataFrame, s, o, mod: str) -> DataFrame:
     return transitive_closure(base)
 
 
-def _triple_frame_closure(tdf: DataFrame, s, pth: "PathPlus", o) -> DataFrame:
-    """`pred+`/`pred*`/`pred?` over a materialized triple frame — same
-    semantics as VirtualGraph._closure_frame, but the edge set and the
-    zero-length node universe come from the frame itself."""
-    if isinstance(pth.pred, PathGroup):
-        base = bgp_over_triples(tdf, pth.pred.patterns).select(
-            F.col("__cs").alias("src"), F.col("__co").alias("dst")
-        )
-    elif isinstance(pth.pred, NegatedSet):
-        # `!p+` over the frame: the NPS evaluation (NOT-IN pred filter,
-        # direction handling) provides the closure's base edge set
-        base = bgp_over_triples(tdf, [("?__cs", pth.pred, "?__co")]).select(
-            F.col("__cs").alias("src"), F.col("__co").alias("dst")
-        )
-    else:
-        base = tdf.filter(F.col("pred") == F.lit(str(pth.pred))).select(
-            F.col("subj").alias("src"), F.col("obj").alias("dst")
-        )
-    mod = getattr(pth, "mod", "+")
-    df = _closure_of(base, s, o, mod)
-    if mod in ("*", "?"):
+def _path_frame(source, s, pth: PathPlus, o) -> DataFrame:
+    """`pred+`/`pred*`/`pred?` pattern → the reachability frame with the
+    s/o terms applied.  The base edges are one BGP over the same source
+    (a PathGroup's patterns, else `?__cs pred ?__co`, so alternation and
+    negated sets come for free).  The zero-length identity of `*`/`?`
+    is the bound term alone, or with both ends variable every
+    non-literal node of the source's triple frame (ARQ semantics — one
+    dump-shaped scan, distinct on node).  Literal objects appear only as
+    terminal nodes; their companions are not carried through."""
+    base = _evaluate_bgp(source, pth.base()).select(
+        F.col("__cs").alias("src"), F.col("__co").alias("dst")
+    )
+    df = _closure_of(base, s, o, pth.mod)
+    if pth.mod in ("*", "?"):
         bound = next((t for t in (s, o) if t is not None and not _is_var(t)), None)
         if bound is not None:
-            df = df.unionByName(
-                tdf.sparkSession.createDataFrame(
-                    [(str(bound), str(bound))], "src string, dst string"
-                )
-            ).distinct()
+            ident = source.spark.createDataFrame(
+                [(str(bound), str(bound))], "src string, dst string"
+            )
         else:
+            t = source.triples()
             nodes = (
-                tdf.select(F.col("subj").alias("n"))
-                .unionByName(
-                    tdf.filter(~F.col("is_literal")).select(F.col("obj").alias("n"))
-                )
+                t.select(F.col("subj").alias("n"))
+                .unionByName(t.filter(~F.col("is_literal")).select(F.col("obj").alias("n")))
                 .distinct()
             )
-            df = df.unionByName(
-                nodes.select(F.col("n").alias("src"), F.col("n").alias("dst"))
-            ).distinct()
-    sel, seen = [], {}
+            ident = nodes.select(F.col("n").alias("src"), F.col("n").alias("dst"))
+        df = df.unionByName(ident).distinct()
     for term, col in ((s, "src"), (o, "dst")):
-        if term is not None and _is_var(term):
-            v = _var_name(term)
-            if v in seen:
-                df = df.filter(F.col(col) == F.col(seen[v]))
-            else:
-                seen[v] = col
-                sel.append(F.col(col).alias(v))
-                # closure endpoints carry no literal metadata — emit NO
-                # companion columns (consumers default missing ones to
-                # NULL/false; joins fall back to lexical, correct for
-                # the URI-only closure domain)
-        elif term is not None:
+        if term is not None and not _is_var(term):
             df = df.filter(F.col(col) == F.lit(str(term)))
-    return df.select(*sel) if sel else df.limit(1).select(F.lit(1).alias("_m"))
+    return _bindings(df, ((s, "src"), (o, "dst")))
+
+
+def _evaluate_bgp(source, patterns, outer_specs=None) -> DataFrame:
+    """The one BGP evaluator.  ``source`` supplies the frames of the
+    plain (s, p, o) patterns (``pattern_frames``: {index: frame}, or
+    None when some pattern can match nothing) and its triple frame
+    (``triples()``, the zero-length path's node set); everything else is
+    decided here, for the mapping and for triple frames alike:
+
+      * a one-direction negated set `!(p1|p2)` / `!(^q1|^q2)` becomes an
+        internal predicate variable (inverse members swap subject and
+        object) whose column is filtered NOT IN the set after the join
+        and dropped — the list is tiny, so Catalyst keeps the filter at
+        the pattern's frame; a mixed `!(p|^q)` is the union of its two
+        one-direction BGPs (each matches a different edge, so union-all
+        is the solution multiset)
+      * a PathPlus pattern is one path frame (_path_frame)
+      * the frames join in bgp_join_order, at RDF-term level."""
+    neg: list[tuple[str, tuple]] = []
+    pats: list[tuple] = []
+    for s, p, o in patterns:
+        if isinstance(p, NegatedSet) and not (p.fwd and p.inv):
+            name = f"__np{len(neg)}"
+            if p.inv:
+                s, o = o, s
+            pats.append((s, f"?{name}", o))
+            neg.append((name, p.inv or p.fwd))
+        else:
+            pats.append((s, p, o))
+    frames: dict[int, DataFrame] = {}
+    for idx, (s, p, o) in enumerate(pats):
+        if isinstance(p, NegatedSet):
+            frames[idx] = _evaluate_bgp(source, [(s, NegatedSet(fwd=p.fwd), o)]).unionByName(
+                _evaluate_bgp(source, [(s, NegatedSet(inv=p.inv), o)]),
+                allowMissingColumns=True,
+            )
+        elif isinstance(p, PathPlus):
+            frames[idx] = _path_frame(source, s, p, o)
+    derived = set(frames)
+    plain = source.pattern_frames(
+        {i: pat for i, pat in enumerate(pats) if i not in derived}, outer_specs
+    )
+    if plain is None:
+        return source.spark.createDataFrame([], "dummy string").limit(0)
+    frames.update(plain)
+    # path and mixed-set frames bind what their columns say; a plain
+    # pattern binds its variables
+    pat_vars = [
+        {c for c in frames[i].columns if not _is_companion(c)}
+        if i in derived
+        else {_var_name(t) for t in pat if t is not None and _is_var(t)}
+        for i, pat in enumerate(pats)
+    ]
+    # selectivity-ordered join: most-bound pattern first, then greedily
+    # extend with connected patterns (shared variable with the
+    # accumulated frame) — see bgp_join_order.  Inner joins commute, so
+    # the BINDINGS are identical; the ORDER decides the size of
+    # intermediates, which AQE can only partially repair after a bad
+    # start (URIMakerRule ordering in the reference).  Joins compare at
+    # RDF-TERM level (rdf_term_join): lexical value PLUS canonical
+    # literal metadata where both sides carry the companion set — i.e.
+    # for object-position/object-position var pairs, which is where
+    # differing metadata can exist.  A var bound in subject position on
+    # one side has no companions and joins lexically (URIs carry no
+    # metadata; the residual URI-vs-same-lexical-literal case remains
+    # lexical).
+    order = bgp_join_order(pats, pat_vars, derived)
+    out = reduce(lambda a, b: rdf_term_join(a, b, "inner"), [frames[i] for i in order])
+    for name, excl in neg:
+        out = out.filter(~F.col(name).isin(*excl)).drop(
+            name, *[name + sfx for sfx in _COMPANION_SUFFIXES]
+        )
+    return out
+
+
+class _TripleFrame:
+    """BGP source over a materialized TRIPLE_SCHEMA frame: one filter
+    per plain pattern — constants, a Lit object's lang and datatype,
+    `isin` for a path alternation (p1|p2)."""
+
+    def __init__(self, tdf: DataFrame):
+        self.tdf = tdf
+        self.spark = tdf.sparkSession
+
+    def triples(self) -> DataFrame:
+        return self.tdf
+
+    def pattern_frames(self, patterns: dict, outer_specs=None) -> dict:
+        return {idx: self._frame(s, p, o) for idx, (s, p, o) in patterns.items()}
+
+    def _frame(self, s, p, o) -> DataFrame:
+        f = self.tdf
+        for term, col in ((s, "subj"), (p, "pred"), (o, "obj")):
+            if term is None or _is_var(term):
+                continue
+            if isinstance(term, tuple):
+                f = f.filter(F.col(col).isin(*[str(x) for x in term]))
+                continue
+            f = f.filter(F.col(col) == F.lit(str(term)))
+            if col == "obj" and isinstance(term, Lit):
+                f = f.filter(F.col("is_literal"))
+                if term.lang is not None:
+                    f = f.filter(
+                        F.lower(F.coalesce(F.col("obj_lang"), F.lit("")))
+                        == term.lang.lower()
+                    )
+                if term.datatype is not None:
+                    f = f.filter(
+                        F.nullif(F.col("obj_datatype"), F.lit(_XSD_STRING)).eqNullSafe(
+                            F.lit(_norm_dt(term.datatype))
+                        )
+                    )
+        return _bindings(f, ((s, "subj"), (p, "pred"), (o, "obj")))
 
 
 def bgp_over_triples(tdf: DataFrame, patterns) -> DataFrame:
-    """Generic BGP evaluation over a materialized triple frame
-    (TRIPLE_SCHEMA) — filter per pattern, rename to variable columns
-    (with __dt/__lang/__islit companions for objects), join on shared
-    variables.  Used for named graphs whose triples are not
-    mapping-backed (the vocabulary graph); the data graph keeps the
-    pushdown-compiled VirtualGraph.bgp path.  Property paths (p+/p*/p?,
-    alternation, path groups) and negated sets evaluate over the frame
-    itself (closure via operators/closure.py)."""
-    frames: list[DataFrame] = []
-    for s, p, o in patterns:
-        if isinstance(p, PathPlus):
-            frames.append(_triple_frame_closure(tdf, s, p, o))
-            continue
-        if isinstance(p, NegatedSet):
-            parts = []
-            if p.fwd or not p.inv:
-                parts.append(
-                    _triple_frame_single(
-                        tdf, s, None, o, pred_filter=~F.col("pred").isin(*p.fwd)
-                        if p.fwd
-                        else F.lit(True),
-                    )
-                )
-            if p.inv:
-                parts.append(
-                    _triple_frame_single(
-                        tdf, s, None, o, swap=True,
-                        pred_filter=~F.col("pred").isin(*p.inv),
-                    )
-                )
-            out_p = parts[0]
-            for extra in parts[1:]:
-                out_p = out_p.unionByName(extra, allowMissingColumns=True)
-            frames.append(out_p)
-            continue
-        if isinstance(p, tuple):
-            # path alternation (p1|p2): any of the listed predicates
-            frames.append(
-                _triple_frame_single(
-                    tdf, s, None, o,
-                    pred_filter=F.col("pred").isin(*[str(x) for x in p]),
-                )
-            )
-            continue
-        frames.append(_triple_frame_single(tdf, s, p, o))
-    out = frames[0]
-    for nxt in frames[1:]:
-        out = rdf_term_join(out, nxt, "inner")
-    return out
+    """BGP over a materialized triple frame (TRIPLE_SCHEMA) — named
+    graphs whose triples are not mapping-backed (the vocabulary graph)
+    and FROM merges; the data graph keeps the pushdown-compiled
+    VirtualGraph.bgp.  Both run the one evaluator (_evaluate_bgp)."""
+    return _evaluate_bgp(_TripleFrame(tdf), patterns)
 
 
 def _is_companion(col: str) -> bool:
@@ -1119,12 +1148,7 @@ class VirtualGraph:
                 if getattr(p, "mod", "+") != "+":
                     unknown |= {_var_name(t) for t in (s, o) if t is not None and _is_var(t)}
                     continue
-                base = (
-                    p.pred.patterns
-                    if isinstance(p.pred, PathGroup)
-                    else [("?__cs", p.pred, "?__co")]
-                )
-                sub = self.var_spec_domains(base)
+                sub = self.var_spec_domains(p.base())
                 for term, end in ((s, "__cs"), (o, "__co")):
                     if term is not None and _is_var(term):
                         v = _var_name(term)
@@ -1183,133 +1207,13 @@ class VirtualGraph:
                     meta[idx] = keep
                     changed = True
 
-    def _pattern_frame(self, cb, constraints, post, s, p, o) -> DataFrame:
-        """One bridge's contribution to a pattern: variable columns +
-        typed-literal companions projected from the triple frame."""
-        df = self.compiler.bridge_df(cb, constraints, post)
-        sel, seen = [], {}
-        for term, col in ((s, "subj"), (p, "pred"), (o, "obj")):
-            if term is not None and _is_var(term):
-                v = _var_name(term)
-                if v in seen:  # repeated var within one pattern
-                    df = df.filter(F.col(col) == F.col(seen[v]))
-                else:
-                    seen[v] = col
-                    sel.append(F.col(col).alias(v))
-                    # typed-literal companions: FILTER builtins
-                    # (lang/datatype) evaluate against these.  Only
-                    # OBJECT positions can be literals — subject/pred
-                    # vars emit no companions (consumers default the
-                    # missing columns to NULL/false, and join keys stay
-                    # free of dead constant metadata)
-                    if col == "obj":
-                        sel += [
-                            F.col("obj_datatype").alias(f"{v}__dt"),
-                            F.col("obj_lang").alias(f"{v}__lang"),
-                            F.col("is_literal").alias(f"{v}__islit"),
-                        ]
-        return df.select(*sel) if sel else df.limit(1).select(F.lit(1).alias("_m"))
-
-    def _closure_frame(self, s, pth: "PathPlus", o) -> DataFrame:
-        """`pred+`/`pred*`/`pred?` pattern → the predicate's reachability
-        frame with the s/o terms applied.  Literal objects appear only as
-        terminal nodes (they never match a subject); their datatype/lang
-        companions are not carried through the closure."""
-        if isinstance(pth.pred, PathGroup):
-            base = self.bgp(pth.pred.patterns).select(
-                F.col("__cs").alias("src"), F.col("__co").alias("dst")
-            )
-        else:
-            base = self.bgp([("?__cs", pth.pred, "?__co")]).select(
-                F.col("__cs").alias("src"), F.col("__co").alias("dst")
-            )
-        mod = getattr(pth, "mod", "+")
-        df = _closure_of(base, s, o, mod)
-        if mod in ("*", "?"):
-            # zero-length path: a bound end prunes the identity to that
-            # single term; var-var needs the graph's full node set (ARQ
-            # semantics) — one dump-shaped scan, distinct on node
-            bound = next(
-                (t for t in (s, o) if t is not None and not _is_var(t)), None
-            )
-            if bound is not None:
-                ident = self.spark.createDataFrame(
-                    [(str(bound), str(bound))], "src string, dst string"
-                )
-            else:
-                t = self.triples(fuse=True)
-                nodes = (
-                    t.select(F.col("subj").alias("n"))
-                    .unionByName(
-                        t.filter(~F.col("is_literal")).select(
-                            F.col("obj").alias("n")
-                        )
-                    )
-                    .distinct()
-                )
-                ident = nodes.select(
-                    F.col("n").alias("src"), F.col("n").alias("dst")
-                )
-            df = df.unionByName(ident).distinct()
-        sel, seen = [], {}
-        for term, col in ((s, "src"), (o, "dst")):
-            if term is not None and _is_var(term):
-                v = _var_name(term)
-                if v in seen:
-                    df = df.filter(F.col(col) == F.col(seen[v]))
-                else:
-                    seen[v] = col
-                    sel.append(F.col(col).alias(v))
-                    # closure endpoints: no literal metadata carried
-                    # through the closure — no companion columns
-            elif term is not None:
-                df = df.filter(F.col(col) == F.lit(str(term)))
-        return df.select(*sel) if sel else df.limit(1).select(F.lit(1).alias("_m"))
-
-    def bgp(
-        self,
-        patterns: Sequence[tuple],
-        outer_specs: Optional[dict] = None,
-    ) -> DataFrame:
-        """Basic graph pattern → joined DataFrame of variable bindings.
-
-        Each pattern is (s, p, o); terms are constants or '?var'/Var.
-        Shared variables join (reference: NodeRelationJoiner); result has
-        one string column per variable (node lexical value).  FILTER and
-        OPTIONAL are the SPARQL evaluator's (sparql._eval_where)."""
-        # negated property sets → internal predicate variable + NOT IN
-        # post-filter (inverse-only sets swap subject/object); the
-        # internal column is dropped before returning, so the rewrite
-        # is invisible to callers and composes inside OPTIONAL/EXISTS
-        neg_filters: list[tuple[str, tuple]] = []
-        rewritten: list[tuple] = []
-        for s, p, o in patterns:
-            if isinstance(p, NegatedSet) and not (p.fwd and p.inv):
-                name = f"__np{len(neg_filters)}"
-                if p.inv:
-                    s, o = o, s
-                rewritten.append((s, f"?{name}", o))
-                neg_filters.append((name, p.inv or p.fwd))
-            else:
-                rewritten.append((s, p, o))
-        patterns = rewritten
-        closure_frames: dict[int, DataFrame] = {}
-        meta: dict[int, list] = {}
-        for idx, (s, p, o) in enumerate(patterns):
-            if isinstance(p, NegatedSet):
-                # mixed forward/inverse set !(p|^q): a forward edge with
-                # pred ∉ fwd OR an inverse edge with pred ∉ inv — the
-                # union of the two single-direction evaluations (each
-                # matching a DIFFERENT edge, so union-all is the correct
-                # solution multiset)
-                fa = self.bgp([(s, NegatedSet(fwd=p.fwd), o)])
-                fb = self.bgp([(s, NegatedSet(inv=p.inv), o)])
-                closure_frames[idx] = fa.unionByName(fb, allowMissingColumns=True)
-                continue
-            if isinstance(p, PathPlus):
-                closure_frames[idx] = self._closure_frame(s, p, o)
-                continue
-            meta[idx] = self._candidates(s, p, o)
+    def pattern_frames(self, patterns: dict, outer_specs: Optional[dict] = None):
+        """The mapping's frames for the plain patterns of one BGP
+        ({index: (s, p, o)}): each pattern's candidate bridges
+        (_candidates), pruned against the outer group and each other,
+        each bridge's triple frame projected onto the pattern's
+        variables, unioned.  None when a pattern keeps no candidate."""
+        meta = {idx: self._candidates(s, p, o) for idx, (s, p, o) in patterns.items()}
         if outer_specs:
             # cross-group URIMakerRule (var_spec_domains): a candidate
             # whose spec for a shared var can never mint a node the
@@ -1331,64 +1235,36 @@ class VirtualGraph:
                     )
                 ]
         self._prune_join_incompatible(meta)
-
-        frames: list[DataFrame] = []
-        for idx, (s, p, o) in enumerate(patterns):
-            if idx in closure_frames:
-                frames.append(closure_frames[idx])
-                continue
-            cands = meta[idx]
-            if not cands:
-                return self.spark.createDataFrame([], "dummy string").limit(0)
-            frames.append(
-                reduce(
-                    lambda a, b: a.unionByName(b),
-                    [
-                        self._pattern_frame(
-                            c["cb"], c["constraints"], c["post"], s, c["popt"], o
-                        )
-                        for c in cands
-                    ],
-                )
+        if not all(meta.values()):
+            return None
+        return {
+            idx: reduce(
+                DataFrame.unionByName,
+                [
+                    _bindings(
+                        self.compiler.bridge_df(c["cb"], c["constraints"], c["post"]),
+                        ((s, "subj"), (c["popt"], "pred"), (o, "obj")),
+                    )
+                    for c in meta[idx]
+                ],
             )
+            for idx, (s, _, o) in patterns.items()
+        }
 
-        # selectivity-ordered join: most-bound pattern first, then
-        # greedily extend with connected patterns (shared variable with
-        # the accumulated frame) — see bgp_join_order.  Inner joins
-        # commute, so the BINDINGS are identical; the ORDER decides the
-        # size of intermediates, which AQE can only partially repair
-        # after a bad start (URIMakerRule ordering in the reference).
-        # Joins compare at RDF-TERM level (rdf_term_join): lexical value
-        # PLUS canonical literal metadata where both sides carry the
-        # companion set — i.e. for OBJECT-position/object-position var
-        # pairs, which is where differing metadata can exist; there the
-        # r4 order-dependence is closed.  A var bound in subject
-        # position on one side has no companions and joins lexically
-        # (URIs carry no metadata; the residual URI-vs-same-lexical-
-        # literal case remains lexical, as before r5).
-        pat_vars = []
-        for idx in range(len(patterns)):
-            if idx in closure_frames:
-                pat_vars.append(
-                    {c for c in frames[idx].columns if not _is_companion(c)}
-                )
-            else:
-                vs = set()
-                for t in patterns[idx]:
-                    if t is not None and _is_var(t):
-                        vs.add(_var_name(t))
-                pat_vars.append(vs)
-        order = bgp_join_order(patterns, pat_vars, set(closure_frames))
-        frames = [frames[i] for i in order]
+    def bgp(
+        self,
+        patterns: Sequence[tuple],
+        outer_specs: Optional[dict] = None,
+    ) -> DataFrame:
+        """Basic graph pattern → joined DataFrame of variable bindings.
 
-        out = frames[0]
-        for nxt in frames[1:]:
-            out = rdf_term_join(out, nxt, "inner")
-        for name, excl in neg_filters:
-            out = out.filter(~F.col(name).isin(*excl)).drop(
-                name, *[name + sfx for sfx in _COMPANION_SUFFIXES]
-            )
-        return out
+        Each pattern is (s, p, o); terms are constants or '?var'/Var.
+        Shared variables join (reference: NodeRelationJoiner); result has
+        one string column per variable (node lexical value).  The mapping
+        supplies the plain patterns' frames (pattern_frames); paths,
+        negated sets and the join order are _evaluate_bgp's.  FILTER and
+        OPTIONAL are the SPARQL evaluator's (sparql._eval_where)."""
+        return _evaluate_bgp(self, patterns, outer_specs)
 
     # ------------------------------------------------------------------
     def triples(self, fuse: bool = True, distinct="auto") -> DataFrame:

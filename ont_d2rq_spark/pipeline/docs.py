@@ -134,6 +134,19 @@ def synthesize_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ① span integrity — the per-row invariant from BASELINE.json input_hint
 # ---------------------------------------------------------------------------
 
+def _offsets_strictly_increasing():
+    """True when each span's offset is greater than the one before it."""
+    offsets = F.transform(F.col("spans"), lambda s: s["offset"])
+    return F.forall(
+        F.zip_with(
+            offsets,
+            F.slice(F.concat(offsets, F.array(F.lit(None).cast("int"))), 2, 1000000),
+            lambda a, b: b.isNull() | (b > a),
+        ),
+        lambda x: x,
+    )
+
+
 def span_integrity(docs: DataFrame) -> DataFrame:
     """→ (doc_id, n_spans, offsets_strictly_increasing, sequence_equal).
 
@@ -146,19 +159,10 @@ def span_integrity(docs: DataFrame) -> DataFrame:
         .when(a["offset"] > b["offset"], 1)
         .otherwise(0),
     )
-    offsets = F.transform(F.col("spans"), lambda s: s["offset"])
-    strictly_inc = F.forall(
-        F.zip_with(
-            offsets,
-            F.slice(F.concat(offsets, F.array(F.lit(None).cast("int"))), 2, 1000000),
-            lambda a, b: b.isNull() | (b > a),
-        ),
-        lambda x: x,
-    )
     return docs.select(
         "doc_id",
         F.size("spans").alias("n_spans"),
-        strictly_inc.alias("offsets_strictly_increasing"),
+        _offsets_strictly_increasing().alias("offsets_strictly_increasing"),
         (F.col("spans") == sorted_spans).alias("sequence_equal"),
     )
 
@@ -171,16 +175,7 @@ def assert_span_integrity(docs: DataFrame) -> None:
     # the offsets check drops the interpreted array_sort-with-comparator
     # pass over every span (r7; span_integrity itself still reports
     # both columns for callers that want them).
-    offsets = F.transform(F.col("spans"), lambda s: s["offset"])
-    strictly_inc = F.forall(
-        F.zip_with(
-            offsets,
-            F.slice(F.concat(offsets, F.array(F.lit(None).cast("int"))), 2, 1000000),
-            lambda a, b: b.isNull() | (b > a),
-        ),
-        lambda x: x,
-    )
-    n = docs.filter(~strictly_inc).count()
+    n = docs.filter(~_offsets_strictly_increasing()).count()
     if n:
         raise AssertionError(f"span-sequence invariant violated for {n} docs")
 

@@ -167,6 +167,9 @@ class Query:
     # graph, FROM NAMED <g> restricts what GRAPH can range over
     from_graphs: list[str] = field(default_factory=list)
     from_named: list[str] = field(default_factory=list)
+    # WHERE-clause variables in order of first appearance: the SELECT *
+    # column order (ARQ's), whatever order the joins ran in
+    var_order: list[str] = field(default_factory=list)
 
 
 class SparqlError(ValueError):
@@ -326,7 +329,7 @@ class _P:
         self._dataset(q)
         self.kw("WHERE")
         self.expect("{")
-        self._group(q.patterns, q)
+        self._where(q)
         self._modifiers(q)
         # trailing VALUES block (SPARQL ValuesClause: after the solution
         # modifiers, applies to the whole query — joined AFTER the WHERE
@@ -334,6 +337,15 @@ class _P:
         if self.kw("VALUES"):
             q.trailing_values.append(self._values_clause())
         return q
+
+    def _where(self, q: Query):
+        """A SELECT's WHERE group ('{' already consumed), recording its
+        variables in order of first appearance."""
+        start = self.i
+        self._group(q.patterns, q)
+        q.var_order = list(
+            dict.fromkeys(t.group(0)[1:] for t in self.toks[start:self.i] if t.lastgroup == "var")
+        )
 
     def _select_clause(self, q: Query):
         """SELECT [DISTINCT] projection list (after SELECT consumed)."""
@@ -486,7 +498,7 @@ class _P:
                     self._select_clause(sub)
                     self.kw("WHERE")
                     self.expect("{")
-                    self._group(sub.patterns, sub)
+                    self._where(sub)
                     self._modifiers(sub)
                     self.expect("}")
                     q.subqueries.append(sub)
@@ -1980,13 +1992,17 @@ def _execute_query(graph, q: Query, bgp_fn=None) -> DataFrame:
         df = df.select(*q.variables)
     else:  # SELECT * — expose variables, not companion/marker columns
         # (nor __-prefixed internals: path-sequence join vars are not
-        # selectable per the SPARQL path rewrite)
+        # selectable per the SPARQL path rewrite), in the query's order
+        rank = {v: i for i, v in enumerate(q.var_order)}
         df = df.select(
-            *[
-                c
-                for c in df.columns
-                if not _is_companion(c) and c != "_m" and not c.startswith("__")
-            ]
+            *sorted(
+                (
+                    c
+                    for c in df.columns
+                    if not _is_companion(c) and c != "_m" and not c.startswith("__")
+                ),
+                key=lambda c: rank.get(c, len(rank)),
+            )
         )
     if q.distinct:
         df = df.distinct()

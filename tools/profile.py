@@ -14,7 +14,8 @@ Usage: python tools/profile.py <leaf|dump|dump_distinct|all> [--plans]
   all    every leaf bench.py times
   data   $SPARK_GRAFT_SF_DIR (default: the sf0.1 test tables, as bench.py)
 Writes BENCH/layers.json, stamped with commit, nproc and date;
---plans also writes each leaf's .explain("formatted") to plans/<leaf>.txt.
+--plans also writes the formatted plan each leaf ran (AQE's final plan)
+to plans/<leaf>.txt.
 """
 
 from __future__ import annotations
@@ -105,8 +106,11 @@ def profile(spark, leaves: list[str], sf_dir: str, plans_dir: Path | None = None
                          "jvm_gc_s": round(gc1 - gc0, 3),
                          "self_s": {k: round(v, 3) for k, v in self_s}}
             if plans_dir is not None:
-                mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-                plan = df._jdf.queryExecution().explainString(mode)
+                # the noop write is the last SQL execution; once it ends,
+                # AQE has replaced its plan description with the final plan
+                sc._jsc.sc().listenerBus().waitUntilEmpty()
+                execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+                plan = execs.apply(execs.size() - 1).physicalPlanDescription()
                 (plans_dir / f"{leaf}.txt").write_text(plan)
     finally:
         tracer.uninstall()
