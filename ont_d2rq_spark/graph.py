@@ -271,11 +271,13 @@ def _evaluate_bgp(source, patterns, outer_specs=None) -> DataFrame:
         elif isinstance(p, PathPlus):
             frames[idx] = _path_frame(source, s, p, o)
     derived = set(frames)
-    plain = source.pattern_frames(
-        {i: pat for i, pat in enumerate(pats) if i not in derived}, outer_specs
-    )
+    plain_pats = {i: pat for i, pat in enumerate(pats) if i not in derived}
+    plain = source.pattern_frames(plain_pats, outer_specs)
     if plain is None:
-        return source.spark.createDataFrame([], "dummy string").limit(0)
+        # no match anywhere: the same bindings over no triples, so the
+        # join below yields an empty frame of the BGP's own columns
+        empty = source.spark.createDataFrame([], TRIPLE_SCHEMA)
+        plain = _TripleFrame(empty).pattern_frames(plain_pats)
     frames.update(plain)
     # path and mixed-set frames bind what their columns say; a plain
     # pattern binds its variables

@@ -11,10 +11,14 @@ Beyond", SoCC'14 — public literature; no Spark built-in exists):
   small-star: re-orient edges toward each node's minimum neighbor.
 
 Both rounds are groupBy-aggregate + re-emission — pure shuffles on the
-node id, no driver-side state.  Convergence in O(log^2 n) rounds (in
-practice a handful); each iteration is localCheckpoint()ed to truncate
-lineage (hard part #3: without truncation the plan doubles per round
-and Catalyst analysis time explodes at scale).
+node id, no driver-side state.  The loop stops at the algorithm's end
+state, every component a star on its minimum node, which one aggregate
+over the current iterate tests (_stars); the test runs before every
+round, so an input that is already stars (the pipeline's alias graph)
+runs no round at all.  Convergence in O(log^2 n) rounds (in practice a
+handful); each iteration is localCheckpoint()ed to truncate lineage
+(hard part #3: without truncation the plan doubles per round and
+Catalyst analysis time explodes at scale).
 
 Skew: power-law degree (hub entities) is handled by AQE skew-join plus
 the fact that both stars only carry (node, min_neighbor) pairs —
@@ -26,6 +30,7 @@ before the shuffle.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 
@@ -77,6 +82,24 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
+def _stars(e: DataFrame) -> bool:
+    """True when the canonical edge set is a set of stars, each on its
+    minimum node: no u has two edges and no v is also a u.  Then every
+    edge (u, v) already names u's component v.  One aggregate over the
+    node ends of every edge."""
+    ends = e.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("u").alias("n"), F.lit(1).alias("out"), F.lit(0).alias("in")),
+                F.struct(F.col("v").alias("n"), F.lit(0).alias("out"), F.lit(1).alias("in")),
+            )
+        ).alias("x")
+    ).select("x.*")
+    out, inn = F.sum("out"), F.sum("in")
+    bad = (out > 1) | ((out > 0) & (inn > 0))
+    return ends.groupBy("n").agg(bad.alias("bad")).filter("bad").isEmpty()
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -87,50 +110,29 @@ def connected_components(
 
     Nodes are whatever orderable type the edge columns carry (string
     URIs or longs).  Isolated nodes don't appear (no edges → themselves
-    canonical); callers union them back if needed.
+    canonical); callers union them back if needed.  Raises RuntimeError
+    when the edges are not stars after ``max_iterations`` rounds.
 
-    Barrier budget: ONE Spark job per iteration — the localCheckpoint is
-    LAZY and the convergence fingerprint's aggregate is the action that
-    materializes its blocks (an eager checkpoint plus a separate
-    fingerprint job would double the serial barrier count, which is
-    what dominates wall-clock for small/medium graphs).  Every round is
-    fingerprinted: the pipeline's star-shaped alias graphs converge
-    after one round, and skipping checks made the loop run already-
-    converged rounds before it could notice (measured 2.25 s vs
-    2.9–4.7 s at sf0.1).
+    Barrier budget: the star test is the only action, one per round plus
+    one — each localCheckpoint is LAZY and the test's aggregate is what
+    materializes its blocks (an eager checkpoint plus a separate test
+    would double the serial barrier count, which is what dominates
+    wall-clock for small/medium graphs).  A star input, such as the
+    pipeline's alias→entity graph, costs the one test and no round.
     """
-    e = _canon_edges(edges, src, dst)
-
-    def _sig(df):
-        # set fingerprint: (count, sum of row hashes).  Both iterates are
-        # DISTINCT canonical edge sets, so equal fingerprints ⇒ equal
-        # sets (collision odds ~2^-64).  ONE aggregate job per iteration
-        # instead of two exceptAll anti-joins — at power-law edge scale
-        # the convergence check would otherwise cost as much as the step.
-        r = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal sum: long sum of hashes overflows under ANSI mode
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-        ).first()
-        return (r["n"], r["h"])
-
-    e = e.localCheckpoint(eager=False)
-    sig = _sig(e)  # materializes e's blocks
-    for _ in range(max_iterations):
-        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
-        sig2 = _sig(e)  # one action: materializes + fingerprints
-        if sig2 == sig:
+    e = _canon_edges(edges, src, dst).localCheckpoint(eager=False)
+    for i in range(max_iterations + 1):
+        if _stars(e):  # materializes e's blocks
             break
-        sig = sig2
-    # closure: every node (including former hubs) → its min root
+        if i == max_iterations:
+            raise RuntimeError(
+                f"connected components: not stars after {max_iterations} rounds"
+            )
+        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
+    # stars: every leaf → its center, every center → itself
     comp = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
-    roots = (
-        e.select(F.col("v").alias("node"))
-        .distinct()
-        .join(comp, "node", "left_anti")
-        .select("node", F.col("node").alias("component"))
-    )
-    return comp.unionByName(roots)
+    roots = e.select(F.col("v").alias("node")).distinct()
+    return comp.unionByName(roots.select("node", F.col("node").alias("component")))
 
 
 def canonicalize_sameas(
@@ -146,25 +148,21 @@ def canonicalize_sameas(
 
     ``alias_prefix``: URIs starting with it (mention-alias nodes) are
     demoted when electing the component representative, so the canonical
-    id is a real entity URI whenever one is in the component."""
+    id is a real entity URI whenever one is in the component.  The
+    election is a window over the component, so a component's rows meet
+    in one task; the pipeline's alias graph bounds that to ≤ 2 nodes
+    (one surface form, one entity) per component."""
     cc = connected_components(triples_or_edges, src, dst, max_iterations)
     if alias_prefix is None:
         return cc.select(
             F.col("node").alias("uri"), F.col("component").alias("canonical_uri")
         )
     rank = F.when(F.col("node").startswith(alias_prefix), F.lit(1)).otherwise(F.lit(0))
-    # representative = min (rank, uri) per component — one extra min-agg
-    rep = (
-        cc.withColumn("key", F.concat(rank.cast("string"), F.lit("|"), F.col("node")))
-        .groupBy("component")
-        .agg(F.min("key").alias("rep_key"))
-        .select(
-            "component", F.substring_index("rep_key", "|", -1).alias("canonical_uri")
-        )
+    # representative = min (rank, uri) over the component: one shuffle
+    rep = F.min(F.struct(rank.alias("r"), F.col("node").alias("n"))).over(
+        Window.partitionBy("component")
     )
-    return cc.join(rep, "component").select(
-        F.col("node").alias("uri"), "canonical_uri"
-    )
+    return cc.select(F.col("node").alias("uri"), rep["n"].alias("canonical_uri"))
 
 
 def rewrite_triples_canonical(triples: DataFrame, mapping: DataFrame) -> DataFrame:

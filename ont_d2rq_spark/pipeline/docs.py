@@ -7,8 +7,9 @@ kind, text, media_ref, offset>>)``.
 Stages (SURVEY.md §7.4):
   ① span integrity     — per-row span-sequence invariant (kind, text,
                           media_ref, order) + strictly-increasing offsets
-  ② mention detection  — vectorized pandas UDF (Arrow batches) over span
-                          text: regex + closed dictionary; NO per-row Python
+  ② mention detection  — JVM regexes (regexp_extract_all) over span
+                          text: customer surface forms + closed topic
+                          dictionary; no Python
   ③ entity linking     — broadcast join against the entity dictionary
                           (the d2rq TranslationTable idea at KG scale) with
                           a JVM-side similarity score (levenshtein)
@@ -30,11 +31,8 @@ from __future__ import annotations
 
 from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from ont_d2rq_spark.compiler.relation import distinct_triples
 
@@ -181,33 +179,17 @@ def assert_span_integrity(docs: DataFrame) -> None:
 
 
 # ---------------------------------------------------------------------------
-# ② mention detection — vectorized pandas UDF (X2 surface)
+# ② mention detection — JVM regexes (X2 surface)
 # ---------------------------------------------------------------------------
 
 _MENTION_RE = r"Customer#\d{9}"
 _TOPIC_RE = r"\b(" + "|".join(TOPIC_TERMS) + r")\b"
 
 
-@pandas_udf(T.ArrayType(T.StringType()))
-def _extract_entity_mentions(texts: pd.Series) -> pd.Series:
-    """Batched regex over Arrow-delivered text batches: customer surface
-    forms plus closed-dictionary topic terms.  One Python invocation
-    per ~10k rows, zero per-row Python."""
-    cust = texts.str.findall(_MENTION_RE)
-    topics = texts.str.findall(_TOPIC_RE)
-    return (cust + topics).where(texts.notna(), other=None)
-
-
-# The function is pure, but the optimizer pushes the explode's implicit
-# size>0 filter below the projection and then evaluates the UDF TWICE
-# (two ArrowEvalPython nodes, once under the pushed filter and once in
-# the projection — guide §4.4).  Marking it non-deterministic forbids
-# the duplication: one ArrowEvalPython, identical results.
-_extract_entity_mentions = _extract_entity_mentions.asNondeterministic()
-
-
 def detect_mentions(docs: DataFrame) -> DataFrame:
-    """→ (doc_id, offset, mention) — one row per mention occurrence."""
+    """→ (doc_id, offset, mention) — one row per mention occurrence:
+    customer surface forms, then topic terms, in text order each.  Java
+    regex semantics: digits are ASCII only."""
     spans = docs.select(
         "doc_id", F.explode("spans").alias("s")
     ).select(
@@ -216,8 +198,13 @@ def detect_mentions(docs: DataFrame) -> DataFrame:
     )
     text_spans = spans.filter((F.col("kind") == "text") & F.col("text").isNotNull())
     return (
-        text_spans.withColumn("mentions", _extract_entity_mentions(F.col("text")))
-        .select("doc_id", "offset", F.explode("mentions").alias("mention"))
+        text_spans.withColumn(
+            "mentions",
+            F.concat(
+                F.regexp_extract_all("text", F.lit(_MENTION_RE), 0),
+                F.regexp_extract_all("text", F.lit(_TOPIC_RE), 1),
+            ),
+        ).select("doc_id", "offset", F.explode("mentions").alias("mention"))
     )
 
 
@@ -358,7 +345,7 @@ def build_kg(
     # localCheckpoint: the blocks belong to the RDD, so the ContextCleaner
     # frees them once the caller drops the result.  docs (integrity count,
     # mentions) fills at that count; raw (sameAs edges, rewrite) at CC's
-    # first fingerprint scan; canon at once, because its two rewrite
+    # first star test; canon at once, because its two rewrite
     # broadcasts build in parallel threads and would race to fill it.
     # `reused` maps each such stage to whether it fills at once.
     reused = {"docs_interleaved": False, "raw_triples": False, "canonical_map": True}

@@ -164,15 +164,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", _driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
-        # straggler mitigation for CLUSTER deployments: one externally
-        # stalled task gets a speculative copy instead of holding the
-        # stage barrier.  NOTE: inert under a local[*] master —
-        # TaskSchedulerImpl starts the speculation thread only when
-        # !isLocal — so local runs carry the setting as deployment
-        # intent, not as an active mitigation.
-        .config("spark.speculation", "true")
-        .config("spark.speculation.quantile", "0.75")
-        .config("spark.speculation.multiplier", "2")
         # Whole-stage codegen for wide fused plans (the one-scan dump
         # unions dozens of mint expressions) emits methods beyond
         # HotSpot's DontCompileHugeMethods bytecode cap; those methods

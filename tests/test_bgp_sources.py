@@ -111,3 +111,22 @@ def test_select_star_lists_variables_in_order_of_first_appearance(graph):
     assert data.columns == ["c", "name", "n"]
     assert merged.columns == ["c", "name", "n"]
     assert Counter(map(tuple, data.collect())) == Counter(map(tuple, merged.collect()))
+
+
+@pytest.mark.parametrize(
+    "query",
+    [
+        f"PREFIX ex: <{EX}> SELECT ?s ?o WHERE {{ ?s ex:nothere ?o }}",
+        f"PREFIX ex: <{EX}> SELECT * WHERE {{ ?s ex:nothere ?o }}",
+    ],
+)
+def test_pattern_without_candidate_binds_its_variables(graph, query):
+    df = execute(graph, query)
+    assert df.columns == ["s", "o"]
+    assert df.count() == 0
+
+
+def test_path_without_candidate_binds_its_endpoints(graph):
+    df = graph.bgp([("?a", PathPlus(EX + "nothere", "+"), "?b")])
+    assert [c for c in df.columns if not _is_companion(c)] == ["a", "b"]
+    assert df.count() == 0

@@ -110,3 +110,67 @@ def test_small_star_orientation_and_equivalence(spark):
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         ).distinct()
         assert out.exceptAll(old).count() == 0 and old.exceptAll(out).count() == 0
+
+
+def _union_find(rows):
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in rows:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    # nodes with only self-loops have no edge, so no row
+    nodes = {x for a, b in rows if a != b for x in (a, b)}
+    return {x: find(x) for x in nodes}
+
+
+def _random_graph(seed, nodes=60, edges=300):
+    import random
+
+    rnd = random.Random(seed)
+    return [(rnd.randrange(nodes), rnd.randrange(nodes)) for _ in range(edges)]
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [_random_graph(seed) for seed in range(5)]
+    + [[(i, i + 1) for i in range(0, 30)] + [(100, 100 + i) for i in range(1, 50)]],
+    ids=[f"random{seed}" for seed in range(5)] + ["chain_and_star"],
+)
+def test_matches_union_find(spark, rows):
+    edges = spark.createDataFrame(rows, "src bigint, dst bigint")
+    assert cc_dict(connected_components(edges)) == _union_find(rows)
+
+
+def test_star_input_runs_no_round(spark, monkeypatch):
+    """Alias→entity pairs are already stars on their minimum node: the
+    star test holds before the first round, so no round runs."""
+    from ont_d2rq_spark.operators import cc
+
+    calls = []
+    large_star = cc._large_star
+    monkeypatch.setattr(cc, "_large_star", lambda e: calls.append(1) or large_star(e))
+    rows = [
+        (f"http://x/entity/{a}{c}", f"http://x/customer/{c}")
+        for c in range(5)
+        for a in "ABC"
+    ]
+    edges = spark.createDataFrame(rows, "src string, dst string")
+    got = cc_dict(cc.connected_components(edges))
+    assert calls == []
+    assert got == _union_find(rows)
+
+
+def test_not_stars_after_max_iterations_raises(spark):
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], "src bigint, dst bigint"
+    )
+    with pytest.raises(RuntimeError, match="not stars"):
+        connected_components(edges, max_iterations=1)

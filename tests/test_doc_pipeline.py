@@ -125,3 +125,25 @@ def test_materialize_partitioned_by_pred(spark, tmp_path, interleaved):
     assert len(parts) >= 2  # mentions + sameAs
     # dedup happened
     assert back.count() == back.dropDuplicates(["subj", "pred", "obj"]).count()
+
+
+@pytest.mark.parametrize(
+    "text,expected",
+    [
+        ("x#spark", ["spark"]),
+        ("#join#", ["join"]),
+        ("naïve window", ["window"]),
+        ("Ωstream", []),
+        ("filter2", []),
+        ("Customer#0000000012", ["Customer#000000001"]),
+        # Java's \d is ASCII: Arabic-Indic digits are no customer key,
+        # as the pipeline oracle's Customer#[0-9]{9} says
+        ("Customer#١٢٣٤٥٦٧٨٩", []),
+        ("join spark Customer#000000007 stream", ["Customer#000000007", "join", "spark", "stream"]),
+    ],
+)
+def test_detect_mentions_regex_edges(spark, text, expected):
+    docs = spark.createDataFrame(
+        [("d", [("text", text, None, 0)])], "doc_id string, spans " + P.SPAN_SCHEMA
+    )
+    assert [r["mention"] for r in P.detect_mentions(docs).collect()] == expected
