@@ -553,29 +553,31 @@ def _masked_compat_join(
     vanishingly unlikely for literals.
 
     ``right`` arrives with its shared columns (and compat companions)
-    already renamed to __lj_*."""
+    already renamed to __lj_*.  For "minus" the copy that masks every
+    shared variable is left out: it pairs rows with no bound variable in
+    common, which MINUS never removes."""
     from itertools import combinations
 
     cols = set(left.columns) | set(right.columns)
     sent = "\x00\x00__sparql_adopt__\x00"
+    masks = [
+        set(null_vars)
+        for k in range(len(compat) + 1)
+        for null_vars in combinations(compat, k)
+        if not (how == "minus" and set(null_vars) == set(shared))
+    ]
     # expand via explode of a LITERAL mask array, not a crossJoin with
     # a local mask frame: a LogicalRDD has no stats, and an
     # unknown-size subtree would disqualify the expanded right from the
     # broadcast strategy — the entire point of putting the 2^k factor
     # on the small side
-    mask_structs = []
-    for k in range(len(compat) + 1):
-        for null_vars in combinations(compat, k):
-            m = set(null_vars)
-            mask_structs.append(
-                F.struct(
-                    *[
-                        F.lit(c in m).alias(f"m_{i}")
-                        for i, c in enumerate(compat)
-                    ],
-                    F.lit(",".join(sorted(m)) or "-").alias("tag"),
-                )
-            )
+    mask_structs = [
+        F.struct(
+            *[F.lit(c in m).alias(f"m_{i}") for i, c in enumerate(compat)],
+            F.lit(",".join(sorted(m)) or "-").alias("tag"),
+        )
+        for m in masks
+    ]
     rx = right.withColumn("__cj", F.explode(F.array(*mask_structs)))
     rx = rx.withColumn("__cj_tag", F.col("__cj.tag"))
     for i, c in enumerate(compat):
@@ -603,17 +605,17 @@ def _masked_compat_join(
         # per-m filter on the copy tag (Catalyst still extracts the
         # equi-keys; the dispatch is a post-join residual)
         disp = F.lit(False)
-        for k in range(len(compat) + 1):
-            for null_vars in combinations(compat, k):
-                m = set(null_vars)
-                tag = ",".join(sorted(m)) or "-"
-                # a compat var the left leaves NULL reads the right copy
-                res = resolver(cols, lambda v, m=m: "__lj_" + v if v in m else v)
-                fm = F.lit(True)
-                for f in filters:
-                    fm = fm & f(res)
-                disp = disp | ((F.col("__cj_tag") == tag) & fm)
+        for m in masks:
+            tag = ",".join(sorted(m)) or "-"
+            # a compat var the left leaves NULL reads the right copy
+            res = resolver(cols, lambda v, m=m: "__lj_" + v if v in m else v)
+            fm = F.lit(True)
+            for f in filters:
+                fm = fm & f(res)
+            disp = disp | ((F.col("__cj_tag") == tag) & fm)
         cond = cond & disp
+    if how not in ("left", "inner"):
+        return left.join(rx, cond, "left_anti" if how == "minus" else how)
     out = left.join(rx, cond, how)
     # uniform post-join merge: a left-NULL compat var adopts the right
     # value and companions (companions computed BEFORE c is overwritten)
@@ -658,20 +660,25 @@ def _masked_compat_join_sym(
     BroadcastNestedLoopJoin fallback Catalyst planned for the
     isNull-or-equal condition (round-5 verdict item #1).
 
+    For every ``how`` but "inner" the left rows are then matched by a
+    row id: LeftJoin adds the unmatched ones, EXISTS / NOT EXISTS and
+    MINUS semi/anti-join the ids (MINUS leaves out the slice pairs
+    where no shared variable is bound on both sides).
+
     ``right`` arrives with its shared columns (and compat companions)
     already renamed to ``__lj_*``."""
     from itertools import combinations
 
     cols = set(left.columns) | set(right.columns)
-    preserve = how == "left"
+    by_id = how != "inner"
     n_pairs = (2 ** len(left_nullable)) * (2 ** len(right_nullable))
     # each subtree re-executes once per slice pair (Spark does not share
     # subtrees across union branches) — pay each side once.  The row id
-    # used for outer reconstruction is minted BEFORE the checkpoint so
-    # it is stable across re-evaluations of the cached partitions.
-    if preserve:
+    # is minted BEFORE the checkpoint so it is stable across
+    # re-evaluations of the cached partitions.
+    if by_id:
         left = left.withColumn("__cj_id", F.monotonically_increasing_id())
-    if n_pairs > 1 or preserve:
+    if n_pairs > 1 or by_id:
         left = left.localCheckpoint(eager=False)
         right = right.localCheckpoint(eager=False)
     outs: list[DataFrame] = []
@@ -684,6 +691,8 @@ def _masked_compat_join_sym(
             for j in range(len(right_nullable) + 1):
                 for t_vars in combinations(right_nullable, j):
                     t = set(t_vars)
+                    if how == "minus" and set(shared) <= m | t:
+                        continue
                     sr = right
                     for c in right_nullable:
                         rc = F.col("__lj_" + c)
@@ -701,9 +710,14 @@ def _masked_compat_join_sym(
                         # matching the coalesce() of the fallback path)
                         cond = cond & f(res)
                     outs.append(_adopt_slice(sl.join(sr, cond, "inner"), compat, m))
+    if not outs:  # MINUS with no pair sharing a bound variable
+        return left.drop("__cj_id")
     matched = reduce(lambda a, b: a.unionByName(b), outs)
-    if not preserve:
+    if not by_id:
         return matched
+    if how != "left":
+        semi = "left_anti" if how == "minus" else how
+        return left.join(matched.select("__cj_id"), "__cj_id", semi).drop("__cj_id")
     # LeftJoin: left rows with no compatible partner survive with the
     # right-side vars unbound.  Checkpoint the matched set so the union
     # and the anti-join evaluate the pairwise joins once, not twice.
@@ -724,43 +738,46 @@ def optional_join(
     how: str = "left",
     right_maybe=frozenset(),
 ) -> DataFrame:
-    """SPARQL LeftJoin(Ω1, Ω2, expr): a right solution joins a left one
-    when they are compatible on the shared variables AND every filter
-    expression holds over the MERGED row; left solutions with no such
-    match survive with the right-side variables unbound.  This is the
-    scoped evaluation of a FILTER written inside an OPTIONAL group —
-    the filter may reference variables from either side, and a failing
-    filter un-binds the optional part instead of dropping the row
-    (the classic leftjoin-vs-filter distinction).  Each filter is a
-    callable from a ``resolver`` to a Column (``functools.partial(
-    sparql.to_column, tree)``): the join builds the resolver that reads
-    each variable from the side that binds it in the merged row.
+    """SPARQL's compatibility join, for every algebra operator that
+    combines two solution sets.  ``how`` names the operator: "left" is
+    LeftJoin(Ω1, Ω2, expr), "inner" Join, "left_semi" / "left_anti"
+    FILTER EXISTS / NOT EXISTS, and "minus" Minus.  Two solutions are
+    compatible when every shared variable is unbound on one side or
+    equal on both; Minus also needs a shared variable bound on both
+    sides (dom(μ1) ∩ dom(μ2) ≠ ∅), so disjoint domains remove nothing.
+    Each filter must hold over the MERGED row — the condition of an
+    OPTIONAL's LeftJoin (a failing filter un-binds the optional part
+    instead of dropping the row) or of an EXISTS body that reads the
+    outer row.  A filter is a callable from a ``resolver`` to a Column
+    (``functools.partial(sparql.to_column, tree)``): the join builds the
+    resolver that reads each variable from the side that binds it.
 
-    ``maybe_unbound`` names LEFT-side variables that can be NULL
-    (introduced by an earlier OPTIONAL / UNION branch / VALUES UNDEF);
-    ``right_maybe`` names RIGHT-side variables that can be NULL (a
-    subquery or nested group projecting its own optional vars).  For
-    those, SPARQL compatibility treats unbound-vs-bound as compatible,
-    while fully-bound shared vars keep the plain (hash-joinable)
-    equality.  Callers track both sets so the common all-bound case
-    never pays any compatibility price.
+    ``maybe_unbound`` names LEFT-side variables that can be NULL (an
+    earlier OPTIONAL, UNION branch, BIND or VALUES UNDEF);
+    ``right_maybe`` names RIGHT-side ones (a subquery or group with its
+    own optional variables, a VALUES table with UNDEF).  Shared
+    variables in neither set keep the plain, hash-joinable equality, so
+    the common all-bound case pays no compatibility price.
 
-    When the nullable side is ONLY the left (the dominant case — the
-    right side of an OPTIONAL is a BGP that always binds its vars),
-    the join runs as ONE hash join with sentinel key expansion on the
-    SMALL side (_masked_compat_join): the right side is replicated 2^k
-    ways (k ≤ 3 compat vars) with sentinel join keys, so a left row
-    whose null-set is M matches exactly the m == M copy — the big left
-    streams once, unsliced, and the join broadcasts when the expanded
-    right is small.  Right-nullable compat vars (or > 3 of them) take
-    the symmetric slice decomposition.
+    When only the left can leave a shared variable NULL (k ≤ 3 of them:
+    an OPTIONAL body BGP that always binds its variables), the join is
+    ONE hash join with sentinel key expansion on the SMALL side
+    (_masked_compat_join): the right side is replicated 2^k ways with
+    sentinel join keys, so a left row whose null-set is M matches
+    exactly the m == M copy — the big left streams once, unsliced, and
+    the join broadcasts when the expanded right is small.  Right-nullable
+    variables (at most 4 nullable in all) take the symmetric slice
+    decomposition (_masked_compat_join_sym).  Both replace the nested
+    loop Catalyst plans for an isNull-or-equal condition, which remains
+    only beyond those caps.
 
-    With no filters and no maybe-unbound shared vars this degrades to
-    the plain shared-variable left join (constant-true condition when
-    the domains are disjoint, which preserves left rows against an
-    empty right side)."""
+    With no filters and no maybe-unbound shared vars this is the plain
+    shared-variable join (constant-true condition when the domains are
+    disjoint, which preserves left rows against an empty right side)."""
     shared = [c for c in left.columns if c in right.columns and not _is_companion(c)]
     compat = [c for c in shared if c in maybe_unbound or c in right_maybe]
+    if how == "minus" and not shared:
+        return left
     right = right.drop(
         *[
             c
@@ -769,11 +786,13 @@ def optional_join(
         ]
     )
     if not filters and not compat:
+        # every shared var is bound on both sides: MINUS is an anti-join
+        how = "left_anti" if how == "minus" else how
         if shared:
             return left.join(right, on=shared, how=how)
-        if how == "left":
-            return left.join(right, F.lit(True), "left")
-        return left.crossJoin(right)
+        if how == "inner":
+            return left.crossJoin(right)
+        return left.join(right, F.lit(True), how)
     ren = {c: "__lj_" + c for c in shared}
     for c in list(right.columns):
         base = c[: c.rfind("__")] if _is_companion(c) else None
@@ -794,16 +813,18 @@ def optional_join(
     cond = F.lit(True)
     for c, rc in ren.items():
         if c in compat:
-            # either side unbound → compatible (right can be NULL when
-            # it is a subquery projection with its own OPTIONAL vars)
+            # either side unbound → compatible
             cond = cond & (
                 F.col(c).isNull() | F.col(rc).isNull() | (F.col(c) == F.col(rc))
             )
         else:
             cond = cond & (F.col(c) == F.col(rc))
-    # group filters evaluate over the MERGED solution (SPARQL LeftJoin
-    # expr): a compat var means the adopted value when the left binding
-    # is unbound — its right copy, companions included
+    if how == "minus":
+        bound_on_both = [F.col(c).isNotNull() & F.col(rc).isNotNull() for c, rc in ren.items()]
+        cond = cond & reduce(lambda a, b: a | b, bound_on_both)
+    # the filters evaluate over the MERGED solution: a compat var means
+    # the adopted value when the left binding is unbound — its right
+    # copy, companions included
     base = resolver(set(left.columns) | set(right.columns))
 
     def merged(v: str, part: str = ""):
@@ -814,6 +835,8 @@ def optional_join(
 
     for f in filters:
         cond = cond & f(merged)
+    if how not in ("left", "inner"):
+        return left.join(right, cond, "left_anti" if how == "minus" else how)
     out = left.join(right, cond, how)
     # merge compat vars: an unbound left binding adopts the right value
     # (and its typed-literal companions)
@@ -846,14 +869,14 @@ class VirtualGraph:
     def graph_names(self) -> list[str]:
         return [self.data_graph_iri, self.vocabulary_graph_iri]
 
-    def graph_scoped_bgp(self, graph_iri: str, patterns) -> DataFrame:
+    def graph_scoped_bgp(self, graph_iri: str, patterns, outer_specs=None) -> DataFrame:
         """BGP against one named graph.  The data graph takes the
-        mapping-compiled path (pushdown into the source tables); the
-        vocabulary graph — tiny, driver-built — evaluates over its
-        literal triple frame.  An unknown graph name yields the empty
-        solution set."""
+        mapping-compiled path (pushdown into the source tables, pruned
+        by ``outer_specs``); the vocabulary graph — tiny, driver-built —
+        evaluates over its literal triple frame.  An unknown graph name
+        yields the empty solution set."""
         if graph_iri == self.data_graph_iri:
-            return self.bgp(patterns)
+            return self.bgp(patterns, outer_specs)
         return bgp_over_triples(self.graph_triples(graph_iri), patterns)
 
     def graph_triples(self, graph_iri: str) -> DataFrame:
@@ -1263,9 +1286,11 @@ class VirtualGraph:
         Each pattern is (s, p, o); terms are constants or '?var'/Var.
         Shared variables join (reference: NodeRelationJoiner); result has
         one string column per variable (node lexical value).  The mapping
-        supplies the plain patterns' frames (pattern_frames); paths,
-        negated sets and the join order are _evaluate_bgp's.  FILTER and
-        OPTIONAL are the SPARQL evaluator's (sparql._eval_where)."""
+        supplies the plain patterns' frames (pattern_frames), pruned by
+        ``outer_specs`` (var_spec_domains of the solutions the result
+        joins to); paths, negated sets and the join order are
+        _evaluate_bgp's.  The rest of a SPARQL group is the algebra
+        evaluator's (sparql.evaluate)."""
         return _evaluate_bgp(self, patterns, outer_specs)
 
     # ------------------------------------------------------------------

@@ -1052,9 +1052,11 @@ def q_sparql_nested_optional(spark, sf_dir):
     label-service shape.  The OUTER group's filter is the LeftJoin
     condition (failing it un-binds the whole group, nested part
     included); the INNER group's filter un-binds only the inner
-    binding.  Evaluated via the recursive _eval_where with
-    maybe_unbound chaining; both compatibility joins take the
-    hash-joinable null-mask decomposition (graph._masked_compat_join)."""
+    binding.  The algebra is LeftJoin(BGP, LeftJoin(BGP, BGP, inner
+    filter), outer filter) (sparql.translate); the only shared variables
+    (?n, then ?r) are bound on both sides, so both LeftJoins are plain
+    equi-joins carrying their filter in the join condition
+    (graph.optional_join), not a compatibility decomposition."""
     from ont_d2rq_spark.sparql import execute
 
     g = _graph(spark, sf_dir)

@@ -55,8 +55,7 @@ is SQL NULL (FILTER drops it; Kleene OR / AND / NOT give the §17.2
 truth tables).  GROUP_CONCAT sorts members before joining and SAMPLE
 takes the minimum — SPARQL leaves both unspecified; this engine picks
 the deterministic representative so results are reproducible across
-partitionings (and replayable by the DuckDB oracle).  BINDs evaluate
-before FILTERs within a group.
+partitionings (and replayable by the DuckDB oracle).
 
 Terms: <iri>, pfx:local, "literal" (@lang / ^^dt make the bound term a
 TYPED literal — datatype/lang must unify, TypedNodeMaker semantics),
@@ -75,16 +74,19 @@ union of the two directions).  VALUES supports UNDEF (NULL cell +
 null-safe join).  DESCRIBE emits the full Concise Bounded Description
 (bNode fixpoint expansion).
 
-Group bodies are RECURSIVE (r5): OPTIONAL/UNION/MINUS/EXISTS/GRAPH
-groups carry the same algebra as the top level — BIND, VALUES, nested
-OPTIONAL/UNION/MINUS/EXISTS, subqueries and GRAPH all evaluate inside
-the group with correct scope (_eval_where; the reference gets this
-from ARQ's recursive OpExecutor).  An OPTIONAL group's TOP-LEVEL
-filters form the LeftJoin condition; nested filters scope to their own
-group.  Each context compiles an expression through its own resolver
-(graph.resolver): a variable the group does not bind is unbound, an
-OPTIONAL slice reads the adopted right-side copy, a FILTER EXISTS body
-reads the outer row's binding for a shared variable.
+A group is translated left to right into one algebra tree (SPARQL 1.1
+§18.2.2, translate): adjacent triples form one BGP, OPTIONAL { P FILTER
+e } is LeftJoin(G, P, e), MINUS is Minus, BIND is Extend over the group
+so far, VALUES / UNION / GRAPH / subqueries are Joins with it, and the
+group's FILTERs are one Filter over the whole group (FILTER EXISTS a
+semi/anti join inside it).  One recursive evaluate walks the tree at
+every nesting depth (the reference gets this from ARQ's recursive
+OpExecutor), and every Join, LeftJoin, Minus and EXISTS runs through
+the one compatibility join, graph.optional_join.  Each context compiles
+an expression through its own resolver (graph.resolver): a variable the
+group does not bind is unbound, and a LeftJoin or EXISTS condition
+reads the merged row.  A projected variable that nothing binds is
+unbound.
 
 Repetition also composes over a negated set (`!p+`, `!(p|^q)*`): the
 NPS evaluation supplies the closure's base edge set.
@@ -135,14 +137,13 @@ class Query:
     form: str  # SELECT | ASK
     variables: list[str] = field(default_factory=list)  # output names; empty = *
     distinct: bool = False
-    patterns: list[tuple] = field(default_factory=list)
-    filters: list[tuple] = field(default_factory=list)  # expression trees
-    # OPTIONAL groups: full recursive Query bodies whose top-level
-    # .filters form the LeftJoin condition (SPARQL leftjoin)
-    optional: list["Query"] = field(default_factory=list)
-    # UNION branches: full recursive Query bodies (branch-scoped
-    # filters and nested constructs evaluate inside the branch)
-    union: list["Query"] = field(default_factory=list)
+    # the WHERE group's elements in the order written: ("bgp", patterns)
+    # for a triples block, ("filter", expr | ("exists", negated,
+    # elements)), ("optional", elements), ("minus", elements), ("union",
+    # [elements, ...]) (a lone braced group is one branch), ("bind",
+    # expr, var), ("values", vars, rows), ("graph", term, elements) and
+    # ("subquery", Query); translate() turns them into the algebra tree
+    where: list[tuple] = field(default_factory=list)
     order_by: list[tuple] = field(default_factory=list)  # (tree, desc)
     limit: Optional[int] = None
     offset: Optional[int] = None
@@ -150,18 +151,12 @@ class Query:
     projections: list[tuple] = field(default_factory=list)
     group_by: list[str] = field(default_factory=list)
     having: list[tuple] = field(default_factory=list)  # expression trees
-    binds: list[tuple] = field(default_factory=list)  # (tree, var)
-    values_clauses: list[tuple] = field(default_factory=list)  # (vars, rows)
     # trailing query-level ValuesClause: joined AFTER the WHERE group
     # evaluates (SPARQL 18.2.2 P := Join(P, ToMultiSet(data))) — a WHERE
     # filter referencing a var bound only here must see it UNBOUND
     trailing_values: list[tuple] = field(default_factory=list)  # (vars, rows)
-    minus: list["Query"] = field(default_factory=list)  # recursive group bodies
     template: list[tuple] = field(default_factory=list)  # CONSTRUCT triples
     describe: list[str] = field(default_factory=list)  # DESCRIBE nodes
-    subqueries: list["Query"] = field(default_factory=list)
-    graphs: list[tuple] = field(default_factory=list)  # (graph term, Query body)
-    exists: list[tuple] = field(default_factory=list)  # (negated, Query body)
     # dataset clauses (top-level queries only; subqueries cannot carry
     # them per the grammar): FROM <g> graphs merge into the default
     # graph, FROM NAMED <g> restricts what GRAPH can range over
@@ -265,9 +260,6 @@ class _P:
     def parse(self) -> Query:
         while self.kw("PREFIX"):
             t = self.next()
-            if t.group("local") not in ("", None) or t.group("pname") is None and ":" not in t.group(0):
-                # pname token with empty local, e.g. "ex:"
-                pass
             pfx = t.group("pname") or ""
             iri = self.next().group(0)
             if not iri.startswith("<"):
@@ -287,22 +279,17 @@ class _P:
                 self._dataset(q)
                 self.expect("WHERE")
                 self.expect("{")
-                self._group(q.patterns, q)
-                for s, p, o in q.patterns:
-                    if not isinstance(p, str):
-                        raise SparqlError(
-                            "CONSTRUCT WHERE shorthand allows plain triple "
-                            "patterns only (no property paths)"
-                        )
-                if _where_content(q) and (
-                    q.filters or q.optional or q.union or q.binds
-                    or q.values_clauses or q.minus or q.exists or q.graphs
-                    or q.subqueries
-                ):
+                q.where = self._group()
+                if any(e[0] != "bgp" for e in q.where):
                     raise SparqlError(
                         "CONSTRUCT WHERE shorthand allows triple patterns only"
                     )
-                q.template = list(q.patterns)
+                q.template = [t for e in q.where for t in e[1]]
+                if any(not isinstance(p, str) for _, p, _ in q.template):
+                    raise SparqlError(
+                        "CONSTRUCT WHERE shorthand allows plain triple "
+                        "patterns only (no property paths)"
+                    )
                 self._modifiers(q)
                 if self.kw("VALUES"):
                     q.trailing_values.append(self._values_clause())
@@ -342,7 +329,7 @@ class _P:
         """A SELECT's WHERE group ('{' already consumed), recording its
         variables in order of first appearance."""
         start = self.i
-        self._group(q.patterns, q)
+        q.where = self._group()
         q.var_order = list(
             dict.fromkeys(t.group(0)[1:] for t in self.toks[start:self.i] if t.lastgroup == "var")
         )
@@ -414,21 +401,20 @@ class _P:
         if self.kw("OFFSET"):
             q.offset = int(self.next().group(0))
 
-    def _braced(self) -> "Query":
-        """Parse a braced group's contents ('{' already consumed) into
-        a scratch Query: patterns plus ALL nested constructs (OPTIONAL,
-        UNION, BIND, VALUES, MINUS, FILTER EXISTS, GRAPH, subqueries),
-        recursively — group bodies carry the same algebra as the top
-        level and evaluate through _eval_where (the Spark analogue of
-        ARQ's recursive OpExecutor).  The caller decides how the
-        group's TOP-LEVEL filters scope: OPTIONAL puts them in the
-        LeftJoin condition; UNION branches / MINUS / EXISTS / GRAPH
-        evaluate them inside the group."""
-        subq = Query(form="SELECT")
-        self._group(subq.patterns, subq)
-        return subq
+    @staticmethod
+    def _triples(elems: list) -> list:
+        """The pattern list of the group's current triples block: a
+        FILTER applies to the whole group, so it does not end a block."""
+        last = next((e for e in reversed(elems) if e[0] != "filter"), None)
+        if last is None or last[0] != "bgp":
+            last = ("bgp", [])
+            elems.append(last)
+        return last[1]
 
-    def _group(self, patterns: list, q: Query):
+    def _group(self) -> list:
+        """A braced group's elements in the order written ('{' already
+        consumed; the forms are listed at Query.where)."""
+        elems: list = []
         while True:
             t = self.peek()
             if t is None:
@@ -436,7 +422,7 @@ class _P:
             g = t.group(0)
             if g == "}":
                 self.next()
-                return
+                return elems
             if g == ".":
                 self.next()
                 continue
@@ -470,22 +456,16 @@ class _P:
                         if ex is None or ex.group(0).upper() != "EXISTS":
                             raise SparqlError("expected EXISTS after FILTER NOT")
                     self.expect("{")
-                    q.exists.append((neg, self._braced()))
+                    elems.append(("filter", ("exists", neg, self._group())))
                     if wrapped:
                         self.expect(")")
                     continue
-                q.filters.append(self._primary())
+                elems.append(("filter", self._primary()))
                 continue
             if g.upper() == "OPTIONAL":
                 self.next()
                 self.expect("{")
-                # FILTERs written at the TOP level of the OPTIONAL
-                # braces belong to the LeftJoin condition (SPARQL
-                # leftjoin): a failing filter un-binds the optional
-                # part instead of dropping the solution.  Anything
-                # nested deeper (another OPTIONAL, UNION, BIND, ...)
-                # evaluates recursively inside the group body.
-                q.optional.append(self._braced())
+                elems.append(("optional", self._group()))
                 continue
             if g == "{":
                 self.next()
@@ -501,22 +481,20 @@ class _P:
                     self._where(sub)
                     self._modifiers(sub)
                     self.expect("}")
-                    q.subqueries.append(sub)
+                    elems.append(("subquery", sub))
                     continue
-                # group — the { A } UNION { B } [UNION { C }] form.
-                # Each branch is a full recursive group; its FILTERs
-                # (and nested constructs) scope to that branch alone.
-                # A lone braced group with no UNION keyword evaluates
-                # as a plain nested group (one-branch "union").
-                q.union.append(self._braced())
+                # { A } UNION { B } [UNION { C }]; a lone braced group
+                # is a one-branch union, i.e. a nested group
+                branches = [self._group()]
                 while self.kw("UNION"):
                     self.expect("{")
-                    q.union.append(self._braced())
+                    branches.append(self._group())
+                elems.append(("union", branches))
                 continue
             if g.upper() == "MINUS":
                 self.next()
                 self.expect("{")
-                q.minus.append(self._braced())
+                elems.append(("minus", self._group()))
                 continue
             if g.upper() == "BIND":
                 self.next()
@@ -532,11 +510,11 @@ class _P:
                 if e[0] == "call" and e[1] in ("STRLANG", "STRDT"):
                     if e[2][1][0] not in ("lit", "iri"):
                         raise SparqlError(f"{e[1]} tag must be a constant")
-                q.binds.append((e, var.group(0)[1:]))
+                elems.append(("bind", e, var.group(0)[1:]))
                 continue
             if g.upper() == "VALUES":
                 self.next()
-                q.values_clauses.append(self._values_clause())
+                elems.append(("values", *self._values_clause()))
                 continue
             if g.upper() == "GRAPH":
                 # GRAPH <iri> { … } / GRAPH ?g { … }: the group's
@@ -545,11 +523,11 @@ class _P:
                 self.next()
                 gterm = self.term()
                 self.expect("{")
-                q.graphs.append((gterm, self._braced()))
+                elems.append(("graph", gterm, self._group()))
                 continue
             if g.upper() == "SERVICE":
                 raise SparqlError("SERVICE not supported (no network)")
-            s = self._term_or_bnode(patterns)
+            s = self._term_or_bnode(elems)
             # a bracketed subject may stand alone as a whole triple
             # block: `[ a ex:Nation ; ex:p ?o ] .` (SPARQL grammar:
             # TriplesSameSubject → BlankNodePropertyList PropertyList?)
@@ -561,12 +539,14 @@ class _P:
             ):
                 continue
             alts = self._path()
-            patterns.extend(self._expand_path(s, alts, self._term_or_bnode(patterns)))
+            self._triples(elems).extend(
+                self._expand_path(s, alts, self._term_or_bnode(elems))
+            )
             # object lists: s p o1 , o2
             while self.peek() is not None and self.peek().group(0) == ",":
                 self.next()
-                patterns.extend(
-                    self._expand_path(s, alts, self._term_or_bnode(patterns))
+                self._triples(elems).extend(
+                    self._expand_path(s, alts, self._term_or_bnode(elems))
                 )
             # predicate lists: s p1 o1 ; p2 o2
             while self.peek() is not None and self.peek().group(0) == ";":
@@ -574,16 +554,16 @@ class _P:
                 if self.peek() is not None and self.peek().group(0) in (".", "}"):
                     break
                 alts2 = self._path()
-                patterns.extend(
-                    self._expand_path(s, alts2, self._term_or_bnode(patterns))
+                self._triples(elems).extend(
+                    self._expand_path(s, alts2, self._term_or_bnode(elems))
                 )
 
-    def _term_or_bnode(self, patterns: list):
+    def _term_or_bnode(self, elems: list):
         """A term, or a blank-node property list `[ p1 o1 ; p2 o2 ]`
         (anonymous `[]` allowed) — SPARQL's bracketed bnode syntax.  A
         query bnode is a NON-DISTINGUISHED variable: expand to a fresh
         `?__bn…` (the `__` prefix keeps it out of SELECT *) and append
-        the bracketed triples to the current group; nested brackets
+        the bracketed triples to the group's current triples block; nested brackets
         recurse."""
         t = self.peek()
         if t is None or t.group(0) != "[":
@@ -596,13 +576,13 @@ class _P:
             return var
         while True:
             alts = self._path()
-            patterns.extend(
-                self._expand_path(var, alts, self._term_or_bnode(patterns))
+            self._triples(elems).extend(
+                self._expand_path(var, alts, self._term_or_bnode(elems))
             )
             while self.peek() is not None and self.peek().group(0) == ",":
                 self.next()
-                patterns.extend(
-                    self._expand_path(var, alts, self._term_or_bnode(patterns))
+                self._triples(elems).extend(
+                    self._expand_path(var, alts, self._term_or_bnode(elems))
                 )
             if self.peek() is not None and self.peek().group(0) == ";":
                 self.next()
@@ -1384,74 +1364,6 @@ def execute(graph, query: str) -> DataFrame:
     return _execute_query(graph, parse(query))
 
 
-def _pattern_vars(pats) -> set:
-    """Variable names a pattern list can bind (s/p/o term positions)."""
-    from ont_d2rq_spark.graph import _is_var, _var_name
-
-    vs = set()
-    for s, p, o in pats:
-        for t in (s, p, o):
-            if t is not None and _is_var(t):
-                vs.add(_var_name(t))
-    return vs
-
-
-def _q_all_vars(q: Query) -> set:
-    """Every variable a group's solutions CAN bind (recursive over
-    nested group bodies)."""
-    vs = _pattern_vars(q.patterns)
-    vs |= {b[1] for b in q.binds}
-    for vars_, _rows in q.values_clauses + q.trailing_values:
-        vs |= set(vars_)
-    for oq in q.optional:
-        vs |= _q_all_vars(oq)
-    for bq in q.union:
-        vs |= _q_all_vars(bq)
-    for gterm, gq in q.graphs:
-        vs |= _q_all_vars(gq)
-        if isinstance(gterm, str) and gterm.startswith("?"):
-            vs.add(gterm[1:])
-    for s in q.subqueries:
-        vs |= set(s.variables) if s.variables else _q_all_vars(s)
-    return vs
-
-
-def _q_certain_vars(q: Query) -> set:
-    """Variables bound in EVERY solution of the group (recursive
-    under-approximation): pattern vars, VALUES vars with no UNDEF
-    cell, vars certain in every UNION branch, GRAPH bodies' certain
-    vars, and subquery projections minus what the subquery can itself
-    leave unbound.  OPTIONAL/MINUS/EXISTS guarantee nothing — and
-    neither do BIND targets: BIND(?r AS ?y) from a maybe-unbound ?r
-    (or any NULL/error-producing expression) yields an unbound ?y, so
-    counting it certain would give downstream joins null-rejecting
-    equality and silently drop compatible solutions."""
-    vs = _pattern_vars(q.patterns)
-    for vars_, rows in q.values_clauses + q.trailing_values:
-        vs |= {v for i, v in enumerate(vars_) if all(r[i] is not None for r in rows)}
-    if q.union:
-        vs |= set.intersection(*[_q_certain_vars(b) for b in q.union])
-    for gterm, gq in q.graphs:
-        vs |= _q_certain_vars(gq)
-        if isinstance(gterm, str) and gterm.startswith("?"):
-            vs.add(gterm[1:])
-    for s in q.subqueries:
-        proj = set(s.variables) if s.variables else _q_all_vars(s)
-        vs |= proj - _query_maybe_unbound(s)
-    return vs
-
-
-def _query_maybe_unbound(q: Query) -> set:
-    """Variables a query's solutions can leave NULL: anything the group
-    can bind that is not CERTAINLY bound in every solution — vars
-    introduced only by OPTIONAL groups, asymmetric UNION branches,
-    VALUES UNDEF cells, or a subquery's own maybe-unbound projections,
-    recursively through nested group bodies.  (Static
-    over-approximation from the parse — decides which joins need
-    SPARQL compatibility semantics.)"""
-    return _q_all_vars(q) - _q_certain_vars(q)
-
-
 class _DatasetGraph:
     """FROM / FROM NAMED dataset view over a VirtualGraph (SPARQL
     'Specifying RDF Datasets'): when a query carries dataset clauses,
@@ -1490,13 +1402,17 @@ class _DatasetGraph:
             )
         return self._base.graph_scoped_bgp(graph_iri, patterns)
 
-    def bgp(self, patterns) -> DataFrame:
+    def bgp(self, patterns, outer_specs=None) -> DataFrame:
+        """The default graph's BGP.  ``outer_specs`` (the mapping's
+        domains, VirtualGraph.var_spec_domains) prune only when the
+        default graph is the data graph alone; every other default graph
+        ignores them."""
         from functools import reduce as _reduce
 
         from ont_d2rq_spark.graph import TRIPLE_SCHEMA, bgp_over_triples
 
         if len(self._default) == 1:
-            return self._base.graph_scoped_bgp(self._default[0], patterns)
+            return self._base.graph_scoped_bgp(self._default[0], patterns, outer_specs)
         if not self._default:
             return bgp_over_triples(
                 self._base.spark.createDataFrame([], TRIPLE_SCHEMA), patterns
@@ -1514,425 +1430,213 @@ def _unit_frame(graph) -> DataFrame:
     return graph.spark.range(1).select(F.lit(1).alias("_m"))
 
 
-def _where_content(q: Query) -> bool:
-    return bool(
-        q.patterns
-        or q.union
-        or q.subqueries
-        or q.graphs
-        or q.optional
-        or q.values_clauses
-        or q.binds
-        or q.filters
-        or q.exists
-        or q.minus
-    )
+# ---- the group algebra (SPARQL 1.1 §18.2.2) -----------------------------
+# Nodes are tuples: ("unit",) the empty group; ("bgp", patterns);
+# ("join", A, B); ("leftjoin", A, B, exprs); ("minus", A, B); ("filter",
+# exprs, A), where an expression may be ("exists", negated, body,
+# exprs); ("extend", A, var, expr); ("union", [A, ...]); ("table", vars,
+# rows) for VALUES; ("graph", term, A); ("query", Query) for a subquery.
+
+_UNIT = ("unit",)
 
 
-def _outer_domains(graph, q, bgp_fn):
-    """Cross-group URIMakerRule input: the per-var candidate spec
-    domains of this group's ALWAYS-BOUND top-level patterns (only those
-    — a var bound by an OPTIONAL may be unbound in some outer row,
-    where it is compatible with ANY body value and must not prune).
-    Best-effort: pruning is an optimization, never a failure path."""
-    try:
-        if q.patterns and bgp_fn == graph.bgp and hasattr(graph, "var_spec_domains"):
-            return graph.var_spec_domains(q.patterns) or None
-    except Exception:
-        return None
-    return None
+def _join_node(g: tuple, a: tuple) -> tuple:
+    return a if g == _UNIT else ("join", g, a)
 
 
-def _eval_where(graph, q: Query, bgp_fn=None, skip_filters=False, outer_specs=None):
-    """Evaluate the WHERE-clause content of ``q`` -> (bindings frame or
-    None, maybe-unbound variable set).  RECURSIVE: OPTIONAL / UNION /
-    MINUS / FILTER-EXISTS / GRAPH bodies are full Query groups that
-    evaluate through this same function, so arbitrary nesting —
-    OPTIONAL inside OPTIONAL, UNION inside OPTIONAL, BIND/VALUES in a
-    UNION branch, OPTIONAL inside GRAPH — works the way the reference
-    gets it from ARQ's recursive OpExecutor (engine/QueryEngineD2RQ
-    delegates residual algebra back to ARQ; here the residual algebra
-    is native DataFrame ops at every depth).
+def _conditions(node: tuple):
+    """Split a translated group into its body and its own expression
+    filters: the condition of an OPTIONAL's LeftJoin or of an EXISTS
+    join, evaluated over the merged row.  FILTER EXISTS stays a filter
+    of the body."""
+    if node[0] != "filter":
+        return node, []
+    exists = [e for e in node[1] if e[0] == "exists"]
+    body = ("filter", exists, node[2]) if exists else node[2]
+    return body, [e for e in node[1] if e[0] != "exists"]
 
-    ``bgp_fn`` overrides how triple patterns evaluate — GRAPH groups
-    pass the graph-scoped BGP so every pattern nested inside them
-    (including subqueries) stays against the named graph.
-    ``skip_filters`` leaves q.filters to the caller: an OPTIONAL's
-    top-level filters belong to the LeftJoin condition (a failing
-    filter un-binds the optional part), while everything nested deeper
-    evaluates inside the body first.
 
-    Fixed application order within a group (same fold as previous
-    rounds, now uniform at every nesting depth): patterns, UNION,
-    OPTIONAL, subqueries, GRAPH, VALUES, BIND, FILTER, FILTER EXISTS,
-    MINUS.  EXISTS bodies are correlated through their top-level
-    filters (folded into the semi/anti-join condition over the merged
-    row); everywhere else a filter referencing a variable outside its
-    group's scope evaluates it as UNBOUND (the frame's resolver has no
-    column for it), the SPARQL bottom-up scope rule."""
+def translate(elements: list) -> tuple:
+    """A group's elements (Query.where), in the order written, to its
+    algebra tree — SPARQL 1.1 §18.2.2: OPTIONAL, MINUS and BIND apply to
+    the group so far, every other element joins it, and the group's
+    FILTERs are one Filter over the whole group."""
+    g, filters = _UNIT, []
+    for el in elements:
+        kind = el[0]
+        if kind == "filter":
+            e = el[1]
+            if e[0] == "exists":
+                e = ("exists", e[1], *_conditions(translate(e[2])))
+            filters.append(e)
+        elif kind == "optional":
+            g = ("leftjoin", g, *_conditions(translate(el[1])))
+        elif kind == "minus":
+            g = ("minus", g, translate(el[1]))
+        elif kind == "bind":
+            g = ("extend", g, el[2], el[1])
+        elif kind == "union":
+            branches = [translate(b) for b in el[1]]
+            g = _join_node(g, branches[0] if len(branches) == 1 else ("union", branches))
+        elif kind == "values":
+            g = _join_node(g, ("table", el[1], el[2]))
+        elif kind == "graph":
+            g = _join_node(g, ("graph", el[1], translate(el[2])))
+        elif kind == "subquery":
+            g = _join_node(g, ("query", el[1]))
+        else:
+            g = _join_node(g, el)  # a BGP
+    return ("filter", filters, g) if filters else g
+
+
+class _Solutions(NamedTuple):
+    """An evaluated algebra node: its frame, the variables it may leave
+    unbound (every other variable column is bound in every row) and the
+    cross-group URIMakerRule domains of its certain variables
+    (VirtualGraph.var_spec_domains), which prune the BGPs evaluated to
+    its right."""
+
+    df: DataFrame
+    maybe: frozenset = frozenset()
+    specs: dict = {}
+
+    @property
+    def certain(self) -> set:
+        return _vars(self.df) - self.maybe
+
+
+def _vars(df: DataFrame) -> set:
+    from ont_d2rq_spark.graph import _is_companion
+
+    return {c for c in df.columns if not _is_companion(c)}
+
+
+def _union(parts: list) -> _Solutions:
+    """Union of solution sets: a variable is certain only where every
+    part binds it in every row."""
     from functools import reduce as _reduce
 
-    from ont_d2rq_spark.graph import _is_companion, optional_join, resolver
+    df = _reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), [p.df for p in parts]
+    )
+    certain = set.intersection(*[p.certain for p in parts])
+    return _Solutions(df, frozenset(_vars(df) - certain))
 
-    if bgp_fn is None:
-        bgp_fn = graph.bgp
-    maybe_unbound: set = set()
-    if q.patterns and outer_specs and bgp_fn == graph.bgp:
-        df = bgp_fn(q.patterns, outer_specs=outer_specs)
-    elif q.patterns:
-        df = bgp_fn(q.patterns)
-    else:
-        df = None
-    body_specs = _outer_domains(graph, q, bgp_fn)
 
-    # { A } UNION { B }: branches evaluate recursively; a var missing
-    # from (or maybe-unbound inside) any branch is maybe-unbound
-    if q.union:
-        parts, part_maybes = [], []
-        for branch in q.union:
-            b, bm = _eval_where(graph, branch, bgp_fn,
-                                outer_specs=body_specs)
-            parts.append(b if b is not None else _unit_frame(graph))
-            part_maybes.append(bm)
-        u = _reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
-        part_cols = [{c for c in p.columns if not _is_companion(c)} for p in parts]
-        u_maybe = (
-            set.union(*part_cols) - set.intersection(*part_cols)
-        ) | set.union(*part_maybes)
-        if df is None:
-            df = u
-            maybe_unbound |= u_maybe
-        else:
-            # join main |X| union with compatibility on maybe-unbound
-            # vars (left = union side, right = the fully-bound main
-            # pattern frame, so the hash-joinable decomposition
-            # applies); an inner-join merge binds the shared vars
-            shared = [
-                c for c in df.columns if c in u.columns and not _is_companion(c)
-            ]
-            if set(shared) & u_maybe:
-                df = optional_join(u, df, maybe_unbound=u_maybe, how="inner")
-                maybe_unbound |= u_maybe - set(shared)
-            else:
-                u = u.drop(
-                    *[c for c in u.columns if _is_companion(c) and c in df.columns]
-                )
-                df = df.join(u, on=shared, how="inner") if shared else df.crossJoin(u)
-                maybe_unbound |= u_maybe
+def evaluate(graph, node: tuple, scope: Optional[str] = None, outer=None) -> _Solutions:
+    """Evaluate an algebra tree (translate) over ``graph``.  ``scope``
+    is the named graph a GRAPH clause put the BGPs in (None: the default
+    graph); ``outer`` the specs of the solutions this node's result
+    joins to, which prune its BGPs (sound because a pruned row could
+    never be compatible with them).  Join, LeftJoin, Minus and EXISTS
+    all run through graph.optional_join, which applies SPARQL's
+    compatibility rule to the variables either side may leave unbound."""
+    from ont_d2rq_spark.graph import _is_var, _var_name, optional_join, resolver
 
-    # OPTIONAL groups: recursive body (nested OPTIONAL/UNION/BIND/...
-    # evaluate inside first); the group's TOP-LEVEL filters form the
-    # LeftJoin condition; a later group can adopt an earlier group's
-    # binding (maybe_unbound chaining).  When the group has NO pattern/
-    # union basis, applying OPTIONALs against the unit frame and then
-    # inner-joining the subqueries/GRAPHs would drop or multiply
-    # solutions — defer them until after those joins instead (the same
-    # deferral previous rounds kept via optionals_consumed).
-    def _apply_optionals(df, mu):
-        for oq in q.optional:
-            rdf, sub_maybe = _eval_where(graph, oq, bgp_fn, skip_filters=True,
-                                         outer_specs=body_specs)
-            if rdf is None:
-                continue
-            shared_bound = {
-                c for c in df.columns if c in rdf.columns and not _is_companion(c)
-            } - mu
-            filts = [partial(to_column, f) for f in oq.filters]
-            df = optional_join(
-                df, rdf, filts, maybe_unbound=mu, right_maybe=sub_maybe
-            )
-            mu = mu | (
-                {c for c in rdf.columns if not _is_companion(c)} - shared_bound
-            )
-        return df, mu
-
-    optionals_done = not q.optional
-    if df is not None and not optionals_done:
-        df, maybe_unbound = _apply_optionals(df, maybe_unbound)
-        optionals_done = True
-
-    # subqueries evaluate independently, join on shared variables;
-    # vars the subquery can leave NULL join — and propagate — as
-    # maybe-unbound on the RIGHT side
-    for sub in q.subqueries:
-        sdf = _execute_query(graph, sub, bgp_fn)
-        sub_maybe = _query_maybe_unbound(sub) & set(sdf.columns)
-        if df is None:
-            df = sdf
-        else:
-            shared = [
-                c for c in df.columns if c in sdf.columns and not _is_companion(c)
-            ]
-            if set(shared) & (maybe_unbound | sub_maybe):
-                df = optional_join(
-                    df,
-                    sdf,
-                    maybe_unbound=maybe_unbound,
-                    right_maybe=sub_maybe,
-                    how="inner",
-                )
-            elif shared:
-                df = df.join(sdf, on=shared, how="inner")
-            else:
-                df = df.crossJoin(sdf)
-        maybe_unbound |= sub_maybe
-
-    # GRAPH groups: recursive bodies with the graph-scoped BGP (nested
-    # constructs inside GRAPH stay against the named graph); constant
-    # IRI scopes directly, ?g unions all named graphs with ?g bound
-    for gterm, gq in q.graphs:
-        from ont_d2rq_spark.graph import _is_var as _isv, _var_name as _vn
-
-        if _isv(gterm):
-            parts2, gms = [], []
-            for iri in graph.graph_names():
-                def _scoped(pats, _iri=iri):
-                    return graph.graph_scoped_bgp(_iri, pats)
-
-                gb, gm = _eval_where(graph, gq, _scoped)
-                parts2.append(
-                    (gb if gb is not None else _unit_frame(graph)).withColumn(
-                        _vn(gterm), F.lit(iri)
-                    )
-                )
-                gms.append(gm)
-            gdf = _reduce(
-                lambda a, b: a.unionByName(b, allowMissingColumns=True), parts2
-            )
-            gcols = [{c for c in p.columns if not _is_companion(c)} for p in parts2]
-            g_maybe = (
-                set.union(*gcols) - set.intersection(*gcols)
-            ) | set.union(*gms)
-        else:
-            def _scoped(pats, _iri=str(gterm)):
-                return graph.graph_scoped_bgp(_iri, pats)
-
-            gdf, g_maybe = _eval_where(graph, gq, _scoped)
-            if gdf is None:
-                gdf = _unit_frame(graph)
-        if df is None:
-            df = gdf
-            maybe_unbound |= g_maybe
-        else:
-            shared = [
-                c for c in df.columns if c in gdf.columns and not _is_companion(c)
-            ]
-            if set(shared) & (maybe_unbound | g_maybe):
-                df = optional_join(
-                    df,
-                    gdf,
-                    maybe_unbound=maybe_unbound,
-                    right_maybe=g_maybe,
-                    how="inner",
-                )
-                # the inner-join merge binds shared vars the graph side
-                # always binds; its own nullable vars stay maybe-unbound
-                maybe_unbound -= set(shared) - g_maybe
-                maybe_unbound |= g_maybe
-            else:
-                gdf = gdf.drop(
-                    *[c for c in gdf.columns if _is_companion(c) and c in df.columns]
-                )
-                df = (
-                    df.join(gdf, on=shared, how="inner")
-                    if shared
-                    else df.crossJoin(gdf)
-                )
-                maybe_unbound |= g_maybe
-
-    if not optionals_done:
-        # dangling OPTIONALs: the solution so far came from subqueries
-        # or GRAPH groups (or the unit solution) — left-join each group
-        # NOW, with the same maybe-unbound chaining as the main path
-        if df is None:
-            df = _unit_frame(graph)
-        df, maybe_unbound = _apply_optionals(df, maybe_unbound)
-
-    if df is None and (q.values_clauses or q.binds or q.filters or q.exists):
-        df = _unit_frame(graph)
-    if df is None:
-        return None, maybe_unbound
-
-    # VALUES: inline binding tables, broadcast-joined on shared vars.
-    # UNDEF cells (None) place no constraint on that variable in that
-    # row (SPARQL solution compatibility), so rows containing UNDEF
-    # take the compatibility-join path: per shared var, the VALUES cell
-    # must be unbound OR equal; the surviving binding coalesces.
-    for vars_, rows in q.values_clauses:
-        df = _join_values(graph, df, maybe_unbound, vars_, rows)
-    # BIND: new columns (evaluated before FILTERs, see module doc); a
-    # BIND or FILTER reading a var out of the group's scope sees it
-    # UNBOUND (the error value, so a BIND target stays unbound)
-    for e, var in q.binds:
-        t = _term(e, resolver(df.columns))
-        df = df.withColumn(var, t.v)
+    kind = node[0]
+    if kind == "bgp":
+        if scope is not None:
+            return _Solutions(graph.graph_scoped_bgp(scope, node[1]))
+        domains = getattr(graph, "var_spec_domains", None)
+        return _Solutions(
+            graph.bgp(node[1], outer), specs=domains(node[1]) if domains else {}
+        )
+    if kind == "unit":
+        return _Solutions(_unit_frame(graph))
+    if kind == "table":
+        vars_, rows = node[1], node[2]
+        vdf = graph.spark.createDataFrame(rows, ", ".join(f"{v} string" for v in vars_))
+        undef = {v for i, v in enumerate(vars_) if any(r[i] is None for r in rows)}
+        return _Solutions(F.broadcast(vdf), frozenset(undef))
+    if kind == "query":
+        return _Solutions(*_select(graph, node[1], scope))
+    if kind == "union":
+        return _union([evaluate(graph, b, scope, outer) for b in node[1]])
+    if kind == "graph":
+        term, body = node[1], node[2]
+        if not _is_var(term):
+            return evaluate(graph, body, str(term))
+        parts = []
+        for iri in graph.graph_names():
+            p = evaluate(graph, body, iri)
+            parts.append(p._replace(df=p.df.withColumn(_var_name(term), F.lit(iri))))
+        return _union(parts)
+    if kind == "extend":
+        sol, var, e = evaluate(graph, node[1], scope, outer), node[2], node[3]
+        if var in sol.df.columns:
+            raise SparqlError(f"BIND target ?{var} is already in scope")
+        t = _term(e, resolver(sol.df.columns))
+        df = sol.df.withColumn(var, t.v)
         if e[0] == "call" and e[1] in ("STRLANG", "STRDT"):
             # typed-literal constructor: the constant tag lands in the
             # companions (visible to lang()/datatype(), typed CONSTRUCT)
             df = df.withColumns(
                 {f"{var}__islit": t.lit, f"{var}__lang": t.lang, f"{var}__dt": t.dt}
             )
-    if not skip_filters:
-        for f in q.filters:
-            df = df.filter(to_column(f, resolver(df.columns)))
-    # FILTER [NOT] EXISTS: semi/anti join on shared variables; with no
-    # shared variables the group acts as a global non-emptiness gate
-    # (unlike MINUS, NOT EXISTS on disjoint domains still filters).
-    # Bodies are recursive groups; vars nullable on EITHER side get
-    # compatibility conditions.  The body's TOP-LEVEL filters evaluate
-    # over the MERGED outer×body row as part of the join condition —
-    # the Spark shape of ARQ's correlated EXISTS substitution: a
-    # filter referencing an OUTER variable sees the outer row's
-    # binding (deeper-nested filters stay group-local).
-    for neg, eq in q.exists:
-        sub, sub_maybe = _eval_where(graph, eq, bgp_fn, skip_filters=True,
-                                     outer_specs=body_specs)
-        if sub is None:
-            sub = _unit_frame(graph)
-        shared = [c for c in df.columns if c in sub.columns and not _is_companion(c)]
-        how = "left_anti" if neg else "left_semi"
-        compat = [c for c in shared if c in maybe_unbound or c in sub_maybe]
-        if compat or eq.filters:
-            # rename every body column colliding with the outer frame
-            # (shared vars, their companions, the unit marker) so the
-            # join condition can address both sides
-            ren = {c: f"__ex_{c}" for c in sub.columns if c in df.columns}
-            sub = sub.select(
-                *[F.col(c).alias(ren.get(c, c)) for c in sub.columns]
-            )
-            cond = F.lit(True)
-            for c in shared:
-                eq_ = F.col(c) == F.col(f"__ex_{c}")
-                if c in compat:
-                    n = F.lit(False)
-                    if c in maybe_unbound:
-                        n = n | F.col(c).isNull()
-                    if c in sub_maybe:
-                        n = n | F.col(f"__ex_{c}").isNull()
-                    cond = cond & (n | eq_)
-                else:
-                    cond = cond & eq_
-            # substitution: a shared var means the body's binding (≡ the
-            # outer one when both are bound — the join condition equates
-            # them; the body's when the outer is unbound); outer-only vars
-            # resolve from the left side
-            cols = set(df.columns) | set(sub.columns)
-            base = resolver(cols)
-
-            def merged(v, part=""):
-                if v not in shared:
-                    return base(v, part)
-                if not part:
-                    return F.coalesce(base("__ex_" + v), base(v))
-                return base("__ex_" + v if f"__ex_{v}{part}" in cols else v, part)
-
-            for f in eq.filters:
-                cond = cond & to_column(f, merged)
-            df = df.join(sub, cond, how)
-        elif shared:
-            df = df.join(sub.select(*shared), on=shared, how=how)
-        else:
-            df = df.join(sub, F.lit(True), how)
-
-    # MINUS: anti-join on shared variables (no shared vars -> no-op,
-    # per SPARQL MINUS semantics on disjoint domains); removal requires
-    # a compatible solution AND dom(mu1) int dom(mu2) != empty
-    for mq in q.minus:
-        sub, sub_maybe = _eval_where(graph, mq, bgp_fn, outer_specs=body_specs)
-        if sub is None:
-            continue
-        shared = [c for c in df.columns if c in sub.columns and not _is_companion(c)]
-        compat = [c for c in shared if c in maybe_unbound or c in sub_maybe]
-        if compat:
-            sub = sub.select(*[F.col(c).alias(f"__mn_{c}") for c in shared])
-            cond, dom = F.lit(True), F.lit(False)
-            for c in shared:
-                eq_ = F.col(c) == F.col(f"__mn_{c}")
-                if c in compat:
-                    n = F.lit(False)
-                    if c in maybe_unbound:
-                        n = n | F.col(c).isNull()
-                    if c in sub_maybe:
-                        n = n | F.col(f"__mn_{c}").isNull()
-                    cond = cond & (n | eq_)
-                else:
-                    cond = cond & eq_
-                dom = dom | (F.col(c).isNotNull() & F.col(f"__mn_{c}").isNotNull())
-            df = df.join(sub, cond & dom, "left_anti")
-        elif shared:
-            df = df.join(sub.select(*shared), on=shared, how="left_anti")
-    return df, maybe_unbound
+        # an expression error leaves the target unbound
+        return sol._replace(df=df, maybe=sol.maybe | {var})
+    if kind == "filter":
+        sol = evaluate(graph, node[2], scope, outer)
+        df = sol.df
+        for e in node[1]:
+            if e[0] == "exists":
+                body = evaluate(graph, e[2], scope, sol.specs)
+                df = optional_join(
+                    df, body.df, [partial(to_column, f) for f in e[3]], sol.maybe,
+                    "left_anti" if e[1] else "left_semi", body.maybe,
+                )
+            else:
+                df = df.filter(to_column(e, resolver(df.columns)))
+        return sol._replace(df=df)
+    left = evaluate(graph, node[1], scope, outer)
+    right = evaluate(graph, node[2], scope, left.specs)
+    how = {"join": "inner", "leftjoin": "left", "minus": "minus"}[kind]
+    filters = [partial(to_column, f) for f in node[3]] if kind == "leftjoin" else ()
+    df = optional_join(left.df, right.df, filters, left.maybe, how, right.maybe)
+    if kind == "minus":
+        return left._replace(df=df)
+    if kind == "leftjoin":
+        return left._replace(df=df, maybe=left.maybe | (_vars(right.df) - left.certain))
+    maybe = (left.maybe | right.maybe) - left.certain - right.certain
+    return _Solutions(df, frozenset(maybe), {**right.specs, **left.specs})
 
 
-def _join_values(graph, df, maybe_unbound: set, vars_, rows) -> DataFrame:
-    """Join one VALUES binding table into a solution frame (mutates
-    maybe_unbound in place).  All-bound tables take a plain broadcast
-    equi-join; rows with UNDEF cells take the compatibility join —
-    per shared var the VALUES cell must be unbound OR equal, and the
-    surviving binding coalesces."""
-    vdf = graph.spark.createDataFrame(rows, ", ".join(f"{v} string" for v in vars_))
-    shared = [c for c in df.columns if c in vars_]
-    has_undef = any(cell is None for row in rows for cell in row)
-    if not has_undef:
-        return (
-            df.join(F.broadcast(vdf), on=shared, how="inner")
-            if shared
-            else df.crossJoin(F.broadcast(vdf))
-        )
-    vdf = vdf.select(*[F.col(v).alias(f"__val_{v}") for v in vars_])
-    if shared:
-        cond = None
-        for v in shared:
-            # either side unbound -> compatible; both bound -> equal
-            c = (
-                F.col(f"__val_{v}").isNull()
-                | F.col(v).isNull()
-                | (F.col(v) == F.col(f"__val_{v}"))
-            )
-            cond = c if cond is None else cond & c
-        df = df.join(F.broadcast(vdf), cond, "inner")
-    else:
-        df = df.crossJoin(F.broadcast(vdf))
-    for v in vars_:
-        df = (
-            df.withColumn(v, F.coalesce(F.col(v), F.col(f"__val_{v}")))
-            if v in shared
-            else df.withColumn(v, F.col(f"__val_{v}"))
-        )
-    df = df.drop(*[f"__val_{v}" for v in vars_])
-    # a var with an UNDEF cell can remain NULL after the merge
-    for i, v in enumerate(vars_):
-        if any(row[i] is None for row in rows):
-            maybe_unbound.add(v)
-    return df
+def _group_solutions(graph, q: Query, scope=None) -> _Solutions:
+    """The WHERE group, then the trailing VALUES: Join(P, ToMultiSet(
+    data)) AFTER the group pattern (18.2.2), so its vars are out of
+    scope for the group's FILTERs."""
+    tree = translate(q.where)
+    for vars_, rows in q.trailing_values:
+        tree = _join_node(tree, ("table", vars_, rows))
+    return evaluate(graph, tree, scope)
 
 
-def _execute_query(graph, q: Query, bgp_fn=None) -> DataFrame:
-    from ont_d2rq_spark.graph import _is_companion, resolver
-
+def _execute_query(graph, q: Query) -> DataFrame:
     if q.from_graphs or q.from_named:
         # dataset clauses exist only on top-level queries (the grammar
         # gives subqueries no DatasetClause), so this wraps exactly once
         graph = _DatasetGraph(graph, q.from_graphs, q.from_named)
-    if q.form == "DESCRIBE" and not _where_content(q):
+    if q.form == "DESCRIBE" and not q.where:
         return _describe_frame(graph, None, q.describe)
-    df, _maybe = _eval_where(graph, q, bgp_fn)
-    if df is None:  # empty group = one empty solution (SPARQL algebra)
-        df = _unit_frame(graph)
-    # trailing query-level VALUES: Join(P, ToMultiSet(data)) AFTER the
-    # group pattern (18.2.2) — its vars were out of scope for the
-    # group's FILTERs (which saw them as unbound)
-    for vars_, rows in q.trailing_values:
-        df = _join_values(graph, df, _maybe, vars_, rows)
-
+    if q.form == "SELECT":
+        return _select(graph, q)[0]
+    df = _group_solutions(graph, q).df
     if q.form == "ASK":
         return graph.spark.createDataFrame([(not df.isEmpty(),)], "ask boolean")
     if q.form == "CONSTRUCT":
         out = _construct_frame(df, q.template)
-        return out.limit(q.limit) if q.limit is not None else out
-    if q.form == "DESCRIBE":
+    else:
         out = _describe_frame(graph, df, q.describe)
-        return out.limit(q.limit) if q.limit is not None else out
+    return out.limit(q.limit) if q.limit is not None else out
+
+
+def _select(graph, q: Query, scope=None):
+    """A SELECT query's solutions → (frame, the output variables it may
+    leave unbound)."""
+    from ont_d2rq_spark.graph import _is_companion, resolver
+
+    sol = _group_solutions(graph, q, scope)
+    df = sol.df
 
     # aggregation: every aggregate call in SELECT or HAVING becomes one
     # column of a single groupBy — the projection's own alias, else a
@@ -1988,8 +1692,14 @@ def _execute_query(graph, q: Query, bgp_fn=None) -> DataFrame:
         df = df.drop(*hidden)
     order_cols = df.columns if q.order_by else []
 
+    # computed values and projected variables nothing binds can be unbound
+    maybe = sol.maybe | {p[2] for p in q.projections if p[0] == "expr"}
     if q.variables:
-        df = df.select(*q.variables)
+        maybe |= set(q.variables) - set(df.columns)
+        df = df.select(*[
+            v if v in df.columns else F.lit(None).cast("string").alias(v)
+            for v in q.variables
+        ])
     else:  # SELECT * — expose variables, not companion/marker columns
         # (nor __-prefixed internals: path-sequence join vars are not
         # selectable per the SPARQL path rewrite), in the query's order
@@ -2018,4 +1728,4 @@ def _execute_query(graph, q: Query, bgp_fn=None) -> DataFrame:
         df = df.offset(q.offset)
     if q.limit is not None:
         df = df.limit(q.limit)
-    return df
+    return df, frozenset(maybe & set(df.columns))

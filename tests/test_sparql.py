@@ -27,8 +27,9 @@ def test_parse_forms():
     )
     assert q.form == "SELECT" and q.distinct
     assert q.variables == ["c", "name"]
-    assert len(q.patterns) == 2
-    assert q.patterns[0][1].endswith("#type")
+    (kind, patterns), flt = q.where
+    assert kind == "bgp" and len(patterns) == 2 and flt[0] == "filter"
+    assert patterns[0][1].endswith("#type")
     assert q.order_by == [(("var", "name"), True)] and q.limit == 5
 
 
@@ -117,9 +118,9 @@ def test_unsupported_raises():
 def test_formerly_unsupported_now_parse():
     # round 3: GRAPH and UNDEF graduated from the raise list
     q = parse("SELECT ?x WHERE { GRAPH <urn:g> { ?s ?p ?x } }")
-    assert len(q.graphs) == 1 and not q.patterns
+    assert [e[0] for e in q.where] == ["graph"]
     q2 = parse("SELECT ?x WHERE { VALUES ?x { UNDEF } }")
-    assert q2.values_clauses == [(["x"], [(None,)])]
+    assert q2.where == [("values", ["x"], [(None,)])]
 
 
 def test_group_by_aggregates(graph):

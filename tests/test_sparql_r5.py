@@ -258,6 +258,50 @@ def test_compat_join_decomposition_is_hash_joinable(spark):
         assert "__cj_m_" in tail[:600], plan
 
 
+@pytest.mark.parametrize("how", ["inner", "left"])
+def test_compat_join_symmetric_decomposition_is_hash_joinable(spark, how):
+    """The same guard for a RIGHT side that can leave the shared var
+    unbound (the symmetric slice decomposition): every slice pair joins
+    on the shared vars bound on both sides, so no nested-loop join reads
+    the left input."""
+    left = spark.createDataFrame([("a", "r1"), ("b", None)], "n string, r string")
+    right = spark.createDataFrame(
+        [("a", None, "x1"), ("b", "r3", "x3")], "n string, r string, x string"
+    )
+    plan = (
+        optional_join(left, right, maybe_unbound={"r"}, right_maybe={"r"}, how=how)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert "CartesianProduct" not in plan, plan
+
+
+@pytest.mark.parametrize(
+    "right_rows, right_maybe",
+    [([("r1",)], frozenset()), ([("r1",), (None,)], {"r"})],
+    ids=["one_sided", "symmetric"],
+)
+@pytest.mark.parametrize(
+    "how, want",
+    [
+        ("minus", {("b", None)}),
+        ("left_anti", set()),
+        ("left_semi", {("a", "r1"), ("b", None)}),
+    ],
+)
+def test_compat_join_minus_and_exists(spark, right_rows, right_maybe, how, want):
+    """MINUS removes a row only when a shared var is bound on both sides
+    (dom(μ1) ∩ dom(μ2) ≠ ∅), so b's unbound ?r survives it; NOT EXISTS
+    and EXISTS need compatibility alone, which an unbound ?r has with
+    everything."""
+    left = spark.createDataFrame([("a", "r1"), ("b", None)], "n string, r string")
+    right = spark.createDataFrame(right_rows, "r string")
+    out = optional_join(left, right, maybe_unbound={"r"}, how=how, right_maybe=right_maybe)
+    assert {tuple(r) for r in out.collect()} == want
+
+
 def test_compat_join_right_nullable_falls_back_symmetric(spark):
     """A right side that can itself leave the var NULL (subquery with
     its own OPTIONAL) keeps the symmetric isNull-or-equal semantics."""

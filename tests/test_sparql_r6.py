@@ -127,13 +127,15 @@ def test_construct_where_bnode_same_solution_same_label(graph):
 
 # ---------------------------------------------------------------------------
 # metamorphic fuzz harness: hypothesis-generated nested
-# OPTIONAL/UNION/MINUS/BIND/FILTER group trees (depth <=3) executed by
-# the recursive DataFrame evaluator over a tiny explicit triple graph,
-# cross-checked against a naive in-memory solution-multiset evaluator
-# implementing the SPARQL 1.1 algebra directly (Join/LeftJoin/Union/
-# Minus/Extend/Filter over binding dicts).  The reference gets the
-# residual algebra from ARQ's OpExecutor, battle-tested upstream; this
-# engine's recursive _eval_where is home-grown and earns its trust here.
+# OPTIONAL/UNION/MINUS/BIND/FILTER group trees (depth <=3), each group's
+# elements written in a drawn order, executed by the algebra evaluator
+# over a tiny explicit triple graph, cross-checked against a naive
+# in-memory solution-multiset evaluator implementing the SPARQL 1.1
+# algebra directly (§18.2.2 translation in the written order; Join/
+# LeftJoin/Union/Minus/Extend/Filter over binding dicts).  The reference
+# gets the residual algebra from ARQ's OpExecutor, battle-tested
+# upstream; this engine's translate/evaluate is home-grown and earns its
+# trust here.
 # ---------------------------------------------------------------------------
 
 import itertools
@@ -144,8 +146,8 @@ from dataclasses import dataclass, field
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from conftest import TriplesGraph
 from ont_d2rq_spark.compiler.relation import TRIPLE_SCHEMA
-from ont_d2rq_spark.graph import bgp_over_triples
 
 # fixed tiny graph: IRIs and literal lexicals are DISJOINT, every
 # literal is plain (RDF-term equality == lexical equality), so the
@@ -170,43 +172,16 @@ _NTRIPLES = [
 ]
 
 
-class _TriplesGraph:
-    """Minimal graph surface the SPARQL evaluator needs (bgp / spark /
-    named-graph hooks), over an explicit TRIPLE_SCHEMA frame — the same
-    generic path named graphs use (bgp_over_triples)."""
-
-    def __init__(self, spark):
-        self.spark = spark
-        rows = [
-            (EX + s, EX + p, o[1], None, None, o[0] == "lit")
-            for s, p, o in _FUZZ_TRIPLES
-        ]
-        self._tdf = spark.createDataFrame(rows, TRIPLE_SCHEMA).cache()
-        self._tdf.count()
-
-    def bgp(self, patterns):
-        return bgp_over_triples(self._tdf, patterns)
-
-    def graph_names(self):
-        return []
-
-    def graph_scoped_bgp(self, iri, patterns):
-        return bgp_over_triples(
-            self.spark.createDataFrame([], TRIPLE_SCHEMA), patterns
-        )
-
-    def graph_triples(self, iri):
-        return self.spark.createDataFrame([], TRIPLE_SCHEMA)
-
-    def triples(self, fuse=True, distinct="auto"):
-        return self._tdf
-
-
 @pytest.fixture(scope="module")
 def fuzz_graph(spark):
-    g = _TriplesGraph(spark)
-    yield g
-    g._tdf.unpersist()
+    rows = [
+        (EX + s, EX + p, o[1], None, None, o[0] == "lit")
+        for s, p, o in _FUZZ_TRIPLES
+    ]
+    tdf = spark.createDataFrame(rows, TRIPLE_SCHEMA).cache()
+    tdf.count()
+    yield TriplesGraph(tdf)
+    tdf.unpersist()
 
 
 @dataclass
@@ -217,6 +192,20 @@ class _G:
     minus: list = field(default_factory=list)
     binds: list = field(default_factory=list)  # exprs pre-finalize, (name, expr) after
     filters: list = field(default_factory=list)
+    order: list = field(default_factory=list)  # written order: a permutation
+
+
+def _elements(g: _G) -> list:
+    """The group's elements in the order they are written."""
+    els = (
+        [("pat", p) for p in g.patterns]
+        + ([("union", g.union)] if g.union else [])
+        + [("opt", b) for b in g.optionals]
+        + [("minus", b) for b in g.minus]
+        + [("bind", b) for b in g.binds]
+        + [("filter", f) for f in g.filters]
+    )
+    return [els[i] for i in g.order]
 
 
 # --- generation -----------------------------------------------------------
@@ -263,27 +252,30 @@ _bindexpr_t = st.one_of(
 )
 
 
-def _group_t(depth: int, top: bool = False):
-    """Depth-bounded group tree.  Breadth narrows with depth (nested
-    optional_join plans grow multiplicatively in Catalyst analysis
-    cost — a lean tree keeps the 200-example run in CI budget while
-    still exercising every pairwise nesting across examples)."""
+@st.composite
+def _group_t(draw, depth: int, top: bool = False):
+    """Depth-bounded group tree, its elements in a drawn order.
+    Breadth narrows with depth (nested optional_join plans grow
+    multiplicatively in Catalyst analysis cost — a lean tree keeps the
+    200-example run in CI budget while still exercising every pairwise
+    nesting across examples)."""
     sub = _group_t(depth - 1) if depth > 0 else None
-    return st.builds(
-        _G,
-        patterns=st.lists(_pat_t, min_size=1, max_size=3 if top else 2),
-        union=(st.none() | st.tuples(sub, sub)) if sub is not None else st.none(),
-        optionals=st.lists(sub, max_size=2 if top else 1) if sub is not None else st.just([]),
-        minus=st.lists(sub, max_size=1) if sub is not None else st.just([]),
-        binds=st.lists(_bindexpr_t, max_size=1),
-        filters=st.lists(_filter_t, max_size=2),
+    g = _G(
+        patterns=draw(st.lists(_pat_t, min_size=1, max_size=3 if top else 2)),
+        union=draw(st.none() | st.tuples(sub, sub)) if sub is not None else None,
+        optionals=draw(st.lists(sub, max_size=2 if top else 1)) if sub is not None else [],
+        minus=draw(st.lists(sub, max_size=1)) if sub is not None else [],
+        binds=draw(st.lists(_bindexpr_t, max_size=1)),
+        filters=draw(st.lists(_filter_t, max_size=2)),
     )
+    n = len(g.patterns) + bool(g.union) + len(g.optionals) + len(g.minus)
+    g.order = draw(st.permutations(range(n + len(g.binds) + len(g.filters))))
+    return g
 
 
 def _finalize(g: _G, counter=None) -> _G:
-    """Assign globally-unique BIND target names (?b0, ?b1, ...) — BIND
-    may not rebind an in-scope var, and unique targets keep Extend
-    commutative with the engine's fixed fold order."""
+    """Assign globally-unique BIND target names (?b0, ?b1, ...): BIND
+    may not rebind an in-scope var."""
     if counter is None:
         counter = itertools.count()
         if not _proj_vars(g):
@@ -330,15 +322,22 @@ def _filter_txt(f) -> str:
 
 
 def _ser(g: _G) -> str:
-    parts = [f"{_term_txt(s)} {_term_txt(p)} {_term_txt(o)} ." for s, p, o in g.patterns]
-    if g.union:
-        parts.append("{ " + _ser(g.union[0]) + " } UNION { " + _ser(g.union[1]) + " }")
-    parts += ["OPTIONAL { " + _ser(b) + " }" for b in g.optionals]
-    parts += ["MINUS { " + _ser(b) + " }" for b in g.minus]
-    for name, ex in g.binds:
-        src = f"?{ex[1]}" if ex[0] == "copy" else f'"{ex[1]}"'
-        parts.append(f"BIND({src} AS ?{name})")
-    parts += [_filter_txt(f) for f in g.filters]
+    parts = []
+    for kind, x in _elements(g):
+        if kind == "pat":
+            parts.append(" ".join(map(_term_txt, x)) + " .")
+        elif kind == "union":
+            parts.append("{ " + _ser(x[0]) + " } UNION { " + _ser(x[1]) + " }")
+        elif kind == "opt":
+            parts.append("OPTIONAL { " + _ser(x) + " }")
+        elif kind == "minus":
+            parts.append("MINUS { " + _ser(x) + " }")
+        elif kind == "bind":
+            name, ex = x
+            src = f"?{ex[1]}" if ex[0] == "copy" else f'"{ex[1]}"'
+            parts.append(f"BIND({src} AS ?{name})")
+        else:
+            parts.append(_filter_txt(x))
     return " ".join(parts)
 
 
@@ -392,47 +391,42 @@ def _nv_filter(f, sol: dict) -> bool:
 
 
 def _nv_body(g: _G) -> list:
-    """Group solutions with the group's TOP-LEVEL filters NOT applied
-    (they belong to the caller: group filter, or LeftJoin condition
-    when the group is an OPTIONAL operand)."""
-    sols = None
-    if g.patterns:
-        sols = [{}]
-        for pat in g.patterns:
-            sols = _nv_join(sols, _nv_match(pat))
-    if g.union:
-        u = _nv_eval(g.union[0]) + _nv_eval(g.union[1])
-        sols = u if sols is None else _nv_join(sols, u)
-    if sols is None:
-        sols = [{}]
-    for og in g.optionals:
-        right, cond = _nv_body(og), og.filters
-        nxt = []
-        for a in sols:
-            hits = [
-                {**a, **b}
-                for b in right
-                if _nv_compat(a, b)
-                and all(_nv_filter(f, {**a, **b}) for f in cond)
+    """Group solutions by the §18.2.2 translation of its elements in the
+    written order, with the group's TOP-LEVEL filters NOT applied (they
+    belong to the caller: group filter, or LeftJoin condition when the
+    group is an OPTIONAL operand)."""
+    sols = [{}]
+    for kind, x in _elements(g):
+        if kind == "pat":
+            sols = _nv_join(sols, _nv_match(x))
+        elif kind == "union":
+            sols = _nv_join(sols, _nv_eval(x[0]) + _nv_eval(x[1]))
+        elif kind == "opt":
+            right, cond = _nv_body(x), x.filters
+            nxt = []
+            for a in sols:
+                hits = [
+                    {**a, **b}
+                    for b in right
+                    if _nv_compat(a, b)
+                    and all(_nv_filter(f, {**a, **b}) for f in cond)
+                ]
+                nxt.extend(hits if hits else [a])
+            sols = nxt
+        elif kind == "minus":
+            right = _nv_eval(x)
+            sols = [
+                a
+                for a in sols
+                if not any(_nv_compat(a, b) and (a.keys() & b.keys()) for b in right)
             ]
-            nxt.extend(hits if hits else [a])
-        sols = nxt
-    for name, ex in g.binds:
-        nxt = []
-        for s in sols:
-            val = ("lit", ex[1]) if ex[0] == "const" else s.get(ex[1])
-            s2 = dict(s)
-            if val is not None:
-                s2[name] = val
-            nxt.append(s2)
-        sols = nxt
-    for mg in g.minus:
-        right = _nv_eval(mg)
-        sols = [
-            a
-            for a in sols
-            if not any(_nv_compat(a, b) and (a.keys() & b.keys()) for b in right)
-        ]
+        elif kind == "bind":
+            name, ex = x
+            nxt = []
+            for s in sols:
+                val = ("lit", ex[1]) if ex[0] == "const" else s.get(ex[1])
+                nxt.append({**s, name: val} if val is not None else dict(s))
+            sols = nxt
     return sols
 
 
@@ -585,7 +579,8 @@ def test_nps_plus_mixed_directions_cycle(spark):
     ]
     tdf = spark.createDataFrame(rows, TRIPLE_SCHEMA)
     q = parse("SELECT ?s ?o WHERE { ?s !(<http://x/skip>|^<http://x/back>)+ ?o }")
-    ((s, p, o),) = q.patterns
+    ((kind, ((s, p, o),)),) = q.where
+    assert kind == "bgp"
     got = {(r["s"], r["o"]) for r in bgp_over_triples(tdf, [(s, p, o)]).collect()}
     assert got == {(x, y) for x in "abc" for y in "abc"}
 
