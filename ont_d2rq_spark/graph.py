@@ -18,17 +18,22 @@ Spark-first re-expression:
     handles skew.  This is D2RQ's join pushdown without the SQL-string
     generation — the DataFrame DAG *is* the pushed-down query.
   * triples(): full materialization (dump-rdf): fused one-scan-per-table
-    evaluation + global distinct.
-  * CachingGraph: memoized find() results (jena/CachingGraph analogue),
-    the package's one caller-owned persisted cache.
+    evaluation; a global distinct only with distinct=True.
+  * dataset(): the default and named graphs, decided in one place —
+    all SPARQL reads.  The served vocabulary is constant relations
+    beside the bridges, seen by find, triples and every BGP alike.
+
+CachingGraph wraps a graph: memoized find() results (jena/CachingGraph
+analogue), the package's one caller-owned persisted cache.
 """
 
 from __future__ import annotations
 
+import copy
 import dataclasses
 import re
 from functools import reduce
-from typing import Optional, Sequence, Union
+from typing import NamedTuple, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,6 +48,7 @@ from ont_d2rq_spark.compiler.relation import (
     _qualify,
 )
 from ont_d2rq_spark.mapping.model import Mapping
+from ont_d2rq_spark.schema_graph import schema_rows
 
 
 class _Prune(Exception):
@@ -276,8 +282,7 @@ def _evaluate_bgp(source, patterns, outer_specs=None) -> DataFrame:
     if plain is None:
         # no match anywhere: the same bindings over no triples, so the
         # join below yields an empty frame of the BGP's own columns
-        empty = source.spark.createDataFrame([], TRIPLE_SCHEMA)
-        plain = _TripleFrame(empty).pattern_frames(plain_pats)
+        plain = _TripleFrame.empty(source.spark).pattern_frames(plain_pats)
     frames.update(plain)
     # path and mixed-set frames bind what their columns say; a plain
     # pattern binds its variables
@@ -312,14 +317,29 @@ def _evaluate_bgp(source, patterns, outer_specs=None) -> DataFrame:
 class _TripleFrame:
     """BGP source over a materialized TRIPLE_SCHEMA frame: one filter
     per plain pattern — constants, a Lit object's lang and datatype,
-    `isin` for a path alternation (p1|p2)."""
+    `isin` for a path alternation (p1|p2).  No node maker mints its
+    nodes: it has no domains and ignores ``outer_specs``."""
 
     def __init__(self, tdf: DataFrame):
         self.tdf = tdf
         self.spark = tdf.sparkSession
 
+    @classmethod
+    def empty(cls, spark: SparkSession) -> "_TripleFrame":
+        return cls(spark.createDataFrame([], TRIPLE_SCHEMA))
+
     def triples(self) -> DataFrame:
         return self.tdf
+
+    def find(self, s=None, p=None, o=None) -> DataFrame:
+        f = self.tdf
+        for term, col in ((s, "subj"), (p, "pred"), (o, "obj")):
+            if term is not None:
+                f = f.filter(F.col(col) == F.lit(str(term)))
+        return f
+
+    def var_spec_domains(self, patterns) -> dict:
+        return {}
 
     def pattern_frames(self, patterns: dict, outer_specs=None) -> dict:
         return {idx: self._frame(s, p, o) for idx, (s, p, o) in patterns.items()}
@@ -350,11 +370,64 @@ class _TripleFrame:
 
 
 def bgp_over_triples(tdf: DataFrame, patterns) -> DataFrame:
-    """BGP over a materialized triple frame (TRIPLE_SCHEMA) — named
-    graphs whose triples are not mapping-backed (the vocabulary graph)
-    and FROM merges; the data graph keeps the pushdown-compiled
-    VirtualGraph.bgp.  Both run the one evaluator (_evaluate_bgp)."""
+    """BGP over a materialized triple frame (TRIPLE_SCHEMA), through the
+    one evaluator (_evaluate_bgp) that VirtualGraph.bgp runs too."""
     return _evaluate_bgp(_TripleFrame(tdf), patterns)
+
+
+@dataclasses.dataclass(frozen=True)
+class Dataset:
+    """An RDF dataset (SPARQL 1.1 §13): the default graph and the named
+    graphs {iri: source}, each a source of _evaluate_bgp (VirtualGraph
+    or _TripleFrame).  VirtualGraph.dataset() builds it."""
+
+    default: object
+    named: dict
+
+    @property
+    def spark(self) -> SparkSession:
+        return self.default.spark
+
+    def graph(self, iri: Optional[str] = None):
+        """The source a graph name denotes (None: the default graph).
+        An absent name is the empty graph."""
+        if iri is None:
+            return self.default
+        src = self.named.get(iri)
+        return src if src is not None else _TripleFrame.empty(self.spark)
+
+    def from_clauses(self, default_iris, named_iris) -> "Dataset":
+        """The dataset of a query's FROM / FROM NAMED clauses: the merge
+        of the FROM graphs — one keeps its source (and the mapping its
+        pushdown), several merge into one set of triples, none is empty
+        — with the FROM NAMED graphs this dataset has."""
+        named = {iri: self.named[iri] for iri in named_iris if iri in self.named}
+        froms = list(dict.fromkeys(default_iris))
+        if len(froms) == 1:
+            return Dataset(self.graph(froms[0]), named)
+        parts = [self.named[iri].triples() for iri in froms if iri in self.named]
+        if not parts:
+            return Dataset(_TripleFrame.empty(self.spark), named)
+        merged = distinct_triples(reduce(DataFrame.unionByName, parts))
+        return Dataset(_TripleFrame(merged), named)
+
+
+class _ConstantTriple(NamedTuple):
+    """A served vocabulary triple as a relation of three constant node
+    specs, so binding and join-compatibility pruning treat it like a
+    bridge; its frame is the row itself."""
+
+    subject: NodeSpec
+    predicate: NodeSpec
+    object: NodeSpec
+    row: tuple
+    bridge: None = None  # no d2rq:limitInverse
+
+    @classmethod
+    def of(cls, row: tuple) -> "_ConstantTriple":
+        s, p, o, dt, lang, is_lit = row
+        obj = NodeSpec("constant", constant=o, is_literal=is_lit, datatype=dt, lang=lang)
+        return cls(NodeSpec("constant", constant=s), NodeSpec("constant", constant=p), obj, row)
 
 
 def _is_companion(col: str) -> bool:
@@ -855,42 +928,33 @@ def optional_join(
 
 
 class VirtualGraph:
+    # the named graphs (SPARQL GRAPH / FROM): the reference serves the
+    # data and the derived OWL vocabulary as separable graphs
+    # (map/impl/schema/*, SURVEY §2.1 S8)
+    data_graph_iri = "urn:x-d2rq:graph:data"
+    vocabulary_graph_iri = "urn:x-d2rq:graph:vocabulary"
+
     def __init__(self, mapping: Mapping, spark: SparkSession, extra_tables=None):
         self.mapping = mapping
         self.spark = spark
         self.compiler = MappingCompiler(mapping, spark, extra_tables)
         self.bridges: list[CompiledBridge] = self.compiler.compile()
-        # named graphs (SPARQL GRAPH clause): the reference serves the
-        # data and the derived OWL vocabulary as separable graphs
-        # (map/impl/schema/*, SURVEY §2.1 S8)
-        self.data_graph_iri = "urn:x-d2rq:graph:data"
-        self.vocabulary_graph_iri = "urn:x-d2rq:graph:vocabulary"
+        # the OWL vocabulary, derived once; d2rq:serveVocabulary serves
+        # it beside the bridges as constant relations
+        self.vocabulary = schema_rows(mapping)
+        serve = mapping.configuration.serve_vocabulary
+        self.constants = [_ConstantTriple.of(r) for r in self.vocabulary] if serve else []
 
-    def graph_names(self) -> list[str]:
-        return [self.data_graph_iri, self.vocabulary_graph_iri]
-
-    def graph_scoped_bgp(self, graph_iri: str, patterns, outer_specs=None) -> DataFrame:
-        """BGP against one named graph.  The data graph takes the
-        mapping-compiled path (pushdown into the source tables, pruned
-        by ``outer_specs``); the vocabulary graph — tiny, driver-built —
-        evaluates over its literal triple frame.  An unknown graph name
-        yields the empty solution set."""
-        if graph_iri == self.data_graph_iri:
-            return self.bgp(patterns, outer_specs)
-        return bgp_over_triples(self.graph_triples(graph_iri), patterns)
-
-    def graph_triples(self, graph_iri: str) -> DataFrame:
-        """One named graph as a TRIPLE_SCHEMA frame (the SPARQL
-        FROM-clause merge path: a multi-graph default graph unions
-        these).  Unknown graph name → empty frame (SPARQL: a dataset
-        clause naming an absent graph contributes no triples)."""
-        if graph_iri == self.data_graph_iri:
-            return self.triples()
-        if graph_iri == self.vocabulary_graph_iri:
-            from ont_d2rq_spark.schema_graph import schema_triples
-
-            return schema_triples(self.mapping, self.spark)
-        return self.spark.createDataFrame([], TRIPLE_SCHEMA)
+    def dataset(self) -> Dataset:
+        """The one place graph names are decided: the default graph is
+        this graph (the mapping plus the vocabulary it serves), the data
+        graph the mapping alone, the vocabulary graph its triple frame."""
+        data = copy.copy(self)
+        data.constants = []
+        vocabulary = _TripleFrame(self.spark.createDataFrame(self.vocabulary, TRIPLE_SCHEMA))
+        return Dataset(
+            self, {self.data_graph_iri: data, self.vocabulary_graph_iri: vocabulary}
+        )
 
     # ------------------------------------------------------------------
     # node binding (reference: TripleRelation.selectTriple + NodeMaker
@@ -1019,18 +1083,18 @@ class VirtualGraph:
         return cb, constraints, post
 
     def _candidates(self, s, p, o) -> list[dict]:
-        """Every bridge that can match pattern (s, p, o), bound to it
-        by _bind_bridge; a tuple predicate is a SPARQL path alternation
-        (p1|p2), matched by a bridge that can produce ANY alternative.
-        Each candidate: {cb, constraints, post, popt, varspecs}, with
-        ``varspecs`` = {var name: the NodeSpec that binds it}."""
+        """Every bridge or constant triple that can match pattern (s, p,
+        o), bound to it by _bind_bridge; a tuple predicate is a SPARQL
+        path alternation (p1|p2), matched by a bridge that can produce
+        ANY alternative.  Each candidate: {cb, constraints, post,
+        varspecs}, ``varspecs`` = {var name: the NodeSpec binding it}."""
 
         def const(term):
             return None if term is None or _is_var(term) else term
 
         cands = []
         for popt in p if isinstance(p, tuple) else (p,):
-            for cb in self.bridges:
+            for cb in self.bridges + self.constants:
                 try:
                     bound, constraints, post = self._bind_bridge(
                         cb, const(s), const(popt), const(o)
@@ -1042,15 +1106,22 @@ class VirtualGraph:
                     if term is not None and _is_var(term):
                         varspecs.setdefault(_var_name(term), spec)
                 cands.append(
-                    {
-                        "cb": bound,
-                        "constraints": constraints,
-                        "post": post,
-                        "popt": popt,
-                        "varspecs": varspecs,
-                    }
+                    {"cb": bound, "constraints": constraints, "post": post, "varspecs": varspecs}
                 )
         return cands
+
+    def _candidate_frames(self, cands: list) -> list[DataFrame]:
+        """The candidates' triple frames: each bridge's, bound by its
+        constraints, then one frame of the constant triples."""
+        frames = [
+            self.compiler.bridge_df(c["cb"], c["constraints"], c["post"])
+            for c in cands
+            if not isinstance(c["cb"], _ConstantTriple)
+        ]
+        rows = [c["cb"].row for c in cands if isinstance(c["cb"], _ConstantTriple)]
+        if rows:
+            frames.append(self.spark.createDataFrame(rows, TRIPLE_SCHEMA))
+        return frames
 
     # ------------------------------------------------------------------
     def find(
@@ -1067,30 +1138,10 @@ class VirtualGraph:
         literals are strings — TypedNodeMaker unification)."""
         if o is not None and (o_datatype is not None or o_lang is not None):
             o = Lit(o, datatype=o_datatype, lang=o_lang)
-        frames = []
-        for cb in self.bridges:
-            try:
-                cb, constraints, post = self._bind_bridge(cb, s, p, o)
-            except _Prune:
-                continue
-            frames.append(self.compiler.bridge_df(cb, constraints, post))
-        # d2rq:serveVocabulary: the schema graph answers find() too
-        # (ont-d2rq unions the OWL vocabulary with the data graph)
-        if self.mapping.configuration.serve_vocabulary:
-            from ont_d2rq_spark.schema_graph import schema_rows
-
-            rows = [
-                r
-                for r in schema_rows(self.mapping)
-                if (s is None or r[0] == s)
-                and (p is None or r[1] == p)
-                and (o is None or r[2] == o)
-            ]
-            if rows:
-                frames.append(self.spark.createDataFrame(rows, TRIPLE_SCHEMA))
+        frames = self._candidate_frames(self._candidates(s, p, o))
         if not frames:
             return self.spark.createDataFrame([], TRIPLE_SCHEMA)
-        return reduce(lambda a, b: a.unionByName(b), frames)
+        return reduce(DataFrame.unionByName, frames)
 
     # ------------------------------------------------------------------
     # join-compatibility pruning (find/URIMakerRule.java): when two
@@ -1266,14 +1317,11 @@ class VirtualGraph:
             idx: reduce(
                 DataFrame.unionByName,
                 [
-                    _bindings(
-                        self.compiler.bridge_df(c["cb"], c["constraints"], c["post"]),
-                        ((s, "subj"), (c["popt"], "pred"), (o, "obj")),
-                    )
-                    for c in meta[idx]
+                    _bindings(f, ((s, "subj"), (p, "pred"), (o, "obj")))
+                    for f in self._candidate_frames(meta[idx])
                 ],
             )
-            for idx, (s, _, o) in patterns.items()
+            for idx, (s, p, o) in patterns.items()
         }
 
     def bgp(
@@ -1321,10 +1369,9 @@ class VirtualGraph:
             if not frames:
                 return self.spark.createDataFrame([], TRIPLE_SCHEMA)
             df = reduce(lambda a, b: a.unionByName(b), frames)
-        if self.mapping.configuration.serve_vocabulary:
-            from ont_d2rq_spark.schema_graph import schema_triples
-
-            df = df.unionByName(schema_triples(self.mapping, self.spark))
+        if self.constants:
+            rows = [c.row for c in self.constants]
+            df = df.unionByName(self.spark.createDataFrame(rows, TRIPLE_SCHEMA))
         if distinct is True:
             df = distinct_triples(df)
         return df

@@ -366,7 +366,7 @@ class _P:
         """DatasetClause*: FROM <iri> | FROM NAMED <iri>.  The reference
         inherits dataset handling from ARQ (engine/QueryEngineD2RQ.java
         delegates query-level dataset construction); here the clauses
-        select/merge named graphs before evaluation (_DatasetGraph)."""
+        derive the query's dataset (Dataset.from_clauses)."""
         while self.kw("FROM"):
             named = bool(self.kw("NAMED"))
             t = self.peek()
@@ -1297,11 +1297,13 @@ def _construct_frame(df: DataFrame, template: list) -> DataFrame:
 
 
 def _describe_frame(
-    graph, df: Optional[DataFrame], nodes: list, max_bnode_depth: int = 8
+    src, df: Optional[DataFrame], nodes: list, max_bnode_depth: int = 8
 ) -> DataFrame:
-    """DESCRIBE with full Concise Bounded Description: all outbound
-    triples of the described nodes, plus — to a fixpoint — the outbound
-    triples of every blank node reached as an object (Jena CBD).  The
+    """DESCRIBE with full Concise Bounded Description over ``src``, the
+    dataset's default graph: all outbound triples of the described
+    nodes (a constant one by a bound-subject find), plus — to a
+    fixpoint — the outbound triples of every blank node reached as an
+    object (Jena CBD).  The
     mapping mints stable `_:b…` labels, so bNode objects are detected
     lexically; depth is bounded by `max_bnode_depth` (the mapping caps
     real bNode depth far below it)."""
@@ -1316,11 +1318,11 @@ def _describe_frame(
             if df is None:
                 raise SparqlError(f"DESCRIBE {term} needs a WHERE clause")
             if all_t is None:
-                all_t = graph.triples(fuse=True)
+                all_t = src.triples()
             vals = df.select(F.col(_var_name(term)).alias("subj")).distinct()
             frames.append(all_t.join(F.broadcast(vals), "subj", "left_semi"))
         else:
-            frames.append(graph.find(s=str(term)))
+            frames.append(src.find(s=str(term)))
     out = _reduce(lambda a, b: a.unionByName(b), frames)
     # CBD fixpoint: chase bNode objects, FULLY DISTRIBUTED (no driver
     # collect — same discipline as operators/closure.py): each round
@@ -1331,7 +1333,7 @@ def _describe_frame(
     # count — one Spark job per round, nothing re-executed.  The
     # frontier is explicitly broadcast (iterative outputs carry no
     # stats, so Catalyst would otherwise pick a sort-merge join).
-    described = graph.spark.createDataFrame([], "subj string")
+    described = src.spark.createDataFrame([], "subj string")
     out = out.localCheckpoint(eager=False)  # seed executes once, not per round
     cbd_frames = [out]
     cur = out
@@ -1347,7 +1349,7 @@ def _describe_frame(
         if frontier.count() == 0:
             break
         if all_t is None:
-            all_t = graph.triples(fuse=True)
+            all_t = src.triples()
         cur = all_t.join(F.broadcast(frontier), "subj", "left_semi").localCheckpoint(
             eager=False
         )
@@ -1358,76 +1360,13 @@ def _describe_frame(
 
 
 def execute(graph, query: str) -> DataFrame:
-    """Run a SPARQL query against a VirtualGraph → DataFrame of bindings
-    (SELECT), a single boolean column 'ask' (ASK), or a
+    """Run a SPARQL query against a VirtualGraph, or any Dataset → DataFrame
+    of bindings (SELECT), a single boolean column 'ask' (ASK), or a
     TRIPLE_SCHEMA-shaped frame (CONSTRUCT / DESCRIBE)."""
-    return _execute_query(graph, parse(query))
+    from ont_d2rq_spark.graph import Dataset
 
-
-class _DatasetGraph:
-    """FROM / FROM NAMED dataset view over a VirtualGraph (SPARQL
-    'Specifying RDF Datasets'): when a query carries dataset clauses,
-    the default graph is exactly the merge of the FROM graphs (empty if
-    none) and GRAPH may range only over the FROM NAMED graphs.  The
-    reference gets this behavior from ARQ's DatasetDescription handling
-    (engine/QueryEngineD2RQ.java delegation, public layout); here it is
-    a thin proxy the recursive evaluator sees in place of the graph.
-
-    Scale shape: a SINGLE FROM graph keeps that graph's native BGP path
-    (for the data graph that is the mapping-compiled relation algebra
-    with full source pushdown); only a multi-graph default merge falls
-    back to a unioned triple frame with set-dedup (RDF merge is a set
-    union), which is a full materialize — the rare case, priced
-    accordingly."""
-
-    def __init__(self, base, default_iris, named_iris):
-        self._base = base
-        self._default = list(dict.fromkeys(default_iris))
-        self._named = list(dict.fromkeys(named_iris))
-
-    def __getattr__(self, name):
-        return getattr(self._base, name)
-
-    def graph_names(self) -> list:
-        known = set(self._base.graph_names())
-        return [g for g in self._named if g in known]
-
-    def graph_scoped_bgp(self, graph_iri: str, patterns) -> DataFrame:
-        if graph_iri not in self._named:
-            # GRAPH <iri> outside the FROM NAMED set: empty solutions
-            from ont_d2rq_spark.graph import TRIPLE_SCHEMA, bgp_over_triples
-
-            return bgp_over_triples(
-                self._base.spark.createDataFrame([], TRIPLE_SCHEMA), patterns
-            )
-        return self._base.graph_scoped_bgp(graph_iri, patterns)
-
-    def bgp(self, patterns, outer_specs=None) -> DataFrame:
-        """The default graph's BGP.  ``outer_specs`` (the mapping's
-        domains, VirtualGraph.var_spec_domains) prune only when the
-        default graph is the data graph alone; every other default graph
-        ignores them."""
-        from functools import reduce as _reduce
-
-        from ont_d2rq_spark.graph import TRIPLE_SCHEMA, bgp_over_triples
-
-        if len(self._default) == 1:
-            return self._base.graph_scoped_bgp(self._default[0], patterns, outer_specs)
-        if not self._default:
-            return bgp_over_triples(
-                self._base.spark.createDataFrame([], TRIPLE_SCHEMA), patterns
-            )
-        tdf = _reduce(
-            DataFrame.unionByName,
-            [self._base.graph_triples(g) for g in self._default],
-        ).dropDuplicates()
-        return bgp_over_triples(tdf, patterns)
-
-
-def _unit_frame(graph) -> DataFrame:
-    """The unit solution (one row, no bindings) — SPARQL's Join
-    identity; what an empty group evaluates to."""
-    return graph.spark.range(1).select(F.lit(1).alias("_m"))
+    ds = graph if isinstance(graph, Dataset) else graph.dataset()
+    return _execute_query(ds, parse(query))
 
 
 # ---- the group algebra (SPARQL 1.1 §18.2.2) -----------------------------
@@ -1523,46 +1462,47 @@ def _union(parts: list) -> _Solutions:
     return _Solutions(df, frozenset(_vars(df) - certain))
 
 
-def evaluate(graph, node: tuple, scope: Optional[str] = None, outer=None) -> _Solutions:
-    """Evaluate an algebra tree (translate) over ``graph``.  ``scope``
-    is the named graph a GRAPH clause put the BGPs in (None: the default
-    graph); ``outer`` the specs of the solutions this node's result
-    joins to, which prune its BGPs (sound because a pruned row could
-    never be compatible with them).  Join, LeftJoin, Minus and EXISTS
-    all run through graph.optional_join, which applies SPARQL's
+def evaluate(ds, node: tuple, scope: Optional[str] = None, outer=None) -> _Solutions:
+    """Evaluate an algebra tree (translate) over the Dataset ``ds``.
+    ``scope`` is the named graph a GRAPH clause put the BGPs in (None:
+    the default graph); ``outer`` the specs of the solutions this node's
+    result joins to, which prune its BGPs (sound because a pruned row
+    could never be compatible with them).  Join, LeftJoin, Minus and
+    EXISTS all run through graph.optional_join, which applies SPARQL's
     compatibility rule to the variables either side may leave unbound."""
-    from ont_d2rq_spark.graph import _is_var, _var_name, optional_join, resolver
+    from ont_d2rq_spark.graph import _evaluate_bgp, _is_var, _var_name, optional_join, resolver
 
     kind = node[0]
     if kind == "bgp":
-        if scope is not None:
-            return _Solutions(graph.graph_scoped_bgp(scope, node[1]))
-        domains = getattr(graph, "var_spec_domains", None)
+        src = ds.graph(scope)
         return _Solutions(
-            graph.bgp(node[1], outer), specs=domains(node[1]) if domains else {}
+            _evaluate_bgp(src, node[1], outer), specs=src.var_spec_domains(node[1])
         )
-    if kind == "unit":
-        return _Solutions(_unit_frame(graph))
+    if kind == "unit":  # one row, no bindings: what an empty group is
+        return _Solutions(ds.spark.range(1).select(F.lit(1).alias("_m")))
     if kind == "table":
         vars_, rows = node[1], node[2]
-        vdf = graph.spark.createDataFrame(rows, ", ".join(f"{v} string" for v in vars_))
+        vdf = ds.spark.createDataFrame(rows, ", ".join(f"{v} string" for v in vars_))
         undef = {v for i, v in enumerate(vars_) if any(r[i] is None for r in rows)}
         return _Solutions(F.broadcast(vdf), frozenset(undef))
     if kind == "query":
-        return _Solutions(*_select(graph, node[1], scope))
+        return _Solutions(*_select(ds, node[1], scope))
     if kind == "union":
-        return _union([evaluate(graph, b, scope, outer) for b in node[1]])
+        return _union([evaluate(ds, b, scope, outer) for b in node[1]])
     if kind == "graph":
         term, body = node[1], node[2]
         if not _is_var(term):
-            return evaluate(graph, body, str(term))
-        parts = []
-        for iri in graph.graph_names():
-            p = evaluate(graph, body, iri)
-            parts.append(p._replace(df=p.df.withColumn(_var_name(term), F.lit(iri))))
+            return evaluate(ds, body, str(term), outer)
+        g, parts = _var_name(term), []
+        for iri in ds.named:
+            p = evaluate(ds, body, iri, outer)
+            parts.append(p._replace(df=p.df.withColumn(g, F.lit(iri))))
+        if not parts:  # no solutions, with the body's columns ("" is absent)
+            p = evaluate(ds, body, "", outer)
+            return _Solutions(p.df.withColumn(g, F.lit(None).cast("string")).limit(0))
         return _union(parts)
     if kind == "extend":
-        sol, var, e = evaluate(graph, node[1], scope, outer), node[2], node[3]
+        sol, var, e = evaluate(ds, node[1], scope, outer), node[2], node[3]
         if var in sol.df.columns:
             raise SparqlError(f"BIND target ?{var} is already in scope")
         t = _term(e, resolver(sol.df.columns))
@@ -1576,11 +1516,11 @@ def evaluate(graph, node: tuple, scope: Optional[str] = None, outer=None) -> _So
         # an expression error leaves the target unbound
         return sol._replace(df=df, maybe=sol.maybe | {var})
     if kind == "filter":
-        sol = evaluate(graph, node[2], scope, outer)
+        sol = evaluate(ds, node[2], scope, outer)
         df = sol.df
         for e in node[1]:
             if e[0] == "exists":
-                body = evaluate(graph, e[2], scope, sol.specs)
+                body = evaluate(ds, e[2], scope, sol.specs)
                 df = optional_join(
                     df, body.df, [partial(to_column, f) for f in e[3]], sol.maybe,
                     "left_anti" if e[1] else "left_semi", body.maybe,
@@ -1588,8 +1528,8 @@ def evaluate(graph, node: tuple, scope: Optional[str] = None, outer=None) -> _So
             else:
                 df = df.filter(to_column(e, resolver(df.columns)))
         return sol._replace(df=df)
-    left = evaluate(graph, node[1], scope, outer)
-    right = evaluate(graph, node[2], scope, left.specs)
+    left = evaluate(ds, node[1], scope, outer)
+    right = evaluate(ds, node[2], scope, left.specs)
     how = {"join": "inner", "leftjoin": "left", "minus": "minus"}[kind]
     filters = [partial(to_column, f) for f in node[3]] if kind == "leftjoin" else ()
     df = optional_join(left.df, right.df, filters, left.maybe, how, right.maybe)
@@ -1601,41 +1541,41 @@ def evaluate(graph, node: tuple, scope: Optional[str] = None, outer=None) -> _So
     return _Solutions(df, frozenset(maybe), {**right.specs, **left.specs})
 
 
-def _group_solutions(graph, q: Query, scope=None) -> _Solutions:
+def _group_solutions(ds, q: Query, scope=None) -> _Solutions:
     """The WHERE group, then the trailing VALUES: Join(P, ToMultiSet(
     data)) AFTER the group pattern (18.2.2), so its vars are out of
     scope for the group's FILTERs."""
     tree = translate(q.where)
     for vars_, rows in q.trailing_values:
         tree = _join_node(tree, ("table", vars_, rows))
-    return evaluate(graph, tree, scope)
+    return evaluate(ds, tree, scope)
 
 
-def _execute_query(graph, q: Query) -> DataFrame:
+def _execute_query(ds, q: Query) -> DataFrame:
     if q.from_graphs or q.from_named:
         # dataset clauses exist only on top-level queries (the grammar
-        # gives subqueries no DatasetClause), so this wraps exactly once
-        graph = _DatasetGraph(graph, q.from_graphs, q.from_named)
+        # gives subqueries no DatasetClause)
+        ds = ds.from_clauses(q.from_graphs, q.from_named)
     if q.form == "DESCRIBE" and not q.where:
-        return _describe_frame(graph, None, q.describe)
+        return _describe_frame(ds.default, None, q.describe)
     if q.form == "SELECT":
-        return _select(graph, q)[0]
-    df = _group_solutions(graph, q).df
+        return _select(ds, q)[0]
+    df = _group_solutions(ds, q).df
     if q.form == "ASK":
-        return graph.spark.createDataFrame([(not df.isEmpty(),)], "ask boolean")
+        return ds.spark.createDataFrame([(not df.isEmpty(),)], "ask boolean")
     if q.form == "CONSTRUCT":
         out = _construct_frame(df, q.template)
     else:
-        out = _describe_frame(graph, df, q.describe)
+        out = _describe_frame(ds.default, df, q.describe)
     return out.limit(q.limit) if q.limit is not None else out
 
 
-def _select(graph, q: Query, scope=None):
+def _select(ds, q: Query, scope=None):
     """A SELECT query's solutions → (frame, the output variables it may
     leave unbound)."""
     from ont_d2rq_spark.graph import _is_companion, resolver
 
-    sol = _group_solutions(graph, q, scope)
+    sol = _group_solutions(ds, q, scope)
     df = sol.df
 
     # aggregation: every aggregate call in SELECT or HAVING becomes one

@@ -8,7 +8,7 @@ from collections import Counter
 import pytest
 
 from conftest import SF_SMALL as SF
-from conftest import TriplesGraph
+from conftest import triples_dataset
 from ont_d2rq_spark import queries
 from ont_d2rq_spark.compiler.relation import TRIPLE_SCHEMA
 from ont_d2rq_spark.examples import tpch_mapping
@@ -16,6 +16,8 @@ from ont_d2rq_spark.graph import VirtualGraph
 from ont_d2rq_spark.sparql import execute
 
 EX = "http://example.org/"
+OWL = "http://www.w3.org/2002/07/owl#"
+RDFS = "http://www.w3.org/2000/01/rdf-schema#"
 PFX = f"PREFIX ex: <{EX}> PREFIX : <http://e/> "
 
 
@@ -54,7 +56,7 @@ def test_group_elements_apply_in_written_order(spark, where, want):
         ("http://e/b1", "http://e/q", "http://e/c1", None, None, False),
         ("http://e/c2", "http://e/r", "http://e/d2", None, None, False),
     ]
-    g = TriplesGraph(spark.createDataFrame(rows, TRIPLE_SCHEMA))
+    g = triples_dataset(spark.createDataFrame(rows, TRIPLE_SCHEMA))
     got = execute(g, PFX + f"SELECT ?a ?b ?c ?d WHERE {{ {where} }}").collect()
     assert [tuple(r) for r in got] == want
 
@@ -116,22 +118,30 @@ SHAPES = {
         {{ SELECT ?c ?n WHERE {{
             ?c a ex:Customer
             OPTIONAL {{ ?c ex:inNation ?n FILTER(?n != <{EX}nation/1>) }} }} }} }}""",
+    # the default graph serves the vocabulary (d2rq:serveVocabulary)
+    "count_all": "SELECT (COUNT(*) AS ?n) WHERE { ?s ?p ?o }",
+    "vocabulary_classes": f"PREFIX owl: <{OWL}> SELECT ?c WHERE {{ ?c a owl:Class }}",
+    # vocabulary and bridge candidates pruned against each other on ?p
+    "vocabulary_cross_join": f"""PREFIX rdfs: <{RDFS}>
+        SELECT ?p ?x ?y WHERE {{ ?p rdfs:domain ex:Nation . ?x ?p ?y }}""",
+    "describe_class": f"DESCRIBE <{EX}Customer>",
 }
 
 
 @pytest.fixture(scope="module")
-def dump_graph(spark, graph):
-    from ont_d2rq_spark.schema_graph import schema_triples
-
-    tdf = graph.triples(distinct=True).cache()
-    yield TriplesGraph(
-        tdf,
-        {
-            graph.data_graph_iri: tdf,
-            graph.vocabulary_graph_iri: schema_triples(graph.mapping, spark),
-        },
-    )
-    tdf.unpersist()
+def dump_graph(graph):
+    """The mapping's dataset with every graph materialized: each
+    source's dump (triples(), distinct='auto') as one triple frame.  The
+    dump keeps the multiset the bridges mint — sf0.001 repeats some
+    lineitem keys, so a deduplicated dump would count fewer solutions
+    than the mapping by design."""
+    ds = graph.dataset()
+    sources = {None: ds.default, **ds.named}
+    frames = {iri: src.triples().cache() for iri, src in sources.items()}
+    default = frames.pop(None)
+    yield triples_dataset(default, frames)
+    for f in [default, *frames.values()]:
+        f.unpersist()
 
 
 def _answer(g, spark, case, monkeypatch):
@@ -145,3 +155,40 @@ def _answer(g, spark, case, monkeypatch):
 def test_mapping_agrees_with_its_dump(spark, graph, dump_graph, case, monkeypatch):
     want = _answer(dump_graph, spark, case, monkeypatch)
     assert _answer(graph, spark, case, monkeypatch) == want
+
+
+# ---------------------------------------------------------------------------
+# one dataset for every read: the default graph serves the vocabulary,
+# the data graph does not, and FROM / GRAPH read only what they name
+# ---------------------------------------------------------------------------
+
+DATA = "urn:x-d2rq:graph:data"
+VOCABULARY = "urn:x-d2rq:graph:vocabulary"
+
+
+def test_vocabulary_is_in_the_default_graph_only(graph):
+    from ont_d2rq_spark import RDF_TYPE
+    from ont_d2rq_spark.schema_graph import schema_rows
+
+    classes = {r[0] for r in schema_rows(graph.mapping) if r[1:3] == (RDF_TYPE, OWL + "Class")}
+
+    def answer(dataset, where):
+        q = f"PREFIX owl: <{OWL}> SELECT ?c {dataset} WHERE {{ {where} }}"
+        return sorted(r["c"] for r in execute(graph, q).collect())
+
+    assert classes and answer("", "?c a owl:Class") == sorted(classes)
+    assert answer(f"FROM <{DATA}>", "?c a owl:Class") == []
+    assert answer(f"FROM <{DATA}> FROM <urn:nope>", "?c a owl:Class") == []
+    assert answer("", f"GRAPH <{DATA}> {{ ?c a owl:Class }}") == []
+
+
+def test_describe_reads_the_from_graph(graph):
+    q = f"DESCRIBE <{EX}customer/1>"
+    assert execute(graph, q).count() > 0
+    assert execute(graph, f"{q} FROM <{VOCABULARY}>").count() == 0
+
+
+def test_graph_variable_without_named_graphs_is_empty(graph):
+    df = execute(graph, f"SELECT * FROM <{DATA}> WHERE {{ GRAPH ?g {{ ?s ?p ?o }} }}")
+    assert df.columns == ["g", "s", "p", "o"]
+    assert df.count() == 0

@@ -146,7 +146,7 @@ from dataclasses import dataclass, field
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from conftest import TriplesGraph
+from conftest import triples_dataset
 from ont_d2rq_spark.compiler.relation import TRIPLE_SCHEMA
 
 # fixed tiny graph: IRIs and literal lexicals are DISJOINT, every
@@ -180,7 +180,7 @@ def fuzz_graph(spark):
     ]
     tdf = spark.createDataFrame(rows, TRIPLE_SCHEMA).cache()
     tdf.count()
-    yield TriplesGraph(tdf)
+    yield triples_dataset(tdf)
     tdf.unpersist()
 
 

@@ -9,8 +9,9 @@ per module), the JVM's JIT compile and GC seconds over the leaf
 threads included) and the self time of every public package function
 that ``perfbench.trace`` wraps.
 
-Usage: python tools/profile.py <leaf|dump|dump_distinct|all> [--plans]
-  leaf   a key of __spark_entry__.queries(), or minhash_xxhash64
+Usage: python tools/profile.py <leaf|dump|dump_distinct|all>... [--plans]
+  leaf   a key of __spark_entry__.queries(), or minhash_xxhash64; several
+         leaves run in one session, in the order given
   all    every leaf bench.py times
   data   $SPARK_GRAFT_SF_DIR (default: the sf0.1 test tables, as bench.py)
 Writes BENCH/layers.json, stamped with commit, nproc and date;
@@ -121,10 +122,14 @@ def profile(spark, leaves: list[str], sf_dir: str, plans_dir: Path | None = None
 
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("leaf", help="registry key, minhash_xxhash64, dump, dump_distinct or all")
+    ap.add_argument(
+        "leaf", nargs="+", help="registry key, minhash_xxhash64, dump, dump_distinct or all"
+    )
     ap.add_argument("--plans", action="store_true", help="write plans/<leaf>.txt")
     args = ap.parse_args(argv)
-    leaves = BENCH_LEAVES if args.leaf == "all" else [args.leaf]
+    leaves = list(dict.fromkeys(
+        leaf for arg in args.leaf for leaf in (BENCH_LEAVES if arg == "all" else [arg])
+    ))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     plans_dir = REPO / "plans" if args.plans else None
     if plans_dir is not None:
