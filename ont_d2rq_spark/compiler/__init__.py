@@ -2,7 +2,6 @@ from ont_d2rq_spark.compiler.relation import (
     CompiledBridge,
     MappingCompiler,
     NodeSpec,
-    NotInvertible,
     TRIPLE_SCHEMA,
 )
 
@@ -10,6 +9,5 @@ __all__ = [
     "CompiledBridge",
     "MappingCompiler",
     "NodeSpec",
-    "NotInvertible",
     "TRIPLE_SCHEMA",
 ]

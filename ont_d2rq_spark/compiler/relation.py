@@ -11,9 +11,12 @@ Differences by design (Spark-first, not a port):
   * A "relation" here is a lazily-built DataFrame DAG; Catalyst does
     projection pruning, predicate pushdown and join planning, so this
     compiler only decides WHAT to join/filter/mint, never how.
-  * Node binding (find(s,p,o) with constants) happens at plan time in
-    Python — pattern inversion yields typed equality constraints that
-    reach the parquet scan as pushed filters.
+  * NodeSpec is the node maker: per node kind, one place decides how a
+    node is minted (JVM-side Columns), its literal type, how a bound
+    value unifies with it and whether two makers can mint the same
+    node.  Binding (find(s,p,o) with constants) runs at plan time in
+    Python — inversion yields typed equality constraints that reach
+    the parquet scan as pushed filters.
   * Union batching (CompatibleRelationGroup) becomes bridge FUSION:
     bridges over the identical relation are evaluated in ONE scan via
     explode(array(struct(...))) — one pass over the table emits all its
@@ -24,6 +27,7 @@ Differences by design (Spark-first, not a port):
 from __future__ import annotations
 
 import datetime as _dt
+import re
 from dataclasses import dataclass, field
 from functools import reduce
 from typing import Optional
@@ -36,7 +40,6 @@ from ont_d2rq_spark.functions.lexical import datatype_for, lexical_expr
 from ont_d2rq_spark.functions.pattern import UriPattern
 from ont_d2rq_spark.mapping.model import (
     ClassMap,
-    Join,
     Mapping,
     MappingError,
     PropertyBridge,
@@ -77,17 +80,35 @@ _XSD_CAST = {
 }
 
 
-class NotInvertible(Exception):
-    """Node maker cannot be inverted to column constraints → fall back
-    to a post-mint equality filter instead of pruning."""
+class _Prune(Exception):
+    """A node maker can never produce the bound value: the relation is
+    pruned."""
+
+
+_XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
+
+
+def _norm_dt(dt: Optional[str]) -> Optional[str]:
+    """RDF 1.1: a plain string literal IS an xsd:string literal — the
+    datatype() FILTER builtin already maps plain → xsd:string, so
+    typed-literal unification must treat the two as identical too."""
+    return None if dt == _XSD_STRING else dt
+
+
+# a blank node's id: "_:<map name>@@<key 1>@@<key 2>…"
+_BNODE_SEP = "@@"
 
 
 @dataclass(frozen=True)
 class NodeSpec:
-    """NodeMaker analogue: how one of S/P/O is produced from a row."""
+    """NodeMaker analogue (nodes/TypedNodeMaker.java): how one of S/P/O
+    is produced from a row, and the one place each kind's minting,
+    binding, literal type and join-compatibility are decided.
+    ``is_literal`` alone says whether the nodes are literals.  The
+    methods take the bridge ``cb`` (its base alias and aliases) and the
+    compiler (column types); a constant reads neither."""
 
-    kind: str  # uri_pattern|uri_column|uri_expr|bnode|literal_column|
-    #            literal_pattern|literal_expr|constant
+    kind: str  # pattern|column|expr|bnode|constant
     pattern: Optional[UriPattern] = None
     column: Optional[str] = None
     expr: Optional[str] = None
@@ -104,13 +125,167 @@ class NodeSpec:
 
     @property
     def columns(self) -> list[str]:
-        if self.kind in ("uri_pattern", "literal_pattern"):
+        if self.kind == "pattern":
             return self.pattern.columns
-        if self.kind in ("uri_column", "literal_column"):
+        if self.kind == "column":
             return [self.column]
         if self.kind == "bnode":
             return list(self.bnode_columns)
         return []
+
+    @property
+    def _bnode_head(self) -> str:
+        return f"_:{self.bnode_name}{_BNODE_SEP}"
+
+    def literal_type(self, cb, compiler) -> tuple:
+        """(is_literal, datatype, lang) of every node this maker mints; a
+        column literal with neither d2rq:datatype nor d2rq:lang takes its
+        column's XSD type."""
+        if not self.is_literal:
+            return False, None, None
+        if self.kind == "column" and not (self.datatype or self.lang):
+            qcol = _qualify(self.column, cb.base_alias)
+            return True, datatype_for(compiler.column_type(qcol, cb.aliases)), None
+        return True, self.datatype, self.lang
+
+    def value_before_translation(self, cb, compiler) -> Column:
+        """A column node's lexical value: what its translation table
+        maps, and what a large table's broadcast join keys on."""
+        qcol = _qualify(self.column, cb.base_alias)
+        if not self.is_literal:
+            return F.col(qcol).cast("string")
+        return lexical_expr(F.col(qcol), compiler.column_type(qcol, cb.aliases))[0]
+
+    def mint(self, cb, compiler, tt_col: Optional[str] = None):
+        """→ (value Column, datatype Column, lang Column, required-not-null
+        qualified columns).  ``tt_col``: pre-joined translated-value
+        column (large translation tables) replacing the inline
+        map-literal lookup."""
+        resolve = lambda q: F.col(_qualify(q, cb.base_alias))
+        if self.kind == "constant":
+            val = F.lit(self.constant)
+        elif self.kind == "pattern":
+            val = self.pattern.mint_expr(resolve)
+        elif self.kind == "column":
+            val = self.value_before_translation(cb, compiler)
+            if self.translate is not None:
+                # an untranslatable value is NULL: the not-null guard drops it
+                val = F.col(tt_col) if tt_col is not None else _translate(val, self.translate)
+        elif self.kind == "expr":
+            val = F.expr(self.expr).cast("string")
+        else:  # bnode
+            keys = [resolve(c).cast("string") for c in self.bnode_columns]
+            val = F.concat(F.lit(self._bnode_head), F.concat_ws(_BNODE_SEP, *keys))
+        _, datatype, lang = self.literal_type(cb, compiler)
+        required = [_qualify(c, cb.base_alias) for c in self.columns]
+        return val, F.lit(datatype).cast("string"), F.lit(lang).cast("string"), required
+
+    def bind(self, value: str, cb, compiler, out_col: str):
+        """Unify a bound node with this maker (reference: NodeMaker
+        unification, values/*.valueExpression — SURVEY §3 E1 step 2) →
+        (constraints {qualified col: typed const}, post_filters [Column]).
+        Raises _Prune when the maker can never produce ``value``.
+
+        A value carrying a datatype or language (graph.Lit) must match
+        the literal type first (nodes/TypedNodeMaker.java); the value
+        decorators prune next (values/ValueDecorator.java, P4).
+        Patterns, columns (through their translation table) and blank
+        node ids invert to column constants; an expression is not
+        invertible, so its minted ``out_col`` is filtered instead."""
+        want_dt = getattr(value, "datatype", None)
+        want_lang = getattr(value, "lang", None)
+        if want_dt is not None or want_lang is not None:
+            is_lit, dt, lang = self.literal_type(cb, compiler)
+            if (
+                not is_lit
+                or want_lang is not None and (lang or "").lower() != want_lang.lower()
+                or want_dt is not None and _norm_dt(dt) != _norm_dt(want_dt)
+            ):
+                raise _Prune()
+        if (
+            self.value_max_length is not None and len(value) > self.value_max_length
+            or self.value_contains and self.value_contains not in value
+            or self.value_regex and not re.search(self.value_regex, value)
+        ):
+            raise _Prune()
+        if self.kind == "constant":
+            if self.constant != value:
+                raise _Prune()
+            return {}, []
+        if self.kind == "expr":
+            return {}, [F.col(out_col) == F.lit(value)]
+        if self.kind == "pattern":
+            raw = self.pattern.invert(value)
+        elif self.kind == "column":
+            db = value if self.translate is None else self.translate.to_db_value(value)
+            raw = None if db is None else {self.column: db}
+        else:  # bnode
+            keys = value[len(self._bnode_head) :].split(_BNODE_SEP)
+            ok = value.startswith(self._bnode_head) and len(keys) == len(self.bnode_columns)
+            raw = dict(zip(self.bnode_columns, keys)) if ok else None
+        if raw is None:
+            raise _Prune()
+        constraints = {}
+        for col, v in raw.items():
+            q = _qualify(col, cb.base_alias)
+            try:
+                constraints[q] = coerce_constant(v, compiler.column_type(q, cb.aliases))
+            except (ValueError, ArithmeticError):
+                raise _Prune() from None
+        return constraints, []
+
+    def _prefix(self):
+        """(fixed prefix, is_exact) of every node a non-literal maker
+        mints, or None when opaque (columns and expressions)."""
+        if self.kind == "constant":
+            return self.constant, True
+        if self.kind == "pattern":
+            head = self.pattern.parts[0]
+            return (head if isinstance(head, str) else ""), self.pattern.is_constant
+        if self.kind == "bnode":
+            return self._bnode_head, False
+        return None
+
+    def compatible(self, cb, other: "NodeSpec", other_cb, compiler) -> bool:
+        """Can this maker (of bridge ``cb``) and ``other`` (of
+        ``other_cb``) ever produce the SAME node?  False only when
+        provably disjoint (find/URIMakerRule.java): literal against
+        non-literal, different literal types, or fixed prefixes that
+        disagree (so blank nodes of different maps)."""
+        if self.is_literal != other.is_literal:
+            return False
+        if self.is_literal:
+            _, dt_a, la = self.literal_type(cb, compiler)
+            _, dt_b, lb = other.literal_type(other_cb, compiler)
+            return (la or "").lower() == (lb or "").lower() and _norm_dt(dt_a) == _norm_dt(dt_b)
+        pa, pb = self._prefix(), other._prefix()
+        if pa is None or pb is None:
+            return True
+        (sa, ea), (sb, eb) = pa, pb
+        if ea and eb:
+            return sa == sb
+        if ea:
+            return sa.startswith(sb)
+        if eb:
+            return sb.startswith(sa)
+        return sa.startswith(sb) or sb.startswith(sa)
+
+
+def _translate(value: Column, tt: TranslationTable) -> Column:
+    """Dictionary translation (values/Translator.java).  Small
+    inline/CSV tables become a Catalyst map literal (JVM-side,
+    broadcast with the plan); a py translator becomes a vectorized
+    pandas UDF.  LARGE tables never reach here — bridge_df attaches
+    them as broadcast joins (_attach_large_translations).
+    Untranslatable value → NULL → triple dropped (d2rq semantics)."""
+    if tt.to_rdf is not None:
+        from pyspark.sql.functions import pandas_udf
+
+        return pandas_udf(tt.to_rdf, T.StringType())(value.cast("string"))
+    lits = []
+    for k, v in tt.load_pairs().items():
+        lits.extend([F.lit(k), F.lit(v)])
+    return F.element_at(F.create_map(*lits), value.cast("string"))
 
 
 @dataclass
@@ -132,20 +307,6 @@ class CompiledBridge:
     order_desc: bool = False
     limit: Optional[int] = None
     distinct: bool = False
-
-    def relation_key(self):
-        """Bridges with the same key share one scan (fusion; the analogue
-        of algebra/CompatibleRelationGroup.java union batching)."""
-        return (
-            self.base_table,
-            self.base_alias,
-            tuple(sorted(self.aliases.items())),
-            tuple((j.left, j.right) for j in self.joins),
-            self.conditions,
-            self.order_column,
-            self.order_desc,
-            self.limit,
-        )
 
 
 def _qualify(col: str, default_alias: str) -> str:
@@ -261,11 +422,11 @@ class MappingCompiler:
             else None
         )
         if cm.uri_pattern:
-            return NodeSpec("uri_pattern", pattern=UriPattern.parse(cm.uri_pattern))
+            return NodeSpec("pattern", pattern=UriPattern.parse(cm.uri_pattern))
         if cm.uri_column:
-            return NodeSpec("uri_column", column=cm.uri_column, translate=tt)
+            return NodeSpec("column", column=cm.uri_column, translate=tt)
         if cm.uri_sql_expression:
-            return NodeSpec("uri_expr", expr=cm.uri_sql_expression)
+            return NodeSpec("expr", expr=cm.uri_sql_expression)
         if cm.bnode_id_columns:
             return NodeSpec(
                 "bnode", bnode_name=cm.name, bnode_columns=tuple(cm.bnode_id_columns)
@@ -288,7 +449,7 @@ class MappingCompiler:
             return self._subject_spec(tgt)
         if pb.column:
             return NodeSpec(
-                "literal_column",
+                "column",
                 column=pb.column,
                 is_literal=True,
                 datatype=pb.datatype,
@@ -298,7 +459,7 @@ class MappingCompiler:
             )
         if pb.pattern:
             return NodeSpec(
-                "literal_pattern",
+                "pattern",
                 pattern=UriPattern.parse(pb.pattern),
                 is_literal=True,
                 datatype=pb.datatype,
@@ -307,7 +468,7 @@ class MappingCompiler:
             )
         if pb.sql_expression:
             return NodeSpec(
-                "literal_expr",
+                "expr",
                 expr=pb.sql_expression,
                 is_literal=True,
                 datatype=pb.datatype,
@@ -315,11 +476,11 @@ class MappingCompiler:
                 **deco,
             )
         if pb.uri_column:
-            return NodeSpec("uri_column", column=pb.uri_column, translate=tt, **deco)
+            return NodeSpec("column", column=pb.uri_column, translate=tt, **deco)
         if pb.uri_pattern:
-            return NodeSpec("uri_pattern", pattern=UriPattern.parse(pb.uri_pattern), **deco)
+            return NodeSpec("pattern", pattern=UriPattern.parse(pb.uri_pattern), **deco)
         if pb.uri_sql_expression:
-            return NodeSpec("uri_expr", expr=pb.uri_sql_expression, **deco)
+            return NodeSpec("expr", expr=pb.uri_sql_expression, **deco)
         if pb.bnode_id_columns:
             return NodeSpec(
                 "bnode", bnode_name=pb.name, bnode_columns=tuple(pb.bnode_id_columns)
@@ -359,7 +520,7 @@ class MappingCompiler:
             subj = self._subject_spec(cm)
             base_alias, aliases = self._alias_env(cm, pb)
             if pb.dynamic_property:
-                pred = NodeSpec("uri_pattern", pattern=UriPattern.parse(pb.dynamic_property))
+                pred = NodeSpec("pattern", pattern=UriPattern.parse(pb.dynamic_property))
             else:
                 pred = NodeSpec("constant", constant=pb.properties[0])
             obj = self._object_spec(pb)
@@ -501,40 +662,11 @@ class MappingCompiler:
     # entity-linking dictionary would explode the plan / task binary).
     LARGE_TT_THRESHOLD = 10_000
 
-    def _translate_expr(self, value: Column, tt: TranslationTable) -> Column:
-        """Dictionary translation (values/Translator.java).  Small
-        inline/CSV tables become a Catalyst map literal (JVM-side,
-        broadcast with the plan); a py translator becomes a vectorized
-        pandas UDF.  LARGE tables never reach here — bridge_df attaches
-        them as broadcast joins (_attach_large_translations).
-        Untranslatable value → NULL → triple dropped (d2rq semantics)."""
-        if tt.to_rdf is not None:
-            from pyspark.sql.functions import pandas_udf
-
-            fn = tt.to_rdf
-            udf = pandas_udf(fn, T.StringType())
-            return udf(value.cast("string"))
-        pairs = tt.load_pairs()
-        lits = []
-        for k, v in pairs.items():
-            lits.extend([F.lit(k), F.lit(v)])
-        return F.element_at(F.create_map(*lits), value.cast("string"))
-
     def _is_large_tt(self, spec: NodeSpec) -> bool:
         tt = spec.translate
         if tt is None or tt.to_rdf is not None:
             return False
         return len(tt.load_pairs()) >= self.LARGE_TT_THRESHOLD
-
-    def _pre_translate_value(self, cb: CompiledBridge, spec: NodeSpec) -> Column:
-        """The lexical value a column-backed spec feeds INTO its
-        translation table (mirrors _node_exprs' pre-translate path)."""
-        qcol = _qualify(spec.column, cb.base_alias)
-        col = F.col(qcol)
-        if spec.kind == "uri_column":
-            return col.cast("string")
-        val, _ = lexical_expr(col, self.column_type(qcol, cb.aliases))
-        return val
 
     def _attach_large_translations(
         self, df: DataFrame, cb: CompiledBridge
@@ -554,89 +686,19 @@ class MappingCompiler:
             ("predicate", cb.predicate),
             ("object", cb.object),
         ):
-            if not self._is_large_tt(spec) or spec.kind not in (
-                "uri_column",
-                "literal_column",
-            ):
+            if not self._is_large_tt(spec):
                 continue
             out_col = f"__tt_{pos}"
             tdf = self.spark.createDataFrame(
                 list(spec.translate.load_pairs().items()),
                 f"__tt_key_{pos} string, {out_col} string",
             )
-            key = self._pre_translate_value(cb, spec)
+            key = spec.value_before_translation(cb, self)
             df = df.join(
                 F.broadcast(tdf), key == F.col(f"__tt_key_{pos}"), "left"
             ).drop(f"__tt_key_{pos}")
             overrides[pos] = out_col
         return df, overrides
-
-    def _node_exprs(self, cb: CompiledBridge, spec: NodeSpec, tt_col: Optional[str] = None):
-        """→ (value Column, datatype Column, lang Column, is_literal,
-        required-not-null qualified columns).  ``tt_col``: pre-joined
-        translated-value column (large translation tables) replacing the
-        inline map-literal lookup."""
-        resolve = lambda q: F.col(_qualify(q, cb.base_alias))
-        required: list[str] = [_qualify(c, cb.base_alias) for c in spec.columns]
-
-        if spec.kind == "constant":
-            return (
-                F.lit(spec.constant),
-                F.lit(spec.datatype).cast("string"),
-                F.lit(spec.lang).cast("string"),
-                spec.is_literal,
-                [],
-            )
-        if spec.kind in ("uri_pattern", "literal_pattern"):
-            val = spec.pattern.mint_expr(resolve)
-            return (
-                val,
-                F.lit(spec.datatype).cast("string"),
-                F.lit(spec.lang).cast("string"),
-                spec.kind == "literal_pattern",
-                required,
-            )
-        if spec.kind in ("uri_column", "literal_column"):
-            qcol = _qualify(spec.column, cb.base_alias)
-            dt = self.column_type(qcol, cb.aliases)
-            if spec.kind == "uri_column":
-                val = resolve(spec.column).cast("string")
-                datatype, lang, is_lit = None, None, False
-            else:
-                val, inferred = lexical_expr(resolve(spec.column), dt)
-                lang = spec.lang
-                datatype = spec.datatype or (None if lang else inferred)
-                is_lit = True
-            if spec.translate is not None:
-                val = (
-                    F.col(tt_col)
-                    if tt_col is not None
-                    else self._translate_expr(val, spec.translate)
-                )
-                required = [qcol]  # translation null handled by obj-not-null filter
-            return (
-                val,
-                F.lit(datatype).cast("string"),
-                F.lit(lang).cast("string"),
-                is_lit,
-                required,
-            )
-        if spec.kind in ("uri_expr", "literal_expr"):
-            val = F.expr(spec.expr).cast("string")
-            return (
-                val,
-                F.lit(spec.datatype).cast("string"),
-                F.lit(spec.lang).cast("string"),
-                spec.kind == "literal_expr",
-                [],
-            )
-        if spec.kind == "bnode":
-            cols = [resolve(c).cast("string") for c in spec.bnode_columns]
-            val = F.concat(
-                F.lit(f"_:{spec.bnode_name}@@"), F.concat_ws("@@", *cols)
-            )
-            return val, F.lit(None).cast("string"), F.lit(None).cast("string"), False, required
-        raise MappingError(f"unknown node kind {spec.kind}")
 
     def triple_struct(
         self, cb: CompiledBridge, guard_conditions: bool = False, tt_overrides=None
@@ -647,16 +709,16 @@ class MappingCompiler:
         folded into the guard instead of the relation — used by join
         fusion, where bridges with different conditions share one scan."""
         tt_overrides = tt_overrides or {}
-        s_val, _, _, _, s_req = self._node_exprs(cb, cb.subject, tt_overrides.get("subject"))
-        p_val, _, _, _, p_req = self._node_exprs(cb, cb.predicate, tt_overrides.get("predicate"))
-        o_val, o_dt, o_lang, o_lit, o_req = self._node_exprs(cb, cb.object, tt_overrides.get("object"))
+        s_val, _, _, s_req = cb.subject.mint(cb, self, tt_overrides.get("subject"))
+        p_val, _, _, p_req = cb.predicate.mint(cb, self, tt_overrides.get("predicate"))
+        o_val, o_dt, o_lang, o_req = cb.object.mint(cb, self, tt_overrides.get("object"))
         struct = F.struct(
             s_val.cast("string").alias("subj"),
             p_val.cast("string").alias("pred"),
             o_val.cast("string").alias("obj"),
             o_dt.alias("obj_datatype"),
             o_lang.alias("obj_lang"),
-            F.lit(bool(o_lit)).alias("is_literal"),
+            F.lit(bool(cb.object.is_literal)).alias("is_literal"),
         )
         notnull = (
             s_val.isNotNull() & p_val.isNotNull() & o_val.isNotNull()

@@ -9,9 +9,11 @@ Reference layout (SURVEY.md §3):
 
 Spark-first re-expression:
   * find(s,p,o): plan-time binding — each bound term is inverted through
-    every bridge's node maker into typed equality constraints (pruning
-    relations whose pattern/datatype cannot match), constraints reach
-    the parquet scan as pushed filters, survivors union into ONE job.
+    every bridge's node maker (compiler.relation.NodeSpec.bind) into
+    typed equality constraints (pruning relations whose pattern/datatype
+    cannot match), constraints reach the parquet scan as pushed filters,
+    survivors union into ONE job.  This module decides only which
+    bridges a pattern reads; what a node is, the node maker decides.
   * bgp([...patterns...]): each triple pattern → union of candidate
     bridge frames with node values projected to variable columns; shared
     variables become join keys; Catalyst picks broadcast/SMJ and AQE
@@ -31,7 +33,6 @@ from __future__ import annotations
 
 import copy
 import dataclasses
-import re
 from functools import reduce
 from typing import NamedTuple, Optional, Sequence
 
@@ -43,16 +44,13 @@ from ont_d2rq_spark.compiler.relation import (
     MappingCompiler,
     NodeSpec,
     TRIPLE_SCHEMA,
-    coerce_constant,
     distinct_triples,
-    _qualify,
+    _norm_dt,
+    _Prune,
+    _XSD_STRING,
 )
 from ont_d2rq_spark.mapping.model import Mapping
 from ont_d2rq_spark.schema_graph import schema_rows
-
-
-class _Prune(Exception):
-    """Bound node can never be produced by this relation."""
 
 
 class Var(str):
@@ -138,16 +136,6 @@ class PathGroup:
 
     def __repr__(self):
         return f"PathGroup({self.patterns!r})"
-
-
-_XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
-
-
-def _norm_dt(dt: Optional[str]) -> Optional[str]:
-    """RDF 1.1: a plain string literal IS an xsd:string literal — the
-    datatype() FILTER builtin already maps plain → xsd:string, so
-    typed-literal unification must treat the two as identical too."""
-    return None if dt == _XSD_STRING else dt
 
 
 _COMPANION_SUFFIXES = ("__dt", "__lang", "__islit")
@@ -957,108 +945,9 @@ class VirtualGraph:
         )
 
     # ------------------------------------------------------------------
-    # node binding (reference: TripleRelation.selectTriple + NodeMaker
-    # unification, values/*.valueExpression — SURVEY §3 E1 step 2)
+    # node binding (reference: TripleRelation.selectTriple — SURVEY §3 E1
+    # step 2): each bound term is unified by its node maker (NodeSpec.bind)
     # ------------------------------------------------------------------
-    def _literal_meta(self, cb: CompiledBridge, spec: NodeSpec):
-        """Effective (is_literal, datatype, lang) a spec produces —
-        mirrors _node_exprs' datatype inference for typed unification."""
-        if spec.kind in ("uri_pattern", "uri_column", "uri_expr", "bnode"):
-            return False, None, None
-        if spec.kind == "constant":
-            return spec.is_literal, spec.datatype, spec.lang
-        if spec.kind == "literal_column":
-            if spec.datatype:
-                dt = spec.datatype
-            elif spec.lang:
-                dt = None
-            else:
-                from ont_d2rq_spark.functions.lexical import datatype_for
-
-                dt = datatype_for(
-                    self.compiler.column_type(
-                        _qualify(spec.column, cb.base_alias), cb.aliases
-                    )
-                )
-            return True, dt, spec.lang
-        return True, spec.datatype, spec.lang  # literal_pattern / literal_expr
-
-    def _bind(self, cb: CompiledBridge, spec: NodeSpec, value: str, out_col: str):
-        """→ (constraints {qualified col: typed const}, post_filters [Column]).
-        Raises _Prune when the relation cannot produce `value`."""
-        constraints: dict = {}
-        post: list = []
-        # typed-literal unification (nodes/TypedNodeMaker.java): a Lit
-        # carrying datatype/lang prunes relations whose literal type
-        # cannot match, BEFORE any lexical inversion
-        want_dt = getattr(value, "datatype", None)
-        want_lang = getattr(value, "lang", None)
-        if want_dt is not None or want_lang is not None:
-            is_lit, eff_dt, eff_lang = self._literal_meta(cb, spec)
-            if not is_lit:
-                raise _Prune()
-            if want_lang is not None and (eff_lang or "").lower() != want_lang.lower():
-                raise _Prune()
-            if want_dt is not None and _norm_dt(eff_dt) != _norm_dt(want_dt):
-                raise _Prune()
-        # value-decorator pruning (values/ValueDecorator.java, P4)
-        if spec.value_max_length is not None and len(value) > spec.value_max_length:
-            raise _Prune()
-        if spec.value_contains and spec.value_contains not in value:
-            raise _Prune()
-        if spec.value_regex and not re.search(spec.value_regex, value):
-            raise _Prune()
-
-        if spec.kind == "constant":
-            if spec.constant != value:
-                raise _Prune()
-            return constraints, post
-        if spec.kind in ("uri_pattern", "literal_pattern"):
-            inverted = spec.pattern.invert(value)
-            if inverted is None:
-                raise _Prune()
-            for qcol, raw in inverted.items():
-                q = _qualify(qcol, cb.base_alias)
-                try:
-                    constraints[q] = coerce_constant(
-                        raw, self.compiler.column_type(q, cb.aliases)
-                    )
-                except (ValueError, ArithmeticError):
-                    raise _Prune()
-            return constraints, post
-        if spec.kind in ("uri_column", "literal_column"):
-            raw = value
-            if spec.translate is not None:
-                raw = spec.translate.to_db_value(value)
-                if raw is None:
-                    raise _Prune()
-            q = _qualify(spec.column, cb.base_alias)
-            try:
-                constraints[q] = coerce_constant(
-                    raw, self.compiler.column_type(q, cb.aliases)
-                )
-            except (ValueError, ArithmeticError):
-                raise _Prune()
-            return constraints, post
-        if spec.kind == "bnode":
-            parts = value.split("@@")
-            if parts[0] != f"_:{spec.bnode_name}" or len(parts) != 1 + len(
-                spec.bnode_columns
-            ):
-                raise _Prune()
-            for qcol, raw in zip(spec.bnode_columns, parts[1:]):
-                q = _qualify(qcol, cb.base_alias)
-                try:
-                    constraints[q] = coerce_constant(
-                        raw, self.compiler.column_type(q, cb.aliases)
-                    )
-                except (ValueError, ArithmeticError):
-                    raise _Prune()
-            return constraints, post
-        # expression makers are not invertible → post-mint equality filter
-        post.append(F.col(out_col) == F.lit(value))
-        return constraints, post
-
     def _bind_bridge(self, cb: CompiledBridge, s, p, o):
         """Bind one bridge to a triple pattern whose terms are constants
         or None (free) — TripleRelation.selectTriple.  → (cb,
@@ -1074,7 +963,7 @@ class VirtualGraph:
             (cb.object, o, "obj"),
         ):
             if val is not None:
-                c, f = self._bind(cb, spec, val, col)
+                c, f = spec.bind(val, cb, self.compiler, col)
                 constraints.update(c)
                 post.extend(f)
         inverse_limit = cb.bridge.limit_inverse if cb.bridge is not None else None
@@ -1146,59 +1035,11 @@ class VirtualGraph:
     # ------------------------------------------------------------------
     # join-compatibility pruning (find/URIMakerRule.java): when two
     # patterns share a variable, candidate relations whose node makers
-    # can NEVER mint the same node are dropped at plan time — the scan
+    # can NEVER mint the same node (NodeSpec.compatible) are dropped at
+    # plan time — the scan
     # for ?c ex:inNation ?n never touches the supplier table when
     # another pattern pins ?c to customer URIs.
     # ------------------------------------------------------------------
-    _LIT_KINDS = frozenset({"literal_column", "literal_pattern", "literal_expr"})
-
-    def _is_literal_spec(self, spec: NodeSpec) -> bool:
-        return spec.kind in self._LIT_KINDS or (
-            spec.kind == "constant" and spec.is_literal
-        )
-
-    def _uri_prefix(self, spec: NodeSpec):
-        """(fixed prefix, is_exact) of every URI the spec mints, or None
-        when opaque (uri_column / uri_expr / translated values)."""
-        if spec.kind == "constant":
-            return spec.constant, True
-        if spec.kind == "uri_pattern" and spec.translate is None:
-            p0 = spec.pattern.parts[0]
-            return (p0 if isinstance(p0, str) else ""), spec.pattern.is_constant
-        return None
-
-    def _join_compatible(self, a: NodeSpec, cb_a, b: NodeSpec, cb_b) -> bool:
-        """Can specs a and b ever produce the SAME node?  False only
-        when provably disjoint (prefix mismatch, literal vs URI, typed
-        literal disagreement, different bnode relations)."""
-        a_lit, b_lit = self._is_literal_spec(a), self._is_literal_spec(b)
-        if a_lit != b_lit:
-            return False
-        if a_lit:
-            _, dt_a, la = self._literal_meta(cb_a, a)
-            _, dt_b, lb = self._literal_meta(cb_b, b)
-            return (la or "").lower() == (lb or "").lower() and _norm_dt(
-                dt_a
-            ) == _norm_dt(dt_b)
-        a_bn, b_bn = a.kind == "bnode", b.kind == "bnode"
-        if a_bn or b_bn:
-            if a_bn and b_bn:
-                return a.bnode_name == b.bnode_name
-            pref = self._uri_prefix(b if a_bn else a)
-            return pref is None or pref[0].startswith("_:")
-        pa, pb = self._uri_prefix(a), self._uri_prefix(b)
-        if pa is None or pb is None:
-            return True
-        (sa, ea), (sb, eb) = pa, pb
-        if ea and eb:
-            return sa == sb
-        if ea:
-            return sa.startswith(sb)
-        if eb:
-            return sb.startswith(sa)
-        shorter, longer = (sa, sb) if len(sa) <= len(sb) else (sb, sa)
-        return longer.startswith(shorter)
-
     def var_spec_domains(self, patterns) -> dict:
         """Per-variable candidate NodeSpec domain of a pattern list —
         {var: [(spec, cb), ...]} for every var whose domain is provably
@@ -1269,7 +1110,7 @@ class VirtualGraph:
                             if j == idx or not meta[j]:
                                 continue
                             if not any(
-                                self._join_compatible(spec, c["cb"], o["varspecs"][v], o["cb"])
+                                spec.compatible(c["cb"], o["varspecs"][v], o["cb"], self.compiler)
                                 for o in meta[j]
                                 if v in o["varspecs"]
                             ):
@@ -1303,7 +1144,7 @@ class VirtualGraph:
                     for c in cands
                     if all(
                         any(
-                            self._join_compatible(c["varspecs"][v], c["cb"], ospec, ocb)
+                            c["varspecs"][v].compatible(c["cb"], ospec, ocb, self.compiler)
                             for ospec, ocb in outer_specs[v]
                         )
                         for v in c["varspecs"]
@@ -1349,16 +1190,23 @@ class VirtualGraph:
           'auto' (default) — reference semantics (Relation.isUnique,
             SURVEY §2.7 U2): per-relation DISTINCT only where the
             classmap declares d2rq:containsDuplicates (already applied
-            inside bridge_df); no global dedup.  Bridges mint subjects
-            from per-row keys and predicates are bridge-constants, so
-            cross-bridge duplicates cannot arise from a well-formed
-            mapping — exactly the reasoning the reference applies.
-            This keeps the dump a pure map-side pipeline: scan → mint →
-            union → sink, NO global shuffle (the difference between
-            ~0.6 and ~1.0 scaling efficiency at 4× parallelism).
+            inside bridge_df); no global dedup.  Predicates are bridge
+            constants and subjects are minted from row keys, so the
+            dump holds no duplicate triple when each class map's URI
+            pattern or blank-node columns are a key of its table — the
+            reasoning the reference applies.  The blank-node maker
+            mints one node per distinct key tuple, so rows that repeat
+            a key merge into one node and repeat its triples (the
+            bundled TPC-H tables repeat lineitem's (l_orderkey,
+            l_linenumber): 4,599 distinct keys over 6,000 rows at
+            sf0.001).  This keeps the dump a pure map-side pipeline:
+            scan → mint → union → sink, NO global shuffle (the
+            difference between ~0.6 and ~1.0 scaling efficiency at 4×
+            parallelism).
           True — strict RDF-set semantics: global dropDuplicates on the
-            triple identity (one full shuffle).  Use when the mapping
-            may emit overlapping triples from different bridges.
+            triple identity (one full shuffle).  Use when a key repeats
+            or the mapping may emit overlapping triples from different
+            bridges.
           False — the same as 'auto': no global dedup, and the
             per-relation DISTINCT of d2rq:containsDuplicates still applies
             (the reference's relation semantics, kept in both modes)."""

@@ -13,3 +13,17 @@ def test_profile_reports_jobs_and_self_time(spark, tmp_path):
     assert r["jit_compile_s"] >= 0 and r["jvm_gc_s"] >= 0
     # the plan file holds the plan that ran, not the initial AQE plan
     assert "isFinalPlan=true" in (tmp_path / "dedup_exact.txt").read_text()
+
+
+def test_normalize_plan_drops_session_ids_and_sorts_isnotnull_runs():
+    from tools.profile import normalize_plan
+
+    a = ("+- Filter ((isnotnull(c_nationkey#12L) AND isnotnull(c_custkey#10L)) AND (x#3 > 1))\n"
+         "PushedFilters: [IsNotNull(c_nationkey), IsNotNull(c_custkey)], plan_id=41 RDD[7]\n")
+    b = ("+- Filter ((isnotnull(c_custkey#20L) AND isnotnull(c_nationkey#22L)) AND (x#5 > 1))\n"
+         "PushedFilters: [IsNotNull(c_custkey), IsNotNull(c_nationkey)], plan_id=9 RDD[13]\n")
+    assert normalize_plan(a) == normalize_plan(b)
+    assert normalize_plan(a) == (
+        "+- Filter ((isnotnull(c_custkey) AND isnotnull(c_nationkey)) AND (x > 1))\n"
+        "PushedFilters: [IsNotNull(c_custkey), IsNotNull(c_nationkey)], plan_id= RDD[]\n"
+    )

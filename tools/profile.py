@@ -16,7 +16,8 @@ Usage: python tools/profile.py <leaf|dump|dump_distinct|all>... [--plans]
   data   $SPARK_GRAFT_SF_DIR (default: the sf0.1 test tables, as bench.py)
 Writes BENCH/layers.json, stamped with commit, nproc and date;
 --plans also writes the formatted plan each leaf ran (AQE's final plan)
-to plans/<leaf>.txt.
+to plans/<leaf>.txt, normalized (normalize_plan) so that the plans of
+two checkouts compare with ``diff -r``.
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 import time
 from pathlib import Path
@@ -69,6 +71,48 @@ def leaf_frame(spark, leaf: str, sf_dir: str):
     return __spark_entry__.queries()[leaf](spark, sf_dir)
 
 
+_ISNOTNULL = re.compile(r"(?i)isnotnull\(")
+_JOINER = re.compile(r"[\s()]*(AND|,)[\s()]*")
+
+
+def _sort_isnotnull_runs(line: str) -> str:
+    """Sort each run of ``isnotnull(…)`` terms joined by AND or ','."""
+    spans, i = [], 0
+    while m := _ISNOTNULL.search(line, i):
+        j, depth = m.end(), 1
+        while depth and j < len(line):
+            depth += {"(": 1, ")": -1}.get(line[j], 0)
+            j += 1
+        spans.append((m.start(), j))
+        i = j
+    runs, k = [], 0
+    while k < len(spans):
+        run = [spans[k]]
+        while k + 1 < len(spans) and _JOINER.fullmatch(line[run[-1][1] : spans[k + 1][0]]):
+            k += 1
+            run.append(spans[k])
+        runs.append(run)
+        k += 1
+    for run in reversed(runs):  # right to left: earlier offsets stay valid
+        terms = sorted(line[a:b] for a, b in run)
+        for (a, b), t in zip(reversed(run), reversed(terms)):
+            line = line[:a] + t + line[b:]
+    return line
+
+
+def normalize_plan(plan: str) -> str:
+    """The plan without what differs between two sessions running the
+    same query: expression, RDD and exchange-plan ids, and the order of
+    Catalyst's inferred ``isnotnull(…) AND …`` conjuncts and
+    ``IsNotNull(…)`` pushed filters."""
+    out = []
+    for line in plan.splitlines(keepends=True):
+        line = re.sub(r"#[0-9]+L?", "", line)
+        line = re.sub(r"RDD\[[0-9]+\]", "RDD[]", line)
+        out.append(_sort_isnotnull_runs(re.sub(r"plan_id=[0-9]+", "plan_id=", line)))
+    return "".join(out)
+
+
 def jvm_seconds(spark) -> tuple[float, float]:
     """(JIT compile s, GC s) the driver JVM has spent since it started.
     The MXBeans count work of compiler threads HotSpot has already
@@ -112,7 +156,7 @@ def profile(spark, leaves: list[str], sf_dir: str, plans_dir: Path | None = None
                 sc._jsc.sc().listenerBus().waitUntilEmpty()
                 execs = spark._jsparkSession.sharedState().statusStore().executionsList()
                 plan = execs.apply(execs.size() - 1).physicalPlanDescription()
-                (plans_dir / f"{leaf}.txt").write_text(plan)
+                (plans_dir / f"{leaf}.txt").write_text(normalize_plan(plan))
     finally:
         tracer.uninstall()
         sc.setLocalProperty("spark.jobGroup.id", None)
