@@ -17,6 +17,11 @@ Differences by design (Spark-first, not a port):
     node.  Binding (find(s,p,o) with constants) runs at plan time in
     Python — inversion yields typed equality constraints that reach
     the parquet scan as pushed filters.
+  * Compile once, bind per call (SURVEY §E1 steps 1–2: MappingImpl
+    compiles each bridge lazily into a TripleRelation, which
+    TripleRelation.selectTriple then binds): a bridge's relation and
+    its minted triple Columns are built once per compiler, on first
+    use; bridge_df applies each call's constraints to those parts.
   * Union batching (CompatibleRelationGroup) becomes bridge FUSION:
     bridges over the identical relation are evaluated in ONE scan via
     explode(array(struct(...))) — one pass over the table emits all its
@@ -60,11 +65,14 @@ TRIPLE_SCHEMA = T.StructType(
 )
 
 
+# A triple's identity: its subject, predicate, object and the object's
+# datatype and language tag.
+TRIPLE_IDENTITY = ("subj", "pred", "obj", "obj_datatype", "obj_lang")
+
+
 def distinct_triples(df):
-    """RDF-set identity: drop duplicate triples of a TRIPLE_SCHEMA frame.
-    A triple is its subject, predicate, object and the object's datatype
-    and language tag; ``is_literal`` follows from those."""
-    return df.dropDuplicates(["subj", "pred", "obj", "obj_datatype", "obj_lang"])
+    """RDF-set identity: drop duplicate triples of a TRIPLE_SCHEMA frame."""
+    return df.dropDuplicates(list(TRIPLE_IDENTITY))
 
 
 _XSD_CAST = {
@@ -313,6 +321,14 @@ def _qualify(col: str, default_alias: str) -> str:
     return col if "." in col else f"{default_alias}.{col}"
 
 
+# The CompiledBridge fields a bridge's parts read.  A variant made by
+# dataclasses.replace (d2rq:limitInverse, order) shares their objects,
+# and so shares the parts, which read neither limit nor order.
+_PART_FIELDS = (
+    "subject", "predicate", "object", "base_table", "base_alias", "aliases", "joins", "conditions"
+)
+
+
 class MappingCompiler:
     """Compiles a Mapping into CompiledBridges and evaluates them.
 
@@ -334,16 +350,8 @@ class MappingCompiler:
         self.spark = spark
         self.extra_tables = extra_tables or {}
         self._table_cache: dict[str, DataFrame] = {}
-        # LRU-bounded: dataclasses.replace()'d bridge variants (e.g.
-        # per-call limitInverse swaps) have fresh id(cb) keys that never
-        # repeat, so an unbounded dict pins every such plan forever in a
-        # long-lived session (ADVICE r6).  256 entries cover any real
-        # mapping's repeated shapes; eviction just drops a memoized
-        # plan, never correctness.
-        from collections import OrderedDict
-
-        self._bridge_df_cache: OrderedDict[tuple, tuple] = OrderedDict()
-        self._bridge_df_cache_cap = 256
+        # per compiled bridge: {"bridge": cb, part name: part}
+        self._parts: dict[tuple, dict] = {}
         for sql in mapping.database.startup_sql:
             spark.sql(sql)
 
@@ -595,6 +603,16 @@ class MappingCompiler:
         return tuple(kept)
 
     # ---------------- relation building -----------------------------
+    def _part(self, cb: CompiledBridge, name: str, build):
+        """One constraint-free part of bridge ``cb``, ``build(cb)`` on
+        first use.  The key is the identity of the fields the parts
+        read; the entry keeps the bridge, so no key's id is reused."""
+        key = tuple(id(getattr(cb, f)) for f in _PART_FIELDS)
+        parts = self._parts.setdefault(key, {"bridge": cb})
+        if name not in parts:
+            parts[name] = build(cb)
+        return parts[name]
+
     def _build_relation(self, cb: CompiledBridge) -> DataFrame:
         """Assemble the joined/filtered DataFrame for a bridge."""
         in_plan = {cb.base_alias}
@@ -668,19 +686,17 @@ class MappingCompiler:
             return False
         return len(tt.load_pairs()) >= self.LARGE_TT_THRESHOLD
 
-    def _attach_large_translations(
-        self, df: DataFrame, cb: CompiledBridge
-    ) -> tuple[DataFrame, dict]:
+    def _attach_large_translations(self, df: DataFrame, cb: CompiledBridge) -> DataFrame:
         """Broadcast-join each LARGE translation table onto the relation
         (left join: untranslatable → NULL → triple dropped downstream,
-        same semantics as the map-literal path).  → (df, {position:
-        translated column name}) for triple_struct to consume.
+        same semantics as the map-literal path).  The translated value
+        of position ``pos`` is column ``__tt_<pos>``, which the bridge's
+        triple Columns read.
 
         At 100 TB the dictionary is the small side: one broadcast, no
         shuffle of the fact scan, and the plan stays O(1) in dict size
         (the reference streams the same lookup through
         values/Translator.java row-by-row)."""
-        overrides: dict[str, str] = {}
         for pos, spec in (
             ("subject", cb.subject),
             ("predicate", cb.predicate),
@@ -688,30 +704,28 @@ class MappingCompiler:
         ):
             if not self._is_large_tt(spec):
                 continue
-            out_col = f"__tt_{pos}"
             tdf = self.spark.createDataFrame(
                 list(spec.translate.load_pairs().items()),
-                f"__tt_key_{pos} string, {out_col} string",
+                f"__tt_key_{pos} string, __tt_{pos} string",
             )
             key = spec.value_before_translation(cb, self)
             df = df.join(
                 F.broadcast(tdf), key == F.col(f"__tt_key_{pos}"), "left"
             ).drop(f"__tt_key_{pos}")
-            overrides[pos] = out_col
-        return df, overrides
+        return df
 
-    def triple_struct(
-        self, cb: CompiledBridge, guard_conditions: bool = False, tt_overrides=None
-    ) -> tuple[Column, Column]:
-        """(struct(subj,pred,obj,…) or NULL, usable-for-fusion marker).
-        NULL when any required column is NULL (P6) or object untranslatable.
-        With ``guard_conditions`` the bridge's d2rq:condition filters are
-        folded into the guard instead of the relation — used by join
-        fusion, where bridges with different conditions share one scan."""
-        tt_overrides = tt_overrides or {}
-        s_val, _, _, s_req = cb.subject.mint(cb, self, tt_overrides.get("subject"))
-        p_val, _, _, p_req = cb.predicate.mint(cb, self, tt_overrides.get("predicate"))
-        o_val, o_dt, o_lang, o_req = cb.object.mint(cb, self, tt_overrides.get("object"))
+    def _triple_columns(self, cb: CompiledBridge) -> tuple[Column, Column]:
+        """(struct(subj,pred,obj,…), not-null guard) of a bridge.  The
+        guard is false when any minted value or required column is NULL
+        (P6) or the object is untranslatable."""
+        tt_cols = {
+            pos: f"__tt_{pos}"
+            for pos in ("subject", "predicate", "object")
+            if self._is_large_tt(getattr(cb, pos))
+        }
+        s_val, _, _, s_req = cb.subject.mint(cb, self, tt_cols.get("subject"))
+        p_val, _, _, p_req = cb.predicate.mint(cb, self, tt_cols.get("predicate"))
+        o_val, o_dt, o_lang, o_req = cb.object.mint(cb, self, tt_cols.get("object"))
         struct = F.struct(
             s_val.cast("string").alias("subj"),
             p_val.cast("string").alias("pred"),
@@ -725,17 +739,7 @@ class MappingCompiler:
         )
         for q in set(s_req + p_req + o_req):
             notnull = notnull & F.col(q).isNotNull()
-        if guard_conditions is not False:  # may be an (empty) skip-set
-            # a LEFT-joined dim row that is absent leaves the join columns
-            # NULL ⇒ guard false ⇒ no triple: left join + guard ≡ the
-            # bridge's original inner join + filter
-            for j in cb.joins:
-                notnull = notnull & F.col(j.left).isNotNull() & F.col(j.right).isNotNull()
-            skip = guard_conditions if isinstance(guard_conditions, (set, frozenset)) else ()
-            for cond in cb.conditions:
-                if cond not in skip:
-                    notnull = notnull & F.expr(cond)
-        return F.when(notnull, struct), notnull
+        return struct, notnull
 
     # ---------------- evaluation ------------------------------------
     def bridge_df(
@@ -747,36 +751,22 @@ class MappingCompiler:
         """One bridge → triples DataFrame, with optional plan-time
         equality constraints (from node binding) pushed onto the scan.
 
-        Memoized per compiler instance: a BGP with repeated shapes
-        (e.g. two OPTIONALs both expanding `?x ex:name ?y` over every
-        name bridge) rebuilds identical frames, and each rebuild costs
-        dozens of py4j round-trips — the dominant driver-side constant
-        in SPARQL plan construction.  DataFrames are immutable, so
-        returning the same logical frame to every caller is safe; the
-        key covers everything the result depends on (bridge identity,
-        pushed constraints, post-filter expressions).  Identity is
-        id(cb), NOT cb.name — dataclasses.replace() derives same-name
-        variants (limitInverse swaps); the cache value pins the bridge
-        object so a collected variant's id cannot be reused."""
-        key = (
-            id(cb),
-            tuple(sorted((k, str(v)) for k, v in (constraints or {}).items())),
-            tuple(str(f) for f in (post_filters or [])),
-        )
-        cached = self._bridge_df_cache.get(key)
-        if cached is not None:
-            self._bridge_df_cache.move_to_end(key)
-            return cached[1]
-        df = self._build_relation(cb)
+        Compile once, bind per call (SURVEY §E1 steps 1–2): the bridge's
+        relation and triple Columns are built on its first call; each
+        call then applies, in order, its constraints, the large
+        translation joins, the not-null guard, d2rq:orderBy, the triple
+        projection, its post-filters, d2rq:limit, the
+        d2rq:containsDuplicates DISTINCT and d2rq:resultSizeLimit."""
+        df = self._part(cb, "relation", self._build_relation)
         for qcol, const in (constraints or {}).items():
             df = df.filter(F.col(qcol) == F.lit(const))
-        df, tt_cols = self._attach_large_translations(df, cb)
-        struct, notnull = self.triple_struct(cb, tt_overrides=tt_cols)
+        df = self._attach_large_translations(df, cb)
+        struct, notnull = self._part(cb, "triple", self._triple_columns)
         df = df.filter(notnull)
         if cb.order_column:
             oc = F.col(_qualify(cb.order_column, cb.base_alias))
             df = df.orderBy(oc.desc() if cb.order_desc else oc.asc())
-        out = df.select(struct.alias("t")).select("t.*")
+        out = df.select(F.when(notnull, struct).alias("t")).select("t.*")
         for flt in post_filters or []:
             out = out.filter(flt)
         if cb.limit is not None:
@@ -786,9 +776,6 @@ class MappingCompiler:
         cap = self.mapping.database.result_size_limit
         if cap is not None:
             out = out.limit(cap)
-        self._bridge_df_cache[key] = (cb, out)
-        while len(self._bridge_df_cache) > self._bridge_df_cache_cap:
-            self._bridge_df_cache.popitem(last=False)
         return out
 
     def _n_to_1_joins(self, cb: CompiledBridge) -> bool:
@@ -884,7 +871,18 @@ class MappingCompiler:
             )
             for cond in common:
                 df = df.filter(F.expr(cond))
-            structs = [self.triple_struct(cb, guard_conditions=common)[0] for cb in fused]
+            structs = []
+            for cb in fused:
+                struct, guard = self._part(cb, "triple", self._triple_columns)
+                # a LEFT-joined dim row that is absent leaves the join
+                # columns NULL ⇒ guard false ⇒ no triple: left join +
+                # guard ≡ the bridge's original inner join + filter
+                for j in cb.joins:
+                    guard = guard & F.col(j.left).isNotNull() & F.col(j.right).isNotNull()
+                for cond in cb.conditions:
+                    if cond not in common:
+                        guard = guard & F.expr(cond)
+                structs.append(F.when(guard, struct))
             # explode the raw array and drop NULL structs in a separate
             # Filter: array_compact is a higher-order function
             # (ArrayFilter = CodegenFallback) and at the top of the

@@ -1419,16 +1419,7 @@ class CachingGraph:
             self._cache[key] = hit  # re-insert = most-recently-used
             return hit
         self.misses += 1
-        # .select("*") forces a FRESH Dataset before persist: find() can
-        # return a memoized frame (the compiler's bridge_df cache) whose
-        # QueryExecution was already planned by an earlier action — a
-        # lazy val, so persisting THAT object would never retrofit the
-        # InMemoryRelation substitution and every "hit" would silently
-        # recompute.  A new Dataset plans after registration and reads
-        # the cached blocks.
-        df = self.graph.find(s, p, o, o_datatype, o_lang).select("*").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        df = self.graph.find(s, p, o, o_datatype, o_lang).persist(StorageLevel.MEMORY_AND_DISK)
         self._cache[key] = df
         self._sizes[key] = self._entry_size(df)
         self.total_bytes += self._sizes[key]

@@ -21,7 +21,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ont_d2rq_spark.compiler.relation import MappingCompiler
+from ont_d2rq_spark.compiler.relation import TRIPLE_IDENTITY, MappingCompiler
 from ont_d2rq_spark.mapping.model import Mapping
 
 
@@ -31,7 +31,6 @@ def incremental_triples(
     table: str,
     stream_df: DataFrame,
     event_time_col: Optional[str] = None,
-    watermark: str = "10 minutes",
 ) -> DataFrame:
     """Compile every bridge rooted at `table` against the STREAMING
     DataFrame and union the results.  Bridges that join other tables
@@ -52,9 +51,10 @@ def incremental_triples(
 def dedup_within_watermark(
     triples: DataFrame, event_time_col: str, watermark: str = "10 minutes"
 ) -> DataFrame:
-    """Bounded-state streaming dedup on the triple identity."""
+    """Bounded-state streaming dedup on the triple identity, the one the
+    batch dump's DISTINCT keys on (compiler.relation.TRIPLE_IDENTITY)."""
     return triples.withWatermark(event_time_col, watermark).dropDuplicatesWithinWatermark(
-        ["subj", "pred", "obj"]
+        list(TRIPLE_IDENTITY)
     )
 
 

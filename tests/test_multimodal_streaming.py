@@ -155,13 +155,24 @@ def test_dedup_within_watermark(spark, tmp_path):
     from ont_d2rq_spark.streaming.incremental import dedup_within_watermark
 
     T = dt.datetime
+    XSD_INT = "http://www.w3.org/2001/XMLSchema#integer"
     rows = [
-        ("s1", "p", "o1", T(2020, 1, 1, 10, 0)),
-        ("s1", "p", "o1", T(2020, 1, 1, 10, 1)),  # duplicate identity
-        ("s1", "p", "o1", T(2020, 1, 1, 10, 2)),  # duplicate identity
-        ("s2", "p", "o2", T(2020, 1, 1, 10, 3)),
+        ("s1", "p", "o1", None, None, False, T(2020, 1, 1, 10, 0)),
+        ("s1", "p", "o1", None, None, False, T(2020, 1, 1, 10, 1)),  # duplicate identity
+        ("s1", "p", "o1", None, None, False, T(2020, 1, 1, 10, 2)),  # duplicate identity
+        ("s2", "p", "o2", None, None, False, T(2020, 1, 1, 10, 3)),
+        # "1"@en and "1"@de are two triples; so are an IRI and a typed
+        # literal of the same lexical form
+        ("s3", "p", "1", None, "en", True, T(2020, 1, 1, 10, 4)),
+        ("s3", "p", "1", None, "de", True, T(2020, 1, 1, 10, 5)),
+        ("s4", "p", "o4", None, None, False, T(2020, 1, 1, 10, 6)),
+        ("s4", "p", "o4", XSD_INT, None, True, T(2020, 1, 1, 10, 7)),
     ]
-    df = spark.createDataFrame(rows, "subj string, pred string, obj string, ets timestamp")
+    df = spark.createDataFrame(
+        rows,
+        "subj string, pred string, obj string, obj_datatype string, obj_lang string, "
+        "is_literal boolean, ets timestamp",
+    )
     src = str(tmp_path / "in")
     df.coalesce(1).write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(df.schema).parquet(src)
@@ -175,9 +186,19 @@ def test_dedup_within_watermark(spark, tmp_path):
         .start()
     )
     q.awaitTermination(120)
-    got = {(r["subj"], r["obj"]) for r in spark.sql("select * from dedup_out").collect()}
-    assert got == {("s1", "o1"), ("s2", "o2")}
-    assert spark.sql("select count(*) n from dedup_out").first()["n"] == 2
+    got = {
+        (r["subj"], r["obj"], r["obj_datatype"], r["obj_lang"])
+        for r in spark.sql("select * from dedup_out").collect()
+    }
+    assert got == {
+        ("s1", "o1", None, None),
+        ("s2", "o2", None, None),
+        ("s3", "1", None, "en"),
+        ("s3", "1", None, "de"),
+        ("s4", "o4", None, None),
+        ("s4", "o4", XSD_INT, None),
+    }
+    assert spark.sql("select count(*) n from dedup_out").first()["n"] == 6
 
 
 def test_streaming_incremental_triples(spark, tmp_path):

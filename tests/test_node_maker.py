@@ -2,6 +2,7 @@
 literal type and join-compatibility in one place; these tests hold its
 plan-time judgements against the frames the mapping actually mints."""
 
+import dataclasses
 import inspect
 import itertools
 from functools import reduce
@@ -12,7 +13,8 @@ from pyspark.sql import functions as F
 
 import test_features
 from conftest import SF_SMALL
-from ont_d2rq_spark.examples import tpch_mapping
+from ont_d2rq_spark.compiler.relation import MappingCompiler, NodeSpec
+from ont_d2rq_spark.examples import EX, tpch_mapping
 from ont_d2rq_spark.graph import VirtualGraph
 from test_features import emp  # noqa: F401  (fixture)
 
@@ -129,3 +131,36 @@ def test_minting_and_binding_agree_on_literal_type(spark, tpch, emp):  # noqa: F
         if i in got and got[i] != {want}:
             wrong[cb.name] = (got[i], want)
     assert not wrong, wrong
+
+
+def test_bridge_parts_built_once(spark):
+    """Each bridge is compiled once and bound per call: finds with
+    distinct constants and limit variants (dataclasses.replace, as
+    d2rq:limitInverse makes) mint each bridge's triple Columns once, and
+    the compiler keeps one entry per compiled bridge, not one per
+    call."""
+    mints, touched = [], set()
+    real_mint, real_bridge_df = NodeSpec.mint, MappingCompiler.bridge_df
+
+    def mint(self, *args, **kwargs):
+        mints.append(self)
+        return real_mint(self, *args, **kwargs)
+
+    def bridge_df(self, cb, *args, **kwargs):
+        touched.add(cb.name)
+        return real_bridge_df(self, cb, *args, **kwargs)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(NodeSpec, "mint", mint)
+        mp.setattr(MappingCompiler, "bridge_df", bridge_df)
+        g = VirtualGraph(tpch_mapping(SF_SMALL), spark)
+        for k in range(1, 11):
+            g.find(s=f"{EX}customer/{k}")
+        for n in range(10):
+            g.find(p=f"{EX}inNation", o=f"{EX}nation/{n}")
+        cb = next(b for b in g.bridges if b.name == "customer.name")
+        for i in range(1, 31):
+            g.compiler.bridge_df(dataclasses.replace(cb, limit=i))
+    assert len(touched) > 2
+    assert len(mints) <= 3 * len(touched), (len(mints), sorted(touched))
+    assert len(g.compiler._parts) <= len(touched)

@@ -57,21 +57,3 @@ def test_closure_from_broadcast_guarded(spark):
     assert capped is not None and capped.count() == 6
     plan2 = probe.join(capped, "dst")._jdf.queryExecution().analyzed().toString()
     assert "ResolvedHint" not in plan2
-
-
-def test_bridge_df_cache_bounded(spark):
-    """Replaced bridge variants (fresh id(cb) per call) must not grow
-    the compiler's plan memo without bound."""
-    import dataclasses
-
-    from ont_d2rq_spark.examples import tpch_mapping
-    from ont_d2rq_spark.graph import VirtualGraph
-
-    g = VirtualGraph(tpch_mapping("/root/testdata/sf0.001"), spark)
-    comp = g.compiler
-    comp._bridge_df_cache_cap = 8
-    cb0 = next(b for b in g.bridges if b.name == "customer.name")
-    for i in range(1, 30):
-        cb = dataclasses.replace(cb0, limit=i)
-        comp.bridge_df(cb)
-    assert len(comp._bridge_df_cache) <= 8

@@ -1,6 +1,6 @@
 """The command-line tools run on the engine as it is: the profiler
-reports jobs and per-function self time for a cheap leaf, and writes
-the plan the leaf ran."""
+reports jobs, py4j round trips and per-function self time for a cheap
+leaf, and writes the plan the leaf ran and its initial plan."""
 
 from conftest import SF_SMALL
 from tools.profile import profile
@@ -11,8 +11,11 @@ def test_profile_reports_jobs_and_self_time(spark, tmp_path):
     assert r["jobs"] > 0 and r["tasks"] > 0
     assert r["self_s"], "no wrapped package function ran"
     assert r["jit_compile_s"] >= 0 and r["jvm_gc_s"] >= 0
+    assert r["py4j_calls"] > 0
     # the plan file holds the plan that ran, not the initial AQE plan
     assert "isFinalPlan=true" in (tmp_path / "dedup_exact.txt").read_text()
+    initial = (tmp_path / "dedup_exact.initial.txt").read_text()
+    assert "== Optimized Logical Plan ==" in initial and "isFinalPlan=false" in initial
 
 
 def test_normalize_plan_drops_session_ids_and_sorts_isnotnull_runs():

@@ -6,8 +6,10 @@ statistics of the leaf's jobs from the Spark status store (jobs, tasks,
 executor CPU, GC, shuffle and spill bytes, Python-UDF time, job time
 per module), the JVM's JIT compile and GC seconds over the leaf
 (``jit_compile_s``, ``jvm_gc_s``: the JVM-wide MXBean totals, driver
-threads included) and the self time of every public package function
-that ``perfbench.trace`` wraps.
+threads included), the driver's py4j round trips during the leaf
+(``py4j_calls``: every ``send_command`` of this process's gateway
+client) and the self time of every public package function that
+``perfbench.trace`` wraps.
 
 Usage: python tools/profile.py <leaf|dump|dump_distinct|all>... [--plans]
   leaf   a key of __spark_entry__.queries(), or minhash_xxhash64; several
@@ -16,8 +18,10 @@ Usage: python tools/profile.py <leaf|dump|dump_distinct|all>... [--plans]
   data   $SPARK_GRAFT_SF_DIR (default: the sf0.1 test tables, as bench.py)
 Writes BENCH/layers.json, stamped with commit, nproc and date;
 --plans also writes the formatted plan each leaf ran (AQE's final plan)
-to plans/<leaf>.txt, normalized (normalize_plan) so that the plans of
-two checkouts compare with ``diff -r``.
+to plans/<leaf>.txt and the leaf frame's optimized logical and initial
+physical plan to plans/<leaf>.initial.txt, both normalized
+(normalize_plan) so that the plans of two checkouts compare with
+``diff -r``.
 """
 
 from __future__ import annotations
@@ -27,6 +31,7 @@ import json
 import os
 import re
 import sys
+import threading
 import time
 from pathlib import Path
 
@@ -123,13 +128,34 @@ def jvm_seconds(spark) -> tuple[float, float]:
     return jit_ms / 1e3, gc_ms / 1e3
 
 
+class Py4jCalls:
+    """Counts the driver's py4j round trips: each ``send_command`` of the
+    gateway client, which every JavaObject of the session calls through."""
+
+    def __init__(self, spark):
+        self.client = spark.sparkContext._gateway._gateway_client
+        self.n = 0
+        lock, send = threading.Lock(), self.client.send_command
+
+        def counted(*args, **kwargs):
+            with lock:
+                self.n += 1
+            return send(*args, **kwargs)
+
+        self.client.send_command = counted
+
+    def uninstall(self) -> None:
+        del self.client.send_command
+
+
 def profile(spark, leaves: list[str], sf_dir: str, plans_dir: Path | None = None) -> dict:
-    """{leaf: {wall_s, <job statistics>, self_s: {module.function: s}}}."""
+    """{leaf: {wall_s, <job statistics>, py4j_calls, self_s: {module.function: s}}}."""
     from perfbench.trace import Tracer, job_stats, self_times
 
     sc = spark.sparkContext
     tracer = Tracer()
     tracer.install()
+    py4j = Py4jCalls(spark)
     out = {}
     try:
         for op, leaf in enumerate(leaves):
@@ -138,10 +164,12 @@ def profile(spark, leaves: list[str], sf_dir: str, plans_dir: Path | None = None
             sc.setJobGroup(group, leaf)
             jit0, gc0 = jvm_seconds(spark)
             t0_wall_ms = time.time() * 1e3
+            calls0 = py4j.n
             t0 = time.perf_counter()
             df = leaf_frame(spark, leaf, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             wall = time.perf_counter() - t0
+            calls = py4j.n - calls0
             jit1, gc1 = jvm_seconds(spark)
             spans = tracer.op_spans(op)
             stats = job_stats(spark, group, t0_wall_ms, spans, tracer.epoch, "profile")
@@ -149,6 +177,7 @@ def profile(spark, leaves: list[str], sf_dir: str, plans_dir: Path | None = None
             out[leaf] = {"wall_s": round(wall, 3), **stats,
                          "jit_compile_s": round(jit1 - jit0, 3),
                          "jvm_gc_s": round(gc1 - gc0, 3),
+                         "py4j_calls": calls,
                          "self_s": {k: round(v, 3) for k, v in self_s}}
             if plans_dir is not None:
                 # the noop write is the last SQL execution; once it ends,
@@ -157,7 +186,21 @@ def profile(spark, leaves: list[str], sf_dir: str, plans_dir: Path | None = None
                 execs = spark._jsparkSession.sharedState().statusStore().executionsList()
                 plan = execs.apply(execs.size() - 1).physicalPlanDescription()
                 (plans_dir / f"{leaf}.txt").write_text(normalize_plan(plan))
+                # the noop write planned its own frame; the leaf frame's
+                # plans are still the initial ones, before AQE's runtime
+                # choices (which can differ between solo sessions).  The
+                # formatted physical plan prints scan filters untruncated,
+                # so normalize_plan can sort them.
+                qe = df._jdf.queryExecution()
+                formatted = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                    "formatted"
+                )
+                (plans_dir / f"{leaf}.initial.txt").write_text(normalize_plan(
+                    f"== Optimized Logical Plan ==\n{qe.optimizedPlan()}\n"
+                    f"{qe.explainString(formatted)}\n"
+                ))
     finally:
+        py4j.uninstall()
         tracer.uninstall()
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -192,7 +235,8 @@ def main(argv=None) -> int:
     for leaf, r in layers.items():
         print(f"{leaf}: wall {r['wall_s']:.2f} s, {r['jobs']} jobs, {r['tasks']} tasks, "
               f"job time {r['job_s']:.2f} s, Python UDF {r['python_udf_s']:.2f} s, "
-              f"JIT {r['jit_compile_s']:.2f} s, JVM GC {r['jvm_gc_s']:.2f} s")
+              f"JIT {r['jit_compile_s']:.2f} s, JVM GC {r['jvm_gc_s']:.2f} s, "
+              f"{r['py4j_calls']} py4j calls")
         for name, s in list(r["self_s"].items())[:8]:
             print(f"    {s:8.3f} s  {name}")
     print(f"wrote {out}")
