@@ -75,6 +75,19 @@ def run_stage(
     return stored
 
 
+def stored(df: DataFrame) -> DataFrame:
+    """``df`` computed once for every later read: the one way the package
+    reuses an intermediate frame.  The fill is eager, so the frame is
+    filled and marked in the calling thread before any other plan can
+    read it; a lazy mark lands in the first job that reads the frame,
+    maybe in a broadcast-exchange thread, which deadlocks the driver JVM
+    against the DAG scheduler reading the same RDD.  It is a local
+    checkpoint, not ``persist``: the blocks belong to the result's RDD,
+    so the ContextCleaner frees them with it and the CacheManager stays
+    empty."""
+    return df.localCheckpoint(eager=True)
+
+
 def triple_count_metrics(df: DataFrame) -> DataFrame:
     """Triple counts per predicate (SURVEY §2.4 A2)."""
     return df.groupBy("pred").agg(F.count(F.lit(1)).alias("n_triples"))

@@ -696,7 +696,8 @@ class MappingCompiler:
         At 100 TB the dictionary is the small side: one broadcast, no
         shuffle of the fact scan, and the plan stays O(1) in dict size
         (the reference streams the same lookup through
-        values/Translator.java row-by-row)."""
+        values/Translator.java row-by-row).  The dictionary frame is a
+        part of the bridge, shipped once; only the join is per call."""
         for pos, spec in (
             ("subject", cb.subject),
             ("predicate", cb.predicate),
@@ -704,10 +705,10 @@ class MappingCompiler:
         ):
             if not self._is_large_tt(spec):
                 continue
-            tdf = self.spark.createDataFrame(
+            tdf = self._part(cb, f"tt_{pos}", lambda _: self.spark.createDataFrame(
                 list(spec.translate.load_pairs().items()),
                 f"__tt_key_{pos} string, __tt_{pos} string",
-            )
+            ))
             key = spec.value_before_translation(cb, self)
             df = df.join(
                 F.broadcast(tdf), key == F.col(f"__tt_key_{pos}"), "left"

@@ -39,6 +39,7 @@ from typing import NamedTuple, Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ont_d2rq_spark.checkpoint import stored
 from ont_d2rq_spark.compiler.relation import (
     CompiledBridge,
     MappingCompiler,
@@ -735,13 +736,12 @@ def _masked_compat_join_sym(
     n_pairs = (2 ** len(left_nullable)) * (2 ** len(right_nullable))
     # each subtree re-executes once per slice pair (Spark does not share
     # subtrees across union branches) — pay each side once.  The row id
-    # is minted BEFORE the checkpoint so it is stable across
-    # re-evaluations of the cached partitions.
+    # is minted before the left side is stored, so every read of it
+    # sees the same ids.
     if by_id:
         left = left.withColumn("__cj_id", F.monotonically_increasing_id())
     if n_pairs > 1 or by_id:
-        left = left.localCheckpoint(eager=False)
-        right = right.localCheckpoint(eager=False)
+        left, right = stored(left), stored(right)
     outs: list[DataFrame] = []
     for k in range(len(left_nullable) + 1):
         for m_vars in combinations(left_nullable, k):
@@ -780,9 +780,9 @@ def _masked_compat_join_sym(
         semi = "left_anti" if how == "minus" else how
         return left.join(matched.select("__cj_id"), "__cj_id", semi).drop("__cj_id")
     # LeftJoin: left rows with no compatible partner survive with the
-    # right-side vars unbound.  Checkpoint the matched set so the union
+    # right-side vars unbound.  Store the matched set so the union
     # and the anti-join evaluate the pairwise joins once, not twice.
-    matched = matched.localCheckpoint(eager=False)
+    matched = stored(matched)
     rest = left.join(matched.select("__cj_id"), "__cj_id", "left_anti")
     for fld in right.schema.fields:
         name = fld.name[len("__lj_") :] if fld.name.startswith("__lj_") else fld.name
@@ -1377,7 +1377,7 @@ class CachingGraph:
     patterns.
 
     This is the package's one persisted cache that outlives a call: every
-    operator reuses frames by localCheckpoint, freed with its result.  The
+    operator reuses frames by checkpoint.stored, freed with its result.  The
     owner sizes it and calls ``clear()`` when done with it."""
 
     def __init__(

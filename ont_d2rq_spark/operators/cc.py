@@ -16,9 +16,10 @@ state, every component a star on its minimum node, which one aggregate
 over the current iterate tests (_stars); the test runs before every
 round, so an input that is already stars (the pipeline's alias graph)
 runs no round at all.  Convergence in O(log^2 n) rounds (in practice a
-handful); each iteration is localCheckpoint()ed to truncate lineage
-(hard part #3: without truncation the plan doubles per round and
-Catalyst analysis time explodes at scale).
+handful); each iterate is stored (checkpoint.stored) to truncate
+lineage (hard part #3: without truncation the plan doubles per round
+and Catalyst analysis time explodes at scale), and the star test reads
+the stored blocks.
 
 Skew: power-law degree (hub entities) is handled by AQE skew-join plus
 the fact that both stars only carry (node, min_neighbor) pairs —
@@ -32,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import Window
 from pyspark.sql import functions as F
+
+from ont_d2rq_spark.checkpoint import stored
 
 
 def _canon_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -111,24 +114,19 @@ def connected_components(
     Nodes are whatever orderable type the edge columns carry (string
     URIs or longs).  Isolated nodes don't appear (no edges → themselves
     canonical); callers union them back if needed.  Raises RuntimeError
-    when the edges are not stars after ``max_iterations`` rounds.
-
-    Barrier budget: the star test is the only action, one per round plus
-    one — each localCheckpoint is LAZY and the test's aggregate is what
-    materializes its blocks (an eager checkpoint plus a separate test
-    would double the serial barrier count, which is what dominates
-    wall-clock for small/medium graphs).  A star input, such as the
-    pipeline's alias→entity graph, costs the one test and no round.
+    when the edges are not stars after ``max_iterations`` rounds.  A
+    star input, such as the pipeline's alias→entity graph, costs the
+    one test and no round.
     """
-    e = _canon_edges(edges, src, dst).localCheckpoint(eager=False)
+    e = stored(_canon_edges(edges, src, dst))
     for i in range(max_iterations + 1):
-        if _stars(e):  # materializes e's blocks
+        if _stars(e):
             break
         if i == max_iterations:
             raise RuntimeError(
                 f"connected components: not stars after {max_iterations} rounds"
             )
-        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
+        e = stored(_small_star(_large_star(e)))
     # stars: every leaf → its center, every center → itself
     comp = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
     roots = e.select(F.col("v").alias("node")).distinct()

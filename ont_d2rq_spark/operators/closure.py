@@ -5,10 +5,9 @@ iterated-squaring join).
 
 Iterated squaring: after round i the result holds every path of length
 ≤ 2^i, so rounds = ⌈log2(diameter)⌉ — 20 rounds cover diameter 1M.
-Each round is one self-join + distinct (shuffle on the join key), with
-LAZY localCheckpoint lineage truncation materialized by the
-convergence count — one job per round, same barrier discipline as
-operators/cc.py.
+Each round is one self-join + distinct (shuffle on the join key),
+stored (checkpoint.stored) to truncate lineage as in operators/cc.py;
+the convergence count reads the stored blocks.
 
 Scale: the result can be quadratic in the worst case (dense DAG);
 for the sparse hierarchies property paths traverse (type trees,
@@ -19,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ont_d2rq_spark.checkpoint import stored
 
 
 def transitive_closure(
@@ -31,15 +32,14 @@ def transitive_closure(
     """→ all (src, dst) connected by a directed path of length ≥ 1
     (a node on a cycle reaches itself, per SPARQL `p+` semantics).
 
-    The result is a localCheckpoint'd RDD, which carries NO Catalyst
+    The result is a stored (checkpointed) RDD, which carries NO Catalyst
     stats — a small closure (the common type-tree / geo-hierarchy
     case) would silently lose broadcast eligibility and drag a
     low-cardinality SortMergeJoin over whatever joins it.  The
     convergence loop knows the exact row count, so a result under
     ``broadcast_rows`` self-hints broadcast."""
-    e = edges.select(src, dst).distinct()
-    e = e.localCheckpoint(eager=False)
-    n = e.count()  # materializes the seed
+    e = stored(edges.select(src, dst).distinct())
+    n = e.count()
     result = e
     for _ in range(max_iterations):
         step = (
@@ -47,12 +47,8 @@ def transitive_closure(
             .join(result.alias("b"), F.col(f"a.{dst}") == F.col(f"b.{src}"))
             .select(F.col(f"a.{src}").alias(src), F.col(f"b.{dst}").alias(dst))
         )
-        grown = (
-            result.unionByName(step)
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        n2 = grown.count()  # one action: materializes + converge-checks
+        grown = stored(result.unionByName(step).distinct())
+        n2 = grown.count()
         result = grown
         if n2 == n:
             break
@@ -87,25 +83,20 @@ def closure_from(
     cycle through the seed re-enters the reached set once (anti-join),
     so `p+` cycle semantics hold."""
     a, b = (dst, src) if reverse else (src, dst)
-    e = edges.select(F.col(a).alias("src"), F.col(b).alias("dst")).distinct()
-    e = e.localCheckpoint(eager=False)
-    frontier = (
-        e.filter(F.col("src") == F.lit(seed))
-        .select(F.col("dst").alias("n"))
-        .distinct()
-        .localCheckpoint(eager=False)
+    e = stored(edges.select(F.col(a).alias("src"), F.col(b).alias("dst")).distinct())
+    frontier = stored(
+        e.filter(F.col("src") == F.lit(seed)).select(F.col("dst").alias("n")).distinct()
     )
     n_reached = frontier.count()
     if n_reached == 0:
         return frontier.select(F.lit(seed).alias("src"), F.col("n").alias("dst"))
     reached = frontier
     for _ in range(max_rounds):
-        new = (
+        new = stored(
             frontier.join(e, frontier["n"] == e["src"])
             .select(F.col("dst").alias("n"))
             .distinct()
             .join(reached, "n", "left_anti")
-            .localCheckpoint(eager=False)
         )
         n_new = new.count()
         if n_new == 0:
@@ -120,7 +111,7 @@ def closure_from(
             # transitive_closure uses; the exact count is already paid
             # for by the per-round convergence checks (ADVICE r6).
             return F.broadcast(out) if n_reached <= broadcast_rows else out
-        reached = reached.unionByName(new).localCheckpoint(eager=False)
+        reached = stored(reached.unionByName(new))
         n_reached += n_new
         frontier = new
     return None  # depth exceeds the cap: caller uses the global closure

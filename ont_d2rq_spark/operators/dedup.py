@@ -11,9 +11,8 @@ Scale notes (100 TB):
     pure-Python xxh64) are test-pinned bit-exact twins of the JVM
     functions, so the md5 family stays end-to-end replayable by the
     DuckDB oracle.  Banding rows are (id, band, bucket) only; the
-    candidate self-join reads an eagerly checkpointed copy so the prep
-    never runs once per join side.  Verification re-joins only
-    bucket-mates.
+    candidate self-join reads a stored copy so the prep never runs once
+    per join side.  Verification re-joins only bucket-mates.
   * simhash: same per-row Arrow shape (md5 family); candidates block
     on signature quarters (pigeonhole) and verify full hamming.
 """
@@ -22,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ont_d2rq_spark.checkpoint import stored
 
 
 def normalize_text(col):
@@ -256,15 +257,15 @@ def minhash_dedup(
 
     Shape (r7): shingles + signature + band buckets come from ONE
     Arrow pass (:func:`minhash_prep` — per-row numpy k-mins, bit-exact
-    hash twins), eagerly localCheckpointed so the banding self-join's
-    two sides and BOTH verification join sides read stored blocks
-    instead of re-running the pipeline (the old explode → k-min-agg →
+    hash twins), stored so the banding self-join's two sides and BOTH
+    verification join sides read stored blocks instead of re-running
+    the pipeline (the old explode → k-min-agg →
     self-join plan evaluated the whole signature chain once per join
     side plus once per verification side, and its k-wide generated
     aggregate cost ~6 s of codegen/JIT per session)."""
-    prep = minhash_prep(
-        df, text_col, id_col, num_hashes, bands, shingle_n, hash_family
-    ).localCheckpoint(eager=True)
+    prep = stored(
+        minhash_prep(df, text_col, id_col, num_hashes, bands, shingle_n, hash_family)
+    )
     banded = prep.select("id", F.posexplode("buckets").alias("band", "bucket"))
     a, b = banded.alias("a"), banded.alias("b")
     cands = (
@@ -384,7 +385,7 @@ def simhash_candidates(sigs: DataFrame, max_hamming: int = 3, bits: int = 64) ->
     # materialize once: the self-join's shuffle + broadcast sides would
     # otherwise evaluate the signature subplan twice (exchange reuse
     # cannot unify the two exchange kinds)
-    parts = parts.localCheckpoint(eager=True)
+    parts = stored(parts)
     a, b = parts.alias("a"), parts.alias("b")
     return (
         a.join(

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ont_d2rq_spark.checkpoint import stored
+
 
 def _as_double(vec_col):
     return F.transform(vec_col, lambda x: x.cast("double"))
@@ -354,7 +356,7 @@ def lsh_near_dup_pairs(
     # exchange over the same subplan — reuse cannot unify them, so the
     # Arrow projection UDF would run twice; materialize (id, t, bucket)
     # once (narrow rows, tables× the corpus row count)
-    banded = banded.localCheckpoint(eager=True)
+    banded = stored(banded)
     cand = (
         banded.alias("a")
         .join(
@@ -371,12 +373,8 @@ def lsh_near_dup_pairs(
         # the stats count and the verification join both consume `cand`;
         # without materialization the projection (planes×tables dot
         # products per row) and the banding self-join would run TWICE —
-        # measured 2.7× wall on the sf0.1 bench.  Lazy localCheckpoint
-        # + one count = ONE job that both materializes the blocks (the
-        # verification join then reads them) and yields the stats
-        # number; blocks are freed by the ContextCleaner when the
-        # caller drops the frame — no session-lifetime persist leak.
-        cand = cand.localCheckpoint(eager=False)
+        # measured 2.7× wall on the sf0.1 bench.
+        cand = stored(cand)
         n_candidates = cand.count()
     v = emb.select(F.col(id_col).alias("id"), _as_double(vec_col).alias("v"))
     cjoin = cand

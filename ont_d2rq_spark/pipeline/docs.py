@@ -335,26 +335,22 @@ def build_kg(
 ) -> DataFrame:
     """Run all stages; returns the final triple DataFrame.  With `root`
     set, every stage checkpoints (resumable, with lineage + metrics)."""
-    from ont_d2rq_spark.checkpoint import run_stage, triple_count_metrics
+    from ont_d2rq_spark.checkpoint import run_stage, stored, triple_count_metrics
     from ont_d2rq_spark.operators.cc import (
         canonicalize_sameas,
         rewrite_triples_canonical,
     )
 
-    # Uncheckpointed, only stages with two consumers keep their rows, by
-    # localCheckpoint: the blocks belong to the RDD, so the ContextCleaner
-    # frees them once the caller drops the result.  docs (integrity count,
-    # mentions) fills at that count; raw (sameAs edges, rewrite) at CC's
-    # first star test; canon at once, because its two rewrite
-    # broadcasts build in parallel threads and would race to fill it.
-    # `reused` maps each such stage to whether it fills at once.
-    reused = {"docs_interleaved": False, "raw_triples": False, "canonical_map": True}
+    # Uncheckpointed, only the stages with two consumers are stored:
+    # docs (integrity count, mentions), raw (sameAs edges, rewrite) and
+    # canon (the rewrite's two broadcasts).
+    reused = {"docs_interleaved", "raw_triples", "canonical_map"}
 
     def stage(name, compute):
         if root is not None:
             return run_stage(spark, root, name, compute, force=force)
         out = compute()
-        return out.localCheckpoint(eager=reused[name]) if name in reused else out
+        return stored(out) if name in reused else out
 
     docs = stage("docs_interleaved", lambda: synthesize_interleaved(spark, sf_dir))
     assert_span_integrity(docs)

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ont_d2rq_spark.checkpoint import stored
 from ont_d2rq_spark.examples import EX, MKTSEGMENT_TRANSLATIONS, tpch_mapping
 from ont_d2rq_spark.graph import VirtualGraph
 
@@ -602,9 +603,9 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
 
     r7 shape: the gram sets come from one Arrow pass (the Catalyst
     transform/slice/array_distinct chain is interpreted CodegenFallback
-    and was re-evaluated once per self-join side), eagerly
-    checkpointed; the self-join then reads stored (doc_id, gram,
-    n_grams) rows.  Python's str.split(' ') is the exact twin of
+    and was re-evaluated once per self-join side), stored; the
+    self-join then reads stored (doc_id, gram, n_grams) rows.
+    Python's str.split(' ') is the exact twin of
     F.split(text, ' ') for a literal single-space separator (both keep
     empty tokens), so the gram SETS are identical — pinned by the
     ngram_jaccard_pairs oracle row."""
@@ -624,10 +625,9 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
         return texts.map(g, na_action="ignore")
 
     d = _t(spark, sf_dir, "documents")
-    gr = (
+    gr = stored(
         d.select("doc_id", _grams3.asNondeterministic()(F.col("text")).alias("grams"))
         .filter(F.col("grams").isNotNull())
-        .localCheckpoint(eager=True)
     )
     g = gr.select(
         "doc_id", F.explode("grams").alias("gram"), F.size("grams").alias("n_grams")

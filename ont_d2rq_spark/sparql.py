@@ -107,6 +107,7 @@ from typing import Callable, NamedTuple, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ont_d2rq_spark.checkpoint import stored
 from ont_d2rq_spark.compiler.relation import distinct_triples
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
@@ -1328,13 +1329,12 @@ def _describe_frame(
     # collect — same discipline as operators/closure.py): each round
     # takes the bNode objects of only the PREVIOUS round's new triples,
     # anti-joins the already-described set, and semi-joins the full
-    # graph.  Frontier and new-triples frames are lazily
-    # localCheckpoint-ed and materialized by the single convergence
-    # count — one Spark job per round, nothing re-executed.  The
-    # frontier is explicitly broadcast (iterative outputs carry no
-    # stats, so Catalyst would otherwise pick a sort-merge join).
+    # graph.  The seed, frontier and new-triples frames are stored, so
+    # no round re-executes an earlier one.  The frontier is explicitly
+    # broadcast (iterative outputs carry no stats, so Catalyst would
+    # otherwise pick a sort-merge join).
     described = src.spark.createDataFrame([], "subj string")
-    out = out.localCheckpoint(eager=False)  # seed executes once, not per round
+    out = stored(out)
     cbd_frames = [out]
     cur = out
     for _ in range(max_bnode_depth):
@@ -1343,16 +1343,12 @@ def _describe_frame(
             .select(F.col("obj").alias("subj"))
             .distinct()
         )
-        frontier = newb.join(described, "subj", "left_anti").localCheckpoint(
-            eager=False
-        )
+        frontier = stored(newb.join(described, "subj", "left_anti"))
         if frontier.count() == 0:
             break
         if all_t is None:
             all_t = src.triples()
-        cur = all_t.join(F.broadcast(frontier), "subj", "left_semi").localCheckpoint(
-            eager=False
-        )
+        cur = stored(all_t.join(F.broadcast(frontier), "subj", "left_semi"))
         cbd_frames.append(cur)
         described = described.unionByName(frontier)
     out = _reduce(lambda a, b: a.unionByName(b), cbd_frames)

@@ -4,6 +4,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import assert_filled
 from ont_d2rq_spark.operators.cc import (
     canonicalize_sameas,
     connected_components,
@@ -28,7 +29,9 @@ def test_chain_and_star(spark):
     chain = [(i, i + 1) for i in range(0, 30)]
     star = [(100, 100 + i) for i in range(1, 50)]
     edges = spark.createDataFrame(chain + star, "src bigint, dst bigint")
-    got = cc_dict(connected_components(edges))
+    comp = connected_components(edges)
+    assert_filled(comp)
+    got = cc_dict(comp)
     assert all(got[i] == 0 for i in range(31))
     assert all(got[100 + i] == 100 for i in range(50))
 

@@ -398,12 +398,8 @@ def test_result_size_limit(spark, emp):
     assert g.triples(fuse=False).count() <= 4
 
 
-def test_large_translation_table_broadcast_join(spark):
-    """F5 at entity-linking scale: a 100k-entry dictionary must become a
-    broadcast dict-DataFrame join, NOT a 100k-literal create_map in the
-    plan (which would explode plan size / task binaries at 10M entries)."""
-    import pandas as pd
-
+def _big_translation_graph(spark):
+    """Table ``t`` whose codes translate through a 100k-entry dictionary."""
     n = 100_000
     big = {f"k{i}": f"{EX}v/{i}" for i in range(n)}
     tables = {
@@ -423,7 +419,14 @@ def test_large_translation_table_broadcast_join(spark):
             translate_with="big",
         )
     )
-    g = mk(spark, tables, m)
+    return mk(spark, tables, m)
+
+
+def test_large_translation_table_broadcast_join(spark):
+    """F5 at entity-linking scale: a 100k-entry dictionary must become a
+    broadcast dict-DataFrame join, NOT a 100k-literal create_map in the
+    plan (which would explode plan size / task binaries at 10M entries)."""
+    g = _big_translation_graph(spark)
     df = g.find(p=EX + "code")
     got = rows(df)
     assert got == {
@@ -440,6 +443,21 @@ def test_large_translation_table_broadcast_join(spark):
     assert len(logical) < 200_000, f"plan too large: {len(logical)} chars"
     # fused evaluation routes the bridge to the singles path — same rows
     assert rows(g.triples(fuse=True).filter("pred = '%scode'" % EX)) == got
+
+
+def test_large_translation_dictionary_shipped_once(spark):
+    """The dictionary frame is built once per bridge and position; only
+    its join is bound per call."""
+    g = _big_translation_graph(spark)
+    made = []
+    create = spark.createDataFrame
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(spark, "createDataFrame", lambda *a, **k: made.append(1) or create(*a, **k))
+        plans = [g.find(p=EX + "code") for _ in range(3)]
+        plans += [g.find(s=EX + f"t{i}", p=EX + "code") for i in (1, 2)]
+    assert len(made) == 1
+    assert rows(plans[2]) == rows(plans[0]) and len(rows(plans[0])) == 3
+    assert rows(plans[3]) == {(EX + "t1", EX + "code", EX + "v/7", None, None, False)}
 
 
 def test_char_column_rtrim(spark):

@@ -6,6 +6,7 @@ from the command line)."""
 import pytest
 
 import __spark_entry__
+from conftest import assert_filled
 from tools.check_oracles import SF_DIR, connect, mismatch
 
 
@@ -19,9 +20,12 @@ def duck():
 @pytest.mark.parametrize("name", list(__spark_entry__.queries()))
 def test_oracle_parity(spark, duck, name):
     spark.catalog.clearCache()  # what earlier test modules persisted
-    assert mismatch(spark, duck, name, SF_DIR) is None
+    df = __spark_entry__.queries()[name](spark, SF_DIR)
+    # every frame the query reuses is filled before it is returned
+    assert_filled(df)
+    assert mismatch(duck, name, df) is None
     # no operator leaves a persisted frame in the session for its caller
-    # to clear: reuse inside an operator is a localCheckpoint, freed with
+    # to clear: reuse inside an operator is checkpoint.stored, freed with
     # the result
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 

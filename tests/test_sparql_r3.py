@@ -4,6 +4,7 @@ GRAPH over named graphs, full-CBD DESCRIBE."""
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import assert_filled
 from ont_d2rq_spark.examples import tpch_mapping
 from ont_d2rq_spark.graph import VirtualGraph
 from ont_d2rq_spark.sparql import execute
@@ -474,6 +475,7 @@ def test_describe_cbd_wide_bnode_fanout(spark):
     df = execute(
         g, f"PREFIX ex: <{EX}> DESCRIBE ?n WHERE {{ ?n a ex:Nation }}"
     )
+    assert_filled(df)
     bnode_subjects = df.filter(F.col("subj").startswith("_:")).select("subj").distinct()
     assert bnode_subjects.count() == n_cust
     labels = df.filter(F.col("pred") == EX + "label")

@@ -146,7 +146,7 @@ from dataclasses import dataclass, field
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from conftest import triples_dataset
+from conftest import assert_filled, triples_dataset
 from ont_d2rq_spark.compiler.relation import TRIPLE_SCHEMA
 
 # fixed tiny graph: IRIs and literal lexicals are DISJOINT, every
@@ -644,10 +644,12 @@ def test_closure_from_chain_and_reverse(spark):
 
     e = _edges(spark, [(f"n{i}", f"n{i+1}") for i in range(6)])
     fwd = closure_from(e, "n2")
+    assert_filled(fwd)
     assert {(r["src"], r["dst"]) for r in fwd.collect()} == {
         ("n2", f"n{j}") for j in range(3, 7)
     }
     rev = closure_from(e, "n2", reverse=True)
+    assert_filled(rev)
     assert {(r["src"], r["dst"]) for r in rev.collect()} == {
         (f"n{j}", "n2") for j in range(0, 2)
     }

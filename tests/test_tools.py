@@ -1,8 +1,9 @@
 """The command-line tools run on the engine as it is: the profiler
 reports jobs, py4j round trips and per-function self time for a cheap
-leaf, and writes the plan the leaf ran and its initial plan."""
+leaf, and writes the plan the leaf ran and its initial plan.  The test
+watchdog's stack dump holds the Python frames and the JVM's threads."""
 
-from conftest import SF_SMALL
+from conftest import SF_SMALL, dump_stacks
 from tools.profile import profile
 
 
@@ -30,3 +31,13 @@ def test_normalize_plan_drops_session_ids_and_sorts_isnotnull_runs():
         "+- Filter ((isnotnull(c_custkey) AND isnotnull(c_nationkey)) AND (x > 1))\n"
         "PushedFilters: [IsNotNull(c_custkey), IsNotNull(c_nationkey)], plan_id= RDD[]\n"
     )
+
+
+def test_watchdog_dump_holds_python_frames_and_jvm_threads(spark, tmp_path):
+    out = tmp_path / "stacks.txt"
+    with open(out, "w") as f:
+        dump_stacks(f)
+    text = out.read_text()
+    assert "most recent call first" in text
+    assert "in test_watchdog_dump_holds_python_frames_and_jvm_threads" in text
+    assert "Full thread dump" in text and '"dag-scheduler-event-loop"' in text

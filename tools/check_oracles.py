@@ -70,15 +70,14 @@ def connect(sf_dir: str):
     return con
 
 
-def mismatch(spark, con, name: str, sf_dir: str) -> str | None:
-    """None when registry query ``name`` on Spark returns the rows its
-    DuckDB oracle returns, else what differs.  Errors of either engine
-    propagate."""
+def mismatch(con, name: str, sdf) -> str | None:
+    """None when ``sdf``, registry query ``name``'s Spark frame,
+    returns the rows its DuckDB oracle returns, else what differs.
+    Errors of either engine propagate."""
     import __spark_entry__ as entry_mod
 
-    sdf = entry_mod.queries()[name](spark, sf_dir).toPandas()
     ddf = con.sql(entry_mod.oracle_sql()[name]).df()
-    srows, scols = rowset(sdf)
+    srows, scols = rowset(sdf.toPandas())
     drows, dcols = rowset(ddf)
     if scols != dcols:
         return f"columns spark={scols} duck={dcols}"
@@ -100,7 +99,7 @@ def main():
     failures = []
     for name in names:
         try:
-            why = mismatch(spark, con, name, SF_DIR)
+            why = mismatch(con, name, entry_mod.queries()[name](spark, SF_DIR))
         except Exception as e:
             why = f"{type(e).__name__}: {e}"
         if why:
