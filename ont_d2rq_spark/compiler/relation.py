@@ -22,6 +22,10 @@ Differences by design (Spark-first, not a port):
     TripleRelation.selectTriple then binds): a bridge's relation and
     its minted triple Columns are built once per compiler, on first
     use; bridge_df applies each call's constraints to those parts.
+  * One RDF term identity (RDF 1.1 Concepts §3.3; Jena's Node.equals in
+    the reference): canonical_term, and term_key its one-string form —
+    what distinct_triples, the streaming dedup and every SPARQL
+    comparison of two terms read.
   * Union batching (CompatibleRelationGroup) becomes bridge FUSION:
     bridges over the identical relation are evaluated in ONE scan via
     explode(array(struct(...))) — one pass over the table emits all its
@@ -64,15 +68,49 @@ TRIPLE_SCHEMA = T.StructType(
     ]
 )
 
+_XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
 
-# A triple's identity: its subject, predicate, object and the object's
-# datatype and language tag.
-TRIPLE_IDENTITY = ("subj", "pred", "obj", "obj_datatype", "obj_lang")
+
+# the columns of a TRIPLE_SCHEMA frame's object term, in term_key's order
+OBJECT_COLUMNS = ("obj", "obj_datatype", "obj_lang", "is_literal")
+
+
+def canonical_term(value: Column, datatype: Column, lang: Column, is_literal: Column) -> list:
+    """An RDF term's parts (value, datatype, lang, is-literal) in canonical
+    form: xsd:string is no datatype (a plain literal IS an xsd:string
+    literal), a language-tagged literal has none either (it is
+    rdf:langString), tags are lower case and a missing is-literal is
+    false.  Two terms are the same term (RDF 1.1 Concepts §3.3) exactly
+    when their canonical parts are equal, NULL to NULL."""
+    plain = lang.isNotNull() | (datatype == F.lit(_XSD_STRING))
+    return [value, F.when(~plain, datatype), F.lower(lang), F.coalesce(is_literal, F.lit(False))]
+
+
+def term_key(value: Column, datatype: Column, lang: Column, is_literal: Column) -> Column:
+    """A term's identity as one string, its canonical parts joined: NULL
+    where the value is, and a join or comparison on it an equi-join."""
+    v, dt, lang, lit = canonical_term(value, datatype, lang, is_literal)
+    none = F.lit("")
+    parts = F.concat_ws("\x00", lit.cast("string"), F.coalesce(dt, none), F.coalesce(lang, none))
+    return F.concat(v.cast("string"), F.lit("\x00"), parts)
+
+
+# A triple's identity: its TRIPLE_SCHEMA columns, once canonical_triples
+# has put its object in canonical form.
+TRIPLE_IDENTITY = tuple(TRIPLE_SCHEMA.names)
+
+
+def canonical_triples(df):
+    """``df`` (TRIPLE_SCHEMA) with its object in canonical form: two rows
+    are then the same RDF triple exactly when TRIPLE_IDENTITY is equal."""
+    _, dt, lang, lit = canonical_term(*map(F.col, OBJECT_COLUMNS))
+    return df.withColumns({"obj_datatype": dt, "obj_lang": lang, "is_literal": lit})
 
 
 def distinct_triples(df):
-    """RDF-set identity: drop duplicate triples of a TRIPLE_SCHEMA frame."""
-    return df.dropDuplicates(list(TRIPLE_IDENTITY))
+    """RDF-set identity: drop duplicate triples of a TRIPLE_SCHEMA frame,
+    each kept with its object in canonical form."""
+    return canonical_triples(df).dropDuplicates(list(TRIPLE_IDENTITY))
 
 
 _XSD_CAST = {
@@ -91,9 +129,6 @@ _XSD_CAST = {
 class _Prune(Exception):
     """A node maker can never produce the bound value: the relation is
     pruned."""
-
-
-_XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
 
 
 def _norm_dt(dt: Optional[str]) -> Optional[str]:

@@ -15,10 +15,13 @@ Spark-first re-expression:
     survivors union into ONE job.  This module decides only which
     bridges a pattern reads; what a node is, the node maker decides.
   * bgp([...patterns...]): each triple pattern → union of candidate
-    bridge frames with node values projected to variable columns; shared
-    variables become join keys; Catalyst picks broadcast/SMJ and AQE
-    handles skew.  This is D2RQ's join pushdown without the SQL-string
-    generation — the DataFrame DAG *is* the pushed-down query.
+    bridge frames with node values projected to variable columns; the
+    frames join through optional_join, the one solution join, on each
+    shared variable's term key (compiler.relation.term_key) where both
+    sides carry its companions, on its value otherwise; Catalyst picks
+    broadcast/SMJ and AQE handles skew.  This is D2RQ's join pushdown
+    without the SQL-string generation — the DataFrame DAG *is* the
+    pushed-down query.
   * triples(): full materialization (dump-rdf): fused one-scan-per-table
     evaluation; a global distinct only with distinct=True.
   * dataset(): the default and named graphs, decided in one place —
@@ -44,11 +47,11 @@ from ont_d2rq_spark.compiler.relation import (
     CompiledBridge,
     MappingCompiler,
     NodeSpec,
+    OBJECT_COLUMNS,
     TRIPLE_SCHEMA,
     distinct_triples,
-    _norm_dt,
+    term_key,
     _Prune,
-    _XSD_STRING,
 )
 from ont_d2rq_spark.mapping.model import Mapping
 from ont_d2rq_spark.schema_graph import schema_rows
@@ -286,16 +289,14 @@ def _evaluate_bgp(source, patterns, outer_specs=None) -> DataFrame:
     # accumulated frame) — see bgp_join_order.  Inner joins commute, so
     # the BINDINGS are identical; the ORDER decides the size of
     # intermediates, which AQE can only partially repair after a bad
-    # start (URIMakerRule ordering in the reference).  Joins compare at
-    # RDF-TERM level (rdf_term_join): lexical value PLUS canonical
-    # literal metadata where both sides carry the companion set — i.e.
-    # for object-position/object-position var pairs, which is where
-    # differing metadata can exist.  A var bound in subject position on
-    # one side has no companions and joins lexically (URIs carry no
-    # metadata; the residual URI-vs-same-lexical-literal case remains
-    # lexical).
+    # start (URIMakerRule ordering in the reference).  The frames join
+    # through optional_join, which compares a shared variable's term key
+    # where both sides carry its companions.  Subject and predicate
+    # variables and path endpoints carry none, so a join against one of
+    # them stays lexical: an IRI there still joins a literal of the same
+    # lexical form.
     order = bgp_join_order(pats, pat_vars, derived)
-    out = reduce(lambda a, b: rdf_term_join(a, b, "inner"), [frames[i] for i in order])
+    out = reduce(lambda a, b: optional_join(a, b, how="inner"), [frames[i] for i in order])
     for name, excl in neg:
         out = out.filter(~F.col(name).isin(*excl)).drop(
             name, *[name + sfx for sfx in _COMPANION_SUFFIXES]
@@ -305,7 +306,7 @@ def _evaluate_bgp(source, patterns, outer_specs=None) -> DataFrame:
 
 class _TripleFrame:
     """BGP source over a materialized TRIPLE_SCHEMA frame: one filter
-    per plain pattern — constants, a Lit object's lang and datatype,
+    per plain pattern — constants, a Lit object's term key,
     `isin` for a path alternation (p1|p2).  No node maker mints its
     nodes: it has no domains and ignores ``outer_specs``."""
 
@@ -343,18 +344,9 @@ class _TripleFrame:
                 continue
             f = f.filter(F.col(col) == F.lit(str(term)))
             if col == "obj" and isinstance(term, Lit):
-                f = f.filter(F.col("is_literal"))
-                if term.lang is not None:
-                    f = f.filter(
-                        F.lower(F.coalesce(F.col("obj_lang"), F.lit("")))
-                        == term.lang.lower()
-                    )
-                if term.datatype is not None:
-                    f = f.filter(
-                        F.nullif(F.col("obj_datatype"), F.lit(_XSD_STRING)).eqNullSafe(
-                            F.lit(_norm_dt(term.datatype))
-                        )
-                    )
+                tags = (F.lit(term.datatype).cast("string"), F.lit(term.lang).cast("string"))
+                obj = term_key(*map(F.col, OBJECT_COLUMNS))
+                f = f.filter(obj == term_key(F.lit(str(term)), *tags, F.lit(True)))
         return _bindings(f, ((s, "subj"), (p, "pred"), (o, "obj")))
 
 
@@ -426,72 +418,20 @@ def _is_companion(col: str) -> bool:
     return col.endswith(_COMPANION_SUFFIXES)
 
 
-def _term_key(v: str, prefix: str = ""):
-    """Canonical RDF-term metadata key for a shared-variable join: one
-    deterministic string per binding folding (islit, datatype, lang) —
-    '@' marks a language-tagged literal (its RDF 1.1 datatype is
-    rdf:langString regardless of __dt), xsd:string folds to '' (simple
-    literal ≡ xsd:string), lang tags compare case-insensitively.
-    Derived from one side's columns only, so Catalyst still extracts an
-    equi-join key (hash/SMJ, never a nested loop)."""
-    dt = F.col(f"{prefix}{v}__dt")
-    lang = F.col(f"{prefix}{v}__lang")
-    islit = F.coalesce(F.col(f"{prefix}{v}__islit"), F.lit(False))
-    dt_key = (
-        F.when(lang.isNotNull(), F.lit("@"))
-        .when(dt.isNotNull() & (dt != F.lit(_XSD_STRING)), dt)
-        .otherwise(F.lit(""))
-    )
-    return F.concat_ws(
-        "\x00", islit.cast("string"), dt_key, F.lower(F.coalesce(lang, F.lit("")))
-    )
+def _var_of(col: str) -> str:
+    """The variable a value or companion column belongs to."""
+    return col[: col.rfind("__")] if _is_companion(col) else col
 
 
-def rdf_term_join(left: DataFrame, right: DataFrame, how: str) -> DataFrame:
-    """Join two binding frames on their shared variables at RDF-TERM
-    level: lexical equality plus — where BOTH sides carry the full
-    companion set for a var — canonical (islit, datatype, lang)
-    equality, so "42"^^xsd:string never joins "42"^^xsd:integer and a
-    URI never joins a same-lexical literal.  With matching metadata
-    enforced in the join condition, keeping the LEFT side's companions
-    on collision is exact (no more join-order dependence).  Vars whose
-    companions exist on only one side (BIND-created, projection-
-    stripped) fall back to lexical equality for that var."""
-    shared = [c for c in left.columns if c in right.columns and not _is_companion(c)]
-    meta_vars = [
-        v
-        for v in shared
-        if all(f"{v}{s}" in left.columns for s in _COMPANION_SUFFIXES)
-        and all(f"{v}{s}" in right.columns for s in _COMPANION_SUFFIXES)
-    ]
-    if not meta_vars:
-        right = right.drop(
-            *[c for c in right.columns if _is_companion(c) and c in left.columns]
-        )
-        if shared:
-            return left.join(right, on=shared, how=how)
-        if how == "left":
-            return left.join(right, F.lit(True), "left")
-        return left.crossJoin(right)
-    ren: dict[str, str] = {v: f"__vj_{v}" for v in shared}
-    for v in meta_vars:
-        for s in _COMPANION_SUFFIXES:
-            ren[f"{v}{s}"] = f"__vj_{v}{s}"
-    drop_dup = [
-        c
-        for c in right.columns
-        if _is_companion(c) and c in left.columns and c not in ren
-    ]
-    right = right.drop(*drop_dup)
-    for old, new in ren.items():
-        right = right.withColumnRenamed(old, new)
-    cond = F.lit(True)
-    for v in shared:
-        cond = cond & (F.col(v) == F.col(f"__vj_{v}"))
-    for v in meta_vars:
-        cond = cond & (_term_key(v) == _term_key(v, "__vj_"))
-    out = left.join(right, cond, how)
-    return out.drop(*[c for c in out.columns if c.startswith("__vj_")])
+def _keyed(cols, v: str) -> bool:
+    """Does a frame with columns ``cols`` carry all of v's companions?"""
+    return all(v + sfx in cols for sfx in _COMPANION_SUFFIXES)
+
+
+def _var_key(v: str):
+    """The term key (compiler.relation.term_key) of variable ``v`` of a
+    frame that carries its companions."""
+    return term_key(*(F.col(v + part) for part in ("", *_COMPANION_SUFFIXES)))
 
 
 def bgp_join_order(patterns, pat_vars, closure_idxs=frozenset()) -> list:
@@ -579,7 +519,7 @@ def _adopt_slice(out: DataFrame, compat, m) -> DataFrame:
 def _masked_compat_join(
     left: DataFrame,
     right: DataFrame,
-    shared: list,
+    on: dict,
     compat: list,
     filters,
     how: str,
@@ -614,10 +554,11 @@ def _masked_compat_join(
 
     vanishingly unlikely for literals.
 
-    ``right`` arrives with its shared columns (and compat companions)
-    already renamed to __lj_*.  For "minus" the copy that masks every
-    shared variable is left out: it pairs rows with no bound variable in
-    common, which MINUS never removes."""
+    ``on`` maps each shared variable to the column it is compared by;
+    ``right`` arrives with those columns (and a compat variable's value
+    and companions) renamed to __lj_*.  For "minus" the copy that masks
+    every shared variable is left out: it pairs rows with no bound
+    variable in common, which MINUS never removes."""
     from itertools import combinations
 
     cols = set(left.columns) | set(right.columns)
@@ -626,7 +567,7 @@ def _masked_compat_join(
         set(null_vars)
         for k in range(len(compat) + 1)
         for null_vars in combinations(compat, k)
-        if not (how == "minus" and set(null_vars) == set(shared))
+        if not (how == "minus" and set(null_vars) == set(on))
     ]
     # expand via explode of a LITERAL mask array, not a crossJoin with
     # a local mask frame: a LogicalRDD has no stats, and an
@@ -649,19 +590,19 @@ def _masked_compat_join(
         rx = rx.withColumn(
             f"__cjk_{c}",
             F.when(F.col(f"__cj.m_{i}"), F.lit(sent)).otherwise(
-                F.col("__lj_" + c).cast("string")
+                F.col("__lj_" + on[c]).cast("string")
             ),
         )
     rx = rx.drop("__cj")
     cond = F.lit(True)
-    for c in shared:
+    for c, k in on.items():
         if c in compat:
             cond = cond & (
-                F.coalesce(F.col(c).cast("string"), F.lit(sent))
+                F.coalesce(F.col(k).cast("string"), F.lit(sent))
                 == F.col(f"__cjk_{c}")
             )
         else:
-            cond = cond & (F.col(c) == F.col("__lj_" + c))
+            cond = cond & (F.col(k) == F.col("__lj_" + k))
     if filters:
         # the merged binding is KNOWN per right copy: dispatch the
         # per-m filter on the copy tag (Catalyst still extracts the
@@ -698,7 +639,7 @@ def _masked_compat_join(
 def _masked_compat_join_sym(
     left: DataFrame,
     right: DataFrame,
-    shared: list,
+    on: dict,
     compat: list,
     left_nullable: list,
     right_nullable: list,
@@ -727,8 +668,7 @@ def _masked_compat_join_sym(
     MINUS semi/anti-join the ids (MINUS leaves out the slice pairs
     where no shared variable is bound on both sides).
 
-    ``right`` arrives with its shared columns (and compat companions)
-    already renamed to ``__lj_*``."""
+    ``on`` and ``right`` are as for _masked_compat_join."""
     from itertools import combinations
 
     cols = set(left.columns) | set(right.columns)
@@ -752,16 +692,16 @@ def _masked_compat_join_sym(
             for j in range(len(right_nullable) + 1):
                 for t_vars in combinations(right_nullable, j):
                     t = set(t_vars)
-                    if how == "minus" and set(shared) <= m | t:
+                    if how == "minus" and set(on) <= m | t:
                         continue
                     sr = right
                     for c in right_nullable:
                         rc = F.col("__lj_" + c)
                         sr = sr.filter(rc.isNull() if c in t else rc.isNotNull())
                     cond = F.lit(True)
-                    for c in shared:
+                    for c, k in on.items():
                         if c not in m and c not in t:
-                            cond = cond & (F.col(c) == F.col("__lj_" + c))
+                            cond = cond & (F.col(k) == F.col("__lj_" + k))
                     res = resolver(cols, lambda v, m=m: "__lj_" + v if v in m else v)
                     for f in filters:
                         # the merged binding is KNOWN per pair: left's
@@ -834,54 +774,57 @@ def optional_join(
 
     With no filters and no maybe-unbound shared vars this is the plain
     shared-variable join (constant-true condition when the domains are
-    disjoint, which preserves left rows against an empty right side)."""
+    disjoint, which preserves left rows against an empty right side).
+    On every path a shared variable both sides carry companions for
+    compares its term key (``_var_key``, column ``__k_<v>`` on each
+    side, NULL where the value is); any other compares its value."""
     shared = [c for c in left.columns if c in right.columns and not _is_companion(c)]
     compat = [c for c in shared if c in maybe_unbound or c in right_maybe]
     if how == "minus" and not shared:
         return left
+    keyed = [c for c in shared if _keyed(left.columns, c) and _keyed(right.columns, c)]
+    on = {c: f"__k_{c}" if c in keyed else c for c in shared}
+    keys = {on[c]: _var_key(c) for c in keyed}
+    if keys:
+        left, right = left.withColumns(keys), right.withColumns(keys)
+    # the right's companions of a variable the left carries too, and the
+    # right's value of a keyed one, are the left's (a compat variable's
+    # are adopted from the right where the left leaves it unbound)
     right = right.drop(
         *[
             c
             for c in right.columns
-            if _is_companion(c) and c in left.columns and c[: c.rfind("__")] not in compat
+            if (c in keyed or _is_companion(c) and c in left.columns) and _var_of(c) not in compat
         ]
     )
     if not filters and not compat:
         # every shared var is bound on both sides: MINUS is an anti-join
         how = "left_anti" if how == "minus" else how
         if shared:
-            return left.join(right, on=shared, how=how)
+            return left.join(right, on=list(on.values()), how=how).drop(*keys)
         if how == "inner":
             return left.crossJoin(right)
         return left.join(right, F.lit(True), how)
-    ren = {c: "__lj_" + c for c in shared}
     for c in list(right.columns):
-        base = c[: c.rfind("__")] if _is_companion(c) else None
-        if c in ren:
-            right = right.withColumnRenamed(c, ren[c])
-        elif base in compat:
+        if c in keys or c in shared or _var_of(c) in compat:
             right = right.withColumnRenamed(c, "__lj_" + c)
     left_nullable = [c for c in compat if c in maybe_unbound]
     right_nullable = [c for c in compat if c in right_maybe]
     if compat and len(compat) <= 3 and not right_nullable:
-        return _masked_compat_join(left, right, shared, compat, filters, how)
+        return _masked_compat_join(left, right, on, compat, filters, how).drop(*keys)
     if compat and len(left_nullable) + len(right_nullable) <= 4:
         return _masked_compat_join_sym(
-            left, right, shared, compat, left_nullable, right_nullable, filters, how
-        )
+            left, right, on, compat, left_nullable, right_nullable, filters, how
+        ).drop(*keys)
     # >4 nullable compat vars: 2^k slice blowup would cost more than the
     # nested-loop join it avoids — documented cap, not a plan accident
     cond = F.lit(True)
-    for c, rc in ren.items():
-        if c in compat:
-            # either side unbound → compatible
-            cond = cond & (
-                F.col(c).isNull() | F.col(rc).isNull() | (F.col(c) == F.col(rc))
-            )
-        else:
-            cond = cond & (F.col(c) == F.col(rc))
+    for c, k in on.items():
+        lk, rk = F.col(k), F.col("__lj_" + k)
+        # a compat variable either side leaves unbound is compatible
+        cond = cond & ((lk.isNull() | rk.isNull() | (lk == rk)) if c in compat else (lk == rk))
     if how == "minus":
-        bound_on_both = [F.col(c).isNotNull() & F.col(rc).isNotNull() for c, rc in ren.items()]
+        bound_on_both = [F.col(k).isNotNull() & F.col("__lj_" + k).isNotNull() for k in on.values()]
         cond = cond & reduce(lambda a, b: a | b, bound_on_both)
     # the filters evaluate over the MERGED solution: a compat var means
     # the adopted value when the left binding is unbound — its right
@@ -897,8 +840,8 @@ def optional_join(
     for f in filters:
         cond = cond & f(merged)
     if how not in ("left", "inner"):
-        return left.join(right, cond, "left_anti" if how == "minus" else how)
-    out = left.join(right, cond, how)
+        return left.join(right, cond, "left_anti" if how == "minus" else how).drop(*keys)
+    out = left.join(right, cond, how).drop(*keys)
     # merge compat vars: an unbound left binding adopts the right value
     # (and its typed-literal companions)
     for c in compat:
@@ -911,7 +854,7 @@ def optional_join(
                     else F.when(F.col(c).isNull(), F.col(rc))
                 )
                 out = out.withColumn(lc, merged)
-        out = out.withColumn(c, F.coalesce(F.col(c), F.col(ren[c])))
+        out = out.withColumn(c, F.coalesce(F.col(c), F.col("__lj_" + c)))
     return out.drop(*[c for c in out.columns if c.startswith("__lj_")])
 
 

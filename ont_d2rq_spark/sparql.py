@@ -31,11 +31,12 @@ here the residual ops are native DataFrame ops):
                                    variables; inner FILTERs scope to
                                    the group (same for UNION branches,
                                    EXISTS and GRAPH groups)
-      BIND (<expr> AS ?v)        — incl. STRLANG/STRDT constructors,
-                                   whose tag lands in ?v's companion
-                                   columns (visible to lang()/datatype()
-                                   and typed CONSTRUCT output)
-      VALUES ?v { t1 t2 ... } | VALUES (?v ?w) { (t1 t2) ... }
+      BIND (<expr> AS ?v)        — ?v carries the term's companion
+                                   columns (a STRLANG/STRDT tag among
+                                   them: lang()/datatype(), typed
+                                   CONSTRUCT output, term-level joins)
+      VALUES ?v { t1 t2 ... } | VALUES (?v ?w) { (t1 t2) ... }  — each
+                                   cell a term with its companions
       { SELECT ... WHERE { ... } ... }  — subquery, joined on shared vars
       GRAPH (<iri> | ?g) { ... }  — named-graph scope (data / vocabulary)
   }
@@ -88,6 +89,11 @@ group does not bind is unbound, and a LeftJoin or EXISTS condition
 reads the merged row.  A projected variable that nothing binds is
 unbound.
 
+Solutions compare as RDF terms (SPARQL 1.1 §18.5): joins, DISTINCT,
+GROUP BY, the aggregate DISTINCTs and SAMETERM read a variable's
+canonical term (compiler.relation) wherever it carries companions;
+only the top-level result drops them.
+
 Repetition also composes over a negated set (`!p+`, `!(p|^q)*`): the
 NPS evaluation supplies the closure's base edge set.
 
@@ -108,10 +114,27 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ont_d2rq_spark.checkpoint import stored
-from ont_d2rq_spark.compiler.relation import distinct_triples
+from ont_d2rq_spark.compiler.relation import canonical_term, distinct_triples, term_key
+from ont_d2rq_spark.graph import (
+    Dataset,
+    Lit,
+    NegatedSet,
+    PathGroup,
+    PathPlus,
+    _COMPANION_SUFFIXES,
+    _evaluate_bgp,
+    _is_companion,
+    _is_var,
+    _keyed,
+    _var_name,
+    _var_of,
+    optional_join,
+    resolver,
+)
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
+XSD = "http://www.w3.org/2001/XMLSchema#"
+XSD_STRING = XSD + "string"
 
 _AGG_FNS = {"COUNT", "SUM", "AVG", "MIN", "MAX", "GROUP_CONCAT", "SAMPLE"}
 _ECHAR = {"t": "\t", "b": "\b", "n": "\n", "r": "\r", "f": "\f"}  # string escapes
@@ -172,6 +195,11 @@ class SparqlError(ValueError):
     pass
 
 
+def _num_datatype(token: str) -> str:
+    """The datatype the SPARQL grammar gives a number token."""
+    return XSD + ("decimal" if "." in token else "integer")
+
+
 class _GroupAtom:
     """Parser-internal: a parenthesized path group's alternatives."""
 
@@ -230,8 +258,6 @@ class _P:
             if lang or dt:
                 # typed literal → datatype/lang must UNIFY with the
                 # relation's literal type (TypedNodeMaker semantics)
-                from ont_d2rq_spark.graph import Lit
-
                 dturi = None
                 if dt:
                     if dt.startswith("<"):
@@ -618,8 +644,6 @@ class _P:
         is_str = t is not None and t.group("str") is not None
         term = self.term()
         if is_str and not hasattr(term, "datatype"):
-            from ont_d2rq_spark.graph import Lit
-
             term = Lit(term)
         return term
 
@@ -661,8 +685,6 @@ class _P:
         forward/inverse sets evaluate as a union of the two
         directions, graph.bgp).  ``outer_inv`` handles `^!(...)` ≡
         `!(^...)` by flipping every member's direction."""
-        from ont_d2rq_spark.graph import NegatedSet
-
         members: list[tuple[str, bool]] = []
 
         def one():
@@ -715,8 +737,6 @@ class _P:
         parenthesized groups splice inline (no modifier) or become a
         PathGroup closure base — `(p1/p2)+` iterates over the group's
         composite edge set."""
-        from ont_d2rq_spark.graph import PathGroup, PathPlus
-
         if len(alts) == 1:
             out = []
             seq = alts[0]
@@ -743,8 +763,6 @@ class _P:
                 out.append((subj, PathPlus(pred, mod) if mod else pred, obj))
                 cur = nxt
             return out
-        from ont_d2rq_spark.graph import NegatedSet
-
         preds = []
         for seq in alts:
             if len(seq) != 1 or seq[0][1] or seq[0][2] or isinstance(
@@ -793,13 +811,15 @@ class _P:
         return (vars_, rows)
 
     def _values_cell(self):
-        """One VALUES cell: a term, or UNDEF → None (unbound — the row
-        places no constraint on that variable)."""
+        """One VALUES cell: its term (a Lit for a quoted string or a typed
+        number), or UNDEF → None (unbound: no constraint on the variable)."""
         t = self.peek()
         if t is not None and t.group(0).upper() == "UNDEF":
             self.next()
             return None
-        return str(self.term())
+        if t is not None and t.lastgroup == "num":
+            return Lit(self.next().group(0), datatype=_num_datatype(t.group(0)))
+        return self._template_term()
 
     # ---- expressions → trees (SPARQL 1.1 grammar [110]-[121]) --------
     # ("var", name) | ("lit", lex, datatype, lang) | ("iri", iri) |
@@ -946,7 +966,7 @@ def parse(query: str) -> Query:
 
 RDF_LANGSTRING = "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"
 _NUM_DTS = [
-    "http://www.w3.org/2001/XMLSchema#" + t
+    XSD + t
     for t in (
         "integer", "decimal", "float", "double", "long", "int", "short",
         "byte", "nonNegativeInteger", "nonPositiveInteger",
@@ -991,12 +1011,15 @@ def _companions(islit, dt=None, lang=None):
 
 
 def _derived(v, kind="lit", dt=None, lang=None) -> Term:
-    """A computed value: an IRI (kind "iri") or a literal, unbound where
-    the value is the error value."""
+    """A computed value: an IRI (kind "iri"), a number ("num", or "int"
+    for an xsd:integer) or a literal, unbound where the value is the
+    error value."""
+    if kind == "int":
+        dt = XSD + "integer"
     return Term(
         v,
         _companions(lambda: F.when(v.isNotNull(), F.lit(kind != "iri")), dt, lang),
-        num=kind == "num",
+        num=kind in ("num", "int"),
     )
 
 
@@ -1021,6 +1044,11 @@ def _known(t: Term, c):
 
 def _is_lit(t: Term):
     return F.coalesce(t.lit, F.lit(False))
+
+
+def _key(t: Term):
+    """An operand's RDF term identity (compiler.relation.term_key)."""
+    return term_key(t.v, t.dt, t.lang, t.lit)
 
 
 def _regex(p: Term, flags: Optional[Term]):
@@ -1058,7 +1086,8 @@ def _v(fn):
 
 # The SPARQL builtins, one row each: (name, (min, max) arity with max
 # None for variadic, result kind, Column builder over the operand
-# Terms).  Kind "num" is numeric, "iri" an IRI, "lit" any other value.
+# Terms).  Kind "num" is numeric ("int" an xsd:integer), "iri" an IRI,
+# "lit" any other value.
 # Node values are lexical strings, so IRI()/STR() pass them through and
 # the string functions also read an IRI's lexical form.
 BUILTINS = {row[0]: row for row in [
@@ -1071,16 +1100,13 @@ BUILTINS = {row[0]: row for row in [
     ("ISBLANK", (1, 1), "lit", lambda a: ~_is_lit(a) & F.startswith(a.v, F.lit("_:"))),
     ("ISNUMERIC", (1, 1), "lit",
      lambda a: _known(a, _is_lit(a) & F.coalesce(a.dt.isin(*_NUM_DTS), F.lit(False)))),
-    # full RDF-term identity: lexical form, datatype, tag and kind
-    ("SAMETERM", (2, 2), "lit",
-     lambda a, b: a.v.eqNullSafe(b.v) & a.dt.eqNullSafe(b.dt) & a.lang.eqNullSafe(b.lang)
-     & _is_lit(a).eqNullSafe(_is_lit(b))),
+    ("SAMETERM", (2, 2), "lit", lambda a, b: _key(a) == _key(b)),
     ("STRSTARTS", (2, 2), "lit", _v(F.startswith)),
     ("STRENDS", (2, 2), "lit", _v(F.endswith)),
     ("CONTAINS", (2, 2), "lit", _v(F.contains)),
     ("STRBEFORE", (2, 2), "lit", lambda a, b: _split(a, b, True)),
     ("STRAFTER", (2, 2), "lit", lambda a, b: _split(a, b, False)),
-    ("STRLEN", (1, 1), "num", _v(F.length)),
+    ("STRLEN", (1, 1), "int", _v(F.length)),
     ("UCASE", (1, 1), "lit", _v(F.upper)),
     ("LCASE", (1, 1), "lit", _v(F.lower)),
     ("SUBSTR", (2, 3), "lit", _v(F.substr)),
@@ -1102,11 +1128,11 @@ BUILTINS = {row[0]: row for row in [
     ("SHA256", (1, 1), "lit", lambda a: F.sha2(a.v, 256)),
     ("SHA384", (1, 1), "lit", lambda a: F.sha2(a.v, 384)),
     ("SHA512", (1, 1), "lit", lambda a: F.sha2(a.v, 512)),
-    ("YEAR", (1, 1), "num", lambda a: F.year(_ts(a))),
-    ("MONTH", (1, 1), "num", lambda a: F.month(_ts(a))),
-    ("DAY", (1, 1), "num", lambda a: F.dayofmonth(_ts(a))),
-    ("HOURS", (1, 1), "num", lambda a: F.hour(_ts(a))),
-    ("MINUTES", (1, 1), "num", lambda a: F.minute(_ts(a))),
+    ("YEAR", (1, 1), "int", lambda a: F.year(_ts(a))),
+    ("MONTH", (1, 1), "int", lambda a: F.month(_ts(a))),
+    ("DAY", (1, 1), "int", lambda a: F.dayofmonth(_ts(a))),
+    ("HOURS", (1, 1), "int", lambda a: F.hour(_ts(a))),
+    ("MINUTES", (1, 1), "int", lambda a: F.minute(_ts(a))),
     # xsd:decimal: fractional seconds survive
     ("SECONDS", (1, 1), "num",
      lambda a: F.date_format(_ts(a), "ss.SSS").cast("decimal(9,3)")),
@@ -1156,7 +1182,7 @@ def _term(e, resolve) -> Term:
         return Term(F.lit(e[1]), _companions(False), const=e[1])
     if kind == "num":
         n = float(e[1]) if "." in e[1] else int(e[1])
-        return Term(F.lit(n), _companions(True), const=e[1], num=True)
+        return Term(F.lit(n), _companions(True, _num_datatype(e[1])), const=e[1], num=True)
     if kind == "bool":
         return _derived(F.lit(e[1]))
     if kind == "call":
@@ -1187,15 +1213,21 @@ def _term(e, resolve) -> Term:
 def _agg_column(e, resolve):
     """An aggregate call → its Column over the pre-aggregation frame.
     SUM/AVG read the binding as a double; MIN/MAX compare the lexical
-    form."""
+    form.  DISTINCT compares the members as terms: one per term key."""
     _, fn, distinct, arg, sep = e
     if arg is None:
         return F.count(F.lit(1))
-    c = to_column(arg, resolve)
+    t = _term(arg, resolve)
+    c = t.v
     if fn == "COUNT":
-        return F.countDistinct(c) if distinct else F.count(c)
+        return F.countDistinct(_key(t)) if distinct else F.count(c)
+    if distinct:
+        c = F.collect_set(F.struct(_key(t).alias("k"), c.alias("v")))["v"]
     if fn == "SUM":
-        return F.sum_distinct(c.cast("double")) if distinct else F.sum(c.cast("double"))
+        if not distinct:
+            return F.sum(c.cast("double"))
+        nums = F.filter(c.cast("array<double>"), lambda x: x.isNotNull())
+        return F.when(F.size(nums) > 0, F.aggregate(nums, F.lit(0.0), operator.add))
     if fn == "AVG":
         if distinct:
             raise SparqlError("AVG(DISTINCT) not supported")
@@ -1204,7 +1236,7 @@ def _agg_column(e, resolve):
         # members sorted before joining → deterministic across
         # partitionings (SPARQL leaves the order unspecified); DuckDB
         # twin: string_agg(x, sep ORDER BY x)
-        c = F.collect_set(c) if distinct else F.collect_list(c)
+        c = c if distinct else F.collect_list(c)
         return F.array_join(F.array_sort(c), sep if sep is not None else " ")
     # SAMPLE: the minimum, a deterministic representative
     return F.max(c) if fn == "MAX" else F.min(c)
@@ -1224,8 +1256,6 @@ def _construct_frame(df: DataFrame, template: list) -> DataFrame:
     under recomputation).  Duplicate solutions merge their bnodes; the
     output is a graph (set), so the merge is a lean of the spec graph."""
     from functools import reduce as _reduce
-
-    from ont_d2rq_spark.graph import Lit, _is_companion, _is_var, _var_name
 
     bn_vars = {
         _var_name(t)
@@ -1260,25 +1290,12 @@ def _construct_frame(df: DataFrame, template: list) -> DataFrame:
                 return F.col(v)
             return F.lit(str(term))
 
-        if _is_var(to) and _var_name(to) in bn_vars:
-            o_dt = F.lit(None).cast("string")
-            o_lang = F.lit(None).cast("string")
-            o_islit = F.lit(False)
-        elif _is_var(to):
-            v = _var_name(to)
-            o_dt = F.col(f"{v}__dt") if f"{v}__dt" in df.columns else F.lit(None).cast("string")
-            o_lang = F.col(f"{v}__lang") if f"{v}__lang" in df.columns else F.lit(None).cast("string")
-            o_islit = F.col(f"{v}__islit") if f"{v}__islit" in df.columns else F.lit(False)
-        elif isinstance(to, Lit):
-            o_dt = F.lit(to.datatype).cast("string")
-            o_lang = F.lit(to.lang).cast("string")
-            o_islit = F.lit(True)
-        else:
-            o_dt, o_lang, o_islit = (
-                F.lit(None).cast("string"),
-                F.lit(None).cast("string"),
-                F.lit(False),
-            )
+        if isinstance(to, Lit):
+            o_dt, o_lang, o_islit = _s(to.datatype), _s(to.lang), F.lit(True)
+        else:  # a variable's companions; a blank node or an IRI has none
+            bound = _is_var(to) and _var_name(to) not in bn_vars
+            res = resolver(df.columns if bound else ())
+            o_dt, o_lang, o_islit = (res(_var_name(to), p) for p in _COMPANION_SUFFIXES)
         frames.append(
             df.select(
                 _node(ts).cast("string").alias("subj"),
@@ -1309,8 +1326,6 @@ def _describe_frame(
     lexically; depth is bounded by `max_bnode_depth` (the mapping caps
     real bNode depth far below it)."""
     from functools import reduce as _reduce
-
-    from ont_d2rq_spark.graph import _is_var, _var_name
 
     frames = []
     all_t = None
@@ -1359,8 +1374,6 @@ def execute(graph, query: str) -> DataFrame:
     """Run a SPARQL query against a VirtualGraph, or any Dataset → DataFrame
     of bindings (SELECT), a single boolean column 'ask' (ASK), or a
     TRIPLE_SCHEMA-shaped frame (CONSTRUCT / DESCRIBE)."""
-    from ont_d2rq_spark.graph import Dataset
-
     ds = graph if isinstance(graph, Dataset) else graph.dataset()
     return _execute_query(ds, parse(query))
 
@@ -1441,9 +1454,14 @@ class _Solutions(NamedTuple):
 
 
 def _vars(df: DataFrame) -> set:
-    from ont_d2rq_spark.graph import _is_companion
-
     return {c for c in df.columns if not _is_companion(c)}
+
+
+def _cell(t) -> tuple:
+    """A VALUES cell as a term's value and companions; UNDEF is unbound."""
+    if t is None:
+        return (None,) * 4
+    return str(t), getattr(t, "datatype", None), getattr(t, "lang", None), isinstance(t, Lit)
 
 
 def _union(parts: list) -> _Solutions:
@@ -1466,8 +1484,6 @@ def evaluate(ds, node: tuple, scope: Optional[str] = None, outer=None) -> _Solut
     could never be compatible with them).  Join, LeftJoin, Minus and
     EXISTS all run through graph.optional_join, which applies SPARQL's
     compatibility rule to the variables either side may leave unbound."""
-    from ont_d2rq_spark.graph import _evaluate_bgp, _is_var, _var_name, optional_join, resolver
-
     kind = node[0]
     if kind == "bgp":
         src = ds.graph(scope)
@@ -1478,7 +1494,8 @@ def evaluate(ds, node: tuple, scope: Optional[str] = None, outer=None) -> _Solut
         return _Solutions(ds.spark.range(1).select(F.lit(1).alias("_m")))
     if kind == "table":
         vars_, rows = node[1], node[2]
-        vdf = ds.spark.createDataFrame(rows, ", ".join(f"{v} string" for v in vars_))
+        cols = (f"{v} string, {v}__dt string, {v}__lang string, {v}__islit boolean" for v in vars_)
+        vdf = ds.spark.createDataFrame([sum(map(_cell, r), ()) for r in rows], ", ".join(cols))
         undef = {v for i, v in enumerate(vars_) if any(r[i] is None for r in rows)}
         return _Solutions(F.broadcast(vdf), frozenset(undef))
     if kind == "query":
@@ -1502,13 +1519,9 @@ def evaluate(ds, node: tuple, scope: Optional[str] = None, outer=None) -> _Solut
         if var in sol.df.columns:
             raise SparqlError(f"BIND target ?{var} is already in scope")
         t = _term(e, resolver(sol.df.columns))
-        df = sol.df.withColumn(var, t.v)
-        if e[0] == "call" and e[1] in ("STRLANG", "STRDT"):
-            # typed-literal constructor: the constant tag lands in the
-            # companions (visible to lang()/datatype(), typed CONSTRUCT)
-            df = df.withColumns(
-                {f"{var}__islit": t.lit, f"{var}__lang": t.lang, f"{var}__dt": t.dt}
-            )
+        df = sol.df.withColumns(
+            {var: t.v, f"{var}__dt": t.dt, f"{var}__lang": t.lang, f"{var}__islit": t.lit}
+        )
         # an expression error leaves the target unbound
         return sol._replace(df=df, maybe=sol.maybe | {var})
     if kind == "filter":
@@ -1555,7 +1568,8 @@ def _execute_query(ds, q: Query) -> DataFrame:
     if q.form == "DESCRIBE" and not q.where:
         return _describe_frame(ds.default, None, q.describe)
     if q.form == "SELECT":
-        return _select(ds, q)[0]
+        df = _select(ds, q)[0]
+        return df.drop(*[c for c in df.columns if _is_companion(c)])
     df = _group_solutions(ds, q).df
     if q.form == "ASK":
         return ds.spark.createDataFrame([(not df.isEmpty(),)], "ask boolean")
@@ -1566,11 +1580,20 @@ def _execute_query(ds, q: Query) -> DataFrame:
     return out.limit(q.limit) if q.limit is not None else out
 
 
+def _canonical(df: DataFrame, names) -> DataFrame:
+    """``df`` with the companions of each variable in ``names`` in canonical
+    form (compiler.relation.canonical_term): equal rows hold equal terms."""
+    cols = {}
+    for v in names:
+        if _keyed(df.columns, v):
+            canonical = canonical_term(*(F.col(v + p) for p in ("", *_COMPANION_SUFFIXES)))
+            cols.update(zip((v + p for p in _COMPANION_SUFFIXES), canonical[1:]))
+    return df.withColumns(cols) if cols else df
+
+
 def _select(ds, q: Query, scope=None):
     """A SELECT query's solutions → (frame, the output variables it may
     leave unbound)."""
-    from ont_d2rq_spark.graph import _is_companion, resolver
-
     sol = _group_solutions(ds, q, scope)
     df = sol.df
 
@@ -1618,7 +1641,10 @@ def _select(ds, q: Query, scope=None):
         for _, name in (p for p in q.projections if p[0] == "var"):
             if name not in q.group_by:
                 raise SparqlError(f"?{name} in SELECT must appear in GROUP BY")
-        df = df.groupBy(*q.group_by).agg(*agg_cols) if q.group_by else df.agg(*agg_cols)
+        # a grouped variable groups by its term: value and companions,
+        # the companions in canonical form
+        by = [c for c in df.columns if _var_of(c) in q.group_by]
+        df = _canonical(df, q.group_by).groupBy(*by).agg(*agg_cols) if by else df.agg(*agg_cols)
         for h in having:
             df = df.filter(to_column(h, resolver(df.columns)))
     # select expressions (post-aggregation when aggregates exist)
@@ -1630,28 +1656,25 @@ def _select(ds, q: Query, scope=None):
 
     # computed values and projected variables nothing binds can be unbound
     maybe = sol.maybe | {p[2] for p in q.projections if p[0] == "expr"}
+    names = q.variables
     if q.variables:
         maybe |= set(q.variables) - set(df.columns)
-        df = df.select(*[
-            v if v in df.columns else F.lit(None).cast("string").alias(v)
-            for v in q.variables
-        ])
     else:  # SELECT * — expose variables, not companion/marker columns
         # (nor __-prefixed internals: path-sequence join vars are not
         # selectable per the SPARQL path rewrite), in the query's order
         rank = {v: i for i, v in enumerate(q.var_order)}
-        df = df.select(
-            *sorted(
-                (
-                    c
-                    for c in df.columns
-                    if not _is_companion(c) and c != "_m" and not c.startswith("__")
-                ),
-                key=lambda c: rank.get(c, len(rank)),
-            )
+        names = sorted(
+            (c for c in df.columns if not _is_companion(c) and c != "_m" and not c.startswith("__")),
+            key=lambda c: rank.get(c, len(rank)),
         )
+    # a projected variable keeps its companions, so a subquery's solutions
+    # join and compare as terms (the top-level result drops them)
+    df = df.select(
+        *[v if v in df.columns else F.lit(None).cast("string").alias(v) for v in names],
+        *[c for c in df.columns if _is_companion(c) and _var_of(c) in names],
+    )
     if q.distinct:
-        df = df.distinct()
+        df = _canonical(df, names).distinct()
     if q.order_by:
         # a sort key may read a variable the projection dropped (Catalyst
         # resolves it below the projection)

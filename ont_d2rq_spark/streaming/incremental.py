@@ -21,7 +21,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ont_d2rq_spark.compiler.relation import TRIPLE_IDENTITY, MappingCompiler
+from ont_d2rq_spark.compiler.relation import TRIPLE_IDENTITY, MappingCompiler, canonical_triples
 from ont_d2rq_spark.mapping.model import Mapping
 
 
@@ -53,9 +53,8 @@ def dedup_within_watermark(
 ) -> DataFrame:
     """Bounded-state streaming dedup on the triple identity, the one the
     batch dump's DISTINCT keys on (compiler.relation.TRIPLE_IDENTITY)."""
-    return triples.withWatermark(event_time_col, watermark).dropDuplicatesWithinWatermark(
-        list(TRIPLE_IDENTITY)
-    )
+    canonical = canonical_triples(triples).withWatermark(event_time_col, watermark)
+    return canonical.dropDuplicatesWithinWatermark(list(TRIPLE_IDENTITY))
 
 
 def write_stream_parquet(

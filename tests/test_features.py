@@ -445,16 +445,16 @@ def test_large_translation_table_broadcast_join(spark):
     assert rows(g.triples(fuse=True).filter("pred = '%scode'" % EX)) == got
 
 
-def test_large_translation_dictionary_shipped_once(spark):
+def test_large_translation_dictionary_shipped_once(spark, monkeypatch):
     """The dictionary frame is built once per bridge and position; only
     its join is bound per call."""
     g = _big_translation_graph(spark)
     made = []
     create = spark.createDataFrame
-    with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(spark, "createDataFrame", lambda *a, **k: made.append(1) or create(*a, **k))
-        plans = [g.find(p=EX + "code") for _ in range(3)]
-        plans += [g.find(s=EX + f"t{i}", p=EX + "code") for i in (1, 2)]
+    monkeypatch.setattr(spark, "createDataFrame", lambda *a, **k: made.append(1) or create(*a, **k))
+    plans = [g.find(p=EX + "code") for _ in range(3)]
+    plans += [g.find(s=EX + f"t{i}", p=EX + "code") for i in (1, 2)]
+    monkeypatch.undo()
     assert len(made) == 1
     assert rows(plans[2]) == rows(plans[0]) and len(rows(plans[0])) == 3
     assert rows(plans[3]) == {(EX + "t1", EX + "code", EX + "v/7", None, None, False)}

@@ -162,11 +162,13 @@ def test_dedup_within_watermark(spark, tmp_path):
         ("s1", "p", "o1", None, None, False, T(2020, 1, 1, 10, 2)),  # duplicate identity
         ("s2", "p", "o2", None, None, False, T(2020, 1, 1, 10, 3)),
         # "1"@en and "1"@de are two triples; so are an IRI and a typed
-        # literal of the same lexical form
+        # literal of the same lexical form, and an IRI and a plain literal
         ("s3", "p", "1", None, "en", True, T(2020, 1, 1, 10, 4)),
         ("s3", "p", "1", None, "de", True, T(2020, 1, 1, 10, 5)),
         ("s4", "p", "o4", None, None, False, T(2020, 1, 1, 10, 6)),
         ("s4", "p", "o4", XSD_INT, None, True, T(2020, 1, 1, 10, 7)),
+        ("s5", "p", "o5", None, None, False, T(2020, 1, 1, 10, 8)),
+        ("s5", "p", "o5", None, None, True, T(2020, 1, 1, 10, 9)),
     ]
     df = spark.createDataFrame(
         rows,
@@ -187,18 +189,20 @@ def test_dedup_within_watermark(spark, tmp_path):
     )
     q.awaitTermination(120)
     got = {
-        (r["subj"], r["obj"], r["obj_datatype"], r["obj_lang"])
+        (r["subj"], r["obj"], r["obj_datatype"], r["obj_lang"], r["is_literal"])
         for r in spark.sql("select * from dedup_out").collect()
     }
     assert got == {
-        ("s1", "o1", None, None),
-        ("s2", "o2", None, None),
-        ("s3", "1", None, "en"),
-        ("s3", "1", None, "de"),
-        ("s4", "o4", None, None),
-        ("s4", "o4", XSD_INT, None),
+        ("s1", "o1", None, None, False),
+        ("s2", "o2", None, None, False),
+        ("s3", "1", None, "en", True),
+        ("s3", "1", None, "de", True),
+        ("s4", "o4", None, None, False),
+        ("s4", "o4", XSD_INT, None, True),
+        ("s5", "o5", None, None, False),
+        ("s5", "o5", None, None, True),
     }
-    assert spark.sql("select count(*) n from dedup_out").first()["n"] == 6
+    assert spark.sql("select count(*) n from dedup_out").first()["n"] == 8
 
 
 def test_streaming_incremental_triples(spark, tmp_path):

@@ -13,12 +13,10 @@ from pyspark.sql import functions as F
 
 import test_features
 from conftest import SF_SMALL
-from ont_d2rq_spark.compiler.relation import MappingCompiler, NodeSpec
+from ont_d2rq_spark.compiler.relation import MappingCompiler, NodeSpec, term_key
 from ont_d2rq_spark.examples import EX, tpch_mapping
 from ont_d2rq_spark.graph import VirtualGraph
 from test_features import emp  # noqa: F401  (fixture)
-
-XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
 
 
 @pytest.fixture(scope="module")
@@ -30,23 +28,33 @@ class _Built(Exception):
     pass
 
 
-def _feature_graphs(spark, emp):
+def _feature_graphs(spark, emp, tmp_path_factory):
     """The first graph each test of test_features.py builds: every test
     runs against a VirtualGraph that records the graph it compiles and
-    stops the test there."""
+    stops the test there.  A test may take ``spark``, ``emp``,
+    ``monkeypatch`` (a fresh one, undone after the call) and
+    ``tmp_path``."""
     graphs = []
 
     def record(*args, **kwargs):
         graphs.append(VirtualGraph(*args, **kwargs))
         raise _Built
 
-    fixtures = {"spark": spark, "emp": emp}
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(test_features, "VirtualGraph", record)
         for name, test in vars(test_features).items():
-            if name.startswith("test_"):
+            if not name.startswith("test_"):
+                continue
+            params = list(inspect.signature(test).parameters)
+            unknown = set(params) - {"spark", "emp", "monkeypatch", "tmp_path"}
+            if unknown:
+                pytest.fail(f"{name} takes fixtures _feature_graphs cannot supply: {sorted(unknown)}")
+            with pytest.MonkeyPatch.context() as monkeypatch:
+                fixtures = {"spark": spark, "emp": emp, "monkeypatch": monkeypatch}
+                if "tmp_path" in params:
+                    fixtures["tmp_path"] = tmp_path_factory.mktemp(name)
                 try:
-                    test(*(fixtures[p] for p in inspect.signature(test).parameters))
+                    test(*(fixtures[p] for p in params))
                 except _Built:
                     pass
     return graphs
@@ -55,29 +63,22 @@ def _feature_graphs(spark, emp):
 def test_join_compatibility_is_sound(tpch):
     """No two bridge ends that mint a common RDF term are judged
     disjoint.  Each bridge's subject and object column is tagged with
-    (bridge, position); one job finds the tag sets that share a term
-    (xsd:string and plain literals are one term)."""
+    (bridge, position); one job finds the tag sets that share a term key
+    (compiler.relation.term_key: xsd:string and plain literals are one
+    term)."""
     ends = [(cb, pos) for cb in tpch.bridges for pos in ("subject", "object")]
     frames = []
     for tag, (cb, pos) in enumerate(ends):
         df = tpch.compiler.bridge_df(cb)
         if pos == "subject":
-            term = [F.col("subj"), F.lit(False), F.lit(None), F.lit(None)]
+            none = F.lit(None).cast("string")
+            key = term_key(F.col("subj"), none, none, F.lit(False))
         else:
-            term = [F.col("obj"), F.col("is_literal"), F.col("obj_datatype"), F.col("obj_lang")]
-        v, lit, dt, lang = term
-        frames.append(
-            df.select(
-                v.alias("v"),
-                lit.alias("lit"),
-                F.nullif(dt.cast("string"), F.lit(XSD_STRING)).alias("dt"),
-                F.lower(lang.cast("string")).alias("lang"),
-                F.lit(tag).alias("tag"),
-            )
-        )
+            key = term_key(F.col("obj"), F.col("obj_datatype"), F.col("obj_lang"), F.col("is_literal"))
+        frames.append(df.select(key.alias("k"), F.lit(tag).alias("tag")))
     shared = (
         reduce(DataFrame.unionByName, frames)
-        .groupBy("v", "lit", "dt", "lang")
+        .groupBy("k")
         .agg(F.array_sort(F.collect_set("tag")).alias("tags"))
         .filter(F.size("tags") > 1)
         .select("tags")
@@ -100,12 +101,12 @@ def test_join_compatibility_is_sound(tpch):
     ), "no pair judged disjoint; the pruning would be vacuous"
 
 
-def test_minting_and_binding_agree_on_literal_type(spark, tpch, emp):  # noqa: F811
+def test_minting_and_binding_agree_on_literal_type(spark, tpch, emp, tmp_path_factory):  # noqa: F811
     """Every bridge's frame carries exactly the (is_literal, datatype,
     lang) its object's node maker reports (the one that typed binding
     and join-compatibility read), over the TPC-H mapping and the
     mappings of test_features.py, in one grouped job."""
-    graphs = [tpch, *_feature_graphs(spark, emp)]
+    graphs = [tpch, *_feature_graphs(spark, emp, tmp_path_factory)]
     assert len(graphs) > 10
     bridges = [(g, cb) for g in graphs for cb in g.bridges]
     got: dict = {}

@@ -10,7 +10,7 @@ import pytest
 from conftest import SF_SMALL as SF
 from conftest import triples_dataset
 from ont_d2rq_spark import queries
-from ont_d2rq_spark.compiler.relation import TRIPLE_SCHEMA
+from ont_d2rq_spark.compiler.relation import TRIPLE_SCHEMA, distinct_triples
 from ont_d2rq_spark.examples import tpch_mapping
 from ont_d2rq_spark.graph import VirtualGraph
 from ont_d2rq_spark.sparql import execute
@@ -64,6 +64,71 @@ def test_group_elements_apply_in_written_order(spark, where, want):
 def test_projected_variable_nothing_binds_is_unbound(graph):
     got = execute(graph, "SELECT ?x ?y WHERE { BIND(1 AS ?x) }").collect()
     assert [tuple(r) for r in got] == [(1, None)]
+
+
+# ---------------------------------------------------------------------------
+# one RDF term identity (RDF 1.1 Concepts §3.3): every operator that
+# compares two terms reads the term key, so an IRI is never its lexical
+# form as a literal, "1"@en is not "1"@de, and xsd:string is plain
+# ---------------------------------------------------------------------------
+
+XSD = "http://www.w3.org/2001/XMLSchema#"
+X1 = "http://x/1"
+TERMS = [
+    ("http://e/a", "http://e/p", X1, None, None, False),
+    ("http://e/a", "http://e/p", X1, None, None, True),
+    ("http://e/a", "http://e/p", "1", None, "en", True),
+    ("http://e/a", "http://e/p", "1", None, "de", True),
+    ("http://e/b", "http://e/q", X1, None, None, True),
+    ("http://e/c", "http://e/r", "42", XSD + "integer", None, True),
+    ("http://e/d", "http://e/t", "42", XSD + "string", None, True),
+    ("http://e/e", "http://e/t", "42", None, None, True),
+]
+PLAIN_42 = [TERMS[6], ("http://e/d", "http://e/t", "42", None, None, True)]
+
+
+@pytest.mark.parametrize(
+    "query, want",
+    [
+        # distinct_triples of a triple frame
+        (TERMS[:5], [("http://e/a", "http://e/p", X1)] * 2
+         + [("http://e/a", "http://e/p", "1")] * 2 + [("http://e/b", "http://e/q", X1)]),
+        (PLAIN_42, [("http://e/d", "http://e/t", "42")]),
+        ("SELECT DISTINCT ?o { ?s :p ?o }", [(X1,), (X1,), ("1",), ("1",)]),
+        ("SELECT (COUNT(DISTINCT ?o) AS ?n) { ?s :p ?o }", [(4,)]),
+        ("SELECT (SUM(DISTINCT ?o) AS ?n) { { ?s :r ?o } UNION { ?s :t ?o } }", [(84.0,)]),
+        ('SELECT (GROUP_CONCAT(DISTINCT ?o; SEPARATOR=",") AS ?all) { ?s :p ?o }',
+         [(f"1,1,{X1},{X1}",)]),
+        ("SELECT ?o (COUNT(*) AS ?n) { ?s :p ?o } GROUP BY ?o",
+         [(X1, 1), (X1, 1), ("1", 1), ("1", 1)]),
+        ("SELECT ?s ?o { ?s :p ?o . { SELECT ?o { ?t :q ?o } } }", [("http://e/a", X1)]),
+        ("SELECT ?s ?t { { ?s :r ?o } UNION { ?s :r ?o } { ?t :t ?o } UNION { ?t :t ?o } }", []),
+        ("SELECT ?s ?t { ?s :r ?o OPTIONAL { ?t :t ?o } }", [("http://e/c", None)]),
+        ("SELECT ?s { ?s :r ?o MINUS { ?t :t ?o } }", [("http://e/c",)]),
+        ("SELECT ?s { ?s :r ?o FILTER EXISTS { ?t :t ?o } }", []),
+        (f"SELECT ?o {{ VALUES ?o {{ <{X1}> }} ?s :p ?o }}", [(X1,)]),
+        ('SELECT ?o { VALUES ?o { "1"@en } ?s :p ?o }', [("1",)]),
+        (f"SELECT ?o {{ BIND(<{X1}> AS ?o) ?s :p ?o }}", [(X1,)]),
+        ("SELECT ?o ?p { ?s :t ?o . ?t :t ?p FILTER(sameTerm(?o, ?p)) }", [("42", "42")] * 4),
+    ],
+    ids=[
+        "distinct_triples_iri_vs_literal", "distinct_triples_xsd_string_is_plain",
+        "select_distinct", "count_distinct", "sum_distinct", "group_concat_distinct",
+        "group_by", "subquery_join", "join_across_groups", "optional", "minus", "exists",
+        "values_iri", "values_lang", "bind", "sameterm",
+    ],
+)
+def test_terms_compare_by_one_identity(spark, query, want):
+    """Each operator that compares two terms — DISTINCT, GROUP BY, the
+    aggregate DISTINCTs, every join and SAMETERM — decides as the term
+    key does, over one 8-row triple frame (distinct_triples over the
+    rows given)."""
+    if isinstance(query, list):
+        got = distinct_triples(spark.createDataFrame(query, TRIPLE_SCHEMA))
+        assert _rows(got.select("subj", "pred", "obj")) == Counter(want)
+        return
+    g = triples_dataset(spark.createDataFrame(TERMS, TRIPLE_SCHEMA))
+    assert _rows(execute(g, PFX + query)) == Counter(want)
 
 
 # ---------------------------------------------------------------------------
