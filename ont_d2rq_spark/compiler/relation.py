@@ -77,11 +77,12 @@ OBJECT_COLUMNS = ("obj", "obj_datatype", "obj_lang", "is_literal")
 
 def canonical_term(value: Column, datatype: Column, lang: Column, is_literal: Column) -> list:
     """An RDF term's parts (value, datatype, lang, is-literal) in canonical
-    form: xsd:string is no datatype (a plain literal IS an xsd:string
-    literal), a language-tagged literal has none either (it is
-    rdf:langString), tags are lower case and a missing is-literal is
-    false.  Two terms are the same term (RDF 1.1 Concepts §3.3) exactly
+    form: an empty datatype or tag is none, xsd:string is no datatype
+    (a plain literal IS an xsd:string literal), a language-tagged
+    literal has none either (it is rdf:langString), tags are lower case
+    and a missing is-literal is false.  Two terms are the same term (RDF 1.1 Concepts §3.3) exactly
     when their canonical parts are equal, NULL to NULL."""
+    datatype, lang = F.nullif(datatype, F.lit("")), F.nullif(lang, F.lit(""))
     plain = lang.isNotNull() | (datatype == F.lit(_XSD_STRING))
     return [value, F.when(~plain, datatype), F.lower(lang), F.coalesce(is_literal, F.lit(False))]
 
@@ -100,11 +101,18 @@ def term_key(value: Column, datatype: Column, lang: Column, is_literal: Column) 
 TRIPLE_IDENTITY = tuple(TRIPLE_SCHEMA.names)
 
 
+def canonical_columns(value: str, datatype: str, lang: str, is_literal: str) -> dict:
+    """The withColumns that put the term held in the columns named into
+    canonical form (canonical_term): its datatype, lang and is-literal
+    columns, overwritten."""
+    names = (datatype, lang, is_literal)
+    return dict(zip(names, canonical_term(*map(F.col, (value, *names)))[1:]))
+
+
 def canonical_triples(df):
     """``df`` (TRIPLE_SCHEMA) with its object in canonical form: two rows
     are then the same RDF triple exactly when TRIPLE_IDENTITY is equal."""
-    _, dt, lang, lit = canonical_term(*map(F.col, OBJECT_COLUMNS))
-    return df.withColumns({"obj_datatype": dt, "obj_lang": lang, "is_literal": lit})
+    return df.withColumns(canonical_columns(*OBJECT_COLUMNS))
 
 
 def distinct_triples(df):

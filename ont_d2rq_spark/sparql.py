@@ -32,9 +32,12 @@ here the residual ops are native DataFrame ops):
                                    the group (same for UNION branches,
                                    EXISTS and GRAPH groups)
       BIND (<expr> AS ?v)        — ?v carries the term's companion
-                                   columns (a STRLANG/STRDT tag among
-                                   them: lang()/datatype(), typed
-                                   CONSTRUCT output, term-level joins)
+                                   columns where its type is known (a
+                                   constant, an IRI, an integer or a
+                                   truth value, a STRLANG/STRDT tag, a
+                                   variable's own): lang()/datatype(),
+                                   typed CONSTRUCT output, term-level
+                                   joins; any other ?v joins lexically
       VALUES ?v { t1 t2 ... } | VALUES (?v ?w) { (t1 t2) ... }  — each
                                    cell a term with its companions
       { SELECT ... WHERE { ... } ... }  — subquery, joined on shared vars
@@ -114,7 +117,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ont_d2rq_spark.checkpoint import stored
-from ont_d2rq_spark.compiler.relation import canonical_term, distinct_triples, term_key
+from ont_d2rq_spark.compiler.relation import canonical_columns, distinct_triples, term_key
 from ont_d2rq_spark.graph import (
     Dataset,
     Lit,
@@ -981,13 +984,15 @@ class Term(NamedTuple):
     """A compiled operand: its value Column, ``comp(part)`` giving its
     RDF-term companions on demand (part "__dt", "__lang" or "__islit":
     each Column costs a JVM round trip, and most operands need none),
-    its constant (None unless a constant) and whether the value is
-    already numeric."""
+    its constant (None unless a constant), whether the value is already
+    numeric and whether the companions are known to be the term's own
+    (``typed``: a constant or a result of known type, not a default)."""
 
     v: Column
     comp: Callable[[str], Column]
     const: Optional[str] = None
     num: bool = False
+    typed: bool = False
 
     dt = property(lambda t: t.comp("__dt"))
     lang = property(lambda t: t.comp("__lang"))
@@ -1012,14 +1017,16 @@ def _companions(islit, dt=None, lang=None):
 
 def _derived(v, kind="lit", dt=None, lang=None) -> Term:
     """A computed value: an IRI (kind "iri"), a number ("num", or "int"
-    for an xsd:integer) or a literal, unbound where the value is the
-    error value."""
-    if kind == "int":
-        dt = XSD + "integer"
+    for an xsd:integer), a truth value ("bool", an xsd:boolean) or a
+    literal, unbound where the value is the error value.  The type of a
+    "num" or an untagged "lit" is not known (a string function keeps its
+    operand's tag, SPARQL 17.4.3): its companions are the defaults."""
+    dt = {"int": XSD + "integer", "bool": XSD + "boolean"}.get(kind, dt)
     return Term(
         v,
         _companions(lambda: F.when(v.isNotNull(), F.lit(kind != "iri")), dt, lang),
         num=kind in ("num", "int"),
+        typed=kind not in ("num", "lit") or dt is not None or lang is not None,
     )
 
 
@@ -1086,24 +1093,24 @@ def _v(fn):
 
 # The SPARQL builtins, one row each: (name, (min, max) arity with max
 # None for variadic, result kind, Column builder over the operand
-# Terms).  Kind "num" is numeric ("int" an xsd:integer), "iri" an IRI,
-# "lit" any other value.
+# Terms).  Kind "num" is numeric ("int" an xsd:integer), "bool" a truth
+# value, "iri" an IRI, "lit" any other value.
 # Node values are lexical strings, so IRI()/STR() pass them through and
 # the string functions also read an IRI's lexical form.
 BUILTINS = {row[0]: row for row in [
     ("STR", (1, 1), "lit", lambda a: a.v),
     ("LANG", (1, 1), "lit", lambda a: F.coalesce(a.lang, F.lit(""))),
     ("DATATYPE", (1, 1), "iri", _datatype),
-    ("BOUND", (1, 1), "lit", lambda a: a.v.isNotNull()),
-    ("ISLITERAL", (1, 1), "lit", lambda a: _known(a, _is_lit(a))),
-    ("ISIRI", (1, 1), "lit", lambda a: ~_is_lit(a) & ~F.startswith(a.v, F.lit("_:"))),
-    ("ISBLANK", (1, 1), "lit", lambda a: ~_is_lit(a) & F.startswith(a.v, F.lit("_:"))),
-    ("ISNUMERIC", (1, 1), "lit",
+    ("BOUND", (1, 1), "bool", lambda a: a.v.isNotNull()),
+    ("ISLITERAL", (1, 1), "bool", lambda a: _known(a, _is_lit(a))),
+    ("ISIRI", (1, 1), "bool", lambda a: ~_is_lit(a) & ~F.startswith(a.v, F.lit("_:"))),
+    ("ISBLANK", (1, 1), "bool", lambda a: ~_is_lit(a) & F.startswith(a.v, F.lit("_:"))),
+    ("ISNUMERIC", (1, 1), "bool",
      lambda a: _known(a, _is_lit(a) & F.coalesce(a.dt.isin(*_NUM_DTS), F.lit(False)))),
-    ("SAMETERM", (2, 2), "lit", lambda a, b: _key(a) == _key(b)),
-    ("STRSTARTS", (2, 2), "lit", _v(F.startswith)),
-    ("STRENDS", (2, 2), "lit", _v(F.endswith)),
-    ("CONTAINS", (2, 2), "lit", _v(F.contains)),
+    ("SAMETERM", (2, 2), "bool", lambda a, b: _key(a) == _key(b)),
+    ("STRSTARTS", (2, 2), "bool", _v(F.startswith)),
+    ("STRENDS", (2, 2), "bool", _v(F.endswith)),
+    ("CONTAINS", (2, 2), "bool", _v(F.contains)),
     ("STRBEFORE", (2, 2), "lit", lambda a, b: _split(a, b, True)),
     ("STRAFTER", (2, 2), "lit", lambda a, b: _split(a, b, False)),
     ("STRLEN", (1, 1), "int", _v(F.length)),
@@ -1111,10 +1118,10 @@ BUILTINS = {row[0]: row for row in [
     ("LCASE", (1, 1), "lit", _v(F.lower)),
     ("SUBSTR", (2, 3), "lit", _v(F.substr)),
     ("CONCAT", (1, None), "lit", _v(F.concat)),
-    ("REGEX", (2, 3), "lit", lambda a, p, f=None: F.regexp_like(a.v, _regex(p, f))),
+    ("REGEX", (2, 3), "bool", lambda a, p, f=None: F.regexp_like(a.v, _regex(p, f))),
     ("REPLACE", (3, 4), "lit",
      lambda a, p, r, f=None: F.regexp_replace(a.v, _regex(p, f), r.v)),
-    ("LANGMATCHES", (2, 2), "lit", _lang_matches),
+    ("LANGMATCHES", (2, 2), "bool", _lang_matches),
     # RFC 3986 percent-encoding: url_encode is form encoding (space → +)
     ("ENCODE_FOR_URI", (1, 1), "lit",
      lambda a: F.replace(F.url_encode(a.v), F.lit("+"), F.lit("%20"))),
@@ -1177,14 +1184,15 @@ def _term(e, resolve) -> Term:
     if kind == "col":  # a typed engine column (an aggregate), read as is
         return Term(F.col(e[1]), _companions(True), num=True)
     if kind == "lit":
-        return Term(F.lit(e[1]), _companions(True, e[2], e[3]), const=e[1])
+        return Term(F.lit(e[1]), _companions(True, e[2], e[3]), const=e[1], typed=True)
     if kind == "iri":
-        return Term(F.lit(e[1]), _companions(False), const=e[1])
+        return Term(F.lit(e[1]), _companions(False), const=e[1], typed=True)
     if kind == "num":
         n = float(e[1]) if "." in e[1] else int(e[1])
-        return Term(F.lit(n), _companions(True, _num_datatype(e[1])), const=e[1], num=True)
+        dt = _num_datatype(e[1])
+        return Term(F.lit(n), _companions(True, dt), const=e[1], num=True, typed=True)
     if kind == "bool":
-        return _derived(F.lit(e[1]))
+        return _derived(F.lit(e[1]), "bool")
     if kind == "call":
         args = [_term(a, resolve) for a in e[2]]
         _, _, result, build = BUILTINS[e[1]]
@@ -1194,20 +1202,20 @@ def _term(e, resolve) -> Term:
         a, items = _term(e[2], resolve), [_term(x, resolve) for x in e[3]]
         val = _num if any(i.num for i in items) else (lambda t: t.v)
         c = val(a).isin(*[val(i) for i in items])
-        return _derived(~c if e[1] else c)
+        return _derived(~c if e[1] else c, "bool")
     if kind == "agg":
         raise SparqlError(f"aggregate {e[1]} outside SELECT / HAVING")
     args = [_term(x, resolve) for x in e[2:]]
     if e[1] == "!":
-        return _derived(~args[0].v)
+        return _derived(~args[0].v, "bool")
     if e[1] == "neg":
         return _derived(-_num(args[0]), "num")
     a, b = args
     if e[1] in ("+", "-", "*", "/"):
         return _derived(_BINOPS[e[1]](_num(a), _num(b)), "num")
     if a.num != b.num:  # a lexical binding against a number: numeric values
-        return _derived(_BINOPS[e[1]](_num(a), _num(b)))
-    return _derived(_BINOPS[e[1]](a.v, b.v))
+        return _derived(_BINOPS[e[1]](_num(a), _num(b)), "bool")
+    return _derived(_BINOPS[e[1]](a.v, b.v), "bool")
 
 
 def _agg_column(e, resolve):
@@ -1221,7 +1229,7 @@ def _agg_column(e, resolve):
     c = t.v
     if fn == "COUNT":
         return F.countDistinct(_key(t)) if distinct else F.count(c)
-    if distinct:
+    if distinct and fn in ("SUM", "GROUP_CONCAT"):  # MIN, MAX, SAMPLE: DISTINCT is moot
         c = F.collect_set(F.struct(_key(t).alias("k"), c.alias("v")))["v"]
     if fn == "SUM":
         if not distinct:
@@ -1519,9 +1527,13 @@ def evaluate(ds, node: tuple, scope: Optional[str] = None, outer=None) -> _Solut
         if var in sol.df.columns:
             raise SparqlError(f"BIND target ?{var} is already in scope")
         t = _term(e, resolver(sol.df.columns))
-        df = sol.df.withColumns(
-            {var: t.v, f"{var}__dt": t.dt, f"{var}__lang": t.lang, f"{var}__islit": t.lit}
-        )
+        cols = {var: t.v}
+        # the target carries companions only where they are the term's own,
+        # so it compares as a term; else it joins lexically
+        known = _keyed(sol.df.columns, e[1]) if e[0] == "var" else t.typed
+        if known:
+            cols.update({var + p: t.comp(p) for p in _COMPANION_SUFFIXES})
+        df = sol.df.withColumns(cols)
         # an expression error leaves the target unbound
         return sol._replace(df=df, maybe=sol.maybe | {var})
     if kind == "filter":
@@ -1582,12 +1594,11 @@ def _execute_query(ds, q: Query) -> DataFrame:
 
 def _canonical(df: DataFrame, names) -> DataFrame:
     """``df`` with the companions of each variable in ``names`` in canonical
-    form (compiler.relation.canonical_term): equal rows hold equal terms."""
+    form (compiler.relation.canonical_columns): equal rows hold equal terms."""
     cols = {}
     for v in names:
         if _keyed(df.columns, v):
-            canonical = canonical_term(*(F.col(v + p) for p in ("", *_COMPANION_SUFFIXES)))
-            cols.update(zip((v + p for p in _COMPANION_SUFFIXES), canonical[1:]))
+            cols.update(canonical_columns(v, *(v + p for p in _COMPANION_SUFFIXES)))
     return df.withColumns(cols) if cols else df
 
 

@@ -13,10 +13,12 @@ from pyspark.sql import functions as F
 
 import test_features
 from conftest import SF_SMALL
-from ont_d2rq_spark.compiler.relation import MappingCompiler, NodeSpec, term_key
+from ont_d2rq_spark.compiler.relation import MappingCompiler, NodeSpec
 from ont_d2rq_spark.examples import EX, tpch_mapping
 from ont_d2rq_spark.graph import VirtualGraph
 from test_features import emp  # noqa: F401  (fixture)
+
+XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
 
 
 @pytest.fixture(scope="module")
@@ -63,22 +65,29 @@ def _feature_graphs(spark, emp, tmp_path_factory):
 def test_join_compatibility_is_sound(tpch):
     """No two bridge ends that mint a common RDF term are judged
     disjoint.  Each bridge's subject and object column is tagged with
-    (bridge, position); one job finds the tag sets that share a term key
-    (compiler.relation.term_key: xsd:string and plain literals are one
-    term)."""
+    (bridge, position); one job finds the tag sets that share a term
+    (xsd:string and plain literals are one term)."""
     ends = [(cb, pos) for cb in tpch.bridges for pos in ("subject", "object")]
     frames = []
     for tag, (cb, pos) in enumerate(ends):
         df = tpch.compiler.bridge_df(cb)
         if pos == "subject":
-            none = F.lit(None).cast("string")
-            key = term_key(F.col("subj"), none, none, F.lit(False))
+            term = [F.col("subj"), F.lit(False), F.lit(None), F.lit(None)]
         else:
-            key = term_key(F.col("obj"), F.col("obj_datatype"), F.col("obj_lang"), F.col("is_literal"))
-        frames.append(df.select(key.alias("k"), F.lit(tag).alias("tag")))
+            term = [F.col("obj"), F.col("is_literal"), F.col("obj_datatype"), F.col("obj_lang")]
+        v, lit, dt, lang = term
+        frames.append(
+            df.select(
+                v.alias("v"),
+                lit.alias("lit"),
+                F.nullif(dt.cast("string"), F.lit(XSD_STRING)).alias("dt"),
+                F.lower(lang.cast("string")).alias("lang"),
+                F.lit(tag).alias("tag"),
+            )
+        )
     shared = (
         reduce(DataFrame.unionByName, frames)
-        .groupBy("k")
+        .groupBy("v", "lit", "dt", "lang")
         .agg(F.array_sort(F.collect_set("tag")).alias("tags"))
         .filter(F.size("tags") > 1)
         .select("tags")

@@ -6,11 +6,17 @@ does."""
 from collections import Counter
 
 import pytest
+from pyspark.sql import functions as F
 
 from conftest import SF_SMALL as SF
 from conftest import triples_dataset
 from ont_d2rq_spark import queries
-from ont_d2rq_spark.compiler.relation import TRIPLE_SCHEMA, distinct_triples
+from ont_d2rq_spark.compiler.relation import (
+    TRIPLE_SCHEMA,
+    canonical_term,
+    distinct_triples,
+    term_key,
+)
 from ont_d2rq_spark.examples import tpch_mapping
 from ont_d2rq_spark.graph import VirtualGraph
 from ont_d2rq_spark.sparql import execute
@@ -129,6 +135,68 @@ def test_terms_compare_by_one_identity(spark, query, want):
         return
     g = triples_dataset(spark.createDataFrame(TERMS, TRIPLE_SCHEMA))
     assert _rows(execute(g, PFX + query)) == Counter(want)
+
+
+TYPED = TERMS + [
+    ("http://e/f", "http://e/n", "4", XSD + "integer", None, True),
+    ("http://e/g", "http://e/n", "true", XSD + "boolean", None, True),
+]
+
+
+@pytest.mark.parametrize(
+    "query, want",
+    [
+        # DISTINCT does not change a MIN, MAX or SAMPLE
+        ("SELECT (MIN(DISTINCT ?o) AS ?lo) (MAX(DISTINCT ?o) AS ?hi) "
+         "(SAMPLE(DISTINCT ?o) AS ?any) { ?s :p ?o }", [("1", X1, "1")]),
+        # a binding whose type is not known joins lexically
+        ("SELECT ?s { { SELECT (COUNT(*) AS ?n) { ?a :p ?o } } BIND(?n AS ?m) ?s :n ?m }",
+         [("http://e/f",)]),
+        # a truth value is an xsd:boolean
+        ("SELECT ?s { BIND(true AS ?b) ?s :n ?b }", [("http://e/g",)]),
+        ("SELECT ?s { BIND(2 > 1 AS ?b) ?s :n ?b }", [("http://e/g",)]),
+        # a number token is typed as the grammar types it
+        ("SELECT ?s { BIND(4 AS ?m) ?s :n ?m }", [("http://e/f",)]),
+    ],
+    ids=["min_max_sample_distinct", "bind_untyped", "bind_true", "bind_comparison",
+         "bind_number"],
+)
+def test_terms_keep_their_known_type(spark, query, want):
+    """Where a term's type is known it compares as a term; where it is
+    not (an aggregate a subquery projects) it compares lexically, as
+    before terms had one identity."""
+    g = triples_dataset(spark.createDataFrame(TYPED, TRIPLE_SCHEMA))
+    assert _rows(execute(g, PFX + query)) == Counter(want)
+
+
+def test_term_key_and_canonical_term_fold_alike(spark):
+    """Two terms share a term_key exactly when their canonical_term parts
+    are equal, and exactly where RDF 1.1 makes them one term."""
+    rows = [
+        (0, "42", XSD + "string", None, True),  # xsd:string is plain
+        (1, "42", None, None, True),
+        (2, "42", "", "", True),  # an empty datatype or tag is none
+        (3, "1", None, "EN", True),  # tags compare case-insensitively
+        (4, "1", None, "en", True),
+        (5, "1", None, "de", True),
+        (6, X1, None, None, False),  # an IRI is not its lexical form
+        (7, X1, None, None, True),
+        (8, "5", XSD + "integer", "", True),  # an empty tag drops no datatype
+        (9, "5", None, None, True),
+    ]
+    df = spark.createDataFrame(rows, "i int, v string, dt string, lang string, lit boolean")
+    term = [F.col(c) for c in ("v", "dt", "lang", "lit")]
+    got = df.select("i", term_key(*term).alias("k"), F.struct(*canonical_term(*term)).alias("c"))
+
+    def classes(col):
+        out: dict = {}
+        for r in got.collect():
+            out.setdefault(r[col], set()).add(r.i)
+        return sorted(out.values(), key=min)
+
+    want = [{0, 1, 2}, {3, 4}, {5}, {6}, {7}, {8}, {9}]
+    assert classes("k") == want
+    assert classes("c") == want
 
 
 # ---------------------------------------------------------------------------
