@@ -37,6 +37,7 @@ from __future__ import annotations
 import copy
 import dataclasses
 from functools import reduce
+from itertools import product
 from typing import NamedTuple, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -495,240 +496,24 @@ def resolver(cols, rename=None):
     return resolve
 
 
-def _adopt_slice(out: DataFrame, compat, m) -> DataFrame:
-    """Post-join merge for one slice: every compat var the left side
-    left NULL (``m``) adopts the right side's value and typed-literal
-    companions; bound slices get aligned companion columns so every
-    slice's schema matches for the final unionByName.  Drops the
-    ``__lj_*`` working columns."""
-    for c in compat:
-        adopted = c in m
-        if adopted:
-            out = out.withColumn(c, F.col("__lj_" + c))
-        for suf in _COMPANION_SUFFIXES:
-            rc, lc = f"__lj_{c}{suf}", f"{c}{suf}"
-            if rc not in out.columns:
-                continue
-            if adopted:
-                out = out.withColumn(lc, F.col(rc))
-            elif lc not in out.columns:
-                out = out.withColumn(lc, _unbound(suf))
-    return out.drop(*[c for c in out.columns if c.startswith("__lj_")])
+# optional_join's tokens.  A term key holds three NUL bytes, "true" or
+# "false" after the first, and a value none unless its data does, so no
+# key or value equals either token.
+_ANY, _NULL = "\x00any\x00", "\x00null\x00"
 
 
-def _masked_compat_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: dict,
-    compat: list,
-    filters,
-    how: str,
-) -> DataFrame:
-    """Hash-joinable SPARQL compatibility join for the dominant shape —
-    the RIGHT side always binds the compat vars (an OPTIONAL body BGP),
-    only the LEFT may leave them unbound.
-
-    Strategy (r6): move the 2^k expansion to the SMALL side.  The right
-    frame cross-joins a 2^k-row mask frame (one row per subset m of the
-    compat vars); copy m carries sentinel join keys __cjk_c = SENTINEL
-    for c in m, else the right value.  The left joins ONCE with keys
-    coalesce(left.c, SENTINEL) == __cjk_c: a left row whose null-set is
-    exactly M matches exactly the m == M copies, which is precisely the
-    slice-decomposition semantics (unbound is compatible with every
-    binding, bound vars need equality) — but the BIG left is streamed
-    once through one hash join, never sliced, never re-executed, and
-    never checkpointed.  When the expanded right is broadcast-sized the
-    whole compatibility join is shuffle-free.
-
-    History: round-5 sliced the LEFT 2^k ways and unioned; the soak
-    shape then re-executed its 25M-row 7-join left per slice (measured
-    42.4/28.2 s medians), and checkpointing the left instead was WORSE
-    (55.5/64.5 s — wide-frame materialization).  The key-expansion join
-    replaces both.
-
-    Skew note: every left row with all compat vars NULL shares one
-    sentinel key component; with a broadcast right that is moot (no
-    shuffle), and for a shuffled join AQE's skew-join splitting covers
-    it.  Sentinel collision with real data would need a lexical value
-    containing NUL bytes — impossible for minted URIs and
-
-    vanishingly unlikely for literals.
-
-    ``on`` maps each shared variable to the column it is compared by;
-    ``right`` arrives with those columns (and a compat variable's value
-    and companions) renamed to __lj_*.  For "minus" the copy that masks
-    every shared variable is left out: it pairs rows with no bound
-    variable in common, which MINUS never removes."""
-    from itertools import combinations
-
-    cols = set(left.columns) | set(right.columns)
-    sent = "\x00\x00__sparql_adopt__\x00"
-    masks = [
-        set(null_vars)
-        for k in range(len(compat) + 1)
-        for null_vars in combinations(compat, k)
-        if not (how == "minus" and set(null_vars) == set(on))
-    ]
-    # expand via explode of a LITERAL mask array, not a crossJoin with
-    # a local mask frame: a LogicalRDD has no stats, and an
-    # unknown-size subtree would disqualify the expanded right from the
-    # broadcast strategy — the entire point of putting the 2^k factor
-    # on the small side
-    mask_structs = [
-        F.struct(
-            *[F.lit(c in m).alias(f"m_{i}") for i, c in enumerate(compat)],
-            F.lit(",".join(sorted(m)) or "-").alias("tag"),
-        )
-        for m in masks
-    ]
-    rx = right.withColumn("__cj", F.explode(F.array(*mask_structs)))
-    rx = rx.withColumn("__cj_tag", F.col("__cj.tag"))
-    for i, c in enumerate(compat):
-        # keys compare as STRINGS: a non-string compat column (the
-        # internal `_m` zero-var marker is an int) must not force an
-        # ANSI cast of the sentinel
-        rx = rx.withColumn(
-            f"__cjk_{c}",
-            F.when(F.col(f"__cj.m_{i}"), F.lit(sent)).otherwise(
-                F.col("__lj_" + on[c]).cast("string")
-            ),
-        )
-    rx = rx.drop("__cj")
-    cond = F.lit(True)
-    for c, k in on.items():
-        if c in compat:
-            cond = cond & (
-                F.coalesce(F.col(k).cast("string"), F.lit(sent))
-                == F.col(f"__cjk_{c}")
-            )
-        else:
-            cond = cond & (F.col(k) == F.col("__lj_" + k))
-    if filters:
-        # the merged binding is KNOWN per right copy: dispatch the
-        # per-m filter on the copy tag (Catalyst still extracts the
-        # equi-keys; the dispatch is a post-join residual)
-        disp = F.lit(False)
-        for m in masks:
-            tag = ",".join(sorted(m)) or "-"
-            # a compat var the left leaves NULL reads the right copy
-            res = resolver(cols, lambda v, m=m: "__lj_" + v if v in m else v)
-            fm = F.lit(True)
-            for f in filters:
-                fm = fm & f(res)
-            disp = disp | ((F.col("__cj_tag") == tag) & fm)
-        cond = cond & disp
-    if how not in ("left", "inner"):
-        return left.join(rx, cond, "left_anti" if how == "minus" else how)
-    out = left.join(rx, cond, how)
-    # uniform post-join merge: a left-NULL compat var adopts the right
-    # value and companions (companions computed BEFORE c is overwritten)
-    for c in compat:
-        for suf in _COMPANION_SUFFIXES:
-            rc, lc = f"__lj_{c}{suf}", f"{c}{suf}"
-            if rc not in out.columns:
-                continue
-            left_ref = F.col(lc) if lc in out.columns else _unbound(suf)
-            out = out.withColumn(
-                lc, F.when(F.col(c).isNull(), F.col(rc)).otherwise(left_ref)
-            )
-        out = out.withColumn(c, F.coalesce(F.col(c), F.col("__lj_" + c)))
-    drop = [c for c in out.columns if c.startswith(("__lj_", "__cjk_", "__cj_m_"))]
-    return out.drop(*drop, "__cj_tag")
-
-
-def _masked_compat_join_sym(
-    left: DataFrame,
-    right: DataFrame,
-    on: dict,
-    compat: list,
-    left_nullable: list,
-    right_nullable: list,
-    filters,
-    how: str,
-) -> DataFrame:
-    """Symmetric hash-joinable decomposition of the SPARQL
-    compatibility join for the shapes the one-sided decomposition
-    excludes: the RIGHT side (a subquery / nested group / GRAPH-union
-    projection) can itself leave compat vars unbound.  BOTH sides
-    partition disjointly by which of their nullable compat vars are
-    actually NULL (2^|L| left x 2^|R| right slices); each slice PAIR
-    joins with plain equality on the shared vars bound on BOTH sides —
-    no condition at all on a var either side leaves NULL, since
-    unbound-vs-anything is compatible — and the union of the pairwise
-    inner joins is exactly the compatibility join.  For LeftJoin
-    semantics the left rows with no compatible partner are recovered
-    with a hash left-anti join on a checkpoint-stable row id.  At scale
-    every join stays hash-partitioned; only a pair with NO bound shared
-    var (usually tiny) can still pay a cross join.  This replaces the
-    BroadcastNestedLoopJoin fallback Catalyst planned for the
-    isNull-or-equal condition (round-5 verdict item #1).
-
-    For every ``how`` but "inner" the left rows are then matched by a
-    row id: LeftJoin adds the unmatched ones, EXISTS / NOT EXISTS and
-    MINUS semi/anti-join the ids (MINUS leaves out the slice pairs
-    where no shared variable is bound on both sides).
-
-    ``on`` and ``right`` are as for _masked_compat_join."""
-    from itertools import combinations
-
-    cols = set(left.columns) | set(right.columns)
-    by_id = how != "inner"
-    n_pairs = (2 ** len(left_nullable)) * (2 ** len(right_nullable))
-    # each subtree re-executes once per slice pair (Spark does not share
-    # subtrees across union branches) — pay each side once.  The row id
-    # is minted before the left side is stored, so every read of it
-    # sees the same ids.
-    if by_id:
-        left = left.withColumn("__cj_id", F.monotonically_increasing_id())
-    if n_pairs > 1 or by_id:
-        left, right = stored(left), stored(right)
-    outs: list[DataFrame] = []
-    for k in range(len(left_nullable) + 1):
-        for m_vars in combinations(left_nullable, k):
-            m = set(m_vars)
-            sl = left
-            for c in left_nullable:
-                sl = sl.filter(F.col(c).isNull() if c in m else F.col(c).isNotNull())
-            for j in range(len(right_nullable) + 1):
-                for t_vars in combinations(right_nullable, j):
-                    t = set(t_vars)
-                    if how == "minus" and set(on) <= m | t:
-                        continue
-                    sr = right
-                    for c in right_nullable:
-                        rc = F.col("__lj_" + c)
-                        sr = sr.filter(rc.isNull() if c in t else rc.isNotNull())
-                    cond = F.lit(True)
-                    for c, k in on.items():
-                        if c not in m and c not in t:
-                            cond = cond & (F.col(k) == F.col("__lj_" + k))
-                    res = resolver(cols, lambda v, m=m: "__lj_" + v if v in m else v)
-                    for f in filters:
-                        # the merged binding is KNOWN per pair: left's
-                        # value unless left-NULL, then right's (which is
-                        # itself NULL in the c-in-t slices — an unbound
-                        # var in a FILTER evaluates to NULL → false,
-                        # matching the coalesce() of the fallback path)
-                        cond = cond & f(res)
-                    outs.append(_adopt_slice(sl.join(sr, cond, "inner"), compat, m))
-    if not outs:  # MINUS with no pair sharing a bound variable
-        return left.drop("__cj_id")
-    matched = reduce(lambda a, b: a.unionByName(b), outs)
-    if not by_id:
-        return matched
-    if how != "left":
-        semi = "left_anti" if how == "minus" else how
-        return left.join(matched.select("__cj_id"), "__cj_id", semi).drop("__cj_id")
-    # LeftJoin: left rows with no compatible partner survive with the
-    # right-side vars unbound.  Store the matched set so the union
-    # and the anti-join evaluate the pairwise joins once, not twice.
-    matched = stored(matched)
-    rest = left.join(matched.select("__cj_id"), "__cj_id", "left_anti")
-    for fld in right.schema.fields:
-        name = fld.name[len("__lj_") :] if fld.name.startswith("__lj_") else fld.name
-        if name not in rest.columns:
-            rest = rest.withColumn(name, F.lit(None).cast(fld.dataType))
-    return matched.unionByName(rest, allowMissingColumns=True).drop("__cj_id")
+def _tokens(df: DataFrame, options: list, name: str):
+    """``df`` and one token Column per compat variable, from each
+    variable's token options: one row copy per combination of the
+    options, made by one explode into struct column ``name``.  With one
+    combination there is no copy and the tokens stay inline.  A NULL
+    token matches nothing, so its copy is dead."""
+    combos = list(product(*options))
+    if len(combos) == 1:
+        return df, list(combos[0])
+    fields = [f"t{i}" for i in range(len(options))]
+    copies = F.array(*[F.struct(*[t.alias(f) for f, t in zip(fields, ts)]) for ts in combos])
+    return df.withColumn(name, F.explode(copies)), [F.col(name)[f] for f in fields]
 
 
 def optional_join(
@@ -756,28 +541,44 @@ def optional_join(
     ``maybe_unbound`` names LEFT-side variables that can be NULL (an
     earlier OPTIONAL, UNION branch, BIND or VALUES UNDEF);
     ``right_maybe`` names RIGHT-side ones (a subquery or group with its
-    own optional variables, a VALUES table with UNDEF).  Shared
-    variables in neither set keep the plain, hash-joinable equality, so
-    the common all-bound case pays no compatibility price.
+    own optional variables, a VALUES table with UNDEF).  A shared
+    variable in either set is a compat variable.  On every path a
+    shared variable both sides carry companions for compares its term
+    key (``_var_key``, column ``__k_<v>`` on each side, NULL where the
+    value is); any other compares its value.
 
-    When only the left can leave a shared variable NULL (k ≤ 3 of them:
-    an OPTIONAL body BGP that always binds its variables), the join is
-    ONE hash join with sentinel key expansion on the SMALL side
-    (_masked_compat_join): the right side is replicated 2^k ways with
-    sentinel join keys, so a left row whose null-set is M matches
-    exactly the m == M copy — the big left streams once, unsliced, and
-    the join broadcasts when the expanded right is small.  Right-nullable
-    variables (at most 4 nullable in all) take the symmetric slice
-    decomposition (_masked_compat_join_sym).  Both replace the nested
-    loop Catalyst plans for an isNull-or-equal condition, which remains
-    only beyond those caps.
-
-    With no filters and no maybe-unbound shared vars this is the plain
+    With no filters and no compat variable this is the plain
     shared-variable join (constant-true condition when the domains are
     disjoint, which preserves left rows against an empty right side).
-    On every path a shared variable both sides carry companions for
-    compares its term key (``_var_key``, column ``__k_<v>`` on each
-    side, NULL where the value is); any other compares its value."""
+    Otherwise it is one equi-join on the other shared variables and one
+    string token per compat variable c:
+
+    - a left row where c is bound offers its key, plus a copy offering
+      ``_NULL`` when the right may leave c unbound; where c is unbound
+      it offers ``_ANY``;
+    - a right row offers its key, or ``_NULL`` where c is unbound, plus
+      a copy offering ``_ANY`` when the left may leave c unbound.
+
+    Each compatible pair then meets in exactly one pair of copies, and
+    no incompatible pair meets.  The tokens hold NUL bytes, so they
+    equal no key or value.  Minus leaves out the right copies whose
+    tokens are all ``_ANY`` or ``_NULL`` when every shared variable is a
+    compat one: they pair rows with no variable bound on both sides.
+    Filters read the merged row, a compat variable the left leaves
+    unbound taking the right's value and companions, which the result
+    then adopts.
+
+    When only the left may leave compat variables unbound (an OPTIONAL
+    body BGP that always binds its variables) the left token stays
+    inline as ``coalesce(key, _ANY)`` and only the right is copied, so
+    the big left streams once through one hash join, never sliced or
+    stored (round 5 sliced it by null mask and re-ran it per slice, and
+    storing it instead measured slower still).  When the right may
+    leave one unbound the left is copied; then, for every operator but
+    Join, the left rows match back through a row id on the stored left:
+    EXISTS / NOT EXISTS and Minus semi- and anti-join the matched ids,
+    and LeftJoin stores the matched rows and adds the left rows with
+    none."""
     shared = [c for c in left.columns if c in right.columns and not _is_companion(c)]
     compat = [c for c in shared if c in maybe_unbound or c in right_maybe]
     if how == "minus" and not shared:
@@ -808,24 +609,12 @@ def optional_join(
     for c in list(right.columns):
         if c in keys or c in shared or _var_of(c) in compat:
             right = right.withColumnRenamed(c, "__lj_" + c)
-    left_nullable = [c for c in compat if c in maybe_unbound]
     right_nullable = [c for c in compat if c in right_maybe]
-    if compat and len(compat) <= 3 and not right_nullable:
-        return _masked_compat_join(left, right, on, compat, filters, how).drop(*keys)
-    if compat and len(left_nullable) + len(right_nullable) <= 4:
-        return _masked_compat_join_sym(
-            left, right, on, compat, left_nullable, right_nullable, filters, how
-        ).drop(*keys)
-    # >4 nullable compat vars: 2^k slice blowup would cost more than the
-    # nested-loop join it avoids — documented cap, not a plan accident
-    cond = F.lit(True)
-    for c, k in on.items():
-        lk, rk = F.col(k), F.col("__lj_" + k)
-        # a compat variable either side leaves unbound is compatible
-        cond = cond & ((lk.isNull() | rk.isNull() | (lk == rk)) if c in compat else (lk == rk))
-    if how == "minus":
-        bound_on_both = [F.col(k).isNotNull() & F.col("__lj_" + k).isNotNull() for k in on.values()]
-        cond = cond & reduce(lambda a, b: a | b, bound_on_both)
+    by_id = right_nullable and how != "inner"
+    if by_id:
+        # the id is minted before the left is stored, so every read of
+        # it sees the same ids
+        left = stored(left.withColumn("__cj_id", F.monotonically_increasing_id()))
     # the filters evaluate over the MERGED solution: a compat var means
     # the adopted value when the left binding is unbound — its right
     # copy, companions included
@@ -837,25 +626,59 @@ def optional_join(
         lv, rv = base(v, part), base("__lj_" + v, part)
         return F.when(F.col(v).isNull(), rv).otherwise(lv) if part else F.coalesce(lv, rv)
 
+    lkey = {c: F.col(on[c]).cast("string") for c in compat}
+    rkey = {c: F.col("__lj_" + on[c]).cast("string") for c in compat}
+    lx, ltok = _tokens(
+        left,
+        [
+            [F.coalesce(lkey[c], F.lit(_ANY))]
+            + ([F.when(lkey[c].isNotNull(), F.lit(_NULL))] if c in right_nullable else [])
+            for c in compat
+        ],
+        "__cj_l",
+    )
+    right, rtok = _tokens(
+        right,
+        [
+            [F.coalesce(rkey[c], F.lit(_NULL))] + ([F.lit(_ANY)] if c in maybe_unbound else [])
+            for c in compat
+        ],
+        "__cj_r",
+    )
+    if how == "minus" and len(compat) == len(shared):
+        right = right.filter(reduce(lambda a, t: a | ~t.isin(_ANY, _NULL), rtok, F.lit(False)))
+    tok = dict(zip(compat, zip(ltok, rtok)))
+    cond = F.lit(True)
+    for c, k in on.items():
+        lk, rk = tok.get(c, (F.col(k), F.col("__lj_" + k)))
+        cond = cond & (lk == rk)
     for f in filters:
         cond = cond & f(merged)
-    if how not in ("left", "inner"):
-        return left.join(right, cond, "left_anti" if how == "minus" else how).drop(*keys)
-    out = left.join(right, cond, how).drop(*keys)
-    # merge compat vars: an unbound left binding adopts the right value
-    # (and its typed-literal companions)
-    for c in compat:
-        for suf in _COMPANION_SUFFIXES:
-            lc, rc = f"{c}{suf}", f"__lj_{c}{suf}"
-            if rc in out.columns:
-                merged = (
-                    F.when(F.col(c).isNull(), F.col(rc)).otherwise(F.col(lc))
-                    if lc in out.columns
-                    else F.when(F.col(c).isNull(), F.col(rc))
-                )
-                out = out.withColumn(lc, merged)
-        out = out.withColumn(c, F.coalesce(F.col(c), F.col("__lj_" + c)))
-    return out.drop(*[c for c in out.columns if c.startswith("__lj_")])
+
+    def adopt(out: DataFrame) -> DataFrame:
+        # a compat var the left leaves unbound adopts the right value
+        # and companions
+        cols = {}
+        for c in compat:
+            for suf in _COMPANION_SUFFIXES:
+                lc, rc = c + suf, f"__lj_{c}{suf}"
+                if rc in out.columns:
+                    own = F.col(lc) if lc in out.columns else _unbound(suf)
+                    cols[lc] = F.when(F.col(c).isNull(), F.col(rc)).otherwise(own)
+            cols[c] = F.coalesce(F.col(c), F.col("__lj_" + c))
+        out = out.withColumns(cols)
+        return out.drop(*[c for c in out.columns if c.startswith("__lj_")], "__cj_l", "__cj_r")
+
+    if not by_id:
+        out = lx.join(right, cond, "left_anti" if how == "minus" else how)
+        return (adopt(out) if how in ("left", "inner") else out).drop(*keys)
+    matched = lx.join(right, cond, "inner")
+    if how != "left":
+        semi = "left_anti" if how == "minus" else how
+        return left.join(matched.select("__cj_id"), "__cj_id", semi).drop("__cj_id", *keys)
+    matched = stored(adopt(matched))
+    rest = left.join(matched.select("__cj_id"), "__cj_id", "left_anti")
+    return matched.unionByName(rest, allowMissingColumns=True).drop("__cj_id", *keys)
 
 
 class VirtualGraph:

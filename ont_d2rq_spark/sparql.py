@@ -1170,8 +1170,8 @@ def to_column(e, resolve):
     """Compile an expression tree (_P._expression) to a Column.
     ``resolve(var, part)`` is the evaluating context's variable lookup
     (graph.resolver): the Column of the variable's value (part "") or of
-    its __dt / __lang / __islit companion — over the group's frame, an
-    OPTIONAL slice, the EXISTS merge or the aggregated frame.  SPARQL's
+    its __dt / __lang / __islit companion — over the group's frame, the
+    compatibility join's merged row or the aggregated frame.  SPARQL's
     error value is SQL NULL: FILTER drops it, and Spark's Kleene OR /
     AND / NOT are exactly the §17.2 truth tables of ||, && and !."""
     return _term(e, resolve).v

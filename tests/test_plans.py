@@ -254,13 +254,14 @@ def test_fk_hint_guard_counts_partitioned_directory(spark, tmp_path, monkeypatch
 
 
 def test_compat_join_streams_left_once(spark):
-    """r6: the one-sided compatibility join expands the SMALL side with
-    sentinel keys and streams the big left through ONE hash join — the
-    left tree appears exactly once in the plan (round-5's left-slicing
-    re-executed the soak shape's 25M-row 7-join left per slice, and
-    checkpointing it instead measured even worse: 55.5/64.5 s vs
-    42.4/28.2 s re-execution vs ~half the task work with key
-    expansion)."""
+    """When only the left may leave a compat var unbound, the
+    compatibility join copies the SMALL right side once per token and
+    streams the big left through ONE hash join on its inline token —
+    the left tree appears exactly once in the plan (round-5's
+    left-slicing re-executed the soak shape's 25M-row 7-join left per
+    slice, and checkpointing it instead measured even worse: 55.5/64.5 s
+    vs 42.4/28.2 s re-execution vs ~half the task work with one hash
+    join)."""
     from ont_d2rq_spark.examples import tpch_mapping
     from ont_d2rq_spark.graph import VirtualGraph
     from ont_d2rq_spark.sparql import execute
@@ -280,9 +281,8 @@ def test_compat_join_streams_left_once(spark):
     # count the relation by its column signature)
     assert len(re.findall(r"Relation \[o_orderkey", lp)) == 1
     # no checkpoint of the wide solution frame (the only local
-    # relations are the closure's tiny src/dst RDD and the 2^k-row
-    # compat mask frames)
-    assert not re.search(r"LogicalRDD \[(?!src#|__cj_m_)", lp)
+    # relation is the closure's tiny src/dst RDD)
+    assert not re.search(r"LogicalRDD \[(?!src#)", lp)
     # sanity: result unchanged — an ASIA order's ?rn is unbound (the
     # OPTIONAL-1 filter fails), so it is compatible with all 5 region
     # names in OPTIONAL 2; every other order matches exactly its own
@@ -301,8 +301,8 @@ def test_compat_join_streams_left_once(spark):
 
 
 def test_compat_slice_keeps_pushdown_for_scan_left(spark):
-    """Control: a scan-shaped left stays unmaterialized, so each slice
-    pushes its isNull/isNotNull filter toward the scan (no LogicalRDD
+    """Control: a scan-shaped left stays unmaterialized, so the
+    compatibility join reads it straight from the scan (no LogicalRDD
     in the plan)."""
     from ont_d2rq_spark.examples import tpch_mapping
     from ont_d2rq_spark.graph import VirtualGraph
@@ -317,9 +317,8 @@ def test_compat_slice_keeps_pushdown_for_scan_left(spark):
     }"""
     df = execute(g, q)
     lp = df._jdf.queryExecution().optimizedPlan().toString()
-    # scan-left: no checkpoint of either side (the only local relation
-    # is the compat mask frame)
-    assert not re.search(r"LogicalRDD \[(?!__cj_m_)", lp)
+    # scan-left: no checkpoint of either side
+    assert not re.search(r"LogicalRDD \[", lp)
     # 4 non-ASIA regions keep their own name; ASIA's unbound ?rn is
     # compatible with all 5 names
     assert df.count() == 4 + 5

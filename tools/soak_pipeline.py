@@ -143,7 +143,7 @@ def build_tpch_input(spark, k: int = K, dest: str = SOAK_TPCH):
 # BGP join (9.6M orders ⋈ 960k customers on minted URIs) + property-path
 # closure (inRegion+) + nested compat OPTIONALs: the first leaves ?rn
 # maybe-unbound (ASIA filtered), the second shares ?rn — exercising the
-# null-mask decomposition (graph._masked_compat_join) at soak scale.
+# compatibility join's token join (graph.optional_join) at soak scale.
 SOAK_SPARQL = """
 PREFIX ex: <http://example.org/>
 SELECT ?o ?c ?n ?r ?rn WHERE {
